@@ -28,6 +28,8 @@ from __future__ import annotations
 from pyspark.sql import DataFrame
 from pyspark.sql import functions as F
 
+from door2door_etl_spark.operators import local
+
 SCALE = 1_000_000.0
 
 
@@ -179,7 +181,6 @@ def power_iteration_top_pc(
     id_col: str = "vec_id",
     dim: int = 64,
     iterations: int = 3,
-    local_threshold_rows: int = 65_536,
 ) -> tuple[list[float], float, list[float]]:
     """Top principal component of an embedding column by POWER ITERATION
     on the centered scatter matrix, never materializing the d×d
@@ -212,18 +213,19 @@ def power_iteration_top_pc(
 
     Driver state is two ``dim``-length float lists per iteration (the
     same bounded-metadata posture as :func:`kmeans_fit_predict`'s
-    centroid literals); above the gate the corpus never leaves the
-    executors.
+    centroid literals); above the gate only the gate's bounded collect
+    (at most ``MAX_POWER_ITERATION_ROWS + 1`` rows) reaches the driver.
 
     Small-corpus completion (the graph family's gate discipline): when
-    the corpus has at most ``local_threshold_rows`` rows (one bounded
-    count; default 64 k × dim 64 ≈ a 33 MB collect; 0 disables), the
-    whole schedule runs as driver arithmetic mirroring the distributed
-    path operation for operation — the identical ``floor(term·1e6)``
-    BIGINT sums (exact, order-free), ascending-dimension float folds,
-    and division shapes — so the returned ``(component, lambda, mean)``
-    triple is BIT-IDENTICAL (property-tested), skipping 1 + iterations
-    full-plan jobs of mostly per-job constant cost.  Above the gate the
+    the corpus has at most ``local.MAX_POWER_ITERATION_ROWS`` rows
+    (:mod:`~door2door_etl_spark.operators.local`; one bounded collect
+    decides; 64 k × dim 64 ≈ a 33 MB collect), the whole schedule runs
+    as driver arithmetic mirroring the distributed path operation for
+    operation — the identical ``floor(term·1e6)`` BIGINT sums (exact,
+    order-free), ascending-dimension float folds, and division shapes —
+    so the returned ``(component, lambda, mean)`` triple is
+    BIT-IDENTICAL (property-tested), skipping 1 + iterations full-plan
+    jobs of mostly per-job constant cost.  Above the gate the
     distributed path is unchanged.
 
     Reference analog: none (the reference stops at warehouse ETL,
@@ -236,8 +238,9 @@ def power_iteration_top_pc(
         F.col(id_col),
         F.transform(F.col(vec_col), lambda x: x.cast("double")).alias("_v"),
     )
-    if local_threshold_rows and e.count() <= int(local_threshold_rows):
-        vecs = [list(r["_v"]) for r in e.select("_v").collect()]
+    rows = local.rows_if_small(e.select("_v"), local.MAX_POWER_ITERATION_ROWS)
+    if rows is not None:
+        vecs = [list(r["_v"]) for r in rows]
         return _power_iteration_local(vecs, dim, int(iterations))
     pos = e.select(F.posexplode("_v").alias("_d", "_x"))
     mean_rows = (

@@ -30,6 +30,7 @@ from dataclasses import dataclass
 from pyspark.sql import Column, DataFrame, Observation, SparkSession
 from pyspark.sql import functions as F
 
+from door2door_etl_spark.operators import local
 from door2door_etl_spark.operators.text import shingles
 from door2door_etl_spark.operators.similarity import cosine_similarity
 
@@ -626,7 +627,6 @@ def connected_dedup_clusters(
     max_iterations: int = 20,
     strict: bool = False,
     round_stats: list | None = None,
-    local_threshold_edges: int = 500_000,
 ) -> DataFrame:
     """Cluster near-duplicate candidate pairs into connected components and
     return ``(doc_id, canonical_id)`` — canonical = the minimum doc id
@@ -652,19 +652,20 @@ def connected_dedup_clusters(
 
     Small-graph completion (the Louvain-gate discipline, guide §2.4
     "remove shuffles outright"): when the symmetrized edge relation has
-    at most ``local_threshold_edges`` rows (default 500k ≈ a ~12 MB
-    collect; 0 disables), the per-component minimum is computed on the
-    driver by union-find instead of paying ~3 BSP jobs × rounds of pure
+    at most ``local.MAX_ROWS`` rows
+    (:mod:`~door2door_etl_spark.operators.local`, 500k ≈ a ~12 MB
+    collect), the per-component minimum is computed on the driver by
+    union-find instead of paying ~3 BSP jobs × rounds of pure
     scheduler latency for a graph the size of a broadcast.  VALUE
     equivalence is exact, not approximate: under the gate the longest
-    possible chain is ≤ threshold/2 nodes, pointer jumping's reach
+    possible chain is ≤ MAX_ROWS/2 nodes, pointer jumping's reach
     doubles per round, so the BSP loop always converges within the
     default 20 rounds and its fixpoint is precisely the per-component
     minimum — the same labeling union-find produces (property-tested).
-    The gate reads ONE bounded count off the already-checkpointed edge
-    relation, so the 100 TB path pays one cache-scan job and then runs
-    the BSP loop unchanged.  ``round_stats`` (the scale screen) forces
-    the BSP path — per-round improved counts are its structural signal.
+    The gate reads the edge count observed on the checkpoint job, so
+    the 100 TB path pays no extra job and runs the BSP loop unchanged.
+    ``round_stats`` (the scale screen) forces the BSP path — per-round
+    improved counts are its structural signal.
     """
     import warnings
 
@@ -681,7 +682,7 @@ def connected_dedup_clusters(
     edges = edges.observe(
         n_obs, F.count(F.lit(1)).alias("n")
     ).localCheckpoint(eager=True)
-    if local_threshold_edges and round_stats is None:
+    if round_stats is None:
         n_edges = int(n_obs.get["n"])
         # Engage the local path only when the BSP loop would PROVABLY
         # have converged under the caller's round budget (pointer
@@ -694,8 +695,10 @@ def connected_dedup_clusters(
         import math
 
         rounds_needed = math.ceil(math.log2(max(2, n_edges))) + 1
-        if n_edges <= int(local_threshold_edges) and max_iterations >= rounds_needed:
-            rows = edges.collect()  # cache scan of the checkpoint
+        rows = None
+        if max_iterations >= rounds_needed:
+            rows = local.rows_if_small(edges, local.MAX_ROWS, n=n_edges)
+        if rows is not None:
             labels_map = _components_local([(r["a"], r["b"]) for r in rows])
             from pyspark.sql.types import StructField, StructType
 

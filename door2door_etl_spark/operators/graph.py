@@ -36,34 +36,9 @@ from pyspark.sql import DataFrame, Observation
 from pyspark.sql import functions as F
 from pyspark.storagelevel import StorageLevel
 
+from door2door_etl_spark.operators import local
+
 _DEC = "decimal(38,18)"
-
-
-# Small-graph completion gate for the rank iterations (pagerank / PPR):
-# the heavy work — the edge build and the (src, dst) transition aggregate —
-# always runs in Spark; only the fixed-point loop over the ALREADY
-# AGGREGATED transition relation moves to the driver when that relation is
-# broadcast-sized.  Node bound first (free: the node count is computed
-# anyway), then the transition-row bound (one cache-scan count).
-_RANK_LOCAL_MAX_NODES = 4_096
-_RANK_LOCAL_MAX_EDGES = 500_000
-
-
-def _rank_local_setup(nodes, trans, n_nodes, threshold_edges):
-    """Gate + collect for the local rank iteration: returns
-    ``(node_list, trans_rows)`` or ``None`` when the graph is above the
-    gate.  The row-bound check and the transition collect are ONE
-    bounded action (``limit(threshold+1).collect()`` — never more than
-    threshold+1 rows cross to the driver); plus one bounded node
-    collect below the gate, one node-count comparison above it."""
-    if not threshold_edges or n_nodes > _RANK_LOCAL_MAX_NODES:
-        return None
-    rows = trans.limit(int(threshold_edges) + 1).collect()
-    if len(rows) > int(threshold_edges):
-        return None
-    node_list = [r["node"] for r in nodes.collect()]
-    trans_rows = [(r["src"], r["dst"], r["p"]) for r in rows]
-    return node_list, trans_rows
 
 
 def _dangling_mass_metric():
@@ -103,7 +78,6 @@ def pagerank(
     weight_col: str | None = None,
     iterations: int = 6,
     damping: float = 0.85,
-    local_threshold_edges: int = _RANK_LOCAL_MAX_EDGES,
 ) -> DataFrame:
     """Weighted PageRank over ``edges``; returns ``(node, rank)``.
 
@@ -120,10 +94,11 @@ def pagerank(
     Small-graph completion (the Louvain/CC gate discipline): the edge
     build, the out-weight normalization and the (src, dst) transition
     aggregate — everything data-sized — always run in Spark; when the
-    RESULTING transition relation is broadcast-sized (node and row
-    bounds above; ``local_threshold_edges=0`` disables) the fixed-point
-    loop runs as driver arithmetic that mirrors the BSP path operation
-    for operation (same per-edge IEEE double products, the same
+    RESULTING transition relation is broadcast-sized (at most
+    ``local.MAX_RANK_NODES`` nodes and ``local.MAX_ROWS`` transition
+    rows, decided by :mod:`~door2door_etl_spark.operators.local`) the
+    fixed-point loop runs as driver arithmetic that mirrors the BSP path
+    operation for operation (same per-edge IEEE double products, the same
     CAST-to-DECIMAL(38,18) HALF_UP quantization per summand, exact
     decimal accumulation, the same expression shapes) — BIT-IDENTICAL
     ranks, property-tested against the forced-BSP path.  Above the gate
@@ -173,11 +148,14 @@ def pagerank(
     )
     src_nodes = trans.select(F.col("src").alias("node")).distinct()
 
-    local = _rank_local_setup(nodes, trans, n, local_threshold_edges)
-    if local is not None:
-        node_list, trans_rows = local
+    # Node bound first (free: n is computed anyway), then the transition
+    # relation's bounded collect — one job each below the gate.
+    node_rows = local.rows_if_small(nodes, local.MAX_RANK_NODES, n=n)
+    trans_rows = node_rows and local.rows_if_small(trans, local.MAX_ROWS)
+    if trans_rows is not None:
         ranks_map = _rank_local_iterate(
-            node_list, trans_rows, n, int(iterations), float(damping)
+            [r["node"] for r in node_rows], trans_rows, n, int(iterations),
+            float(damping),
         )
         return _rank_local_frame(
             edges.sparkSession, nodes, trans, ranks_map, grouped
@@ -332,7 +310,6 @@ def triangle_count(
     edges: DataFrame,
     src: str = "src",
     dst: str = "dst",
-    local_threshold_edges: int = _RANK_LOCAL_MAX_EDGES,
 ) -> DataFrame:
     """Distributed triangle counting via degree-ordered edge orientation
     (Suri & Vassilvitskii, WWW '11 — the MapReduce classic): undirected
@@ -374,10 +351,9 @@ def triangle_count(
     und = und.observe(n_obs, F.count(F.lit(1)).alias("n")).localCheckpoint(
         eager=True
     )
-    if local_threshold_edges and int(n_obs.get["n"]) <= int(
-        local_threshold_edges
-    ):
-        pairs = [(r["u"], r["v"]) for r in und.collect()]
+    rows = local.rows_if_small(und, local.MAX_ROWS, n=int(n_obs.get["n"]))
+    if rows is not None:
+        pairs = [(r["u"], r["v"]) for r in rows]
         deg_map: dict = {}
         for u, v in pairs:
             deg_map[u] = deg_map.get(u, 0) + 1
@@ -517,7 +493,6 @@ def kcore_peel(
     dst: str = "dst",
     rounds: int = 8,
     broadcast_weak_max_rows: int = 1_000_000,
-    local_threshold_edges: int = _RANK_LOCAL_MAX_EDGES,
 ) -> DataFrame:
     """k-core membership by SYNCHRONIZED peeling: each round removes
     every node whose degree in the surviving subgraph is below ``k``
@@ -558,10 +533,9 @@ def kcore_peel(
     # (property-tested), skipping ~3 BSP jobs per round.  The gate's
     # edge count rides the checkpoint job as an Observation; BSP path
     # unchanged.
-    if local_threshold_edges and int(n_obs.get["n"]) <= int(
-        local_threshold_edges
-    ):
-        pairs = [(r["u"], r["v"]) for r in live.collect()]
+    rows = local.rows_if_small(live, local.MAX_ROWS, n=int(n_obs.get["n"]))
+    if rows is not None:
+        pairs = [(r["u"], r["v"]) for r in rows]
         ntype = live.schema["u"].dataType
         for _ in range(rounds):
             deg: dict = {}
@@ -664,7 +638,6 @@ def bfs_hops(
     max_hops: int = 4,
     src_col: str = "src",
     dst_col: str = "dst",
-    local_threshold_edges: int = _RANK_LOCAL_MAX_EDGES,
 ) -> DataFrame:
     """Breadth-first hop distances from ``source`` over an undirected
     edge list: ``(node, hops)`` for every node within ``max_hops`` —
@@ -703,10 +676,11 @@ def bfs_hops(
     # level-synchronous BFS over a broadcast-sized symmetrized relation
     # is pure integer set arithmetic — the driver twin reaches the
     # identical settled set (property-tested), skipping ~2 BSP jobs per
-    # hop.  One cache-scan count above the gate; BSP path unchanged.
-    if local_threshold_edges and sym.count() <= int(local_threshold_edges):
+    # hop.  One bounded collect decides; BSP path unchanged.
+    rows = local.rows_if_small(sym, local.MAX_ROWS)
+    if rows is not None:
         adj: dict = {}
-        for r in sym.collect():
+        for r in rows:
             adj.setdefault(r["u"], []).append(r["v"])
         sym.unpersist()
         settled_map = {int(source): 0}
@@ -764,7 +738,6 @@ def personalized_pagerank(
     weight_col: str | None = None,
     iterations: int = 6,
     damping: float = 0.85,
-    local_threshold_edges: int = _RANK_LOCAL_MAX_EDGES,
 ) -> DataFrame:
     """Personalized PageRank (random walk with restart) from
     ``restart_node``: the teleport mass — the (1−d) restart AND the
@@ -817,12 +790,12 @@ def personalized_pagerank(
     )
     src_nodes = trans.select(F.col("src").alias("node")).distinct()
     n = nodes.count()
-    local = _rank_local_setup(nodes, trans, n, local_threshold_edges)
-    if local is not None:
-        node_list, trans_rows = local
+    node_rows = local.rows_if_small(nodes, local.MAX_RANK_NODES, n=n)
+    trans_rows = node_rows and local.rows_if_small(trans, local.MAX_ROWS)
+    if trans_rows is not None:
         ranks_map = _rank_local_iterate(
-            node_list, trans_rows, n, int(iterations), float(damping),
-            restart_node=restart_node,
+            [r["node"] for r in node_rows], trans_rows, n, int(iterations),
+            float(damping), restart_node=restart_node,
         )
         return _rank_local_frame(
             edges.sparkSession, nodes, trans, ranks_map, grouped
@@ -892,7 +865,6 @@ def label_propagation(
     dst_col: str = "dst",
     rounds: int = 4,
     round_stats: list | None = None,
-    local_threshold_edges: int = _RANK_LOCAL_MAX_EDGES,
 ) -> DataFrame:
     """Community detection by SYNCHRONOUS label propagation (Raghavan,
     Albert & Kumara 2007) over an undirected edge list: every node starts
@@ -942,13 +914,12 @@ def label_propagation(
     # reaches the identical labeling (property-tested).  ``round_stats``
     # (the scale screen) forces BSP — per-round moved counts are its
     # structural signal.
-    if (
-        local_threshold_edges
-        and round_stats is None
-        and sym.count() <= int(local_threshold_edges)
-    ):
+    rows = None
+    if round_stats is None:
+        rows = local.rows_if_small(sym, local.MAX_ROWS)
+    if rows is not None:
         adj: dict = {}
-        for row in sym.collect():
+        for row in rows:
             adj.setdefault(row["u"], []).append(row["v"])
         ntype = sym.schema["u"].dataType
         sym.unpersist()
@@ -1133,7 +1104,6 @@ def louvain(
     weight_col: str | None = None,
     local_rounds: int = 4,
     levels: int = 2,
-    local_threshold_edges: int = 500_000,
     round_stats: list | None = None,
 ) -> DataFrame:
     """Modularity-optimizing community detection: the Louvain method
@@ -1201,8 +1171,8 @@ def louvain(
     bound the SQL twin unrolls to.
 
     Small-graph completion: when the canonical edge relation has at
-    most ``local_threshold_edges`` rows (default 500k ≈ a ~12 MB
-    broadcast; 0 disables), the whole sweep schedule runs as exact
+    most ``local.MAX_ROWS`` rows (:mod:`~door2door_etl_spark.operators.local`,
+    500k ≈ a ~12 MB broadcast), the whole sweep schedule runs as exact
     Python-int driver arithmetic instead — BIT-IDENTICAL labeling by
     construction (same move rule, same tie-breaks — property-tested
     against the BSP path), because levels × local_rounds BSP barriers
@@ -1266,8 +1236,8 @@ def louvain(
     # levels shrink the graph geometrically, and a production run
     # finishes the small tail locally.  The BSP path below remains THE
     # scale path (and the only one for anything above the gate).
-    if local_threshold_edges and n_edge_rows <= int(local_threshold_edges):
-        rows = ew.collect()
+    rows = local.rows_if_small(ew, local.MAX_ROWS, n=n_edge_rows)
+    if rows is not None:
         labels = _louvain_local(
             [(r["u"], r["v"], r["w"]) for r in rows],
             local_rounds=int(local_rounds),
@@ -1649,7 +1619,6 @@ def sssp_weighted(
     weight_col: str = "w",
     rounds: int = 6,
     round_stats: list | None = None,
-    local_threshold_edges: int = _RANK_LOCAL_MAX_EDGES,
 ) -> DataFrame:
     """Single-source shortest WEIGHTED distances from ``source`` over an
     undirected edge list — bounded-round bulk-synchronous Bellman-Ford,
@@ -1698,13 +1667,12 @@ def sssp_weighted(
     # parity-safe; the BSP path's fixed-round unroll reaches the same
     # state).  ``round_stats`` (the scale screen) forces BSP — the
     # per-round relaxation row counts are its structural signal.
-    if (
-        local_threshold_edges
-        and round_stats is None
-        and sym.count() <= int(local_threshold_edges)
-    ):
+    rows = None
+    if round_stats is None:
+        rows = local.rows_if_small(sym, local.MAX_ROWS)
+    if rows is not None:
         adj: dict = {}
-        for row in sym.collect():
+        for row in rows:
             adj.setdefault(row["u"], []).append((row["v"], int(row["w"])))
         sym.unpersist()
         dist_map = {int(source): 0}

@@ -31,9 +31,10 @@ ordered limit (TakeOrderedAndProject) — no driver state anywhere.
 
 from __future__ import annotations
 
-from pyspark.sql import Column, DataFrame
+from pyspark.sql import Column, DataFrame, Observation
 from pyspark.sql import functions as F
 
+from door2door_etl_spark.operators import local
 from door2door_etl_spark.operators.sketches import _h52, uniform_hash
 from door2door_etl_spark.operators.text import shingles_from_tokens, tokens
 
@@ -314,7 +315,6 @@ def coverage_max_select(
     shingle_n: int = 3,
     id_col: str = "doc_id",
     text_col: str = "text",
-    local_threshold_rows: int = 500_000,
 ) -> DataFrame:
     """Greedy maximum-coverage subset selection (the facility-location
     objective): pick ``k`` documents one at a time, each maximizing the
@@ -327,13 +327,14 @@ def coverage_max_select(
     selected set jointly SPANS.
 
     Distribution shape: the (doc, shingle) incidence relation is built
-    once (in-row shingling, one distinct) and checkpointed; below
-    ``local_threshold_rows`` (one cache-scan count of that checkpoint;
-    0 disables) the k greedy rounds complete on the driver as exact
-    integer set arithmetic — bit-identical picks, property-tested —
-    instead of k jobs of scheduler latency.  Above the gate each of the
-    k rounds is ONE job — a left-anti join against the covered set (the
-    union of the picked docs' shingle slices of the checkpointed
+    once (in-row shingling, one distinct) and checkpointed; at most
+    ``local.MAX_ROWS`` rows (:mod:`~door2door_etl_spark.operators.local`;
+    the count rides the checkpoint job) and the k greedy rounds
+    complete on the driver as exact integer set arithmetic —
+    bit-identical picks, property-tested — instead of k jobs of
+    scheduler latency.  Above the gate each of the k rounds is ONE job
+    — a left-anti join against the covered set (the union of the
+    picked docs' shingle slices of the checkpointed
     relation; duplicates are harmless to an anti join, so no distinct,
     no re-checkpoint) + a per-doc count + an ordered take-1 — all
     shuffle-bounded by the incidence relation, never a doc×doc
@@ -349,12 +350,14 @@ def coverage_max_select(
     """
     from door2door_etl_spark.operators.text import shingles
 
+    n_obs = Observation()
     sh = (
         docs.select(
             F.col(id_col),
             F.explode(shingles(F.col(text_col), shingle_n)).alias("shingle"),
         )
         .distinct()
+        .observe(n_obs, F.count(F.lit(1)).alias("n"))
         .localCheckpoint(eager=True)
     )
     spark = docs.sparkSession
@@ -378,15 +381,16 @@ def coverage_max_select(
     # SMALL-RELATION COMPLETION (the module gate discipline; VERDICT
     # r12 ask #8): the shingling, dedup and checkpoint — everything
     # data-sized — stay in Spark; when the checkpointed incidence
-    # relation is broadcast-sized (one cache-scan count; 0 disables),
-    # the k greedy rounds run as exact Python-set arithmetic on the
-    # driver instead of k anti-join + aggregate + ordered-take jobs.
+    # relation is broadcast-sized (its count observed on the checkpoint
+    # job), the k greedy rounds run as exact Python-set arithmetic on
+    # the driver instead of k anti-join + aggregate + ordered-take jobs.
     # Pure integer gains and the identical (gain DESC, id ASC)
     # tie-break (ints, or strings in UTF-8 ≡ code-point order) —
     # bit-identical picks, property-tested against the forced BSP loop.
-    if local_threshold_rows and sh.count() <= int(local_threshold_rows):
+    rows = local.rows_if_small(sh, local.MAX_ROWS, n=int(n_obs.get["n"]))
+    if rows is not None:
         doc_sh: dict = {}
-        for r in sh.collect():
+        for r in rows:
             doc_sh.setdefault(r[id_col], set()).add(r["shingle"])
         covered_set: set = set()
         total = 0

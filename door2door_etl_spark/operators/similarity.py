@@ -38,6 +38,8 @@ from __future__ import annotations
 from pyspark.sql import Column, DataFrame
 from pyspark.sql import functions as F
 
+from door2door_etl_spark.operators import local
+
 
 def _as_double(vec: Column) -> Column:
     return F.transform(vec, lambda x: x.cast("double"))
@@ -172,7 +174,6 @@ def mmr_topk(
     vec_col: str = "embedding",
     id_col: str = "vec_id",
     query_vec: list[float] | None = None,
-    local_pool_threshold: int = 100_000,
 ) -> DataFrame:
     """Diverse top-k by Maximal Marginal Relevance (Carbonell &
     Goldstein, SIGIR'98): greedily pick the candidate maximizing
@@ -184,8 +185,9 @@ def mmr_topk(
     Pool-then-rerank shape (the FAISS/serving practice, and the 100 TB
     posture): the DISTRIBUTED stage is one corpus-wide scan taking the
     top-``pool`` candidates by rounded cosine (TakeOrderedAndProject —
-    no full sort).  When ``pool`` is under ``local_pool_threshold``
-    (the pool is driver-bounded BY CONSTRUCTION; 0 disables) the k
+    no full sort).  When ``pool`` is at most ``local.MAX_MMR_POOL``
+    (:mod:`~door2door_etl_spark.operators.local`; the pool is
+    driver-bounded BY CONSTRUCTION, so no count is needed) the k
     greedy steps run as driver arithmetic over the one collected pool —
     a single Spark job total — mirroring the engine operation for
     operation (sequential double folds, correctly-rounded sqrt,
@@ -237,8 +239,7 @@ def mmr_topk(
     # property-tested against the forced step-loop path.  NaN scores
     # (zero-norm vectors) fall back to the Spark loop: Spark orders NaN
     # as the largest double, Python tuples cannot.
-    local = 0 < int(pool) <= int(local_pool_threshold or 0)
-    rows0 = pool_plan.collect() if local else None
+    rows0 = local.rows_if_small(pool_plan, local.MAX_MMR_POOL, n=int(pool))
     if rows0 is not None and not any(
         r["rel"] is None or math.isnan(r["rel"]) for r in rows0
     ):

@@ -242,23 +242,6 @@ def repetition_signals(
     )
 
 
-def add_text_features(df: DataFrame, text_col: str = "text") -> DataFrame:
-    """Convenience: append the full feature set as columns."""
-    col = F.col(text_col)
-    stats = char_stats(col)
-    return (
-        df.withColumn("token_cnt", token_count(col))
-        .withColumn("subword_est", subword_count_estimate(col))
-        .withColumn("alpha_cnt", stats["n_alpha"])
-        .withColumn("punct_cnt", stats["n_punct"])
-        .withColumn("stopword_frac", stopword_ratio(col))
-        .withColumn("mean_word_len", mean_word_length(col))
-        .withColumn("quality", quality_score(col))
-        .withColumn("lang_pred", predict_language(col))
-        .withColumn("doc_fingerprint", fingerprint(col))
-    )
-
-
 def token_entropy(
     df: DataFrame, id_col: str = "doc_id", text_col: str = "text"
 ) -> DataFrame:

@@ -4300,9 +4300,9 @@ def test_louvain_decimal_score_path_and_early_exit_parity(spark):
 
 
 @pytest.mark.slow
-def test_louvain_local_path_matches_bsp(spark):
+def test_louvain_local_path_matches_bsp(spark, force_distributed):
     """The small-graph completion path (driver Python-int sweep,
-    local_threshold_edges gate) is BIT-IDENTICAL to the distributed BSP
+    ``local.rows_if_small`` gate) is BIT-IDENTICAL to the distributed BSP
     path — same Knuth-bit 2-coloring, strict-improvement integer
     scores, (score DESC, community ASC) pick, contraction — across
     unweighted, weighted, self-loop-bearing and pseudo-random graphs,
@@ -4346,13 +4346,13 @@ def test_louvain_local_path_matches_bsp(spark):
         )
         edges = spark.createDataFrame(rows, schema)
         for lr, lv in per_graph[name]:
-            bsp = {
-                r.node: r.community
-                for r in louvain(
-                    edges, weight_col=wcol, local_rounds=lr, levels=lv,
-                    local_threshold_edges=0,       # force BSP
-                ).collect()
-            }
+            with force_distributed():
+                bsp = {
+                    r.node: r.community
+                    for r in louvain(
+                        edges, weight_col=wcol, local_rounds=lr, levels=lv,
+                    ).collect()
+                }
             loc = {
                 r.node: r.community
                 for r in louvain(
@@ -4612,11 +4612,11 @@ def test_holt_winters_fold_matches_python_reference(spark):
     assert got.forecast == round(l + b + s[kk % m], 6)
 
 
-def test_mmr_local_path_matches_spark_steps(spark):
+def test_mmr_local_path_matches_spark_steps(spark, force_distributed):
     """The small-pool completion path of mmr_topk (driver greedy over
     the one collected pool, exact IEEE-double/BigDecimal-round
     mirroring) picks BIT-IDENTICAL rows to the forced Spark step loop
-    (local_pool_threshold=0) — including duplicate vectors (maximal
+    (``force_distributed``) — including duplicate vectors (maximal
     redundancy ties broken by id) and varying lambda/k/pool."""
     import random
 
@@ -4636,18 +4636,18 @@ def test_mmr_local_path_matches_spark_steps(spark):
         loc = mmr_topk(
             df, query_vec=q, k=k, lam=lam, pool=pool
         ).collect()
-        bsp = mmr_topk(
-            df, query_vec=q, k=k, lam=lam, pool=pool,
-            local_pool_threshold=0,  # force the Spark step loop
-        ).collect()
+        with force_distributed():  # force the Spark step loop
+            bsp = mmr_topk(
+                df, query_vec=q, k=k, lam=lam, pool=pool
+            ).collect()
         assert [tuple(r) for r in loc] == [tuple(r) for r in bsp], (
             lam, k, pool,
         )
 
 
-def test_coverage_max_local_path_matches_bsp(spark):
+def test_coverage_max_local_path_matches_bsp(spark, force_distributed):
     """The small-relation completion path of coverage_max_select
-    (driver set greedy, local_threshold_rows gate) picks BIT-IDENTICAL
+    (driver set greedy, ``local.rows_if_small`` gate) picks BIT-IDENTICAL
     rows to the forced distributed loop — integer gains, (gain DESC,
     id ASC) tie-break, early stop when everything is covered."""
     from door2door_etl_spark.operators.selection import coverage_max_select
@@ -4663,15 +4663,14 @@ def test_coverage_max_local_path_matches_bsp(spark):
     df = spark.createDataFrame(docs, "doc_id long, text string")
     for k in (3, 10):
         loc = coverage_max_select(df, k=k).collect()
-        bsp = coverage_max_select(
-            df, k=k, local_threshold_rows=0  # force the distributed loop
-        ).collect()
+        with force_distributed():
+            bsp = coverage_max_select(df, k=k).collect()
         assert [tuple(r) for r in loc] == [tuple(r) for r in bsp], k
 
 
-def test_components_local_path_matches_bsp(spark):
+def test_components_local_path_matches_bsp(spark, force_distributed):
     """The small-graph completion path of connected_dedup_clusters
-    (driver union-find, local_threshold_edges gate) labels EXACTLY like
+    (driver union-find, ``local.rows_if_small`` gate) labels EXACTLY like
     the distributed pointer-jumping fixpoint — per-component minimum —
     across chains (worst diameter), multi-component graphs, singleton
     edges, duplicate/reversed pairs, and string ids.  This equality is
@@ -4689,12 +4688,11 @@ def test_components_local_path_matches_bsp(spark):
     ]
     for name, rows, schema in graphs:
         pairs = spark.createDataFrame(rows, schema)
-        bsp = {
-            r.doc_id: r.canonical_id
-            for r in connected_dedup_clusters(
-                pairs, "a", "b", local_threshold_edges=0  # force BSP
-            ).collect()
-        }
+        with force_distributed():
+            bsp = {
+                r.doc_id: r.canonical_id
+                for r in connected_dedup_clusters(pairs, "a", "b").collect()
+            }
         loc = {
             r.doc_id: r.canonical_id
             for r in connected_dedup_clusters(pairs, "a", "b").collect()
@@ -4706,7 +4704,7 @@ def test_components_local_path_matches_bsp(spark):
 
 
 @pytest.mark.slow
-def test_pagerank_local_path_matches_bsp(spark):
+def test_pagerank_local_path_matches_bsp(spark, force_distributed):
     """The small-graph completion path of pagerank / personalized_pagerank
     (driver mirror of the per-edge double products + DECIMAL(38,18)
     HALF_UP summand quantization + exact accumulation) is BIT-IDENTICAL
@@ -4735,13 +4733,14 @@ def test_pagerank_local_path_matches_bsp(spark):
                 (pagerank, {}),
                 (personalized_pagerank, {"restart_node": start}),
             ]:
-                bsp = {
-                    r.node: r.rank
-                    for r in fn(
-                        edges, weight_col=wcol, iterations=iters, damping=d,
-                        local_threshold_edges=0, **kw,  # force BSP
-                    ).collect()
-                }
+                with force_distributed():
+                    bsp = {
+                        r.node: r.rank
+                        for r in fn(
+                            edges, weight_col=wcol, iterations=iters,
+                            damping=d, **kw,
+                        ).collect()
+                    }
                 loc = {
                     r.node: r.rank
                     for r in fn(
@@ -4753,7 +4752,7 @@ def test_pagerank_local_path_matches_bsp(spark):
 
 
 @pytest.mark.slow
-def test_integer_graph_ops_local_path_matches_bsp(spark):
+def test_integer_graph_ops_local_path_matches_bsp(spark, force_distributed):
     """bfs_hops / sssp_weighted / label_propagation / kcore_peel
     small-graph completion paths reproduce the forced-BSP results
     exactly (pure integer arithmetic on both sides): chains (worst
@@ -4787,16 +4786,13 @@ def test_integer_graph_ops_local_path_matches_bsp(spark):
             (kcore_peel, {"k": 3, "rounds": 6}),
             (triangle_count, {}),
         ]:
-            bsp = sorted(
-                map(tuple, fn(
-                    edges, local_threshold_edges=0, **kwargs
-                ).collect())
-            )
+            with force_distributed():
+                bsp = sorted(map(tuple, fn(edges, **kwargs).collect()))
             loc = sorted(map(tuple, fn(edges, **kwargs).collect()))
             assert loc == bsp, (name, fn.__name__, kwargs)
 
 
-def test_power_iteration_local_matches(spark):
+def test_power_iteration_local_matches(spark, force_distributed):
     """power_iteration_top_pc's small-corpus completion path returns a
     BIT-IDENTICAL (component, lambda, mean) triple to the forced
     distributed path — irregular doubles, negative values, a dominant
@@ -4816,15 +4812,15 @@ def test_power_iteration_local_matches(spark):
     rows = [(i, vec(i)) for i in range(200)]
     df = spark.createDataFrame(rows, "vec_id long, embedding array<double>")
     for iters in (1, 3):
-        dist = power_iteration_top_pc(
-            df, dim=dim, iterations=iters, local_threshold_rows=0
-        )
+        with force_distributed():
+            dist = power_iteration_top_pc(df, dim=dim, iterations=iters)
         loc = power_iteration_top_pc(df, dim=dim, iterations=iters)
         assert loc == dist, iters
     const = spark.createDataFrame(
         [(i, [1.5] * dim) for i in range(10)],
         "vec_id long, embedding array<double>",
     )
-    dist = power_iteration_top_pc(const, dim=dim, local_threshold_rows=0)
+    with force_distributed():
+        dist = power_iteration_top_pc(const, dim=dim)
     loc = power_iteration_top_pc(const, dim=dim)
     assert loc == dist and loc[1] == 0.0

@@ -750,7 +750,9 @@ def test_kcore_prune_gates_broadcast_on_weak_size(spark):
     assert "SortMergeJoin" in big or "ShuffledHashJoin" in big, big
 
 
-def test_kcore_result_invariant_across_broadcast_gate(spark):
+def test_kcore_result_invariant_across_broadcast_gate(
+    spark, force_distributed
+):
     """Forcing the shuffle regime (gate=0) must give byte-identical
     k-core membership to the broadcast regime."""
     import itertools
@@ -762,13 +764,14 @@ def test_kcore_result_invariant_across_broadcast_gate(spark):
     ]
     df = spark.createDataFrame(edges, "src string, dst string")
     bcast = sorted(map(tuple, kcore_peel(df, k=3).collect()))
-    # force the BSP path too (local_threshold_edges=0) so the gate
-    # comparison still exercises the distributed shuffle regime
-    shuffle = sorted(
-        map(tuple, kcore_peel(
-            df, k=3, broadcast_weak_max_rows=0, local_threshold_edges=0
-        ).collect())
-    )
+    # force the BSP path too so the gate comparison still exercises
+    # the distributed shuffle regime
+    with force_distributed():
+        shuffle = sorted(
+            map(tuple, kcore_peel(
+                df, k=3, broadcast_weak_max_rows=0
+            ).collect())
+        )
     assert bcast == shuffle
     assert bcast == [(f"n{i}", 4) for i in range(5)]
 

@@ -4,9 +4,10 @@ family — the 100 TB-path evidence (VERDICT r12 ask #1).
 
 At bench scale the small-graph completion gates collect the aggregated
 relation and finish locally, so the headline bench never times the BSP
-loops.  This tool forces the distributed path (``local_threshold_edges=0``,
-``round_stats=None`` — the REAL scale path, not the instrumented screen)
-over the shared co-purchase graph and measures, per operator:
+loops.  This tool forces the distributed path (``local.rows_if_small``
+patched to decline every input, ``round_stats=None`` — the REAL scale
+path, not the instrumented screen) over the shared co-purchase graph
+and measures, per operator:
 
 - wall seconds (one untimed warm pass, one timed pass — the bench
   methodology), and
@@ -23,6 +24,7 @@ import os
 import sys
 import time
 from pathlib import Path
+from unittest import mock
 
 REPO = Path(__file__).resolve().parent.parent
 sys.path.insert(0, str(REPO))
@@ -36,6 +38,7 @@ def main() -> None:
         )
     from pyspark.sql import functions as F
 
+    from door2door_etl_spark.operators import local
     from door2door_etl_spark.operators.dedup import connected_dedup_clusters
     from door2door_etl_spark.operators.graph import (
         bfs_hops,
@@ -88,18 +91,11 @@ def main() -> None:
     cases = [
         (
             "components",
-            lambda: connected_dedup_clusters(
-                edges, "src", "dst", strict=True, local_threshold_edges=0
-            ),
+            lambda: connected_dedup_clusters(edges, "src", "dst", strict=True),
         ),
         (
             "pagerank",
-            lambda: pagerank(
-                edges,
-                weight_col="w",
-                iterations=PAGERANK_ITERS,
-                local_threshold_edges=0,
-            ),
+            lambda: pagerank(edges, weight_col="w", iterations=PAGERANK_ITERS),
         ),
         (
             "ppr",
@@ -108,38 +104,20 @@ def main() -> None:
                 restart_node=int(hub),
                 weight_col="w",
                 iterations=PAGERANK_ITERS,
-                local_threshold_edges=0,
             ),
         ),
         (
             "bfs",
-            lambda: bfs_hops(
-                edges,
-                source=int(hub),
-                max_hops=BFS_MAX_HOPS,
-                local_threshold_edges=0,
-            ),
+            lambda: bfs_hops(edges, source=int(hub), max_hops=BFS_MAX_HOPS),
         ),
         (
             "sssp",
-            lambda: sssp_weighted(
-                edges,
-                source=int(hub),
-                rounds=SSSP_ROUNDS,
-                local_threshold_edges=0,
-            ),
+            lambda: sssp_weighted(edges, source=int(hub), rounds=SSSP_ROUNDS),
         ),
-        (
-            "lpa",
-            lambda: label_propagation(
-                edges, rounds=LPA_ROUNDS, local_threshold_edges=0
-            ),
-        ),
+        ("lpa", lambda: label_propagation(edges, rounds=LPA_ROUNDS)),
         (
             "kcore",
-            lambda: kcore_peel(
-                edges, k=KCORE_K, rounds=KCORE_ROUNDS, local_threshold_edges=0
-            ),
+            lambda: kcore_peel(edges, k=KCORE_K, rounds=KCORE_ROUNDS),
         ),
         (
             "louvain",
@@ -147,7 +125,6 @@ def main() -> None:
                 edges,
                 local_rounds=LOUVAIN_LOCAL_ROUNDS,
                 levels=LOUVAIN_LEVELS,
-                local_threshold_edges=0,
             ),
         ),
     ]
@@ -158,20 +135,21 @@ def main() -> None:
         ).collect()
 
     out: dict = {"sf_dir": sf_dir, "edges": n_edges, "ops": {}}
-    for name, fn in cases:
-        force(fn())  # untimed warm pass
-        spark.catalog.clearCache()
-        sc.setJobGroup(name, name)
-        t0 = time.time()
-        force(fn())
-        wall = round(time.time() - t0, 3)
-        sc.setJobGroup("idle", "idle")
-        jobs = len(tracker.getJobIdsForGroup(name))
-        spark.catalog.clearCache()
-        out["ops"][name] = {"wall_s": wall, "jobs": jobs}
-        print(
-            f"# {name}: {wall}s, {jobs} jobs", file=sys.stderr, flush=True
-        )
+    with mock.patch.object(local, "rows_if_small", return_value=None):
+        for name, fn in cases:
+            force(fn())  # untimed warm pass
+            spark.catalog.clearCache()
+            sc.setJobGroup(name, name)
+            t0 = time.time()
+            force(fn())
+            wall = round(time.time() - t0, 3)
+            sc.setJobGroup("idle", "idle")
+            jobs = len(tracker.getJobIdsForGroup(name))
+            spark.catalog.clearCache()
+            out["ops"][name] = {"wall_s": wall, "jobs": jobs}
+            print(
+                f"# {name}: {wall}s, {jobs} jobs", file=sys.stderr, flush=True
+            )
     out["total_wall_s"] = round(
         sum(v["wall_s"] for v in out["ops"].values()), 3
     )

@@ -40,6 +40,7 @@ import os
 import sys
 import time
 from pathlib import Path
+from unittest import mock
 
 REPO = Path(__file__).resolve().parent.parent
 sys.path.insert(0, str(REPO))
@@ -77,6 +78,7 @@ def gen_sf2_lineitem(spark, src_sf1: str) -> None:
 def counts_for(spark, sf_dir: str) -> dict:
     from pyspark.sql import functions as F
 
+    from door2door_etl_spark.operators import local
     from door2door_etl_spark.operators.dedup import connected_dedup_clusters
     from door2door_etl_spark.operators.graph import (
         label_propagation,
@@ -113,13 +115,14 @@ def counts_for(spark, sf_dir: str) -> dict:
     out["pagerank_contrib_rows"] = 2 * out["edges"]
 
     lv_stats: list = []
-    louvain(
-        edges,
-        local_rounds=LOUVAIN_LOCAL_ROUNDS,
-        levels=LOUVAIN_LEVELS,
-        local_threshold_edges=0,  # force the BSP path: measure ITS loop
-        round_stats=lv_stats,
-    ).count()
+    # force the BSP path: measure ITS loop
+    with mock.patch.object(local, "rows_if_small", return_value=None):
+        louvain(
+            edges,
+            local_rounds=LOUVAIN_LOCAL_ROUNDS,
+            levels=LOUVAIN_LEVELS,
+            round_stats=lv_stats,
+        ).count()
     out["louvain_rounds"] = lv_stats
     out["louvain_moved_total"] = sum(s["moved"] for s in lv_stats)
 
