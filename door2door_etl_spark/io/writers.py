@@ -53,71 +53,6 @@ def append_rows(
     df.write.mode("append").parquet(path)
 
 
-def write_bucketed_table(
-    df: DataFrame,
-    table_name: str,
-    bucket_cols: list[str],
-    num_buckets: int,
-    path: str | None = None,
-) -> None:
-    """Write a hash-bucketed, bucket-sorted catalog table.
-
-    The 100 TB co-location tool: two tables bucketed the same way on the
-    join key equi-join WITHOUT a shuffle exchange on either side (verified
-    by plan assertion in tests/test_plans.py).  On a real deployment the
-    fact table is bucketed once at ingest and every downstream join/agg on
-    the key reuses that layout — this is Spark's native analogue of the
-    reference warehouse's primary-key organization
-    (reference migrations/init.sql:29-51).
-    """
-    spark = df.sparkSession
-    if (
-        path is None
-        and "." not in table_name
-        and spark.catalog.currentDatabase() == "default"
-        and not spark.catalog.tableExists(table_name)
-    ):
-        # A managed-table LOCATION survives its catalog entry across
-        # sessions (derby metastore is per-session here; on a shared
-        # metastore, a crashed DROP leaves the same state) and saveAsTable
-        # then refuses with LOCATION_ALREADY_EXISTS.  Overwrite semantics
-        # mean the stale directory is garbage — clear it.  Restricted to
-        # unqualified names in the default database: only there does
-        # <warehouse>/<name> name THIS table's location (a qualified or
-        # non-default-db table lives under <warehouse>/<db>.db/<name>, and
-        # guessing wrong could delete a DIFFERENT live table's data).
-        import os
-        import shutil
-        from urllib.parse import urlparse
-
-        wh = urlparse(spark.conf.get("spark.sql.warehouse.dir"))
-        # Only local/file warehouses: for any other scheme the .path of the
-        # URI is not a filesystem path and the guess could be wrong — leave
-        # the directory alone and let saveAsTable surface the conflict.
-        if wh.scheme in ("", "file"):
-            stale = Path(wh.path) / table_name.lower()
-            if stale.exists():
-                # Move aside rather than delete: the dir SHOULD be our own
-                # orphaned managed-table location, but if a user placed an
-                # unrelated directory under the same name, a rename is
-                # recoverable where an rmtree is not.  One backup slot per
-                # table name — a pre-existing backup is provably our own
-                # garbage from a previous move-aside and is reclaimed.
-                aside = stale.parent / f".{stale.name}__stale"
-                if aside.exists():
-                    shutil.rmtree(aside, ignore_errors=True)
-                os.rename(stale, aside)
-    writer = (
-        df.write.mode("overwrite")
-        .format("parquet")
-        .bucketBy(num_buckets, *bucket_cols)
-        .sortBy(*bucket_cols)
-    )
-    if path is not None:
-        writer = writer.option("path", path)
-    writer.saveAsTable(table_name)
-
-
 def compact_parquet_table(
     spark: SparkSession,
     path: str,

@@ -1141,8 +1141,9 @@ def embedding_near_dup_pairs(
 def _intra_batch_colliding(bb: DataFrame, id_col: str) -> DataFrame:
     """Ids losing the greedy min-id intra-batch admission: every doc that
     shares a (band_idx, band_key) bucket with a SMALLER-id doc in the same
-    band table.  Shared by the batch and streaming admission filters so the
-    rule cannot drift between them."""
+    band table.  Shared by the index-free :func:`incremental_lsh_dedup` and
+    :meth:`ManifestLshBandIndex.admit` so the rule cannot drift between
+    them."""
     a, b = bb.alias("a"), bb.alias("b")
     return (
         a.join(
@@ -1177,10 +1178,10 @@ def incremental_lsh_dedup(
     only batch×corpus collisions matter, and the LEFT SEMI join on
     (band_idx, band_key) short-circuits at the first corpus hit, so no
     candidate-pair set ever materializes.  At production scale the corpus
-    band table is a persisted index, bucketed by the band key so the daily
-    probe elides the corpus-side shuffle — that composition is
-    :class:`LshBandIndex` (build once, probe + append daily); this function
-    is the index-free form that derives both band tables inline.
+    band table is a persisted index that the daily probe streams map-side —
+    that composition is :class:`ManifestLshBandIndex` (build once, probe +
+    append daily, each append one atomic commit); this function is the
+    index-free form that derives both band tables inline.
 
     ``intra_batch`` additionally drops a batch document that shares a band
     with any SMALLER-id batch document — without it, all copies of a
@@ -1234,183 +1235,15 @@ def incremental_lsh_dedup(
 
 
 @dataclass(frozen=True)
-class LshBandIndex:
-    """Persisted, hash-bucketed MinHash band index — the production corpus
-    layout :func:`incremental_lsh_dedup` documents, wired end-to-end.
-
-    The corpus band table is written ONCE as a catalog table bucketed (and
-    bucket-sorted) on ``(band_idx, band_key)`` via
-    ``io.writers.write_bucketed_table``.  Every daily probe then equi-joins
-    on exactly the bucket columns, so the index side of the join reports its
-    bucketing as the required hash partitioning and **never shuffles** —
-    only the (small) daily batch's band table moves.  At 100 TB the index is
-    the dominant relation by orders of magnitude; eliding its exchange turns
-    the probe from "reshuffle the corpus every day" into "stream the batch
-    past a static layout" (plan-asserted in tests/test_plans.py).
-
-    Admission lifecycle::
-
-        idx = LshBandIndex(spark, "corpus_band_index")
-        idx.build(corpus)                  # once, at corpus creation
-        survivors = idx.admit(day1_batch)  # probe + intra-batch rule
-        ...                                # admit() appends survivors' bands
-
-    Parameters are carried BY the index object so the probe can never drift
-    from the build (a batch minhashed with different ``num_hashes``/``bands``
-    would silently collide with nothing).
-    """
-
-    spark: SparkSession
-    table: str
-    num_hashes: int = 16
-    bands: int = 4
-    shingle_n: int = 3
-    num_buckets: int = 16
-    text_col: str = "text"
-    id_col: str = "doc_id"
-    hash_fn: str = "sha256"
-
-    def _band_table(self, docs: DataFrame) -> DataFrame:
-        return minhash_band_table(
-            docs,
-            self.text_col,
-            self.id_col,
-            self.num_hashes,
-            self.bands,
-            self.shingle_n,
-            self.hash_fn,
-        )
-
-    def build(self, corpus: DataFrame, path: str | None = None) -> None:
-        """(Re)build the index from the full corpus."""
-        from door2door_etl_spark.io.writers import write_bucketed_table
-
-        write_bucketed_table(
-            self._band_table(corpus),
-            self.table,
-            bucket_cols=["band_idx", "band_key"],
-            num_buckets=self.num_buckets,
-            path=path,
-        )
-
-    def scan(self) -> DataFrame:
-        """The index relation (bucketed catalog table scan)."""
-        return self.spark.table(self.table)
-
-    def probe(self, batch_bands: DataFrame) -> DataFrame:
-        """Batch band rows colliding with the index: LEFT SEMI on the bucket
-        columns — the join whose index side must not exchange."""
-        return batch_bands.join(self.scan(), ["band_idx", "band_key"], "left_semi")
-
-    def admit(
-        self, batch: DataFrame, intra_batch: bool = True, update_index: bool = True
-    ) -> DataFrame:
-        """Admission-filter ``batch`` against the index (same semantics as
-        :func:`incremental_lsh_dedup`: corpus collision OR greedy min-id
-        intra-batch collision drops a doc) and, with ``update_index``,
-        append the survivors' band rows so tomorrow's batch collides with
-        today's admissions.  Returns the surviving batch rows, materialized
-        (``localCheckpoint``) so the index append and the caller share one
-        execution of the plan."""
-        from pyspark import StorageLevel
-
-        bb = self._band_table(batch).persist(StorageLevel.MEMORY_AND_DISK)
-        try:
-            colliding = self.probe(bb).select(self.id_col).distinct()
-            if intra_batch:
-                colliding = colliding.union(
-                    _intra_batch_colliding(bb, self.id_col)
-                ).distinct()
-            survivors = batch.join(colliding, self.id_col, "left_anti").localCheckpoint(
-                eager=True
-            )
-            if update_index:
-                # Filter the STILL-CACHED band table down to the survivors
-                # instead of re-running the dominant tokenize/shingle/
-                # minhash pipeline over them; checkpoint before unpersist
-                # so the append below reads materialized rows.
-                survivor_bands = bb.join(
-                    survivors.select(self.id_col), self.id_col, "left_semi"
-                ).localCheckpoint(eager=True)
-        finally:
-            bb.unpersist()
-        if update_index:
-            (
-                survivor_bands
-                .write.mode("append")
-                .format("parquet")
-                .bucketBy(self.num_buckets, "band_idx", "band_key")
-                .sortBy("band_idx", "band_key")
-                .saveAsTable(self.table)
-            )
-        return survivors
-
-    def compact(self) -> None:
-        """Rewrite the index back to ~one file group per bucket.
-
-        Every :meth:`admit` appends a file-set per bucket, so after months
-        of daily batches each bucket holds hundreds of small sorted files —
-        bucketing metadata stays valid and shuffle elision holds, but scan
-        cost (listing, footers, task scheduling) creeps linearly.  This
-        rewrites the table through a STAGING table + two catalog renames
-        (never a checkpoint/collect: at 100 TB the index must stream
-        straight from old files to new), preserving the bucket spec, so
-        the probe's no-Exchange plan property survives compaction
-        (plan-asserted in tests/test_plans.py).
-
-        The swap window: between the two renames the index name briefly
-        does not exist; a concurrent probe in that instant fails loudly
-        and retries — the same visibility contract Hive's
-        INSERT OVERWRITE has always had for catalog tables (the versioned
-        lakehouse protocol in io/versioned.py is the stronger alternative
-        when readers cannot tolerate that).
-        """
-        from door2door_etl_spark.io.writers import write_bucketed_table
-
-        staging = f"{self.table}__compacting"
-        backup = f"{self.table}__precompact"
-        self.spark.sql(f"DROP TABLE IF EXISTS {staging}")
-        self.spark.sql(f"DROP TABLE IF EXISTS {backup}")
-        # One task per bucket: repartition on the bucket columns is
-        # bucket-aligned (hashpartitioning == the bucket-id expression), so
-        # each task holds exactly one bucket and writes one file group.
-        # Bucketed READING must be off for this one plan: otherwise the
-        # scan advertises the very hashpartitioning the repartition asks
-        # for, Catalyst elides the shuffle as redundant, then disables the
-        # bucketed scan (nothing downstream needs it) — leaving arbitrary
-        # file splits that fan out to num_tasks x num_buckets files.
-        prev = self.spark.conf.get("spark.sql.sources.bucketing.enabled")
-        self.spark.conf.set("spark.sql.sources.bucketing.enabled", "false")
-        try:
-            write_bucketed_table(
-                self.scan().repartition(self.num_buckets, "band_idx", "band_key"),
-                staging,
-                bucket_cols=["band_idx", "band_key"],
-                num_buckets=self.num_buckets,
-            )
-        finally:
-            self.spark.conf.set("spark.sql.sources.bucketing.enabled", prev)
-        self.spark.sql(f"ALTER TABLE {self.table} RENAME TO {backup}")
-        try:
-            self.spark.sql(f"ALTER TABLE {staging} RENAME TO {self.table}")
-        except BaseException:
-            # Restore the original name before surfacing the failure.
-            self.spark.sql(f"ALTER TABLE {backup} RENAME TO {self.table}")
-            raise
-        self.spark.sql(f"DROP TABLE {backup}")
-
-
-@dataclass(frozen=True)
 class ManifestLshBandIndex:
-    """MinHash band index versioned through the object-store manifest
-    protocol — the transactional twin of :class:`LshBandIndex`.
+    """Persisted MinHash band index versioned through the object-store
+    manifest protocol — the production corpus layout
+    :func:`incremental_lsh_dedup` documents, wired end-to-end.
 
-    The bucketed-catalog index is the zero-exchange probe layout, but its
-    :meth:`~LshBandIndex.admit` mutates durable state in two unrelated
-    steps (band ``saveAsTable`` append; the caller's corpus write) — a
-    crash between them leaves bands for documents the corpus never
-    admitted, exactly the torn-state class ``io/manifest.py`` was built
-    to kill.  Here both relations live in ONE manifest table (unified
+    An index whose band append and admitted-id write are two separate
+    steps tears on a crash between them: bands for documents the corpus
+    never admitted, exactly the torn-state class ``io/manifest.py`` was
+    built to kill.  Here both relations live in ONE manifest table (unified
     schema ``(rel, doc_id, band_idx, band_key)``, partitioned by ``rel``:
     ``'band'`` rows carry the LSH bands, ``'id'`` rows are the
     admitted-document set) and every :meth:`admit` lands them in a SINGLE
@@ -1420,13 +1253,14 @@ class ManifestLshBandIndex:
     prior version current (invariant pinned by the crash-window tests:
     ``distinct(band.doc_id) == id set`` at every committed version).
 
-    Probe scale shape: WITHOUT bucket metadata the index must not be
-    shuffled, so the probe streams the index MAP-SIDE past two broadcast
-    hash joins — batch band keys broadcast onto the index scan (left
-    semi), the matched-key set (O(collisions), tiny) broadcast back onto
-    the batch.  Data moved is O(collisions), never O(index); the only
-    exchange carries matched keys (plan-asserted: no SortMergeJoin, no
-    index-side Exchange).  :meth:`compact` is the protocol's CLUSTERED
+    Probe scale shape: the index is never shuffled.  The probe streams it
+    MAP-SIDE past two broadcast hash joins — batch band keys broadcast
+    onto the index scan (left semi), the matched-key set (O(collisions),
+    tiny) broadcast back onto the batch.  Both broadcasts are explicit
+    hints, so the plan holds whatever ``autoBroadcastJoinThreshold`` says.
+    Data moved is O(collisions), never O(index); the only exchange
+    carries matched keys (plan-asserted: no SortMergeJoin, no index-side
+    Exchange).  :meth:`compact` is the protocol's CLUSTERED
     compaction on ``(band_idx, band_key)``, so post-compaction files
     carry disjoint key ranges for stats pruning — and compaction is
     itself a commit, racing admits safely instead of a rename window.
@@ -1538,12 +1372,11 @@ class ManifestLshBandIndex:
         tag: str | None = None,
     ) -> DataFrame:
         """Admission-filter ``batch`` (same semantics as
-        :func:`incremental_lsh_dedup` / :meth:`LshBandIndex.admit`) and,
-        with ``update_index``, commit the survivors' band rows AND their
-        ids as ONE manifest version.  ``tag`` stamps the committed id
-        rows (see :meth:`admitted_ids` ``with_tags``) — the streaming
-        path uses the batch id so replay and re-delivery are
-        distinguishable."""
+        :func:`incremental_lsh_dedup`) and, with ``update_index``, commit
+        the survivors' band rows AND their ids as ONE manifest version.
+        ``tag`` stamps the committed id rows (see :meth:`admitted_ids`
+        ``with_tags``) — the streaming path uses the batch id so replay
+        and re-delivery are distinguishable."""
         from pyspark import StorageLevel
 
         bb = self._band_table(batch).persist(StorageLevel.MEMORY_AND_DISK)

@@ -2640,36 +2640,12 @@ WHERE doc_id % {INGEST_MOD} = 0
 """
 
 
-def q_incremental_lsh_dedup_indexed(spark: SparkSession, sf: str) -> DataFrame:
-    """Same admission semantics as ns_incremental_lsh_dedup, but probed
-    against the PERSISTED hash-bucketed band index (operators.dedup
-    .LshBandIndex) — the production layout where the corpus side of the
-    daily probe join never shuffles (plan-asserted in tests/test_plans.py).
-    Sharing the oracle with the inline variant pins that the physical
-    layout change cannot drift the semantics."""
-    docs = load_table(spark, sf, "documents")
-    corpus = docs.filter(F.col("doc_id") % INGEST_MOD != 0)
-    batch = docs.filter(F.col("doc_id") % INGEST_MOD == 0)
-    idx = D.LshBandIndex(
-        spark,
-        "ns_lsh_band_index",
-        num_hashes=NUM_HASHES,
-        bands=BANDS,
-        shingle_n=SHINGLE_N,
-    )
-    idx.build(corpus)
-    kept = idx.admit(batch, update_index=False)
-    return kept.select("doc_id", "lang", "source")
-
-
-def q_incremental_lsh_dedup_manifest(spark: SparkSession, sf: str) -> DataFrame:
-    """Same admission semantics again, probed against the MANIFEST-VERSIONED
-    band index (operators.dedup.ManifestLshBandIndex) — the transactional
-    layout where a batch's bands and its admitted-id set land as ONE
-    manifest commit (atomicity crash-window-tested) and the probe streams
-    the index map-side through broadcast joins (no index shuffle,
-    plan-asserted in tests/test_plans.py).  Sharing the inline oracle pins
-    that this physical layout cannot drift the semantics either."""
+def _manifest_index_admission(
+    spark: SparkSession, sf: str, root_name: str, compact: bool
+) -> DataFrame:
+    """ns_incremental_lsh_dedup's admission probed against a fresh
+    operators.dedup.ManifestLshBandIndex built from the corpus, optionally
+    clustered-compacted before the probe."""
     import os
     import shutil
     import tempfile
@@ -2683,7 +2659,7 @@ def q_incremental_lsh_dedup_manifest(spark: SparkSession, sf: str) -> DataFrame:
     root = os.path.join(
         # per-process suffix: concurrent sweeps (sf0.01 + sf1) must not
         # clobber each other's fixture tables
-        tempfile.gettempdir(), f"ns_lsh_manifest_idx_{os.getpid()}"
+        tempfile.gettempdir(), f"{root_name}_{os.getpid()}"
     )
     shutil.rmtree(root, ignore_errors=True)
     idx = D.ManifestLshBandIndex(
@@ -2694,8 +2670,35 @@ def q_incremental_lsh_dedup_manifest(spark: SparkSession, sf: str) -> DataFrame:
         shingle_n=SHINGLE_N,
     )
     idx.build(corpus)
+    if compact:
+        idx.compact()
     kept = idx.admit(batch, update_index=False)
     return kept.select("doc_id", "lang", "source")
+
+
+def q_incremental_lsh_dedup_indexed(spark: SparkSession, sf: str) -> DataFrame:
+    """Same admission semantics as ns_incremental_lsh_dedup, probed against
+    the manifest-versioned band index after its CLUSTERED compaction
+    (operators.dedup.ManifestLshBandIndex.compact) — the layout a
+    long-lived index settles into, files range-disjoint on
+    (band_idx, band_key).  Sharing the inline oracle pins that compaction
+    cannot drift the semantics."""
+    return _manifest_index_admission(
+        spark, sf, "ns_lsh_manifest_idx_compacted", compact=True
+    )
+
+
+def q_incremental_lsh_dedup_manifest(spark: SparkSession, sf: str) -> DataFrame:
+    """Same admission semantics again, probed against the MANIFEST-VERSIONED
+    band index (operators.dedup.ManifestLshBandIndex) — the transactional
+    layout where a batch's bands and its admitted-id set land as ONE
+    manifest commit (atomicity crash-window-tested) and the probe streams
+    the index map-side through broadcast joins (no index shuffle,
+    plan-asserted in tests/test_plans.py).  Sharing the inline oracle pins
+    that this physical layout cannot drift the semantics either."""
+    return _manifest_index_admission(
+        spark, sf, "ns_lsh_manifest_idx", compact=False
+    )
 
 
 # -- SemDeDup: semantic dedup inside learned k-means cells ------------------
@@ -3181,7 +3184,7 @@ NORTHSTAR_QUERIES: list[QueryDef] = [
     QueryDef("ns_pii_redaction", q_pii_redaction, _sql_pii_redaction(), "north-star text/pii-redaction", ("northstar", "text")),
     QueryDef("ns_semdedup_corpus", q_semdedup_corpus, _sql_semdedup_corpus(), "north-star dedup/semantic (SemDeDup)", ("northstar", "dedup")),
     QueryDef("ns_incremental_lsh_dedup", q_incremental_lsh_dedup, _sql_incremental_lsh_dedup(), "north-star dedup/incremental-ingest", ("northstar", "dedup")),
-    QueryDef("ns_incremental_lsh_dedup_indexed", q_incremental_lsh_dedup_indexed, _sql_incremental_lsh_dedup(), "north-star dedup/incremental-ingest (bucketed persisted index)", ("northstar", "dedup")),
+    QueryDef("ns_incremental_lsh_dedup_indexed", q_incremental_lsh_dedup_indexed, _sql_incremental_lsh_dedup(), "north-star dedup/incremental-ingest (manifest-versioned index, clustered-compacted)", ("northstar", "dedup")),
     QueryDef("ns_incremental_lsh_dedup_manifest", q_incremental_lsh_dedup_manifest, _sql_incremental_lsh_dedup(), "north-star dedup/incremental-ingest (manifest-versioned index, atomic admit)", ("northstar", "dedup")),
     QueryDef("ns_minhash_signatures", q_minhash_signatures, _sql_minhash_signatures(), "north-star dedup/minhash", ("northstar", "dedup")),
     QueryDef("ns_lsh_band_buckets", q_lsh_band_buckets, _sql_lsh_band_buckets(), "north-star dedup/minhash-lsh", ("northstar", "dedup")),

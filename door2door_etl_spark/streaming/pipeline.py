@@ -306,21 +306,19 @@ def stream_decontaminate(
 
 def stream_incremental_lsh_dedup(
     docs_stream: DataFrame,
-    corpus_bands: DataFrame,
+    index,
     out_dir: str,
     checkpoint_dir: str,
-    text_col: str = "text",
-    id_col: str = "doc_id",
-    num_hashes: int = 16,
-    bands: int = 4,
-    shingle_n: int = 3,
 ):
     """Continuous-ingest admission filter: the streaming twin of
-    operators.dedup.incremental_lsh_dedup.  ``corpus_bands`` is the STATIC
-    persisted band index of the already-admitted corpus
-    (dedup.minhash_band_table output — at scale a bucketed table keyed by
-    the band key); each micro-batch derives its own band table, probes the
-    index with a semi join, and appends only the survivors.
+    operators.dedup.incremental_lsh_dedup.  ``index`` is the STATIC
+    persisted band index of the already-admitted corpus (a
+    :class:`~door2door_etl_spark.operators.dedup.ManifestLshBandIndex`,
+    which carries the text/id columns and MinHash parameters); each
+    micro-batch runs the index's own admission rule
+    (``index.admit(update_index=False)``) and appends only the survivors.
+    The index is never updated here — for a self-updating index see
+    :func:`stream_manifest_lsh_admission`.
 
     foreachBatch rather than a stream-static join for the same reason as
     stream_decontaminate: the admitted-id set is an aggregate over the
@@ -332,31 +330,10 @@ def stream_incremental_lsh_dedup(
     upgrades the sink to effectively-once.  No streaming state store is
     involved; the only per-batch cost is the probe join itself.
     """
-    from pyspark import StorageLevel
-
-    from door2door_etl_spark.operators.dedup import (
-        _intra_batch_colliding,
-        minhash_band_table,
-    )
 
     def admit_batch(batch_df: DataFrame, batch_id: int) -> None:
-        bb = minhash_band_table(
-            batch_df, text_col, id_col, num_hashes, bands, shingle_n
-        ).persist(StorageLevel.MEMORY_AND_DISK)
-        try:
-            colliding = (
-                bb.join(corpus_bands, ["band_idx", "band_key"], "left_semi")
-                .select(id_col)
-                .distinct()
-            )
-            # Intra-batch collapse: same shared rule as the batch operator.
-            lose = colliding.union(_intra_batch_colliding(bb, id_col)).distinct()
-            kept = batch_df.join(lose, id_col, "left_anti")
-            kept.write.mode("overwrite").parquet(
-                f"{out_dir}/batch_id={batch_id}"
-            )
-        finally:
-            bb.unpersist()
+        kept = index.admit(batch_df, update_index=False)
+        kept.write.mode("overwrite").parquet(f"{out_dir}/batch_id={batch_id}")
 
     return (
         docs_stream.writeStream.foreachBatch(admit_batch)
@@ -689,6 +666,31 @@ def _admission_run_id(checkpoint_dir: str) -> str:
             return fh.read().strip()
 
 
+def _admit_tagged(index, batch_df: DataFrame, tag: str) -> DataFrame:
+    """Admit ``batch_df`` into the self-updating ``index`` under admission
+    ``tag``, separating a REPLAY of this tag's own delivery from
+    RE-DELIVERY of a document another tag already admitted: the former
+    re-emits its prior admissions, the latter drops as an exact duplicate,
+    and only genuinely new rows run ``index.admit``."""
+    id_col = index.id_col
+    ids = index.admitted_ids(with_tags=True)
+    own = ids.filter(F.col("admit_tag") == tag).select(id_col)
+    other = ids.filter(
+        (F.col("admit_tag") != tag) | F.col("admit_tag").isNull()
+    ).select(id_col)
+    # replay of THIS batch: re-emit its own prior admissions
+    seen = batch_df.join(own, id_col, "left_semi")
+    # admitted by ANY other batch: exact-duplicate delivery -> drop
+    new = (
+        batch_df.join(own, id_col, "left_anti")
+        .join(other, id_col, "left_anti")
+        .localCheckpoint(eager=True)
+    )
+    if new.limit(1).count() == 0:
+        return seen
+    return seen.unionByName(index.admit(new, tag=tag))
+
+
 def stream_manifest_lsh_admission(
     docs_stream: DataFrame,
     index,
@@ -720,8 +722,6 @@ def stream_manifest_lsh_admission(
     Output: ``out_dir/batch_id=N`` per micro-batch (overwritten on
     replay), rows = admitted members of the batch.
     """
-
-    id_col = index.id_col
     # Namespace tags per checkpoint lifetime: a NEW stream with a fresh
     # checkpoint restarts batch ids at 0, and a bare batch-id tag would
     # misclassify an earlier deployment's batch-0 admissions as THIS
@@ -729,24 +729,7 @@ def stream_manifest_lsh_admission(
     run_id = _admission_run_id(checkpoint_dir)
 
     def admit_batch(batch_df: DataFrame, batch_id: int) -> None:
-        tag = f"{run_id}:{batch_id}"
-        ids = index.admitted_ids(with_tags=True)
-        own = ids.filter(F.col("admit_tag") == tag).select(id_col)
-        other = ids.filter(
-            (F.col("admit_tag") != tag) | F.col("admit_tag").isNull()
-        ).select(id_col)
-        # replay of THIS batch: re-emit its own prior admissions
-        seen = batch_df.join(own, id_col, "left_semi")
-        # admitted by ANY other batch: exact-duplicate delivery -> drop
-        new = (
-            batch_df.join(own, id_col, "left_anti")
-            .join(other, id_col, "left_anti")
-            .localCheckpoint(eager=True)
-        )
-        if new.limit(1).count() == 0:
-            kept = seen
-        else:
-            kept = seen.unionByName(index.admit(new, tag=tag))
+        kept = _admit_tagged(index, batch_df, f"{run_id}:{batch_id}")
         kept.write.mode("overwrite").parquet(f"{out_dir}/batch_id={batch_id}")
 
     return (
@@ -1108,22 +1091,7 @@ def stream_curate(
             )
 
         # Near-dup admission with the shared replay-vs-redelivery rule.
-        tag = f"{run_id}:{batch_id}"
-        ids = index.admitted_ids(with_tags=True)
-        own = ids.filter(F.col("admit_tag") == tag).select(id_col)
-        other = ids.filter(
-            (F.col("admit_tag") != tag) | F.col("admit_tag").isNull()
-        ).select(id_col)
-        seen = cur.join(own, id_col, "left_semi")
-        new = (
-            cur.join(own, id_col, "left_anti")
-            .join(other, id_col, "left_anti")
-            .localCheckpoint(eager=True)
-        )
-        if new.limit(1).count() == 0:
-            kept = seen
-        else:
-            kept = seen.unionByName(index.admit(new, tag=tag))
+        kept = _admit_tagged(index, cur, f"{run_id}:{batch_id}")
         kept = kept.localCheckpoint(eager=True)
         n_kept = kept.count()
         stages.append(("near_dedup_admission", n_cur, n_kept))

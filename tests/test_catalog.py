@@ -75,6 +75,17 @@ def test_query_runs_sf0001(spark, sf_dir, name):
         assert n > 0, f"{name} returned no rows at sf0.001"
 
 
+def test_catalog_row_registers_no_catalog_table(spark, sf_dir):
+    """Building and forcing a catalog row leaves the session catalog as it
+    found it: the persisted-index row keeps its index in a manifest table
+    under a scratch root, never a managed table under the warehouse dir."""
+    before = sorted(t.name for t in spark.catalog.listTables())
+    QUERIES["ns_incremental_lsh_dedup_indexed"].fn(spark, sf_dir).count()
+    after = spark.catalog.listTables()
+    assert sorted(t.name for t in after) == before
+    assert [t.name for t in after if not t.isTemporary] == []
+
+
 TPCH_SQL_FRONTEND = [
     f"tpch_q{i}_" for i in range(1, 23)
 ]

@@ -729,48 +729,6 @@ def test_incremental_lsh_dedup_drops_corpus_dup_keeps_novel(spark):
     assert {r["doc_id"] for r in loose.collect()} == {101, 102}
 
 
-def test_lsh_band_index_matches_inline_and_evolves(spark, tmp_path):
-    """The persisted bucketed index must admit exactly the docs the inline
-    operator admits, and appending survivors must make a later batch's
-    duplicate of an earlier admission collide."""
-    from door2door_etl_spark.operators.dedup import LshBandIndex, incremental_lsh_dedup
-
-    corpus = spark.createDataFrame(
-        [
-            Row(doc_id=1, text="the quick brown fox jumps over the lazy dog today"),
-            Row(doc_id=2, text="completely different corpus sentence about spark plans"),
-        ]
-    )
-    day1 = spark.createDataFrame(
-        [
-            Row(doc_id=100, text="the quick brown fox jumps over the lazy dog today"),
-            Row(doc_id=101, text="unrelated fresh material with new vocabulary entirely"),
-            Row(doc_id=102, text="unrelated fresh material with new vocabulary entirely"),
-        ]
-    )
-    idx = LshBandIndex(spark, "t_lsh_idx", num_buckets=4)
-    try:
-        idx.build(corpus, path=str(tmp_path / "idx"))
-
-        # Parity with the inline (index-free) operator.
-        inline = {r["doc_id"] for r in incremental_lsh_dedup(day1, corpus).collect()}
-        kept = idx.admit(day1)  # update_index=True appends doc 101's bands
-        assert {r["doc_id"] for r in kept.collect()} == inline == {101}
-
-        # Day 2: a copy of day 1's admission now collides WITH THE INDEX
-        # (not intra-batch) — proof the append took effect.
-        day2 = spark.createDataFrame(
-            [
-                Row(doc_id=200, text="unrelated fresh material with new vocabulary entirely"),
-                Row(doc_id=201, text="genuinely novel second day content stream here"),
-            ]
-        )
-        kept2 = idx.admit(day2, update_index=False)
-        assert {r["doc_id"] for r in kept2.collect()} == {201}
-    finally:
-        spark.sql("DROP TABLE IF EXISTS t_lsh_idx")
-
-
 def _lsh_index_in_sync(idx) -> bool:
     """The composite-state invariant: band doc set == admitted-id set."""
     band_ids = {r[0] for r in idx.scan().select(idx.id_col).distinct().collect()}
@@ -778,10 +736,10 @@ def _lsh_index_in_sync(idx) -> bool:
     return band_ids == ids
 
 
-def test_manifest_lsh_index_matches_bucketed_and_inline(spark, tmp_path):
+def test_manifest_lsh_index_matches_inline(spark, tmp_path):
     """The manifest-versioned index admits exactly what the inline operator
-    and the bucketed index admit, its id set tracks its band set at every
-    committed version, and appended admissions collide later batches."""
+    admits, its id set tracks its band set at every committed version, and
+    appended admissions collide later batches."""
     from door2door_etl_spark.operators.dedup import (
         ManifestLshBandIndex,
         incremental_lsh_dedup,
@@ -834,9 +792,9 @@ def test_manifest_lsh_index_matches_bucketed_and_inline(spark, tmp_path):
 def test_manifest_lsh_index_admit_is_atomic(spark, tmp_path, monkeypatch):
     """Crash-window pin for VERDICT r5 ask #3.
 
-    Counterfactual first: committing bands and ids as TWO appends (the
-    old bucketed index's shape — band saveAsTable, then the caller's
-    separate corpus write) tears on a crash between them.  Then the real
+    Counterfactual first: committing bands and ids as TWO appends (a band
+    append, then the caller's separate corpus write) tears on a crash
+    between them.  Then the real
     admit(): one commit, so a crash at the claim leaves NOTHING visible
     — version, band set, and id set all unchanged — and the retry heals.
     """

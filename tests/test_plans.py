@@ -3,7 +3,7 @@
 Correctness tests prove the right rows come back; these prove the right
 PLAN produces them — filters reach the parquet scan, projections prune the
 read schema, small dims broadcast, window top-k uses group limits, ordered
-limits use TakeOrderedAndProject, bucketed joins elide the shuffle, and the
+limits use TakeOrderedAndProject, persisted indexes are probed map-side, and the
 hot paths stay inside WholeStageCodegen.  A regression here is a 100×
 slowdown at scale that a 60k-row correctness test would never catch.
 """
@@ -12,7 +12,6 @@ import pytest
 from pyspark.sql import Row
 from pyspark.sql import functions as F
 
-from door2door_etl_spark.io.writers import write_bucketed_table
 from door2door_etl_spark.operators.relational import salted_equijoin
 from door2door_etl_spark.queries.catalog import QUERIES
 
@@ -73,75 +72,6 @@ def test_scan_agg_stays_in_codegen(spark, sf001):
     df = QUERIES["tpch_q1_pricing_summary"].fn(spark, sf001)
     df.collect()  # finalize the AQE plan; codegen spans appear as *(n)
     assert "*(" in plan_of(df)
-
-
-def test_bucketed_join_elides_shuffle(spark, sf001, tmp_path):
-    """Two tables bucketed on the join key must equi-join with no Exchange
-    on either side — the co-located-join contract of write_bucketed_table."""
-    li = spark.read.parquet(f"{sf001}/lineitem.parquet").select(
-        "l_orderkey", "l_quantity"
-    )
-    orders = spark.read.parquet(f"{sf001}/orders.parquet").select(
-        "o_orderkey", "o_totalprice"
-    )
-    write_bucketed_table(li, "t_li_b", ["l_orderkey"], 4, path=str(tmp_path / "li"))
-    write_bucketed_table(orders, "t_ord_b", ["o_orderkey"], 4, path=str(tmp_path / "ord"))
-    # At this tiny SF Catalyst would broadcast (and rightly skip bucketing);
-    # disable broadcast to exercise the co-located-join path a 100 TB
-    # fact⋈fact join takes.
-    prev = spark.conf.get("spark.sql.autoBroadcastJoinThreshold")
-    spark.conf.set("spark.sql.autoBroadcastJoinThreshold", "-1")
-    try:
-        a = spark.table("t_li_b")
-        b = spark.table("t_ord_b")
-        joined = a.join(b, a.l_orderkey == b.o_orderkey)
-        plan = plan_of(joined)
-        assert "SortMergeJoin" in plan or "ShuffledHashJoin" in plan
-        assert "Exchange hashpartitioning" not in plan, (
-            "bucketed join should not shuffle:\n" + plan
-        )
-        assert "Bucketed: true" in plan
-        # sanity: same result as the unbucketed join
-        assert joined.count() == li.join(orders, li.l_orderkey == orders.o_orderkey).count()
-    finally:
-        spark.conf.set("spark.sql.autoBroadcastJoinThreshold", prev)
-        spark.sql("DROP TABLE IF EXISTS t_li_b")
-        spark.sql("DROP TABLE IF EXISTS t_ord_b")
-
-
-def test_lsh_band_index_probe_elides_index_side_shuffle(spark, sf001, tmp_path):
-    """The daily-ingest probe against the persisted LSH band index must not
-    exchange the index side: the index is bucketed on exactly the join key
-    (band_idx, band_key), so the only shuffle in the semi join is the small
-    daily batch being hashed into the index's layout.  At 100 TB this is the
-    difference between reshuffling the corpus every day and streaming the
-    batch past a static layout."""
-    from door2door_etl_spark.io.readers import load_table
-    from door2door_etl_spark.operators.dedup import LshBandIndex
-
-    docs = load_table(spark, sf001, "documents")
-    corpus = docs.filter(F.col("doc_id") % 10 != 0)
-    batch = docs.filter(F.col("doc_id") % 10 == 0)
-    idx = LshBandIndex(spark, "t_lsh_plan_idx", num_buckets=4)
-    prev = spark.conf.get("spark.sql.autoBroadcastJoinThreshold")
-    spark.conf.set("spark.sql.autoBroadcastJoinThreshold", "-1")
-    try:
-        idx.build(corpus, path=str(tmp_path / "idx"))
-        probe = idx.probe(idx._band_table(batch))
-        plan = plan_of(probe)
-        assert "Bucketed: true" in plan, plan
-        # Exactly ONE exchange on the join key — the batch side being
-        # hashed into the index's bucket layout.  (The batch side also
-        # shuffles once on doc_id inside the minhash aggregation; that one
-        # is inherent to signature computation, not the join.)  The bucketed
-        # index scan satisfies the join's required distribution directly.
-        assert plan.count("Exchange hashpartitioning(band_idx") == 1, (
-            "index side of the probe must not shuffle:\n" + plan
-        )
-        assert probe.count() > 0  # sanity: sf0.001 documents contain dups
-    finally:
-        spark.conf.set("spark.sql.autoBroadcastJoinThreshold", prev)
-        spark.sql("DROP TABLE IF EXISTS t_lsh_plan_idx")
 
 
 def test_salted_join_matches_plain_join(spark):
@@ -525,50 +455,6 @@ def test_literal_query_ann_plans_single_scan(spark, sf001):
     assert n_scans(by_id) == 2
 
 
-def test_lsh_band_index_compaction_preserves_shuffle_elision(spark, sf001):
-    """VERDICT r4 ask #5: after N admit() appends (each adds a file-set
-    per bucket) the index compacts back to ~num_buckets file groups, keeps
-    every row, and the probe's no-Exchange property still holds."""
-    from pathlib import Path
-    from urllib.parse import urlparse
-
-    from door2door_etl_spark.io.readers import load_table
-    from door2door_etl_spark.operators.dedup import LshBandIndex
-
-    docs = load_table(spark, sf001, "documents")
-    corpus = docs.filter(F.col("doc_id") % 3 == 0)
-    idx = LshBandIndex(spark, "t_lsh_compact_idx", num_buckets=4)
-    prev = spark.conf.get("spark.sql.autoBroadcastJoinThreshold")
-    spark.conf.set("spark.sql.autoBroadcastJoinThreshold", "-1")
-    try:
-        idx.build(corpus)
-        idx.admit(docs.filter(F.col("doc_id") % 3 == 1))
-        idx.admit(docs.filter(F.col("doc_id") % 3 == 2))
-
-        wh = Path(urlparse(spark.conf.get("spark.sql.warehouse.dir")).path)
-        loc = wh / "t_lsh_compact_idx"
-        files_before = len(list(loc.rglob("*.parquet")))
-        rows_before = idx.scan().count()
-        assert files_before > 2 * idx.num_buckets  # appends accreted files
-
-        idx.compact()
-
-        files_after = len(list(loc.rglob("*.parquet")))
-        assert files_after <= idx.num_buckets, (files_before, files_after)
-        assert idx.scan().count() == rows_before
-
-        # The probe still elides the index-side exchange post-compaction.
-        probe = idx.probe(idx._band_table(docs.filter(F.col("doc_id") % 7 == 0)))
-        plan = plan_of(probe)
-        assert "Bucketed: true" in plan, plan
-        assert plan.count("Exchange hashpartitioning(band_idx") == 1, plan
-    finally:
-        spark.conf.set("spark.sql.autoBroadcastJoinThreshold", prev)
-        for t in ("t_lsh_compact_idx", "t_lsh_compact_idx__compacting",
-                  "t_lsh_compact_idx__precompact"):
-            spark.sql(f"DROP TABLE IF EXISTS {t}")
-
-
 def test_epoch_shuffle_single_range_exchange_no_global_sort(spark, sf001):
     """The epoch shuffle must not plan the one-task global-window trap: the
     only exchange is the RANGE partitioning on the shuffle key (plus no
@@ -664,8 +550,12 @@ def test_manifest_lsh_index_probe_streams_index_map_side(spark, sf001, tmp_path)
     """VERDICT r5 ask #3, scale half: the manifest-versioned index has no
     bucket metadata, so its probe must never SHUFFLE the index — the index
     scan feeds broadcast hash joins only (batch keys broadcast in, matched
-    keys broadcast back; data moved is O(collisions), not O(index)) — and
-    the property must survive clustered compaction."""
+    keys broadcast back; data moved is O(collisions), not O(index)).  The
+    broadcasts are explicit hints, so the plan holds with automatic
+    broadcasting on or off (-1, the setting a 100 TB index join runs under).
+    Admits accrete files; clustered compaction folds them back without
+    losing a band row, and the probe property survives it."""
+    from door2door_etl_spark.io.manifest import ManifestTable
     from door2door_etl_spark.io.readers import load_table
     from door2door_etl_spark.operators.dedup import ManifestLshBandIndex
 
@@ -673,22 +563,45 @@ def test_manifest_lsh_index_probe_streams_index_map_side(spark, sf001, tmp_path)
     corpus = docs.filter(F.col("doc_id") % 10 != 0)
     batch = docs.filter(F.col("doc_id") % 10 == 0)
     idx = ManifestLshBandIndex(spark, str(tmp_path / "lsh_man_plan"))
-    idx.build(corpus)
+    table = ManifestTable(idx.root)
+
+    def n_files() -> int:
+        return len(table.manifest(table.current_version())["files"])
+
+    idx.build(corpus.filter(F.col("doc_id") % 3 == 0))
+    files_built = n_files()
+    idx.admit(corpus.filter(F.col("doc_id") % 3 == 1))
+    idx.admit(corpus.filter(F.col("doc_id") % 3 == 2))
 
     def assert_streamed():
-        probe = idx.probe(idx._band_table(batch))
-        plan = plan_of(probe)
-        # No sort-merge join anywhere: the index side would have to
-        # exchange+sort to feed one.
-        assert "SortMergeJoin" not in plan, plan
-        # And no exchange partitioned on the join key at all — the only
-        # exchanges are the batch-side minhash agg (doc_id) and the tiny
-        # matched-key distinct, which is rows-of-collisions sized.
-        assert plan.count("BroadcastHashJoin") >= 2, plan
-        assert probe.count() > 0  # sf0.001 documents contain dups
+        prev = spark.conf.get("spark.sql.autoBroadcastJoinThreshold")
+        try:
+            for threshold in (prev, "-1"):
+                spark.conf.set("spark.sql.autoBroadcastJoinThreshold", threshold)
+                probe = idx.probe(idx._band_table(batch))
+                plan = plan_of(probe)
+                # No sort-merge join anywhere: the index side would have
+                # to exchange+sort to feed one.
+                assert "SortMergeJoin" not in plan, (threshold, plan)
+                # And no exchange partitioned on the join key at all — the
+                # only exchanges are the batch-side minhash agg (doc_id)
+                # and the tiny matched-key distinct, which is
+                # rows-of-collisions sized.
+                assert plan.count("BroadcastHashJoin") >= 2, (threshold, plan)
+                assert probe.count() > 0  # sf0.001 documents contain dups
+        finally:
+            spark.conf.set("spark.sql.autoBroadcastJoinThreshold", prev)
 
     assert_streamed()
+    files_before = n_files()
+    rows_before = idx.scan().count()
+    assert files_before > files_built  # appends accreted files
+
     idx.compact()
+
+    # One target-size file per rel partition (band rows, id rows).
+    assert n_files() == 2, (files_before, n_files())
+    assert idx.scan().count() == rows_before
     assert_streamed()
 
 

@@ -358,7 +358,7 @@ def test_stream_incremental_lsh_dedup_admits_only_novel(spark, tmp_path):
     """Continuous-ingest admission: the static corpus band index rejects the
     verbatim near-dup, admits the novel doc, and the checkpoint makes replay
     append-free."""
-    from door2door_etl_spark.operators.dedup import minhash_band_table
+    from door2door_etl_spark.operators.dedup import ManifestLshBandIndex
     from door2door_etl_spark.streaming.pipeline import stream_incremental_lsh_dedup
 
     corpus = spark.createDataFrame(
@@ -367,7 +367,8 @@ def test_stream_incremental_lsh_dedup_admits_only_novel(spark, tmp_path):
             {"doc_id": 2, "text": "completely different corpus sentence about spark plans"},
         ]
     )
-    corpus_bands = minhash_band_table(corpus)
+    idx = ManifestLshBandIndex(spark, str(tmp_path / "corpus_idx"))
+    idx.build(corpus)
 
     src = tmp_path / "ingest_in"
     src.mkdir()
@@ -385,13 +386,13 @@ def test_stream_incremental_lsh_dedup_admits_only_novel(spark, tmp_path):
     )
     out = tmp_path / "ingest_out"
     q = stream_incremental_lsh_dedup(
-        stream, corpus_bands, str(out), str(tmp_path / "ckpt_ingest")
+        stream, idx, str(out), str(tmp_path / "ckpt_ingest")
     )
     q.awaitTermination(120)
     assert [r["doc_id"] for r in spark.read.parquet(str(out)).collect()] == [101]
 
     q2 = stream_incremental_lsh_dedup(
-        stream, corpus_bands, str(out), str(tmp_path / "ckpt_ingest")
+        stream, idx, str(out), str(tmp_path / "ckpt_ingest")
     )
     q2.awaitTermination(120)
     assert spark.read.parquet(str(out)).count() == 1
