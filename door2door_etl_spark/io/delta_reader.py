@@ -70,6 +70,7 @@ from door2door_etl_spark.io.manifest import (
     LocalFsOps,
     _is_object_uri,
 )
+from door2door_etl_spark.operators import local
 
 _COMMIT_RE = re.compile(r"^(\d{20})\.json$")
 _CP_SINGLE_RE = re.compile(r"^(\d{20})\.checkpoint\.parquet$")
@@ -370,7 +371,7 @@ def read_delta(
         key = tuple(pv.get(c) for c in pcols)
         groups.setdefault(key, []).append(fpath)
     if not groups:
-        return spark.createDataFrame([], schema)
+        return local.frame(spark, [], schema)
     parts: list[DataFrame] = []
     for key in sorted(
         groups, key=lambda k: tuple("" if v is None else str(v) for v in k)

@@ -72,6 +72,7 @@ from pyspark.sql.types import (
 
 from door2door_etl_spark.io.avro_codec import avro_read
 from door2door_etl_spark.io.manifest import LocalFsOps, _is_object_uri
+from door2door_etl_spark.operators import local
 
 _META_RE = re.compile(r"^v(\d+)\.metadata\.json$")
 _STATUS_DELETED = 2
@@ -554,6 +555,6 @@ def read_iceberg(
     converted schema."""
     snap = iceberg_snapshot(path, snapshot_id=snapshot_id, fs=fs)
     if not snap.data_files:
-        return spark.createDataFrame([], snap.schema)
+        return local.frame(spark, [], snap.schema)
     df = spark.read.schema(snap.schema).parquet(*snap.data_files)
     return df.select(*[f.name for f in snap.schema.fields])

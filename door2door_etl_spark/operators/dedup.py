@@ -703,7 +703,8 @@ def connected_dedup_clusters(
             from pyspark.sql.types import StructField, StructType
 
             ntype = edges.schema["a"].dataType
-            return pairs.sparkSession.createDataFrame(
+            return local.frame(
+                pairs.sparkSession,
                 sorted(labels_map.items()),
                 StructType(
                     [

@@ -234,7 +234,8 @@ def _rank_local_frame(spark, nodes, trans, ranks_map, *extra) -> DataFrame:
     trans.unpersist()
     for rel in extra:
         rel.unpersist()
-    return spark.createDataFrame(
+    return local.frame(
+        spark,
         sorted(ranks_map.items()),
         StructType(
             [
@@ -554,7 +555,8 @@ def kcore_peel(
             out[v] = out.get(v, 0) + 1
         from pyspark.sql.types import LongType, StructField, StructType
 
-        return edges.sparkSession.createDataFrame(
+        return local.frame(
+            edges.sparkSession,
             sorted(out.items()),
             StructType(
                 [
@@ -696,11 +698,11 @@ def bfs_hops(
             for v in nxt:
                 settled_map[v] = hop
             frontier_set = nxt
-        return spark.createDataFrame(
-            sorted(settled_map.items()), "node long, hops int"
+        return local.frame(
+            spark, sorted(settled_map.items()), "node long, hops int"
         )
-    settled = spark.createDataFrame(
-        [(source, 0)], "node long, hops int"
+    settled = local.frame(
+        spark, [(source, 0)], "node long, hops int"
     ).localCheckpoint(eager=True)
     frontier = settled
     # Per-hop checkpoint with the frontier-size signal riding the SAME
@@ -936,7 +938,8 @@ def label_propagation(
             lab = new
         from pyspark.sql.types import StructField, StructType
 
-        return edges.sparkSession.createDataFrame(
+        return local.frame(
+            edges.sparkSession,
             sorted(lab.items()),
             StructType(
                 [
@@ -1249,7 +1252,8 @@ def louvain(
         from pyspark.sql.types import StructField, StructType
 
         spark = edges.sparkSession
-        return spark.createDataFrame(
+        return local.frame(
+            spark,
             sorted(labels.items()),
             StructType(
                 [
@@ -1686,11 +1690,11 @@ def sssp_weighted(
             if new == dist_map:
                 break
             dist_map = new
-        return spark.createDataFrame(
-            sorted(dist_map.items()), "node long, dist long"
+        return local.frame(
+            spark, sorted(dist_map.items()), "node long, dist long"
         )
-    dist = spark.createDataFrame(
-        [(int(source), 0)], "node long, dist long"
+    dist = local.frame(
+        spark, [(int(source), 0)], "node long, dist long"
     ).localCheckpoint(eager=True)
     # Fixpoint detector riding the per-round checkpoint job (an
     # Observation — no extra action): distances only ever DECREASE

@@ -410,7 +410,7 @@ def coverage_max_select(
             total += gain
             out_rows.append((step, d, gain, total))
             del doc_sh[d]
-        return spark.createDataFrame(out_rows, out_schema)
+        return local.frame(spark, out_rows, out_schema)
     covered: DataFrame | None = None
     picked_ids: list = []
     for step in range(1, int(k) + 1):
@@ -434,4 +434,4 @@ def coverage_max_select(
         covered = new_cov if covered is None else covered.unionAll(new_cov)
         total = (out_rows[-1][3] if out_rows else 0) + int(r["gain"])
         out_rows.append((step, r[id_col], int(r["gain"]), total))
-    return spark.createDataFrame(out_rows, out_schema)
+    return local.frame(spark, out_rows, out_schema)

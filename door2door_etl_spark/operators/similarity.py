@@ -283,7 +283,8 @@ def mmr_topk(
                 StructType,
             )
 
-            return spark.createDataFrame(
+            return local.frame(
+                spark,
                 picked,
                 StructType(
                     [
@@ -332,7 +333,8 @@ def mmr_topk(
         vecs.append([float(x) for x in r[vec_col]])
         remaining = remaining.filter(F.col(id_col) != F.lit(r[id_col]))
     id_type = pool_df.schema[id_col].dataType
-    return spark.createDataFrame(
+    return local.frame(
+        spark,
         picked,
         StructType(
             [
@@ -742,7 +744,8 @@ def multi_query_topk(
 
     spark = df.sparkSession
     if isinstance(queries, dict):
-        qdf = spark.createDataFrame(
+        qdf = local.frame(
+            spark,
             [(int(qid), [float(x) for x in vec]) for qid, vec in queries.items()],
             f"query_id long, __qvec array<double>",
         )
@@ -955,8 +958,8 @@ class ManifestVectorIndex:
         )
         cells = [r["cell"] for r in scored_df.collect()]
         if not cells:
-            return self.spark.createDataFrame(
-                [], f"{self.id_col} long, cell int, cosine double"
+            return local.frame(
+                self.spark, [], f"{self.id_col} long, cell int, cosine double"
             )
         # ONE pruned scan for all probed cells (ManifestTable.read_keys):
         # per-cell file pruning is unchanged, but the surviving files are

@@ -44,6 +44,7 @@ from door2door_etl_spark.io.versioned import (
     read_version,
     table_changes,
 )
+from door2door_etl_spark.operators import local
 
 _SEP = "\x1f"
 _NULL = "\x00null"
@@ -678,7 +679,7 @@ class IncrementalAggView:
                 + (len(self.distinct_cols) if self.distinct_exact_k else 0)
             )
         )
-        return spark.createDataFrame([tuple(fields)], schema=", ".join(parts))
+        return local.frame(spark, [tuple(fields)], ", ".join(parts))
 
     def _window_applied(self, spark: SparkSession, from_v: int, to_v: int) -> bool:
         if VersionedParquetTable(self.view_root).current_version() is None:

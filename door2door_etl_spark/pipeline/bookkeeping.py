@@ -49,6 +49,8 @@ HANDLER_SCHEMA = T.StructType(
     ]
 )
 
+_SCHEMAS = {"ingestor": INGESTOR_SCHEMA, "handler": HANDLER_SCHEMA}
+
 
 class Bookkeeping:
     """Execution-metadata store under ``{root}/ingestor_executions`` and
@@ -62,10 +64,13 @@ class Bookkeeping:
         return f"{self.root}/{step}_executions"
 
     def _read(self, step: str) -> DataFrame | None:
+        """The step's table read with its declared schema: no inference
+        job, and a directory a failed first append left empty reads as
+        zero rows instead of raising ``UNABLE_TO_INFER_SCHEMA``."""
         path = self._path(step)
         if not Path(path).exists():
             return None
-        return self.spark.read.parquet(path)
+        return self.spark.read.schema(_SCHEMAS[step]).parquet(path)
 
     # -- S3: watermark lookup ------------------------------------------------
     def last_successful_fetch_hour(self, step: str = "ingestor") -> dt.datetime | None:

@@ -30,6 +30,7 @@ from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql import functions as F
 from pyspark.storagelevel import StorageLevel
 
+from door2door_etl_spark.operators import local
 from door2door_etl_spark.operators.dedup import (
     connected_dedup_clusters,
     exact_dedup_groups,
@@ -188,7 +189,7 @@ def curate_corpus(
             ).drop("cum_tokens"),
         )
 
-    funnel = spark.createDataFrame(
-        stages, schema="stage string, docs_in long, docs_out long"
+    funnel = local.frame(
+        spark, stages, "stage string, docs_in long, docs_out long"
     )
     return cur, funnel

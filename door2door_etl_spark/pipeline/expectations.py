@@ -51,6 +51,8 @@ from dataclasses import dataclass, field
 from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql import functions as F
 
+from door2door_etl_spark.operators import local
+
 _MODES = ("quarantine", "drop", "warn", "fail")
 _TAG = "_violated"
 
@@ -223,7 +225,7 @@ class ExpectationSuite:
         )
         modes = [(r.name, r.mode) for r in self._all()]
         spark = tagged.sparkSession
-        declared = spark.createDataFrame(modes, "rule string, mode string")
+        declared = local.frame(spark, modes, "rule string, mode string")
         return (
             declared.join(per_rule, "rule", "left")
             .crossJoin(F.broadcast(totals))

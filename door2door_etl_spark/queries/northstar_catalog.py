@@ -14,6 +14,7 @@ from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql import functions as F
 
 from door2door_etl_spark.io.readers import load_table
+from door2door_etl_spark.operators import local
 from door2door_etl_spark.operators import dedup as D
 from door2door_etl_spark.operators import similarity as S
 from door2door_etl_spark.operators import text as X
@@ -2397,7 +2398,8 @@ def q_kmeans_ivf_centroids(spark: SparkSession, sf: str) -> DataFrame:
         iterations=KM_ITERS,
         use_blas=False,
     )
-    norm_df = spark.createDataFrame(
+    norm_df = local.frame(
+        spark,
         [
             (i + 1, math.sqrt(sum(x * x for x in c)))
             for i, c in enumerate(centroids)
@@ -2432,7 +2434,8 @@ def q_kmeans_ivf_centroids_blas(spark: SparkSession, sf: str) -> DataFrame:
         iterations=KM_ITERS,
         use_blas=True,
     )
-    norm_df = spark.createDataFrame(
+    norm_df = local.frame(
+        spark,
         [(i + 1, math.sqrt(sum(x * x for x in c))) for i, c in enumerate(centroids)],
         "cluster int, norm double",
     )
@@ -2520,7 +2523,8 @@ def q_embedding_top_pc(spark: SparkSession, sf: str) -> DataFrame:
     v, lam, _ = power_iteration_top_pc(
         emb, dim=KM_DIM, iterations=PC_ITERS
     )
-    out = spark.createDataFrame(
+    out = local.frame(
+        spark,
         [(d + 1, float(v[d]), float(lam)) for d in range(KM_DIM)],
         "d int, loading double, lambda_raw double",
     )

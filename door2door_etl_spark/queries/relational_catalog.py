@@ -18,6 +18,7 @@ from pyspark.sql import DataFrame, SparkSession, Window
 from pyspark.sql import functions as F
 
 from door2door_etl_spark.io.readers import TABLES, list_sf_tables, load_table
+from door2door_etl_spark.operators import local
 from door2door_etl_spark.operators.relational import (
     dedup_first_wins,
     interval_join,
@@ -700,7 +701,8 @@ def q_catalog_probe(spark: SparkSession, sf: str) -> DataFrame:
     as a one-row relation — count plus sorted comma-joined names.  The
     driver-side listing is O(#tables) metadata, never data."""
     tables = list_sf_tables(sf)
-    return spark.createDataFrame(
+    return local.frame(
+        spark,
         [(len(tables), ",".join(tables))],
         "n_tables bigint, table_list string",
     )

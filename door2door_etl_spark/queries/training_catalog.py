@@ -15,6 +15,7 @@ from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql import functions as F
 
 from door2door_etl_spark.io.readers import load_table
+from door2door_etl_spark.operators import local
 from door2door_etl_spark.operators.dedup import segment_dedup, substring_dedup
 from door2door_etl_spark.operators.sketches import (
     cms_merge,
@@ -816,7 +817,8 @@ def q_bpe_merges(spark: SparkSession, sf: str) -> DataFrame:
 
     docs = load_table(spark, sf, "documents")
     merges = bpe_train_batched(docs, BPE_MERGES)
-    return spark.createDataFrame(
+    return local.frame(
+        spark,
         [
             (m["rank"], m["left"], m["right"], m["merged"], m["pair_count"])
             for m in merges

@@ -25,6 +25,7 @@ from pyspark.sql import functions as F
 
 from door2door_etl_spark.io.readers import event_schema
 from door2door_etl_spark.io.writers import merge_upsert_parquet
+from door2door_etl_spark.operators import local
 from door2door_etl_spark.schemas.normalize import normalize
 from door2door_etl_spark.schemas.registry import EntitySchema
 from door2door_etl_spark.session import ensure_runtime_confs
@@ -1098,13 +1099,14 @@ def stream_curate(
 
         if n_kept:
             merge_versioned(spark, docs_root, kept, key=id_col)
-        funnel = spark.createDataFrame(
+        funnel = local.frame(
+            spark,
             [
                 (run_id, batch_id, i, s, a, b)
                 for i, (s, a, b) in enumerate(stages)
             ],
-            schema="run_id string, batch_id long, stage_idx int, "
-                   "stage string, docs_in long, docs_out long",
+            "run_id string, batch_id long, stage_idx int, "
+            "stage string, docs_in long, docs_out long",
         )
         funnel.write.mode("overwrite").parquet(
             f"{funnel_root}/batch_id={batch_id}"

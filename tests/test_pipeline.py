@@ -129,6 +129,32 @@ def test_failed_hour_excluded_from_watermark(spark, tmp_path):
     assert book.next_fetch_hour() == HOUR + dt.timedelta(hours=1)
 
 
+def test_failed_first_append_leaves_bookkeeping_readable(spark, tmp_path, monkeypatch):
+    """A first bookkeeping append that dies inside its write job leaves an
+    empty table directory behind.  The watermark and staged-path lookups
+    read it with the declared schema as zero rows, instead of failing
+    schema inference on every later run."""
+    from pyspark.sql import DataFrameWriter
+    from pyspark.sql import functions as F
+
+    write_parquet = DataFrameWriter.parquet
+
+    def failing_parquet(self, path, *args, **kwargs):
+        df = self._df.withColumn(
+            "traceback", F.raise_error(F.lit("injected")).cast("string")
+        )
+        return write_parquet(df.write.mode("append"), path, *args, **kwargs)
+
+    book = Bookkeeping(spark, str(tmp_path / "monitor"))
+    with monkeypatch.context() as m:
+        m.setattr(DataFrameWriter, "parquet", failing_parquet)
+        with pytest.raises(Exception, match="injected"):
+            book.record_ingestor("w1", HOUR, 3, "/p1")
+    assert (tmp_path / "monitor" / "ingestor_executions").is_dir()
+    assert book.next_fetch_hour() == DEFAULT_START_HOUR
+    assert book.ingestor_output_path("w1") is None
+
+
 def test_upsert_updates_existing_keys(spark, tmp_path, landing):
     """Second batch with same key but new values -> UPDATE semantics (K1)."""
     lake = str(tmp_path / "lake")

@@ -8,10 +8,14 @@ hot paths stay inside WholeStageCodegen.  A regression here is a 100×
 slowdown at scale that a 60k-row correctness test would never catch.
 """
 
+import ast
+from pathlib import Path
+
 import pytest
 from pyspark.sql import Row
 from pyspark.sql import functions as F
 
+from door2door_etl_spark.operators import local
 from door2door_etl_spark.operators.relational import salted_equijoin
 from door2door_etl_spark.queries.catalog import QUERIES
 
@@ -1110,3 +1114,34 @@ def test_widen_floor_scan_splits_not_shuffles(spark, tmp_path):
     assert "RoundRobinPartitioning" in plan, plan
     fmt = formatted(w2)
     assert "PushedFilters" in fmt and "GreaterThan(v,3)" in fmt, fmt
+
+
+def test_local_frame_plans_local_table_scan(spark):
+    """Driver-held rows reach Spark as a local relation: the executed
+    plan scans a LocalTableScan, not the pickled Python RDD the list form
+    of ``createDataFrame`` plans (which starts a Python worker)."""
+    rows = [(1, "a"), (2, None)]
+    schema = "k bigint, v string"
+    df = local.frame(spark, rows, schema)
+    df.collect()
+    plan = plan_of(df)
+    assert "LocalTableScan" in plan and "ExistingRDD" not in plan, plan
+    assert "ExistingRDD" in plan_of(spark.createDataFrame(rows, schema))
+
+
+def test_create_dataframe_only_in_local_frame():
+    """``local.frame`` is the package's only ``createDataFrame`` caller,
+    so a pickled-row frame cannot come back unnoticed."""
+    pkg = Path(__file__).resolve().parent.parent / "door2door_etl_spark"
+    offenders = []
+    for path in sorted(pkg.rglob("*.py")):
+        if path == pkg / "operators" / "local.py":
+            continue
+        for node in ast.walk(ast.parse(path.read_text(), str(path))):
+            if (
+                isinstance(node, ast.Call)
+                and isinstance(node.func, ast.Attribute)
+                and node.func.attr == "createDataFrame"
+            ):
+                offenders.append(f"{path.relative_to(pkg)}:{node.lineno}")
+    assert offenders == [], offenders

@@ -1120,3 +1120,75 @@ def test_fastss_depth2_neighborhood_guarantee(base, edits):
         return out
 
     assert d2(base) & d2(edited), (base, edited)
+
+
+# -- local.frame: the Arrow driver->Spark path vs the pickled-list path -----
+
+FRAME_SCHEMA = (
+    "b bigint, i int, d double, s string, f boolean, t timestamp, "
+    "v array<double>"
+)
+_frame_rows = st.lists(
+    st.tuples(
+        st.none() | st.integers(-(2**63), 2**63 - 1),
+        st.none() | st.integers(-(2**31), 2**31 - 1),
+        st.none() | st.floats(allow_nan=False),
+        st.none() | st.text(st.characters(exclude_categories=("Cs",)), max_size=8),
+        st.none() | st.booleans(),
+        st.none() | st.datetimes(datetime(1971, 1, 1), datetime(2099, 12, 31)),
+        st.none() | st.lists(st.none() | st.floats(allow_nan=False), max_size=4),
+    ),
+    max_size=6,
+)
+
+
+def _assert_frame_matches_list_path(spark, rows, schema):
+    from door2door_etl_spark.operators import local
+
+    got = local.frame(spark, rows, schema)
+    want = spark.createDataFrame(rows, schema)  # the reference path
+    assert got.schema == want.schema
+    assert got.collect() == want.collect()
+
+
+@settings(max_examples=15, deadline=None, suppress_health_check=list(HealthCheck))
+@given(rows=_frame_rows)
+def test_local_frame_matches_create_dataframe(spark, rows):
+    """Same schema and rows as the list form of ``createDataFrame`` for
+    every column type the engine ships through ``local.frame``, with
+    nulls and with zero rows."""
+    _assert_frame_matches_list_path(spark, rows, FRAME_SCHEMA)
+
+
+def test_local_frame_matches_create_dataframe_non_utc_process_tz(spark):
+    """A naive datetime is the same instant on both paths when the Python
+    process runs in a non-UTC zone, DST transitions included."""
+    import os
+    import time
+
+    from pyspark.sql import types as T
+
+    schema = T.StructType(
+        [
+            T.StructField("k", T.LongType(), False),
+            T.StructField("t", T.TimestampType()),
+        ]
+    )
+    rows = [
+        (0, datetime(2024, 3, 10, 1, 30)),   # before the US spring-forward
+        (1, datetime(2024, 3, 10, 3, 30)),   # after it
+        (2, datetime(2024, 11, 3, 1, 30)),   # the ambiguous fall-back hour
+        (3, datetime(2022, 11, 24, 10, 0, 0, 123456)),
+        (4, None),
+    ]
+    old = os.environ.get("TZ")
+    os.environ["TZ"] = "America/New_York"
+    time.tzset()
+    try:
+        _assert_frame_matches_list_path(spark, rows, schema)
+    finally:
+        if old is None:
+            del os.environ["TZ"]
+        else:
+            os.environ["TZ"] = old
+        time.tzset()
