@@ -171,10 +171,6 @@ class IcebergSnapshot:
     data_files: list[str] = field(default_factory=list)  # absolute
     metadata: dict = field(default_factory=dict)
 
-    @property
-    def format_version(self) -> int:
-        return int(self.metadata.get("format-version", 1))
-
 
 def _latest_metadata(fs, path: str) -> tuple[str, dict]:
     meta_dir = os.path.join(path, "metadata")

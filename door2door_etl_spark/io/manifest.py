@@ -73,7 +73,6 @@ import shutil
 import time
 import uuid
 from dataclasses import dataclass, field
-from pathlib import Path
 from typing import Protocol, runtime_checkable
 
 from pyspark.sql import DataFrame, SparkSession
@@ -913,30 +912,6 @@ class ManifestTable:
             return True
 
         return [rel for rel in man["files"] if keep(rel)]
-
-    def read_range(
-        self,
-        spark: SparkSession,
-        lo,
-        hi,
-        version: int | None = None,
-        col: str | None = None,
-    ) -> DataFrame:
-        """Rows with ``col`` (default: first stats column) in [lo, hi],
-        scanning ONLY the files whose footer range overlaps."""
-        if version is None:
-            version = self.current_version()
-            if version is None:
-                raise ValueError(f"{self.root} has no committed manifest")
-        if col is None:
-            cols = self._stats_cols(self.manifest(version))
-            if not cols:
-                raise ValueError(
-                    f"{self.root} v{version} carries no stats columns; "
-                    "read() + filter"
-                )
-            col = cols[0]
-        return self.read_where(spark, {col: (lo, hi)}, version)
 
     def read_where(
         self, spark: SparkSession, preds: dict, version: int | None = None

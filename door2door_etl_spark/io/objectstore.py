@@ -12,28 +12,14 @@ form is the OPPOSITE split:
 
 This module is the thin, fully-testable part of that: URI scheme
 normalization (``s3://`` → ``s3a://`` — the only maintained Hadoop
-connector), hour-bucket prefix construction matching the reference's
-layout, and the documented Hadoop conf keys for credentials.  Everything
+connector) and the non-secret s3a settings.  Everything
 network-touching stays in Spark's own s3a connector; nothing here opens a
 socket, so the sandbox can test all of it.
 """
 
 from __future__ import annotations
 
-import datetime as dt
-
 from pyspark.sql import SparkSession
-
-#: Hadoop conf keys (public hadoop-aws documentation) that callers provide
-#: via cluster conf or ``configure_s3a``.  Credentials intentionally have NO
-#: in-repo default: undefined keys fall through to the provider chain (env,
-#: instance profile), the production posture.
-S3A_CONF_KEYS = {
-    "access_key": "spark.hadoop.fs.s3a.access.key",
-    "secret_key": "spark.hadoop.fs.s3a.secret.key",
-    "endpoint": "spark.hadoop.fs.s3a.endpoint",
-    "path_style": "spark.hadoop.fs.s3a.path.style.access",
-}
 
 
 def normalize_object_uri(uri: str) -> str:
@@ -44,19 +30,6 @@ def normalize_object_uri(uri: str) -> str:
     return uri
 
 
-def hour_prefix_glob(bucket_or_root: str, hour: dt.datetime, layout: str = "data") -> str:
-    """Read glob for one UTC hour of landed JSONL.
-
-    The reference filters object listings by LastModified hour
-    (s3.py:49-55) — racy under late uploads and unlistable at scale.  The
-    engine instead derives the hour from the PATH, which the bronze writer
-    controls: ``<root>/<layout>/dt=YYYY-MM-DD/hr=HH/*.json``.  Path-derived
-    hours make the scan partition-prunable and replay-stable.
-    """
-    root = normalize_object_uri(bucket_or_root).rstrip("/")
-    return f"{root}/{layout}/dt={hour:%Y-%m-%d}/hr={hour:%H}/*.json"
-
-
 def configure_s3a(
     spark: SparkSession,
     endpoint: str | None = None,
@@ -64,7 +37,9 @@ def configure_s3a(
 ) -> SparkSession:
     """Apply non-secret s3a settings (endpoint for S3-compatible stores,
     path-style addressing).  Secrets are NEVER accepted here — pass them
-    via cluster conf or the provider chain, not code."""
+    via cluster conf (``spark.hadoop.fs.s3a.access.key`` /
+    ``spark.hadoop.fs.s3a.secret.key``) or the provider chain (env,
+    instance profile), not code."""
     conf = spark.sparkContext._jsc.hadoopConfiguration()
     if endpoint is not None:
         conf.set("fs.s3a.endpoint", endpoint)

@@ -147,51 +147,6 @@ def list_sf_tables(sf_dir: str) -> list[str]:
     )
 
 
-def read_csv_table(
-    spark: SparkSession,
-    paths: str | list[str],
-    schema: T.StructType,
-    keep_corrupt: bool = False,
-    **options: str,
-) -> DataFrame:
-    """Schema-enforced distributed CSV scan with the same malformed-row
-    policy as read_jsonl_events: PERMISSIVE parse into a declared schema,
-    rows that fail to conform are dropped (or retained with
-    ``_corrupt_record`` set when ``keep_corrupt`` — quarantine metrics).
-
-    The schema is mandatory on purpose: ``inferSchema`` triggers an extra
-    full scan of the input — unacceptable at 100 TB — and makes column
-    types data-dependent.  Provenance column matches the JSONL reader.
-    """
-    if isinstance(paths, str):
-        paths = [paths]
-    ensure_runtime_confs(spark)
-    full = T.StructType(
-        list(schema.fields) + [T.StructField("_corrupt_record", T.StringType())]
-    )
-    reader = (
-        spark.read.schema(full)
-        .option("mode", "PERMISSIVE")
-        .option("columnNameOfCorruptRecord", "_corrupt_record")
-        .option("header", options.pop("header", "true"))
-    )
-    for k, v in options.items():
-        reader = reader.option(k, v)
-    df = reader.csv(paths).withColumn("original_s3_file_path", F.input_file_name())
-    if not keep_corrupt:
-        df = df.filter(F.col("_corrupt_record").isNull()).drop("_corrupt_record")
-    return df
-
-
-def read_orc_table(spark: SparkSession, path: str) -> DataFrame:
-    """ORC scan — same pushdown/pruning behavior as parquet (ORC carries
-    min/max stripe statistics Spark's reader consumes for predicate
-    pushdown); exists so a warehouse standardized on ORC can swap formats
-    without touching plans."""
-    ensure_runtime_confs(spark)
-    return spark.read.orc(path)
-
-
 def widen_if_narrow(df: DataFrame) -> DataFrame:
     """Width-normalize a narrow relation before per-row heavy compute.
 

@@ -398,18 +398,6 @@ def write_jdbc_upsert(
     return plan, staged
 
 
-def write_orc_table(
-    df: DataFrame, path: str, partition_by: list[str] | None = None
-) -> None:
-    """ORC sink, mirror of write_parquet_table — columnar, splittable,
-    predicate-pushdown-capable; Spark's writer embeds stripe statistics so
-    downstream scans prune like parquet."""
-    w = df.write.mode("overwrite")
-    if partition_by:
-        w = w.partitionBy(*partition_by)
-    w.orc(path)
-
-
 def write_zorder_parquet(
     df: DataFrame,
     path: str,

@@ -32,7 +32,6 @@ from pyspark.sql import functions as F
 
 from door2door_etl_spark.operators import local
 from door2door_etl_spark.operators.text import shingles
-from door2door_etl_spark.operators.similarity import cosine_similarity
 
 
 # -- exact ------------------------------------------------------------------
@@ -57,43 +56,6 @@ def exact_dedup_groups(
 # -- MinHash + LSH ----------------------------------------------------------
 
 MINHASH_SPACE = 16**13  # 2^52: values exact in a double, safe in BIGINT math
-
-
-def minhash_signature(
-    text: Column, num_hashes: int = 16, shingle_n: int = 3
-) -> Column:
-    """k-permutation MinHash as an ``array<bigint>`` of length ``num_hashes``.
-
-    Hash family (Kirsch–Mitzenmacher two-hash construction): from one
-    sha256 per shingle derive u1 = hex[1:13], u2 = hex[14:26] (52-bit
-    uniform values), then ``h_i = (u1 + i·u2) mod 2^52`` — pairwise-
-    independent per family, ONE cryptographic hash per shingle instead of
-    one per (shingle × family).  Portable: the identical expression runs
-    in DuckDB (queries.sql_fragments.sql_minhash_component).
-
-    Shape notes, both learned the hard way at sf0.1:
-    - the naive per-family form ``array_min(transform(sh, hash_i))``
-      re-evaluates the shingle subtree per family (Catalyst does not CSE
-      through lambdas) — O(families × tokens × n) string building;
-    - this single ``aggregate`` fold references the shingles once and does
-      one pass, folding all families per shingle with integer math.
-    """
-    sh = shingles(text, shingle_n)
-    sentinel = F.array_repeat(F.lit(MINHASH_SPACE).cast("long"), num_hashes)
-
-    def step(acc: Column, s: Column) -> Column:
-        h = F.sha2(s, 256)
-        u1 = F.conv(F.substring(h, 1, 13), 16, 10).cast("long")
-        u2 = F.conv(F.substring(h, 14, 13), 16, 10).cast("long")
-        hashes = F.array(
-            *[
-                (u1 + F.lit(i) * u2) % F.lit(MINHASH_SPACE)
-                for i in range(num_hashes)
-            ]
-        )
-        return F.zip_with(acc, hashes, lambda a, b: F.least(a, b))
-
-    return F.aggregate(sh, sentinel, step)
 
 
 def _shingle_uniform_pair(s: Column, hash_fn: str) -> tuple[Column, Column]:
@@ -132,14 +94,15 @@ def minhash_signatures_df(
     shingle_n: int = 3,
     hash_fn: str = "sha256",
 ) -> DataFrame:
-    """(id, sig: array<bigint>) — the explode+groupBy MinHash formulation.
+    """(id, sig: array<bigint>) — k-permutation MinHash signatures.
 
-    Same values as :func:`minhash_signature`, different physical plan:
-    explode the shingles, derive (u1, u2) from one hash as ordinary
-    codegen'd columns, and take 16 ``min()`` aggregates per document.
-    Spark evaluates higher-order-function lambdas interpreted (no
-    whole-stage codegen), so the per-row fold costs ~8× more CPU than this
-    vectorized form at sf0.1; the shuffle stays one row per (doc,
+    Hash family (Kirsch–Mitzenmacher two-hash construction): from one
+    hash per shingle derive two 52-bit uniform values u1, u2, then
+    ``h_i = (u1 + i·u2) mod 2^52``.  Plan: explode the shingles, derive
+    (u1, u2) as ordinary codegen'd columns, and take ``num_hashes``
+    ``min()`` aggregates per document.  A per-row higher-order-function
+    fold runs interpreted (no whole-stage codegen) and cost ~8× more CPU
+    than this vectorized form at sf0.1; the shuffle stays one row per (doc,
     partition) thanks to partial aggregation, and huge documents spread
     their shingle work across tasks instead of hot-spotting one row.
     ``hash_fn`` picks the deviate family (see

@@ -2,7 +2,7 @@
 
 Spark -> driver: the small-input completion gate.  Each iterative
 operator with a driver-local twin (the graph family, near-dup
-components, coverage-max, power iteration, MMR) builds its data-sized
+components, coverage-max, power iteration, MMR, the BPE trainer) builds its data-sized
 relation in Spark and then asks ONE question here: is that relation
 small enough to finish on the driver?  The caps below are the only
 place an input size is compared against a local-completion bound.
@@ -40,6 +40,9 @@ MAX_RANK_NODES = 4_096
 MAX_POWER_ITERATION_ROWS = 65_536
 # MMR candidate pool (driver-bounded by construction: ``limit(pool)``).
 MAX_MMR_POOL = 100_000
+# BPE vocabulary rows (symbols, freq): a tokenizer-training vocab of a
+# 100 TB corpus still fits in low-GB driver memory.
+MAX_BPE_VOCAB_ROWS = 2_000_000
 
 
 def rows_if_small(

@@ -48,15 +48,6 @@ from pyspark.sql import DataFrame
 from pyspark.sql import functions as F
 from pyspark.sql import types as T
 
-ASSET_META_TYPE = T.StructType(
-    [
-        T.StructField("modality", T.StringType()),
-        T.StructField("mime", T.StringType()),
-        T.StructField("n_bytes", T.LongType()),
-        T.StructField("content_sha", T.StringType()),
-    ]
-)
-
 
 def attach_binary_content(
     df: DataFrame, source_col: str, modality: str, mime: str
@@ -1446,10 +1437,6 @@ class _JpegBitReader:
         for _ in range(n):
             v = (v << 1) | self.read_bit()
         return v
-
-    def byte_align(self) -> None:
-        self.acc &= (1 << (self.nbits - self.nbits % 8)) - 1 if self.nbits else 0
-        self.nbits -= self.nbits % 8
 
     def take_restart_marker(self) -> int:
         """Consume an expected RSTn marker at a byte boundary."""

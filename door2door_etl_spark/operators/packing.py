@@ -350,84 +350,6 @@ def length_bucketed_batches(
     )
 
 
-def write_training_shards(
-    df: DataFrame,
-    out_dir: str,
-    num_shards: int,
-    seed: int,
-    id_col: str = "doc_id",
-) -> dict:
-    """Export an epoch-shuffled corpus as exactly ``num_shards`` parquet
-    shards plus a JSON manifest — the handoff artifact a training
-    dataloader consumes (deterministic order, fixed shard count, known
-    per-shard row counts).
-
-    Shard assignment is ``(shuffle_pos - 1) * num_shards // total`` over
-    :func:`epoch_shuffle`'s seeded global positions: contiguous position
-    ranges -> shards are balanced to within one row AND reading shard dirs
-    in filename order replays the exact shuffled order — shard values are
-    ZERO-PADDED (``shard=03``) so lexicographic dir order IS numeric order
-    at any shard count.  The shuffled frame is persisted across the
-    count / write / per-shard-count passes (the epoch shuffle's
-    corpus-wide scan runs ONCE, not three times) and unpersisted before
-    returning; the manifest records counts from one bounded aggregate —
-    nothing about the data passes through the driver.
-
-    Returns the manifest dict (also written to ``<out_dir>/_manifest.json``
-    — underscore-prefixed so Spark's file listing skips it and a
-    whole-dataset ``spark.read.parquet(out_dir)`` still works):
-    ``{"num_shards", "total_rows", "seed", "rows_per_shard": {shard: n}}``.
-    """
-    import json as _json
-    import os as _os
-
-    width = len(str(max(num_shards - 1, 0)))
-    shuffled = epoch_shuffle(df, seed=seed, id_col=id_col).persist()
-    try:
-        total = shuffled.count()
-        # exact integer division — no double-rounding at any total
-        with_shard = shuffled.withColumn(
-            "shard",
-            F.lpad(
-                F.expr(
-                    f"CAST((CAST(shuffle_pos AS BIGINT) - 1) * {num_shards} "
-                    f"div {max(total, 1)} AS STRING)"
-                ),
-                width,
-                "0",
-            ),
-        )
-        (
-            with_shard.repartition("shard")
-            .sortWithinPartitions("shuffle_pos")
-            .write.mode("overwrite")
-            .partitionBy("shard")
-            .parquet(out_dir)
-        )
-        counts = {
-            # Manifest keys are PLAIN integer strings ("0".."15"), matching
-            # str() of the shard partition column a whole-dataset read
-            # returns (Spark's partition type inference parses "shard=03"
-            # back to int 3); only the DIR names stay zero-padded, for
-            # lexicographic replay order.
-            str(int(r["shard"])): r["n"]
-            for r in with_shard.groupBy("shard")
-            .agg(F.count(F.lit(1)).alias("n"))
-            .collect()
-        }
-    finally:
-        shuffled.unpersist()
-    manifest = {
-        "num_shards": num_shards,
-        "total_rows": total,
-        "seed": seed,
-        "rows_per_shard": {str(k): counts.get(str(k), 0) for k in range(num_shards)},
-    }
-    with open(_os.path.join(out_dir, "_manifest.json"), "w") as f:
-        _json.dump(manifest, f, sort_keys=True)
-    return manifest
-
-
 def curriculum_order(
     df: DataFrame,
     score_col: str,

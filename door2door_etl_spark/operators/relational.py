@@ -392,40 +392,6 @@ def dedup_first_wins(
     )
 
 
-def diagnose_key_skew(
-    df: DataFrame, key_cols: list[str], top_k: int = 20
-) -> DataFrame:
-    """Pre-join skew report: the ``top_k`` heaviest key groups with their
-    share of all rows and the ratio to a perfectly uniform key — the number
-    that says whether a planned shuffle join needs salting
-    (:func:`salted_equijoin`) or AQE skew-split before it runs at scale.
-
-    One aggregation + one tiny ordered limit (TakeOrderedAndProject);
-    the totals ride along as a broadcast scalar, nothing collects more
-    than ``top_k`` rows.  Run it on the join KEY projection, not the full
-    relation, so the scan prunes to the key columns.
-    """
-    keys = [F.col(c) for c in key_cols]
-    counts = df.groupBy(*keys).agg(F.count(F.lit(1)).alias("n_rows"))
-    totals = counts.agg(
-        F.sum("n_rows").alias("_total"),
-        F.count(F.lit(1)).alias("_n_keys"),
-    )
-    return (
-        counts.crossJoin(F.broadcast(totals))
-        .select(
-            *key_cols,
-            "n_rows",
-            F.round(F.col("n_rows") / F.col("_total"), 6).alias("row_share"),
-            F.round(
-                F.col("n_rows") / (F.col("_total") / F.col("_n_keys")), 2
-            ).alias("x_uniform"),
-        )
-        .orderBy(F.desc("n_rows"), *key_cols)
-        .limit(top_k)
-    )
-
-
 def profile_columns(
     df: DataFrame, cols: list[str], approx: bool = False
 ) -> DataFrame:

@@ -1,7 +1,9 @@
 """Text-analysis operators over a document corpus (north-star pack).
 
 Everything here is pure built-in ``pyspark.sql.functions`` — no Python UDFs —
-so plans stay inside whole-stage codegen and scale linearly with executors.
+so plans stay inside whole-stage codegen and scale linearly with executors;
+the one exception is :func:`bpe_encode`, an Arrow-batched ``mapInPandas``
+stage.
 Each operator has an exactly-equivalent ANSI-SQL formulation (used by the
 DuckDB oracle, see queries.catalog), which is why the primitives below are
 deliberately "portable" (regexp tokenization, md5/sha256 hashes, arithmetic
@@ -17,7 +19,8 @@ Operators:
   style) that needs no word boundaries — both deterministic and
   SQL-expressible;
 - document fingerprinting: min-hash over word shingles (winnowing-style
-  "rarest shingle" fingerprint).
+  "rarest shingle" fingerprint);
+- BPE tokenizer induction and encoding.
 """
 
 from __future__ import annotations
@@ -26,6 +29,8 @@ import math
 
 from pyspark.sql import Column, DataFrame
 from pyspark.sql import functions as F
+
+from door2door_etl_spark.operators import local
 
 #: Tokenizer contract shared with the oracle SQL: lowercase, split on runs of
 #: non-alphanumerics, drop empty tokens.
@@ -666,104 +671,9 @@ def gopher_quality_flags(
 
 # --- BPE tokenizer induction ----------------------------------------------
 
-def _apply_merge(symbols: Column, left: str, right: str) -> Column:
-    """Greedy left-to-right application of ONE BPE merge (left, right) to a
-    symbol array, as a pure aggregate fold: scan symbols, and whenever the
-    accumulator ends with ``left`` and the next symbol is ``right``,
-    replace the tail with the merged symbol.  No UDF; one fold per merge."""
-    merged = left + right
-    return F.aggregate(
-        symbols,
-        F.expr("CAST(array() AS array<string>)"),
-        lambda acc, x: F.when(
-            (F.size(acc) > 0)
-            & (F.element_at(acc, -1) == F.lit(left))
-            & (x == F.lit(right)),
-            F.concat(
-                F.slice(acc, 1, F.size(acc) - 1), F.array(F.lit(merged))
-            ),
-        ).otherwise(F.concat(acc, F.array(x))),
-    )
-
-
-def bpe_train(
-    df: DataFrame,
-    num_merges: int,
-    text_col: str = "text",
-) -> list[dict]:
-    """Byte-pair-encoding merge induction over a corpus (Sennrich et al.,
-    ACL'16) — the tokenizer-training step of an LLM data pipeline, as a
-    distributed iterative algorithm.
-
-    Shape: ONE distributed pass builds the word-frequency table (the only
-    stage that touches corpus-scale data — at 100 TB this is a token
-    explode + groupBy, shuffling vocabulary-bounded keys); every merge
-    iteration then runs on the VOCABULARY (tens of thousands of rows, not
-    billions): count adjacent symbol pairs weighted by word frequency,
-    pick the (count desc, pair asc) argmax via TakeOrdered, and fold the
-    merge into the symbol arrays map-side.  The driver holds one (left,
-    right) pair per iteration — never data.
-
-    Ties break deterministically (count desc, then lexicographic pair), so
-    the learned merge sequence is reproducible across partitionings and
-    engines.  Returns ``[{rank, left, right, merged, pair_count}, ...]``.
-    """
-    words = (
-        df.select(F.explode(tokens(F.col(text_col))).alias("w"))
-        .groupBy("w")
-        .agg(F.count(F.lit(1)).alias("freq"))
-        .withColumn("syms", F.split(F.col("w"), ""))
-    )
-    # The vocab table is tiny by construction; coalesce it to a few blocks
-    # (per-round job overhead would otherwise dominate: every iteration
-    # schedules tasks over the corpus-derived partitioning) and
-    # localCheckpoint each round to keep the lineage flat across
-    # iterations (k-means trainer discipline).
-    vocab = (
-        words.select("freq", "syms").coalesce(4).localCheckpoint(eager=True)
-    )
-    merges: list[dict] = []
-    for rank in range(num_merges):
-        # sequence() inverts when size < 2 (descending step) — guard
-        # single-symbol words to an empty pair list instead.
-        idx = F.when(
-            F.size("syms") >= 2, F.sequence(F.lit(1), F.size("syms") - 1)
-        ).otherwise(F.expr("CAST(array() AS array<int>)"))
-        pairs = vocab.select(
-            "freq",
-            F.explode(
-                F.transform(
-                    idx,
-                    lambda i: F.struct(
-                        F.element_at("syms", i).alias("l"),
-                        F.element_at("syms", i + F.lit(1)).alias("r"),
-                    ),
-                )
-            ).alias("p"),
-        )
-        best = (
-            pairs.groupBy("p")
-            .agg(F.sum("freq").alias("cnt"))
-            .orderBy(F.desc("cnt"), F.col("p.l"), F.col("p.r"))
-            .limit(1)
-            .collect()
-        )
-        if not best:
-            break
-        left, right, cnt = best[0]["p"]["l"], best[0]["p"]["r"], best[0]["cnt"]
-        merges.append(
-            {
-                "rank": rank,
-                "left": left,
-                "right": right,
-                "merged": left + right,
-                "pair_count": int(cnt),
-            }
-        )
-        vocab = vocab.withColumn(
-            "syms", _apply_merge(F.col("syms"), left, right)
-        ).localCheckpoint(eager=True)
-    return merges
+#: Pairs collected per round of the distributed trainer (vocabularies
+#: above ``local.MAX_BPE_VOCAB_ROWS``).
+BPE_PAIR_WINDOW = 512
 
 
 def _apply_merge_batch(symbols: Column, pairs: list[tuple[str, str]]) -> Column:
@@ -773,7 +683,7 @@ def _apply_merge_batch(symbols: Column, pairs: list[tuple[str, str]]) -> Column:
     concatenations, so NUL never collides), and each fold step does one
     ``try_element_at`` lookup.  Because no two merges in the batch share
     a symbol, their occurrences can never overlap — one combined pass is
-    exactly the composition of per-merge :func:`_apply_merge` folds, at
+    exactly the composition of the per-merge greedy applications, at
     constant expression size regardless of batch width."""
     mm = F.create_map(
         *[F.lit(v) for (left, right) in pairs
@@ -796,8 +706,8 @@ def _apply_merge_batch(symbols: Column, pairs: list[tuple[str, str]]) -> Column:
 
 
 def _bpe_greedy_apply(syms: list[str], left: str, right: str) -> list[str]:
-    """Driver-side twin of :func:`_apply_merge`: greedy left-to-right,
-    merging every non-overlapping (left, right) adjacency."""
+    """Greedy left-to-right application of one merge: every
+    non-overlapping (left, right) adjacency becomes ``left + right``."""
     merged, out, i = left + right, [], 0
     while i < len(syms):
         if i < len(syms) - 1 and syms[i] == left and syms[i + 1] == right:
@@ -809,6 +719,11 @@ def _bpe_greedy_apply(syms: list[str], left: str, right: str) -> list[str]:
     return out
 
 
+def _merge_rule(rank: int, left: str, right: str, cnt: int) -> dict:
+    return {"rank": rank, "left": left, "right": right,
+            "merged": left + right, "pair_count": int(cnt)}
+
+
 def _bpe_local_train(
     word_freqs: list[tuple[list[str], int]], num_merges: int
 ) -> list[dict]:
@@ -816,7 +731,7 @@ def _bpe_local_train(
     the classic indexed algorithm (Sennrich ACL'16 ``learn_bpe`` shape):
     a lazy max-heap over pair counts plus an inverted pair→words index,
     so each merge reprocesses only the words that contain it.  Tie-break
-    identical to the distributed trainer: count desc, then (left, right)
+    identical to the distributed rounds: count desc, then (left, right)
     lexicographic asc — the heap entry ``(-count, pair)`` IS that order.
     """
     import heapq
@@ -846,15 +761,7 @@ def _bpe_local_train(
         if best is None:
             break
         (left, right), cnt = best
-        merges.append(
-            {
-                "rank": rank,
-                "left": left,
-                "right": right,
-                "merged": left + right,
-                "pair_count": int(cnt),
-            }
-        )
+        merges.append(_merge_rule(rank, left, right, cnt))
         for i in sorted(where.get((left, right), ())):
             old_syms = words[i]
             new_syms = _bpe_greedy_apply(old_syms, left, right)
@@ -884,47 +791,47 @@ def _bpe_local_train(
     return merges
 
 
-def bpe_train_batched(
+def bpe_train(
     df: DataFrame,
     num_merges: int,
     text_col: str = "text",
-    driver_vocab_rows: int = 2_000_000,
-    window: int = 512,
 ) -> list[dict]:
-    """Scalable twin of :func:`bpe_train` — EXACTLY the same merge
-    sequence (same counts, same count-desc/pair-asc tie-break) without
-    one Spark job per merge.
+    """Byte-pair-encoding merge induction over a corpus (Sennrich et al.,
+    ACL'16) — the tokenizer-training step of an LLM data pipeline.
 
-    Two regimes, split on the vocabulary size (merge induction is
-    inherently vocabulary-local; only the word count touches corpus-scale
-    data):
+    One distributed pass builds the word-frequency table (the only stage
+    that touches corpus-scale data: a token explode + groupBy, shuffling
+    vocabulary-bounded keys).  Merge induction then runs on the
+    VOCABULARY, in one of two regimes picked by the small-input gate
+    (:func:`door2door_etl_spark.operators.local.rows_if_small`):
 
-    - **vocab ≤ driver_vocab_rows** (the overwhelmingly common case —
-      even a 100 TB corpus holds its tokenizer-training vocab in
-      low-GB driver memory after the distributed word count): collect
-      the (symbols, freq) table ONCE and run the exact indexed in-memory
-      algorithm (:func:`_bpe_local_train`).  Total Spark jobs: O(1)
+    - **vocab ≤ local.MAX_BPE_VOCAB_ROWS** (the common case — even a
+      100 TB corpus holds its tokenizer-training vocab in low-GB driver
+      memory): the gate's bounded collect brings the (symbols, freq)
+      table to the driver ONCE and the exact indexed in-memory algorithm
+      (:func:`_bpe_local_train`) runs there.  Total Spark jobs: O(1)
       regardless of ``num_merges``.
 
     - **vocab beyond the cap**: batched rounds.  Each round collects the
-      top-``window`` pairs by (count desc, pair asc) and accepts the
-      MAXIMAL SORTED PREFIX that is pairwise symbol-disjoint, trimmed to
-      counts STRICTLY above the stop boundary.  Why that is exact:
+      top-``BPE_PAIR_WINDOW`` pairs by (count desc, pair asc) and accepts
+      the MAXIMAL SORTED PREFIX that is pairwise symbol-disjoint, trimmed
+      to counts STRICTLY above the stop boundary.  Why that is exact:
       symbol-disjoint merges have occurrence-disjoint applications, so
       accepted pairs' counts are invariant under each other; every
       changed or newly-created pair derives from a pair that interacts
       with an accepted merge, which by the prefix rule ranks at or below
       the stop row — its count is ≤ the boundary, strictly below every
-      accepted count, so the sequential trainer would pick the accepted
-      pairs in exactly this order no matter how the interacting counts
-      move.  The whole batch folds into the vocab in ONE combined-map
-      pass (:func:`_apply_merge_batch`).  Degenerates to top-1 per round
-      (= sequential) under total interaction, and always accepts at
+      accepted count, so a one-merge-at-a-time trainer would pick the
+      accepted pairs in exactly this order no matter how the interacting
+      counts move.  The whole batch folds into the vocab in ONE
+      combined-map pass (:func:`_apply_merge_batch`).  Degenerates to
+      top-1 per round under total interaction, and always accepts at
       least the global argmax.
 
-    Parity with :func:`bpe_train` is pinned by the worked-example and
-    ≥500-merge property tests; ``ns_bpe_merges``' known answer is
-    unchanged.
+    Ties break deterministically (count desc, then lexicographic pair),
+    so the learned merge sequence is reproducible across partitionings,
+    regimes and engines.  Returns
+    ``[{rank, left, right, merged, pair_count}, ...]``.
     """
     words = (
         df.select(F.explode(tokens(F.col(text_col))).alias("w"))
@@ -934,15 +841,16 @@ def bpe_train_batched(
         .select("freq", "syms")
     )
     vocab = words.coalesce(4).localCheckpoint(eager=True)
-    n_words = vocab.count()
-    if n_words <= driver_vocab_rows:
-        rows = vocab.collect()
+    rows = local.rows_if_small(vocab, local.MAX_BPE_VOCAB_ROWS)
+    if rows is not None:
         return _bpe_local_train(
             [(list(r["syms"]), int(r["freq"])) for r in rows], num_merges
         )
 
     merges: list[dict] = []
     while len(merges) < num_merges:
+        # sequence() inverts when size < 2 (descending step) — guard
+        # single-symbol words to an empty pair list instead.
         idx = F.when(
             F.size("syms") >= 2, F.sequence(F.lit(1), F.size("syms") - 1)
         ).otherwise(F.expr("CAST(array() AS array<int>)"))
@@ -962,7 +870,7 @@ def bpe_train_batched(
             pairs.groupBy("p")
             .agg(F.sum("freq").alias("cnt"))
             .orderBy(F.desc("cnt"), F.col("p.l"), F.col("p.r"))
-            .limit(window)
+            .limit(BPE_PAIR_WINDOW)
             .collect()
         )
         if not top:
@@ -988,15 +896,7 @@ def bpe_train_batched(
             trimmed = accepted[:1]
         trimmed = trimmed[: num_merges - len(merges)]
         for left, right, cnt in trimmed:
-            merges.append(
-                {
-                    "rank": len(merges),
-                    "left": left,
-                    "right": right,
-                    "merged": left + right,
-                    "pair_count": cnt,
-                }
-            )
+            merges.append(_merge_rule(len(merges), left, right, cnt))
         vocab = vocab.withColumn(
             "syms",
             _apply_merge_batch(
@@ -1012,55 +912,30 @@ def bpe_encode(
     text_col: str = "text",
     out_col: str = "bpe_tokens",
 ) -> DataFrame:
-    """Apply a learned merge sequence to encode text: per token, split to
-    characters and fold each merge in rank order — ``num_merges`` chained
-    map-side folds, no shuffle, no UDF.  Adds ``out_col``
-    (array<string> of subword units, token boundaries preserved)."""
-    def encode_word(word: Column) -> Column:
-        syms = F.split(word, "")
-        for m in merges:
-            syms = _apply_merge(syms, m["left"], m["right"])
-        return syms
+    """Encode text with a learned merge sequence in ONE Arrow-batched
+    ``mapInPandas`` stage.  Adds ``out_col`` (array<string> of subword
+    units, token boundaries preserved).
 
-    encoded = F.flatten(
-        F.transform(tokens(F.col(text_col)), encode_word)
-    )
-    return df.withColumn(out_col, encoded)
-
-
-def bpe_encode_scalable(
-    df: DataFrame,
-    merges: list[dict],
-    text_col: str = "text",
-    out_col: str = "bpe_tokens",
-) -> DataFrame:
-    """Production-scale twin of :func:`bpe_encode`: apply a learned merge
-    sequence via ONE Arrow-batched ``mapInPandas`` stage instead of
-    ``num_merges`` chained Catalyst folds.
-
-    The fold twin is UDF-free but its expression tree grows linearly in
-    the merge count — a real 30k-100k-merge vocabulary blows past
-    Catalyst/Janino method-size limits long before that.  Here the merge
-    table rides along as a plain ``{(left, right): rank}`` dict in the
-    task closure (~1 MB at 30k merges), and each word is encoded with the
-    canonical greedy min-rank loop (Sennrich ACL'16 ``apply_bpe`` /
-    GPT-2 ``bpe()`` shape): repeatedly merge all leftmost-non-overlapping
-    occurrences of the lowest-ranked adjacent pair until none applies.
-    For merge lists produced by :func:`bpe_train` this yields the same
-    encoding as folding the merges in rank order (pinned by the
-    equivalence tests); duplicate (left, right) pairs keep their FIRST
-    rank.
+    The merge table rides along as a plain ``{(left, right): rank}``
+    dict in the task closure (~1 MB at 30k merges), and each word is
+    encoded with the canonical greedy min-rank loop (Sennrich ACL'16
+    ``apply_bpe`` / GPT-2 ``bpe()`` shape): repeatedly merge all
+    leftmost-non-overlapping occurrences of the lowest-ranked adjacent
+    pair until none applies.  For merge lists produced by
+    :func:`bpe_train` this yields the same encoding as applying the
+    merges one by one in rank order; duplicate (left, right) pairs keep
+    their FIRST rank.  A Catalyst fold of one expression per merge would
+    grow linearly in the merge count and break Janino's method-size
+    limit at real vocabulary sizes; this plan's size is constant.
 
     Scale: embarrassingly parallel — no shuffle, no driver state, cost
     per word independent of vocabulary size (rank lookups are O(1); the
     loop runs once per merge actually applied).  A per-batch distinct-word
     cache collapses the Zipf head, so a billion-token partition encodes
-    roughly its unique-word count.  Python enters Arrow-batched only —
-    the package's sanctioned slow-path entry (same posture as the BLAS
-    cosine and multimodal plumbing).
+    roughly its unique-word count.
 
     Tokenization matches :func:`tokens` (lowercase, split on
-    ``[^a-z0-9]+``); NULL text yields NULL, same as the fold twin.
+    ``[^a-z0-9]+``); NULL text yields NULL.
     """
     import re
 
@@ -1086,20 +961,7 @@ def bpe_encode_scalable(
                     best_rank, best = r, (syms[i], syms[i + 1])
             if best is None:
                 break
-            left, right = best
-            merged, out, i = left + right, [], 0
-            while i < len(syms):
-                if (
-                    i < len(syms) - 1
-                    and syms[i] == left
-                    and syms[i + 1] == right
-                ):
-                    out.append(merged)
-                    i += 2
-                else:
-                    out.append(syms[i])
-                    i += 1
-            syms = out
+            syms = _bpe_greedy_apply(syms, *best)
         return syms
 
     def run(batches):

@@ -1,11 +1,9 @@
 """Incremental aggregate-view maintenance from the CDC change feed.
 
 The reference's warehouse recomputes analyst aggregates by rescanning the
-base table per query (README.md:48-51, src/helper/postgres.py:97-116);
-``pipeline/rollup.py`` already improved that to partition-scoped refresh,
-but it still requires the aggregate's grain to ALIGN with the physical
-partitioning (hour dirs).  This module maintains an arbitrary-grain
-grouped aggregate purely from the table's change feed — the classic
+base table per query (README.md:48-51, src/helper/postgres.py:97-116).
+This module maintains an arbitrary-grain grouped aggregate purely from
+the table's change feed, whatever the physical partitioning — the classic
 *counting algorithm* for incremental view maintenance (Gupta, Mumick &
 Subrahmanian, SIGMOD '93): every change contributes a signed delta
 (+1 for the post-image, -1 for the pre-image), deltas aggregate per
@@ -152,6 +150,43 @@ def _group_key_expr(group_cols: list[str]):
     return F.concat_ws(_SEP, *parts)
 
 
+# -- source-layout dispatch (POSIX-versioned vs object-store manifest;
+# the join view resolves each of its two sources the same way) ----------
+
+def _is_manifest(root: str) -> bool:
+    return (Path(root) / "_manifests").is_dir()
+
+
+def _source_version(root: str) -> int | None:
+    if _is_manifest(root):
+        from door2door_etl_spark.io.manifest import ManifestTable
+
+        return ManifestTable(root).current_version()
+    return VersionedParquetTable(root).current_version()
+
+
+def _read_source(spark: SparkSession, root: str, version: int) -> DataFrame:
+    if _is_manifest(root):
+        from door2door_etl_spark.io.manifest import ManifestTable
+
+        return ManifestTable(root).read(spark, version)
+    return read_version(spark, root, version)
+
+
+def _source_changes(
+    spark: SparkSession, root: str, key: str, from_v: int, to_v: int
+) -> DataFrame:
+    if _is_manifest(root):
+        from door2door_etl_spark.io.manifest import table_changes_manifest
+
+        return table_changes_manifest(
+            spark, root, key=key, from_version=from_v, to_version=to_v
+        )
+    return table_changes(
+        spark, root, key=key, from_version=from_v, to_version=to_v
+    )
+
+
 @dataclass(frozen=True)
 class IncrementalAggView:
     """A standing ``GROUP BY group_cols -> count + sums`` view over a
@@ -222,39 +257,6 @@ class IncrementalAggView:
         """Columns whose per-group SUM is physically stored: explicit
         sum_cols plus avg_cols' numerators (deduped, order-stable)."""
         return list(dict.fromkeys([*self.sum_cols, *self.avg_cols]))
-
-    # -- source-layout dispatch -------------------------------------------
-    def _is_manifest(self) -> bool:
-        return (Path(self.source_root) / "_manifests").is_dir()
-
-    def _current_source_version(self) -> int | None:
-        if self._is_manifest():
-            from door2door_etl_spark.io.manifest import ManifestTable
-
-            return ManifestTable(self.source_root).current_version()
-        return VersionedParquetTable(self.source_root).current_version()
-
-    def _read_source_version(self, spark: SparkSession, version: int) -> DataFrame:
-        if self._is_manifest():
-            from door2door_etl_spark.io.manifest import ManifestTable
-
-            return ManifestTable(self.source_root).read(spark, version)
-        return read_version(spark, self.source_root, version)
-
-    def _changes(
-        self, spark: SparkSession, from_v: int, to_v: int
-    ) -> DataFrame:
-        if self._is_manifest():
-            from door2door_etl_spark.io.manifest import table_changes_manifest
-
-            return table_changes_manifest(
-                spark, self.source_root, key=self.key, from_version=from_v,
-                to_version=to_v,
-            )
-        return table_changes(
-            spark, self.source_root, key=self.key, from_version=from_v,
-            to_version=to_v,
-        )
 
     # -- frames -----------------------------------------------------------
     def _agg(self, base: DataFrame) -> DataFrame:
@@ -362,17 +364,6 @@ class IncrementalAggView:
         lk = left.withColumn(k, _group_key_expr(cols))
         rk = right.withColumn(k, _group_key_expr(cols)).drop(*cols)
         return lk.join(rk, k, "left").drop(k)
-
-    def full_recompute_frame(self, spark: SparkSession) -> DataFrame:
-        """The parity oracle: the same aggregate computed from scratch on
-        the source's CURRENT snapshot."""
-        if self._is_manifest():
-            from door2door_etl_spark.io.manifest import ManifestTable
-
-            base = ManifestTable(self.source_root).read(spark)
-        else:
-            base = VersionedParquetTable(self.source_root).read(spark)
-        return self._agg(base)
 
     def read(self, spark: SparkSession) -> DataFrame:
         """Current view: group rows only (ledger rows and zero-count
@@ -566,31 +557,6 @@ class IncrementalAggView:
             ],
         )
 
-    def serve_rollup_hdr(
-        self, spark: SparkSession, c: str, rollup_cols: list[str]
-    ) -> DataFrame:
-        """Rolled-up HDR bin table ``(rollup_cols…, bin, cnt)`` from
-        maintained state — bin counts SUM-merge, so the result is the
-        EXACT histogram of the live snapshot at the coarser grain; feed
-        into ``operators.sketches.hdr_quantiles``."""
-        if c not in self.hdr_cols:
-            raise ValueError(f"{c!r} is not in hdr_cols={self.hdr_cols}")
-        missing = [g for g in rollup_cols if g not in self.group_cols]
-        if missing:
-            raise ValueError(
-                f"rollup grain {rollup_cols} not covered by view grain "
-                f"{self.group_cols}: unknown {missing}"
-            )
-        return (
-            self._live_state(spark)
-            .select(
-                *rollup_cols,
-                F.explode(F.col(f"hdr_{c}")).alias("bin", "_cnt"),
-            )
-            .groupBy(*rollup_cols, "bin")
-            .agg(F.sum("_cnt").alias("cnt"))
-        )
-
     def read_hdr(self, spark: SparkSession, c: str) -> DataFrame:
         """The maintained HDR bin table for ``c`` —
         ``(group_cols…, bin, cnt)``, the exact histogram of the live
@@ -722,7 +688,7 @@ class IncrementalAggView:
         atomically with the group updates; the cursor commits last).
         Returns ``{"action", "from_version", "to_version", "groups_touched"}``.
         """
-        cur = self._current_source_version()
+        cur = _source_version(self.source_root)
         if cur is None:
             raise ValueError(f"{self.source_root} has no committed versions")
         cursor = self._cursor()
@@ -732,7 +698,7 @@ class IncrementalAggView:
             # Initial sync: materialize the aggregate of the CURRENT
             # snapshot, then start the feed from there.
             seed = self._view_schema_frame(
-                spark, self._agg(self._read_source_version(spark, cur))
+                spark, self._agg(_read_source(spark, self.source_root, cur))
             )
             ledger = self._ledger_row(spark, 0, cur)
             n = merge_versioned(
@@ -779,9 +745,9 @@ class IncrementalAggView:
                 "to_version": to_v, "groups_touched": 0,
             }
 
-        feed = self._changes(spark, from_v, to_v)
+        feed = _source_changes(spark, self.source_root, self.key, from_v, to_v)
         changed_keys = feed.select(F.col(self.key).alias("_ck")).distinct()
-        old = self._read_source_version(spark, from_v)
+        old = _read_source(spark, self.source_root, from_v)
         pre = old.join(
             changed_keys, old[self.key].eqNullSafe(F.col("_ck")), "leftsemi"
         ).withColumn("_w", F.lit(-1))
@@ -975,7 +941,7 @@ class IncrementalAggView:
             flagged = joined.filter(needs_any & (new_n > 0)).select(
                 "_group_key", F.lit(True).alias("_recomputed")
             )
-            snap = self._read_source_version(spark, to_v)
+            snap = _read_source(spark, self.source_root, to_v)
             rec = (
                 snap.withColumn("_group_key", _group_key_expr(self.group_cols))
                 .join(F.broadcast(flagged.select("_group_key")), "_group_key", "leftsemi")
@@ -1041,7 +1007,7 @@ class IncrementalAggView:
                 "_group_key", F.lit(True).alias("_dv_rec")
             )
             snap_dv = (
-                self._read_source_version(spark, to_v)
+                _read_source(spark, self.source_root, to_v)
                 .withColumn("_group_key", _group_key_expr(self.group_cols))
                 .join(
                     F.broadcast(dv_flagged.select("_group_key")),
@@ -1170,102 +1136,3 @@ class IncrementalAggView:
             "action": "delta", "from_version": from_v, "to_version": to_v,
             "groups_touched": n - 1,
         }
-
-
-@dataclass(frozen=True)
-class ViewRegistry:
-    """Transparent materialized-view routing: given an aggregate request
-    (source, grain, measures), serve it from the cheapest registered
-    :class:`IncrementalAggView` that covers it — the engine-side half of
-    view-based query rewriting (the per-view algebra lives in
-    :meth:`IncrementalAggView.serve_rollup`).
-
-    Coverage: same source, requested grain ⊆ view grain, every requested
-    measure maintained by the view (sums need ``sum_cols``, avgs
-    ``avg_cols``, min/max ``minmax_cols``, distinct ``distinct_cols``).
-    Among covering views the FEWEST-group-columns one wins — coarser
-    state means fewer rows scanned at serve time (ties break on
-    registration order, deterministic).  ``route`` returns ``None`` when
-    nothing covers; the caller falls back to a source scan — routing
-    never silently degrades to a wrong answer.
-    """
-
-    views: tuple = ()
-
-    def route(
-        self,
-        spark: SparkSession,
-        source_root: str,
-        group_cols: list[str],
-        sums: list[str] | None = None,
-        avgs: list[str] | None = None,
-        minmax: list[str] | None = None,
-        distinct: list[str] | None = None,
-    ):
-        """``(DataFrame, view)`` served from maintained state, or
-        ``None``.  The frame carries exactly the requested measure
-        columns (plus ``n_rows``, always maintained)."""
-        sums, avgs = list(sums or []), list(avgs or [])
-        minmax, distinct = list(minmax or []), list(distinct or [])
-
-        def covers(v: IncrementalAggView) -> bool:
-            return (
-                v.source_root == source_root
-                and set(group_cols) <= set(v.group_cols)
-                and set(sums) <= set(v.sum_cols)
-                and set(avgs) <= set(v.avg_cols)
-                and set(minmax) <= set(v.minmax_cols)
-                and set(distinct) <= set(v.distinct_cols)
-            )
-
-        candidates = [v for v in self.views if covers(v)]
-        if not candidates:
-            return None
-        best = min(candidates, key=lambda v: len(v.group_cols))
-        served = best.serve_rollup(spark, group_cols)
-        keep = (
-            list(group_cols)
-            + ["n_rows"]
-            + [f"sum_{c}" for c in sums]
-            + [f"avg_{c}" for c in avgs]
-            + [n for c in minmax for n in (f"min_{c}", f"max_{c}")]
-            + [f"distinct_est_{c}" for c in distinct]
-        )
-        return served.select(*keep), best
-
-    join_views: tuple = ()
-
-    def route_join(
-        self,
-        spark: SparkSession,
-        left_root: str,
-        right_root: str,
-        fk: str,
-        right_key: str,
-        cols: list[str],
-        how: str = "inner",
-    ):
-        """Serve an enrichment-join request from a maintained
-        :class:`pipeline.joinview.IncrementalJoinView` — the join half of
-        view-based query rewriting.  Coverage: identical roots and join
-        keys, identical ``how`` (a left-outer view cannot serve an inner
-        request — its null right payload is ambiguous with a null-valued
-        match), requested ``cols`` ⊆ the view's maintained payload.
-        Returns ``(DataFrame, view)`` keyed ``(_vk, _fk)`` plus ``cols``,
-        or ``None`` (caller falls back to the live join — routing never
-        silently degrades)."""
-        def covers(v) -> bool:
-            return (
-                v.left_root == left_root
-                and v.right_root == right_root
-                and v.fk == fk
-                and v.right_key == right_key
-                and v.how == how
-                and set(cols) <= set(v.left_cols) | set(v.right_cols)
-            )
-
-        candidates = [v for v in self.join_views if covers(v)]
-        if not candidates:
-            return None
-        best = min(candidates, key=lambda v: len(v.left_cols) + len(v.right_cols))
-        return best.read(spark).select("_vk", "_fk", *cols), best

@@ -59,8 +59,11 @@ from door2door_etl_spark.io.versioned import (
     ChangeFeedCursor,
     VersionedParquetTable,
     merge_versioned,
-    read_version,
-    table_changes,
+)
+from door2door_etl_spark.pipeline.aggview import (
+    _read_source,
+    _source_changes,
+    _source_version,
 )
 
 _LEDGER_PREFIX = "\x00ledger"
@@ -93,45 +96,6 @@ class IncrementalJoinView:
         overlap = set(self.left_cols) & set(self.right_cols)
         if overlap:
             raise ValueError(f"ambiguous view columns: {sorted(overlap)}")
-
-    # -- source layout dispatch (POSIX-versioned vs object-store manifest,
-    # the aggview discipline: each source resolves independently) --------
-
-    @staticmethod
-    def _is_manifest(root: str) -> bool:
-        return (Path(root) / "_manifests").is_dir()
-
-    @classmethod
-    def _source_version(cls, root: str) -> int | None:
-        if cls._is_manifest(root):
-            from door2door_etl_spark.io.manifest import ManifestTable
-
-            return ManifestTable(root).current_version()
-        return VersionedParquetTable(root).current_version()
-
-    @classmethod
-    def _read_source(
-        cls, spark: SparkSession, root: str, version: int
-    ) -> DataFrame:
-        if cls._is_manifest(root):
-            from door2door_etl_spark.io.manifest import ManifestTable
-
-            return ManifestTable(root).read(spark, version)
-        return read_version(spark, root, version)
-
-    @classmethod
-    def _source_changes(
-        cls, spark: SparkSession, root: str, key: str, from_v: int, to_v: int
-    ) -> DataFrame:
-        if cls._is_manifest(root):
-            from door2door_etl_spark.io.manifest import table_changes_manifest
-
-            return table_changes_manifest(
-                spark, root, key=key, from_version=from_v, to_version=to_v
-            )
-        return table_changes(
-            spark, root, key=key, from_version=from_v, to_version=to_v
-        )
 
     # -- cursors / ledger ------------------------------------------------
 
@@ -231,16 +195,6 @@ class IncrementalJoinView:
             raise ValueError(f"{self.view_root} has no committed versions")
         return raw.filter(F.col("_live")).drop("_live")
 
-    def full_recompute_frame(self, spark: SparkSession) -> DataFrame:
-        """The view's defining join over the CURRENT snapshots (parity
-        check / disaster rebuild)."""
-        lv = self._source_version(self.left_root)
-        rv = self._source_version(self.right_root)
-        return self._joined(
-            self._read_source(spark, self.left_root, lv),
-            self._read_source(spark, self.right_root, rv),
-        ).drop("_live")
-
     # -- maintenance -------------------------------------------------------
 
     def refresh(self, spark: SparkSession) -> dict:
@@ -249,8 +203,8 @@ class IncrementalJoinView:
         Returns ``{"action", "left_window", "right_window",
         "rows_touched"}``.
         """
-        lv = self._source_version(self.left_root)
-        rv = self._source_version(self.right_root)
+        lv = _source_version(self.left_root)
+        rv = _source_version(self.right_root)
         if lv is None or rv is None:
             raise ValueError("both sources need a committed version")
         lcur, rcur = self._cursors()
@@ -273,8 +227,8 @@ class IncrementalJoinView:
                 ll, rl = flv, frv
         if ll is None or rl is None:
             seed = self._joined(
-                self._read_source(spark, self.left_root, lv),
-                self._read_source(spark, self.right_root, rv),
+                _read_source(spark, self.left_root, lv),
+                _read_source(spark, self.right_root, rv),
             )
             ledger = self._ledger_row(spark, seed, 0, lv, 0, rv)
             n = merge_versioned(
@@ -319,19 +273,19 @@ class IncrementalJoinView:
                 "rows_touched": 0,
             }
 
-        left_new = self._read_source(spark, self.left_root, lv)
-        right_new = self._read_source(spark, self.right_root, rv)
+        left_new = _read_source(spark, self.left_root, lv)
+        right_new = _read_source(spark, self.right_root, rv)
 
         # Affected left keys: changed left rows, plus left rows whose fk
         # points at a changed right key (insert, update, or delete — a
         # late-arriving dimension row back-fills here).
         affected = None
         if lv > ll:
-            affected = self._source_changes(
+            affected = _source_changes(
                 spark, self.left_root, self.left_key, ll, lv
             ).select(F.col(self.left_key).cast("string").alias("_vk"))
         if rv > rl:
-            dr_keys = self._source_changes(
+            dr_keys = _source_changes(
                 spark, self.right_root, self.right_key, rl, rv
             ).select(
                 F.col(self.right_key).cast("string").alias("_fk")

@@ -32,7 +32,7 @@ def dsum(expr: Column, scale: int = 2) -> Column:
 
 
 def davg(expr: Column, scale: int = 4) -> Column:
-    """Deterministic average from the exact decimal sum (twin of dec_avg)."""
+    """Deterministic average from the exact decimal sum."""
     return F.round(
         F.sum(expr.cast("decimal(20,6)")).cast("double") / F.count(F.lit(1)), scale
     )

@@ -74,12 +74,11 @@ def _sql_minhash_sig_ctes(source: str, prefix: str = "") -> str:
     """shingled → hashed → sigs CTE chain over ``source`` (any relation
     with (doc_id, text)): sha256 ONCE per (doc, shingle) row, then every
     Kirsch–Mitzenmacher component h_i = min((u1 + i*u2) mod 2^52) as a MIN
-    aggregate over the shared (u1, u2) pair.  Same contract as
-    sql_fragments.sql_minhash_component, restructured so the oracle is
-    tractable at the sf1 tier: the inline form re-hashed every shingle
-    2*NUM_HASHES times (sha inside each component's list_transform), which
-    at 500k docs is ~10 min of DuckDB sha256; this form is one sha per
-    shingle occurrence.  MIN over the unnested rows equals MIN over the
+    aggregate over the shared (u1, u2) pair.  Tractable at the sf1 tier:
+    an inline per-component form re-hashed every shingle 2*NUM_HASHES
+    times (sha inside each component's list_transform), which at 500k
+    docs is ~10 min of DuckDB sha256; this form is one sha per shingle
+    occurrence.  MIN over the unnested rows equals MIN over the
     list (every doc has >= 1 shingle — sql_shingles' short-doc fallback —
     so no doc_id is lost by the GROUP BY)."""
     p = prefix

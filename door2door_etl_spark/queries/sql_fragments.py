@@ -30,19 +30,6 @@ def sql_shingles(col: str, n: int) -> str:
     )
 
 
-def sql_minhash_component(shingles_expr: str, i: int) -> str:
-    """One MinHash signature component — DuckDB twin of
-    operators.dedup.minhash_signature's Kirsch–Mitzenmacher family:
-    h_i = (u1 + i·u2) mod 2^52 from one sha256 per shingle, MIN over
-    shingles."""
-    u1 = "CAST(concat('0x', substr(sha256(s), 1, 13)) AS BIGINT)"
-    u2 = "CAST(concat('0x', substr(sha256(s), 14, 13)) AS BIGINT)"
-    return (
-        f"list_aggregate(list_transform({shingles_expr}, "
-        f"s -> ({u1} + {i} * {u2}) % 4503599627370496), 'min')"
-    )
-
-
 def sql_dot(a: str, b: str) -> str:
     """Inner product in double (mirrors operators.similarity.dot)."""
     return (
@@ -87,14 +74,6 @@ def dec_sum(expr: str, alias: str, scale: int = 2) -> str:
     return (
         f"round(CAST(sum(CAST({expr} AS DECIMAL(20,6))) AS DOUBLE), {scale}) "
         f"AS {alias}"
-    )
-
-
-def dec_avg(expr: str, alias: str, scale: int = 4) -> str:
-    """Deterministic average built from the exact decimal sum."""
-    return (
-        f"round(CAST(sum(CAST({expr} AS DECIMAL(20,6))) AS DOUBLE) "
-        f"/ count(*), {scale}) AS {alias}"
     )
 
 

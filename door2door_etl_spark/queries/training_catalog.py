@@ -806,17 +806,17 @@ BPE_MERGES = 8
 
 def q_bpe_merges(spark: SparkSession, sf: str) -> DataFrame:
     """BPE tokenizer induction over the corpus: the first 8 learned merge
-    rules with their weighted pair counts (operators.text.bpe_train_batched
+    rules with their weighted pair counts (operators.text.bpe_train
     — corpus-scale data is touched exactly once to build the word-frequency
     table; merge induction then runs in O(1) Spark jobs on the collected
     vocabulary, or in exact disjoint-batched rounds when the vocabulary
     exceeds the driver cap).  Genuinely iterative -> no single-statement
     SQL oracle; exactness is pinned by the classic Sennrich known-answer
-    test plus three-way parity tests against the sequential trainer."""
-    from door2door_etl_spark.operators.text import bpe_train_batched
+    test plus parity tests against a naive reference trainer."""
+    from door2door_etl_spark.operators.text import bpe_train
 
     docs = load_table(spark, sf, "documents")
-    merges = bpe_train_batched(docs, BPE_MERGES)
+    merges = bpe_train(docs, BPE_MERGES)
     return local.frame(
         spark,
         [

@@ -23,12 +23,34 @@ from __future__ import annotations
 from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql import functions as F
 
-from door2door_etl_spark.io.readers import event_schema
 from door2door_etl_spark.io.writers import merge_upsert_parquet
 from door2door_etl_spark.operators import local
+from door2door_etl_spark.pipeline.aggview import _group_key_expr
 from door2door_etl_spark.schemas.normalize import normalize
 from door2door_etl_spark.schemas.registry import EntitySchema
 from door2door_etl_spark.session import ensure_runtime_confs
+
+
+def _run_foreach_batch(
+    stream: DataFrame,
+    checkpoint_dir: str,
+    fn,
+    query_name: str | None = None,
+    available_now: bool = True,
+):
+    """Start ``stream`` with ``fn(batch_df, batch_id)`` as its
+    ``foreachBatch`` sink and progress kept in ``checkpoint_dir``.  With
+    ``available_now`` the query processes what is available and stops;
+    without it, it keeps running until stopped.  Returns the
+    ``StreamingQuery``."""
+    writer = stream.writeStream.foreachBatch(fn).option(
+        "checkpointLocation", checkpoint_dir
+    )
+    if query_name is not None:
+        writer = writer.queryName(query_name)
+    if available_now:
+        writer = writer.trigger(availableNow=True)
+    return writer.start()
 
 
 def stream_events(
@@ -257,12 +279,7 @@ def stream_upsert_to_warehouse(
         else:
             merge_upsert_parquet(spark, target, silver, key="event_generated_id")
 
-    return (
-        filtered.writeStream.foreachBatch(upsert_batch)
-        .option("checkpointLocation", checkpoint_dir)
-        .trigger(availableNow=True)
-        .start()
-    )
+    return _run_foreach_batch(filtered, checkpoint_dir, upsert_batch)
 
 
 def stream_decontaminate(
@@ -297,12 +314,7 @@ def stream_decontaminate(
         )
         kept.write.mode("overwrite").parquet(f"{out_dir}/batch_id={batch_id}")
 
-    return (
-        docs_stream.writeStream.foreachBatch(filter_batch)
-        .option("checkpointLocation", checkpoint_dir)
-        .trigger(availableNow=True)
-        .start()
-    )
+    return _run_foreach_batch(docs_stream, checkpoint_dir, filter_batch)
 
 
 def stream_incremental_lsh_dedup(
@@ -336,12 +348,7 @@ def stream_incremental_lsh_dedup(
         kept = index.admit(batch_df, update_index=False)
         kept.write.mode("overwrite").parquet(f"{out_dir}/batch_id={batch_id}")
 
-    return (
-        docs_stream.writeStream.foreachBatch(admit_batch)
-        .option("checkpointLocation", checkpoint_dir)
-        .trigger(availableNow=True)
-        .start()
-    )
+    return _run_foreach_batch(docs_stream, checkpoint_dir, admit_batch)
 
 
 def stream_hll_maintenance(
@@ -395,27 +402,12 @@ def stream_hll_maintenance(
             if current is not None
             else batch_regs
         )
-        # NULL-safe group encoding (see stream_hdr_maintenance): concat_ws
-        # drops null args, collapsing distinct null-bearing group tuples.
         keyed = combined.withColumn(
-            "sketch_key",
-            F.concat_ws(
-                "\x1f",
-                *[
-                    F.coalesce(F.col(c).cast("string"), F.lit("\x00null"))
-                    for c in group_cols
-                ],
-                F.col("bucket").cast("string"),
-            ),
+            "sketch_key", _group_key_expr([*group_cols, "bucket"])
         )
         merge_upsert_parquet(spark, table_root, keyed, key="sketch_key")
 
-    return (
-        stream_df.writeStream.foreachBatch(merge_batch)
-        .option("checkpointLocation", checkpoint_dir)
-        .trigger(availableNow=True)
-        .start()
-    )
+    return _run_foreach_batch(stream_df, checkpoint_dir, merge_batch)
 
 
 def stream_cms_maintenance(
@@ -450,22 +442,11 @@ def stream_cms_maintenance(
             batch_df, [], item_col, depth=depth, width=width, salt=salt
         ).withColumn("batch_id", F.lit(batch_id))
         keyed = cells.withColumn(
-            "cell_key",
-            F.concat_ws(
-                "\x1f",
-                F.col("batch_id").cast("string"),
-                F.col("row").cast("string"),
-                F.col("col").cast("string"),
-            ),
+            "cell_key", _group_key_expr(["batch_id", "row", "col"])
         )
         merge_upsert_parquet(spark, table_root, keyed, key="cell_key")
 
-    return (
-        stream_df.writeStream.foreachBatch(merge_batch)
-        .option("checkpointLocation", checkpoint_dir)
-        .trigger(availableNow=True)
-        .start()
-    )
+    return _run_foreach_batch(stream_df, checkpoint_dir, merge_batch)
 
 
 def read_cms_state(spark: SparkSession, table_root: str) -> DataFrame:
@@ -633,14 +614,13 @@ def stream_replicate_manifest_table(
             fs=fs,
         )
 
-    writer = (
-        feed.writeStream.foreachBatch(apply_batch)
-        .option("checkpointLocation", checkpoint_dir)
-        .queryName(f"replicate:{_os.path.basename(source_root.rstrip('/'))}")
+    return _run_foreach_batch(
+        feed,
+        checkpoint_dir,
+        apply_batch,
+        query_name=f"replicate:{_os.path.basename(source_root.rstrip('/'))}",
+        available_now=available_now,
     )
-    if available_now:
-        writer = writer.trigger(availableNow=True)
-    return writer.start()
 
 
 def _admission_run_id(checkpoint_dir: str) -> str:
@@ -733,12 +713,41 @@ def stream_manifest_lsh_admission(
         kept = _admit_tagged(index, batch_df, f"{run_id}:{batch_id}")
         kept.write.mode("overwrite").parquet(f"{out_dir}/batch_id={batch_id}")
 
-    return (
-        docs_stream.writeStream.foreachBatch(admit_batch)
-        .option("checkpointLocation", checkpoint_dir)
-        .trigger(availableNow=True)
-        .start()
+    return _run_foreach_batch(docs_stream, checkpoint_dir, admit_batch)
+
+
+def _quality_kept(
+    batch_df: DataFrame,
+    weights: DataFrame,
+    text_col: str,
+    id_col: str,
+    dim: int,
+    binary: bool,
+    intercept: bool,
+    min_score: float,
+) -> DataFrame:
+    """The rows of ``batch_df`` the classifier ``weights`` keeps."""
+    from door2door_etl_spark.operators.classifier import (
+        hashed_features,
+        score_logreg,
     )
+
+    feats = hashed_features(
+        batch_df,
+        text_col=text_col,
+        id_col=id_col,
+        dim=dim,
+        binary=binary,
+        intercept=intercept,
+    )
+    scored = score_logreg(batch_df, feats, weights, id_col=id_col)
+    # sigmoid is monotone, so at the default 0.5 the exact margin-sign
+    # `pred` decides (float-robust boundary); other thresholds compare
+    # the score directly.
+    keep = (
+        F.col("pred") if min_score == 0.5 else (F.col("score") >= F.lit(min_score))
+    )
+    return batch_df.join(scored.filter(keep).select(id_col), id_col, "left_semi")
 
 
 def stream_quality_filter(
@@ -772,40 +781,15 @@ def stream_quality_filter(
     stream_decontaminate).  No streaming state store; per-batch cost is
     one broadcast join + one partial aggregation.
     """
-    from door2door_etl_spark.operators.classifier import (
-        hashed_features,
-        score_logreg,
-    )
 
     def score_batch(batch_df: DataFrame, batch_id: int) -> None:
-        feats = hashed_features(
-            batch_df,
-            text_col=text_col,
-            id_col=id_col,
-            dim=dim,
-            binary=binary,
-            intercept=intercept,
-        )
-        scored = score_logreg(batch_df, feats, weights, id_col=id_col)
-        # sigmoid is monotone, so at the default 0.5 the exact margin-sign
-        # `pred` decides (float-robust boundary); other thresholds compare
-        # the score directly.
-        keep = (
-            F.col("pred")
-            if min_score == 0.5
-            else (F.col("score") >= F.lit(min_score))
-        )
-        kept = batch_df.join(
-            scored.filter(keep).select(id_col), id_col, "left_semi"
+        kept = _quality_kept(
+            batch_df, weights, text_col, id_col, dim, binary, intercept,
+            min_score,
         )
         kept.write.mode("overwrite").parquet(f"{out_dir}/batch_id={batch_id}")
 
-    return (
-        docs_stream.writeStream.foreachBatch(score_batch)
-        .option("checkpointLocation", checkpoint_dir)
-        .trigger(availableNow=True)
-        .start()
-    )
+    return _run_foreach_batch(docs_stream, checkpoint_dir, score_batch)
 
 
 def stream_quality_filter_hot_reload(
@@ -838,10 +822,6 @@ def stream_quality_filter_hot_reload(
     version via stream_quality_filter with a read_version snapshot if
     bitwise replay matters more than freshness)."""
     from door2door_etl_spark.io.manifest import ManifestTable
-    from door2door_etl_spark.operators.classifier import (
-        hashed_features,
-        score_logreg,
-    )
 
     def score_batch(batch_df: DataFrame, batch_id: int) -> None:
         spark = batch_df.sparkSession
@@ -857,31 +837,13 @@ def stream_quality_filter_hot_reload(
                 "merge_manifest a dense weight relation first"
             )
         weights = table.read(spark, version).select("feature", "w")
-        feats = hashed_features(
-            batch_df,
-            text_col=text_col,
-            id_col=id_col,
-            dim=dim,
-            binary=binary,
-            intercept=intercept,
-        )
-        scored = score_logreg(batch_df, feats, weights, id_col=id_col)
-        keep = (
-            F.col("pred")
-            if min_score == 0.5
-            else (F.col("score") >= F.lit(min_score))
-        )
-        kept = batch_df.join(
-            scored.filter(keep).select(id_col), id_col, "left_semi"
+        kept = _quality_kept(
+            batch_df, weights, text_col, id_col, dim, binary, intercept,
+            min_score,
         ).withColumn("model_version", F.lit(version))
         kept.write.mode("overwrite").parquet(f"{out_dir}/batch_id={batch_id}")
 
-    return (
-        docs_stream.writeStream.foreachBatch(score_batch)
-        .option("checkpointLocation", checkpoint_dir)
-        .trigger(availableNow=True)
-        .start()
-    )
+    return _run_foreach_batch(docs_stream, checkpoint_dir, score_batch)
 
 
 def stream_hdr_maintenance(
@@ -909,31 +871,12 @@ def stream_hdr_maintenance(
         bins = hdr_histogram_table(
             batch_df, group_cols, value_col, sub_bits=sub_bits
         ).withColumn("batch_id", F.lit(batch_id))
-        # NULL-safe per-column encoding (aggview's _group_key_expr
-        # pattern): concat_ws silently SKIPS null args, so with 2+
-        # nullable group columns distinct tuples like (NULL,'a') and
-        # ('a',NULL) would collapse to one ledger key and their bin
-        # counts merge-overwrite each other.
         keyed = bins.withColumn(
-            "cell_key",
-            F.concat_ws(
-                "\x1f",
-                F.col("batch_id").cast("string"),
-                *[
-                    F.coalesce(F.col(c).cast("string"), F.lit("\x00null"))
-                    for c in group_cols
-                ],
-                F.col("bin").cast("string"),
-            ),
+            "cell_key", _group_key_expr(["batch_id", *group_cols, "bin"])
         )
         merge_upsert_parquet(spark, table_root, keyed, key="cell_key")
 
-    return (
-        stream_df.writeStream.foreachBatch(merge_batch)
-        .option("checkpointLocation", checkpoint_dir)
-        .trigger(availableNow=True)
-        .start()
-    )
+    return _run_foreach_batch(stream_df, checkpoint_dir, merge_batch)
 
 
 def read_hdr_state(
@@ -984,14 +927,13 @@ def stream_aggview_maintenance(
     from door2door_etl_spark.streaming.sources import commit_log_source
 
     feed = (source or commit_log_source(src.manifests_dir))(spark)
-    writer = (
-        feed.writeStream.foreachBatch(refresh_batch)
-        .option("checkpointLocation", checkpoint_dir)
-        .queryName(f"aggview:{_os.path.basename(view.view_root.rstrip('/'))}")
+    return _run_foreach_batch(
+        feed,
+        checkpoint_dir,
+        refresh_batch,
+        query_name=f"aggview:{_os.path.basename(view.view_root.rstrip('/'))}",
+        available_now=available_now,
     )
-    if available_now:
-        writer = writer.trigger(availableNow=True)
-    return writer.start()
 
 
 def stream_curate(
@@ -1112,12 +1054,7 @@ def stream_curate(
             f"{funnel_root}/batch_id={batch_id}"
         )
 
-    return (
-        docs_stream.writeStream.foreachBatch(curate_batch)
-        .option("checkpointLocation", checkpoint_dir)
-        .trigger(availableNow=True)
-        .start()
-    )
+    return _run_foreach_batch(docs_stream, checkpoint_dir, curate_batch)
 
 
 def stream_index_documents(
@@ -1149,12 +1086,7 @@ def stream_index_documents(
             return
         index.add(batch_df.localCheckpoint(eager=True), tag=tag)
 
-    return (
-        docs_stream.writeStream.foreachBatch(index_batch)
-        .option("checkpointLocation", checkpoint_dir)
-        .trigger(availableNow=True)
-        .start()
-    )
+    return _run_foreach_batch(docs_stream, checkpoint_dir, index_batch)
 
 
 def stream_index_removals(
@@ -1186,12 +1118,7 @@ def stream_index_removals(
             return
         index.remove(doomed.localCheckpoint(eager=True))
 
-    return (
-        changes_stream.writeStream.foreachBatch(remove_batch)
-        .option("checkpointLocation", checkpoint_dir)
-        .trigger(availableNow=True)
-        .start()
-    )
+    return _run_foreach_batch(changes_stream, checkpoint_dir, remove_batch)
 
 
 def stream_validate(
@@ -1236,12 +1163,21 @@ def stream_validate(
         if not passed.isEmpty():
             merge_versioned(spark, target_root, passed, key=key)
 
-    return (
-        batches.writeStream.foreachBatch(validate_batch)
-        .option("checkpointLocation", checkpoint_dir)
-        .trigger(availableNow=True)
-        .start()
-    )
+    return _run_foreach_batch(batches, checkpoint_dir, validate_batch)
+
+
+def _merge_then_refresh(spark: SparkSession, view, root: str, key: str):
+    """foreachBatch body of the ingest-driven views: MERGE the batch into
+    the view's source ``root`` by ``key``, then advance the view."""
+    from door2door_etl_spark.io.versioned import merge_versioned
+
+    def apply_batch(batch_df: DataFrame, batch_id: int) -> None:
+        if batch_df.isEmpty():
+            return
+        merge_versioned(spark, root, batch_df, key=key)
+        view.refresh(spark)
+
+    return apply_batch
 
 
 def stream_aggview_ingest(
@@ -1268,19 +1204,10 @@ def stream_aggview_ingest(
     is a no-op, the re-refresh sees an empty change window.  Per-batch
     maintenance cost is O(touched groups), the module's standing
     contract."""
-    from door2door_etl_spark.io.versioned import merge_versioned
-
-    def apply_batch(batch_df: DataFrame, batch_id: int) -> None:
-        if batch_df.isEmpty():
-            return
-        merge_versioned(spark, view.source_root, batch_df, key=view.key)
-        view.refresh(spark)
-
-    return (
-        batches.writeStream.foreachBatch(apply_batch)
-        .option("checkpointLocation", checkpoint_dir)
-        .trigger(availableNow=True)
-        .start()
+    return _run_foreach_batch(
+        batches,
+        checkpoint_dir,
+        _merge_then_refresh(spark, view, view.source_root, view.key),
     )
 
 
@@ -1336,12 +1263,7 @@ def stream_scd2_maintenance(
             effective_ts=eff,
         )
 
-    return (
-        batches.writeStream.foreachBatch(apply_batch)
-        .option("checkpointLocation", checkpoint_dir)
-        .trigger(availableNow=True)
-        .start()
-    )
+    return _run_foreach_batch(batches, checkpoint_dir, apply_batch)
 
 
 def stream_txn_co_commit(
@@ -1382,84 +1304,7 @@ def stream_txn_co_commit(
         if ops:
             txn.run(spark, ops, txn_id=f"batch{batch_id:08d}")
 
-    return (
-        batches.writeStream.foreachBatch(apply_batch)
-        .option("checkpointLocation", checkpoint_dir)
-        .trigger(availableNow=True)
-        .start()
-    )
-
-
-def stream_proximity_pairs(
-    points: DataFrame,
-    id_col: str,
-    x_col: str,
-    y_col: str,
-    ts_col: str,
-    radius: float,
-    within: str = "10 minutes",
-    watermark: str = "30 minutes",
-) -> DataFrame:
-    """Streaming proximity detection: pairs of pings within planar
-    ``radius`` of each other AND within ``within`` in event time — the
-    continuous form of :func:`operators.spatial.radius_self_join`
-    ("which vehicles were near each other", answered as the pings
-    arrive, across micro-batch boundaries).
-
-    Spark-first shape: a stream-stream SELF-join whose equality key is
-    the grid CELL (one side replicated into its 3x3 neighborhood, the
-    banded trick again) — the cell key plus the time-range conjunct and
-    both sides' watermarks give Spark a provable state bound, so join
-    state evicts continuously instead of growing with the stream; the
-    exact squared-distance filter runs as a residual.  Each qualifying
-    pair emits exactly once (the probe replica matching the base cell
-    is unique, and ``id_a < id_b`` de-mirrors)."""
-    cell = float(radius)
-    base = points.withWatermark(ts_col, watermark).select(
-        F.col(id_col).alias("_id"),
-        F.col(x_col).cast("double").alias("_x"),
-        F.col(y_col).cast("double").alias("_y"),
-        F.col(ts_col).alias("_ts"),
-        F.floor(F.col(x_col) / cell).alias("_cx"),
-        F.floor(F.col(y_col) / cell).alias("_cy"),
-    )
-    probe = (
-        points.withWatermark(ts_col, watermark)
-        .select(
-            F.col(id_col).alias("_idb"),
-            F.col(x_col).cast("double").alias("_xb"),
-            F.col(y_col).cast("double").alias("_yb"),
-            F.col(ts_col).alias("_tsb"),
-            F.explode(
-                F.array(*[F.floor(F.col(x_col) / cell) + d for d in (-1, 0, 1)])
-            ).alias("_cx"),
-            F.floor(F.col(y_col) / cell).alias("_cyb"),
-        )
-        .select(
-            "_idb", "_xb", "_yb", "_tsb", "_cx",
-            F.explode(
-                F.array(*[F.col("_cyb") + d for d in (-1, 0, 1)])
-            ).alias("_cy"),
-        )
-    )
-    dx = F.col("_x") - F.col("_xb")
-    dy = F.col("_y") - F.col("_yb")
-    d2 = dx * dx + dy * dy
-    cond = (
-        (base["_cx"] == probe["_cx"])
-        & (base["_cy"] == probe["_cy"])
-        & (F.col("_tsb") >= F.col("_ts") - F.expr(f"INTERVAL {within}"))
-        & (F.col("_tsb") <= F.col("_ts") + F.expr(f"INTERVAL {within}"))
-        & (F.col("_id") < F.col("_idb"))
-        & (d2 <= F.lit(cell * cell))
-    )
-    return base.join(probe, cond, "inner").select(
-        F.col("_id").alias("id_a"),
-        F.col("_idb").alias("id_b"),
-        F.round(F.sqrt(d2), 6).alias("dist"),
-        F.col("_ts").alias("ts_a"),
-        F.col("_tsb").alias("ts_b"),
-    )
+    return _run_foreach_batch(batches, checkpoint_dir, apply_batch)
 
 
 def stream_spatial_density(
@@ -1536,12 +1381,7 @@ def stream_enrich_with_dim(
         out = batch_df.join(dim, fk, how)
         out.write.mode("overwrite").parquet(f"{out_dir}/batch_id={batch_id}")
 
-    return (
-        facts_stream.writeStream.foreachBatch(enrich_batch)
-        .option("checkpointLocation", checkpoint_dir)
-        .trigger(availableNow=True)
-        .start()
-    )
+    return _run_foreach_batch(facts_stream, checkpoint_dir, enrich_batch)
 
 
 def stream_joinview_ingest(
@@ -1563,97 +1403,8 @@ def stream_joinview_ingest(
     (`tests/test_joinview.py` crash-window tests), so an at-least-once
     micro-batch redelivery converges.  Per-batch maintenance cost is
     O(|batch|) + O(facts referencing changed dimension keys)."""
-    from door2door_etl_spark.io.versioned import merge_versioned
-
-    def apply_batch(batch_df: DataFrame, batch_id: int) -> None:
-        if batch_df.isEmpty():
-            return
-        merge_versioned(spark, view.left_root, batch_df, key=view.left_key)
-        view.refresh(spark)
-
-    return (
-        facts.writeStream.foreachBatch(apply_batch)
-        .option("checkpointLocation", checkpoint_dir)
-        .trigger(availableNow=True)
-        .start()
-    )
-
-
-def stream_forward_fill(
-    events: DataFrame,
-    key_col: str = "user_id",
-    ts_col: str = "ts",
-    value_col: str = "value",
-    id_col: str = "event_id",
-    state_ttl_minutes: int | None = None,
-) -> DataFrame:
-    """Stateful LOCF across micro-batches: each key's last non-null
-    observation persists in the state store, so a gap that STRADDLES a
-    micro-batch boundary still fills from the prior batch's observation —
-    the property the stateless window form
-    (operators.relational.forward_fill) only has within one batch.
-
-    ``applyInPandasWithState`` with per-key state = (last_ts_us,
-    last_value): a micro-batch's rows sort by (ts, id), fill forward
-    from the carried state, and the state advances to the batch's final
-    observation.  State is ONE row per key ever seen — bounded by key
-    cardinality, not event volume (the 100 TB property for an
-    entity-keyed stream); for an UNBOUNDED key space pass
-    ``state_ttl_minutes`` — a key idle past the TTL drops its state
-    (processing-time timeout), so a fill after expiry restarts from
-    null exactly like a first observation.  Emits every input row with ``value_filled``
-    (null until a key's first observation, exactly like the batch
-    operator).  Batch twin: rel_locf_imputation.
-    """
-    import pandas as pd
-    from pyspark.sql.streaming.state import GroupState, GroupStateTimeout
-
-    out_schema = (
-        f"{key_col} long, {id_col} string, ts_us long, value_filled double"
-    )
-    state_schema = "last_ts long, last_val double"
-
-    def update(key, pdfs, state: GroupState):
-        if state.hasTimedOut:
-            state.remove()
-            yield pd.DataFrame(
-                columns=[key_col, id_col, "ts_us", "value_filled"]
-            )
-            return
-        if state.exists:
-            last_ts, last_val = state.get
-        else:
-            last_ts, last_val = None, None
-        rows = []
-        for pdf in pdfs:
-            ts_us = [int(v.value // 1000) for v in pd.to_datetime(pdf[ts_col])]
-            order = sorted(
-                range(len(ts_us)), key=lambda i: (ts_us[i], str(pdf[id_col].iloc[i]))
-            )
-            for i in order:
-                v = pdf[value_col].iloc[i]
-                if pd.notna(v):
-                    last_ts, last_val = ts_us[i], float(v)
-                    rows.append((key[0], str(pdf[id_col].iloc[i]), ts_us[i], float(v)))
-                else:
-                    rows.append((key[0], str(pdf[id_col].iloc[i]), ts_us[i], last_val))
-        if last_ts is not None:
-            state.update((last_ts, last_val))
-            if state_ttl_minutes is not None:
-                state.setTimeoutDuration(int(state_ttl_minutes) * 60_000)
-        yield pd.DataFrame(
-            rows, columns=[key_col, id_col, "ts_us", "value_filled"]
-        )
-
-    timeout = (
-        GroupStateTimeout.ProcessingTimeTimeout
-        if state_ttl_minutes is not None
-        else GroupStateTimeout.NoTimeout
-    )
-    return events.groupBy(key_col).applyInPandasWithState(
-        update,
-        outputStructType=out_schema,
-        stateStructType=state_schema,
-        outputMode="append",
-        timeoutConf=timeout,
+    return _run_foreach_batch(
+        facts,
+        checkpoint_dir,
+        _merge_then_refresh(spark, view, view.left_root, view.left_key),
     )

@@ -20,6 +20,7 @@ from door2door_etl_spark.io.versioned import (
     merge_versioned,
 )
 from door2door_etl_spark.pipeline.aggview import IncrementalAggView
+from view_reference import full_recompute
 
 
 def _rows(spark, rows):
@@ -62,7 +63,7 @@ def _assert_parity(spark, view):
                 r["min_amount"],
                 r["max_amount"],
             )
-            for r in view.full_recompute_frame(spark).collect()
+            for r in full_recompute(spark, view).collect()
         ),
         key=repr,
     )
@@ -465,7 +466,7 @@ def test_aggview_avg_and_distinct_maintenance(spark, tmp_path):
     # the shared columns via the standard oracle
     full = {
         r["status"]: (r["n_rows"],)
-        for r in view.full_recompute_frame(spark).collect()
+        for r in full_recompute(spark, view).collect()
     }
     assert {k: (v[0],) for k, v in got().items()} == {
         (None if k is None else str(k)): v for k, v in full.items()
@@ -576,7 +577,7 @@ def test_aggview_hdr_quantile_maintenance_exactly_retractable(spark, tmp_path):
     }
     want_n = {
         (None if r["status"] is None else str(r["status"])): r["n_rows"]
-        for r in view.full_recompute_frame(spark).collect()
+        for r in full_recompute(spark, view).collect()
         if r["n_rows"] > 0
     }
     assert got_n == want_n
@@ -588,15 +589,10 @@ def test_aggview_rollup_serving_from_maintained_state(spark, tmp_path):
     state must equal the scratch aggregate on the live snapshot at that
     grain — sums/counts roll up distributively, AVG from the stored
     (sum, cnt) pair (never avg-of-avgs), MIN/MAX of bounds, HLL via
-    register max-merge, HDR via bin-count sum-merge.  Driven through a
+    register max-merge.  Driven through a
     CDC wave so fine-grain state is genuinely delta-maintained, plus the
     grand-total grain and the not-covered error path."""
     from pyspark.sql import functions as F
-
-    from door2door_etl_spark.operators.sketches import (
-        hdr_histogram_table,
-        hdr_quantiles,
-    )
 
     rows = [
         # (id, status, region, amount)
@@ -702,115 +698,9 @@ def test_aggview_rollup_serving_from_maintained_state(spark, tmp_path):
     assert est_rolled["done"] >= est_coarse["done"]
     assert set(est_rolled) == set(est_coarse)
 
-    # HDR rollup: exact histogram at the coarse grain
-    got_bins = {
-        (r["status"], r["bin"]): r["cnt"]
-        for r in view.serve_rollup_hdr(spark, "amount", ["status"]).collect()
-    }
-    want_bins = {
-        (r["status"], r["bin"]): r["cnt"]
-        for r in hdr_histogram_table(
-            snap.filter(F.col("amount").isNotNull()), ["status"], "amount"
-        ).collect()
-    }
-    assert got_bins == want_bins
-    # and quantiles served off the rolled bins match the scratch path
-    q_served = {
-        r["status"]: (r["n"], r["q_50"])
-        for r in hdr_quantiles(
-            view.serve_rollup_hdr(spark, "amount", ["status"]),
-            ["status"],
-            [0.5],
-        ).collect()
-    }
-    q_scratch = {
-        r["status"]: (r["n"], r["q_50"])
-        for r in hdr_quantiles(
-            hdr_histogram_table(
-                snap.filter(F.col("amount").isNotNull()), ["status"], "amount"
-            ),
-            ["status"],
-            [0.5],
-        ).collect()
-    }
-    assert q_served == q_scratch
-
     # rewrite rule: uncovered grain must refuse (caller falls back)
     with pytest.raises(ValueError, match="not covered"):
         view.serve_rollup(spark, ["nope"])
-    with pytest.raises(ValueError, match="not covered"):
-        view.serve_rollup_hdr(spark, "amount", ["nope"])
-
-
-def test_view_registry_routes_to_cheapest_cover(spark, tmp_path):
-    """ViewRegistry.route: among covering views the coarsest (fewest
-    group cols) serves; measure coverage is per-kind; uncovered grain or
-    measure returns None (fallback contract); served values equal the
-    scratch aggregate."""
-    from pyspark.sql import functions as F
-
-    from door2door_etl_spark.pipeline.aggview import ViewRegistry
-
-    src = tmp_path / "src"
-    rows = [
-        ("a", "open", "eu", 3.0),
-        ("b", "open", "us", 5.0),
-        ("c", "done", "eu", 17.0),
-        ("d", "open", "eu", 4.0),
-    ]
-    merge_versioned(
-        spark,
-        str(src),
-        spark.createDataFrame(
-            rows, "id string, status string, region string, amount double"
-        ),
-        key="id",
-    )
-    fine = IncrementalAggView(
-        source_root=str(src),
-        view_root=str(tmp_path / "v_fine"),
-        key="id",
-        group_cols=["status", "region"],
-        sum_cols=["amount"],
-        avg_cols=["amount"],
-    )
-    coarse = IncrementalAggView(
-        source_root=str(src),
-        view_root=str(tmp_path / "v_coarse"),
-        key="id",
-        group_cols=["status"],
-        sum_cols=["amount"],
-    )
-    fine.refresh(spark)
-    coarse.refresh(spark)
-    reg = ViewRegistry(views=(fine, coarse))
-
-    # sums at status grain: BOTH cover; the coarse view must win
-    out = reg.route(spark, str(src), ["status"], sums=["amount"])
-    assert out is not None
-    df, chosen = out
-    assert chosen is coarse
-    got = {r["status"]: (r["n_rows"], r["sum_amount"]) for r in df.collect()}
-    assert got == {"open": (3, 12.0), "done": (1, 17.0)}
-
-    # avg requested: only the fine view maintains avg -> fine serves
-    df2, chosen2 = reg.route(spark, str(src), ["status"], avgs=["amount"])
-    assert chosen2 is fine
-    got2 = {r["status"]: r["avg_amount"] for r in df2.collect()}
-    assert got2 == {"open": 4.0, "done": 17.0}
-
-    # region grain: only fine covers
-    df3, chosen3 = reg.route(spark, str(src), ["region"], sums=["amount"])
-    assert chosen3 is fine
-    assert {r["region"]: r["sum_amount"] for r in df3.collect()} == {
-        "eu": 24.0, "us": 5.0
-    }
-
-    # uncovered: unknown grain column / unmaintained measure kind
-    assert reg.route(spark, str(src), ["nope"], sums=["amount"]) is None
-    assert reg.route(spark, str(src), ["status"], minmax=["amount"]) is None
-    # different source: never served
-    assert reg.route(spark, "/elsewhere", ["status"], sums=["amount"]) is None
 
 
 @pytest.mark.slow
@@ -898,7 +788,7 @@ def test_aggview_distinct_overflow_and_delete_recompute(spark, tmp_path):
     # the n_rows/parity invariant held throughout
     full = {
         r["status"]: r["n_rows"]
-        for r in view.full_recompute_frame(spark).collect()
+        for r in full_recompute(spark, view).collect()
     }
     assert {
         r["status"]: r["n_rows"] for r in view.read(spark).collect()

@@ -14,6 +14,7 @@ from door2door_etl_spark.io.versioned import (
     merge_versioned,
 )
 from door2door_etl_spark.pipeline.joinview import IncrementalJoinView
+from view_reference import full_recompute
 
 
 @pytest.fixture()
@@ -56,7 +57,7 @@ def _assert_parity(spark, view):
     )
     want = sorted(
         (r["_vk"], r["_fk"], r["total"], r["segment"])
-        for r in view.full_recompute_frame(spark).collect()
+        for r in full_recompute(spark, view).collect()
     )
     assert got == want
     return got
@@ -258,38 +259,6 @@ def test_cli_refresh_views_rejects_unknown_keys(spark, roots, tmp_path, capsys):
     assert rc == 1
     out = _json.loads(capsys.readouterr().out.strip().splitlines()[-1])
     assert "typo_key" in out["error"]
-
-
-def test_registry_routes_join_requests(spark, roots):
-    """ViewRegistry.route_join serves a covered enrichment request from
-    the maintained view, refuses how-mismatches and uncovered columns."""
-    from door2door_etl_spark.pipeline.aggview import ViewRegistry
-
-    merge_versioned(spark, roots["left"], _orders(spark, [(1, 10, 5.0)]), key="okey")
-    merge_versioned(spark, roots["right"], _cust(spark, [(10, "A")]), key="ckey")
-    view = _mk_view(roots)
-    view.refresh(spark)
-    reg = ViewRegistry(join_views=(view,))
-
-    hit = reg.route_join(
-        spark, roots["left"], roots["right"], fk="ckey", right_key="ckey",
-        cols=["total", "segment"],
-    )
-    assert hit is not None
-    served, picked = hit
-    assert picked is view
-    assert [(r["_vk"], r["total"], r["segment"]) for r in served.collect()] == [
-        ("1", 5.0, "A")
-    ]
-    # how mismatch and uncovered column both fall through to None
-    assert reg.route_join(
-        spark, roots["left"], roots["right"], fk="ckey", right_key="ckey",
-        cols=["total"], how="left",
-    ) is None
-    assert reg.route_join(
-        spark, roots["left"], roots["right"], fk="ckey", right_key="ckey",
-        cols=["acctbal"],
-    ) is None
 
 
 def test_joinview_manifest_source_layout(spark, roots, tmp_path):

@@ -702,16 +702,16 @@ def test_manifest_stats_count_and_file_skipping(spark, tmp_path):
     # Point/range lookup prunes to the one overlapping file set.
     pruned = table.prune_files(5, 6)
     assert pruned and all(r.startswith("part=p1") for r in pruned)
-    got = {r["k"] for r in table.read_range(spark, 5, 6).collect()}
+    got = {r["k"] for r in table.read_where(spark, {"k": (5, 6)}).collect()}
     assert got == {5, 6}
     # Full-range read through pruning equals the plain read.
-    assert table.read_range(spark, 1, 30).count() == 30
+    assert table.read_where(spark, {"k": (1, 30)}).count() == 30
 
     # Stats survive a file-level delete...
     delete_manifest(spark, root, spark.createDataFrame([(15,)], "k int"),
                     key="k", vacuum_keep=99)
     assert table.count_rows() == 29
-    assert {r["k"] for r in table.read_range(spark, 14, 16).collect()} == {14, 16}
+    assert {r["k"] for r in table.read_where(spark, {"k": (14, 16)}).collect()} == {14, 16}
     # ...and compaction.
     from door2door_etl_spark.io.manifest import compact_manifest
 
@@ -758,7 +758,7 @@ def test_clustered_compaction_makes_pruning_precise(spark, tmp_path):
     assert table.count_rows() == 100
     pruned = table.prune_files(50, 50)
     assert len(pruned) == 1 or n == 1
-    assert {r["k"] for r in table.read_range(spark, 48, 52).collect()} == set(range(48, 53))
+    assert {r["k"] for r in table.read_where(spark, {"k": (48, 52)}).collect()} == set(range(48, 53))
 
 
 def test_restore_manifest_pure_metadata_rollback(spark, tmp_path):
@@ -1136,8 +1136,8 @@ def test_multi_column_stats_two_predicate_pruning(spark, tmp_path):
     assert len(table._prune(man, {"hr": (1, 1), "k": (60, 60)})) == 1
     got = table.read_where(spark, {"hr": (1, 1), "k": (60, 60)}).collect()
     assert [(r["hr"], r["k"], r["v"]) for r in got] == [(1, 60, "v1-60")]
-    # read_range still works on the FIRST declared column by default.
-    assert table.read_range(spark, 0, 0).count() == 100  # hr=0 rows
+    # A single predicate on the first declared column reads its half.
+    assert table.read_where(spark, {"hr": (0, 0)}).count() == 100  # hr=0 rows
 
     # Carried forward, not recomputed: the next append re-lists the four
     # files with byte-identical stats entries.

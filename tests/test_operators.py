@@ -849,19 +849,6 @@ def test_manifest_lsh_index_admit_is_atomic(spark, tmp_path, monkeypatch):
     assert _lsh_index_in_sync(idx)
 
 
-def test_diagnose_key_skew_flags_heavy_key(spark):
-    from door2door_etl_spark.operators.relational import diagnose_key_skew
-
-    rows = [Row(k="hot", v=i) for i in range(90)]
-    rows += [Row(k=f"cold{i}", v=i) for i in range(10)]
-    df = spark.createDataFrame(rows)
-    top = diagnose_key_skew(df, ["k"], top_k=3).collect()
-    assert top[0]["k"] == "hot" and top[0]["n_rows"] == 90
-    assert top[0]["row_share"] == 0.9
-    # 11 distinct keys, uniform would be 100/11 ≈ 9.09 rows -> hot is ~9.9x
-    assert 9.5 <= top[0]["x_uniform"] <= 10.5
-
-
 def test_predict_language_charngram(spark):
     from door2door_etl_spark.operators.text import (
         char_bigram_profiles,
@@ -1569,56 +1556,6 @@ def test_temperature_mix_null_group_is_its_own_domain(spark):
     assert kept.columns == df.columns
 
 
-def test_write_training_shards_balanced_and_order_preserving(spark, tmp_path):
-    import json as _json
-
-    from door2door_etl_spark.operators.packing import (
-        epoch_shuffle,
-        write_training_shards,
-    )
-
-    df = spark.createDataFrame([(i, f"t{i}") for i in range(103)], "doc_id int, text string")
-    out = str(tmp_path / "shards")
-    man = write_training_shards(df, out, num_shards=12, seed=7)
-    assert man["total_rows"] == 103 and man["num_shards"] == 12
-    sizes = sorted(man["rows_per_shard"].values())
-    assert sum(sizes) == 103 and max(sizes) - min(sizes) <= 1  # balanced
-    assert _json.load(open(tmp_path / "shards" / "_manifest.json")) == man
-    # the manifest must not break a whole-dataset read (underscore-hidden)
-    assert spark.read.parquet(out).count() == 103
-
-    # reading shard DIRS in lexicographic filename order replays the exact
-    # seeded global order — zero-padding makes that hold past 10 shards
-    import os as _os
-
-    shard_dirs = sorted(
-        d for d in _os.listdir(out) if d.startswith("shard=")
-    )
-    assert shard_dirs[:3] == ["shard=00", "shard=01", "shard=02"]
-    got = [
-        r["doc_id"]
-        for d in shard_dirs
-        for r in spark.read.parquet(f"{out}/{d}").orderBy("shuffle_pos").collect()
-    ]
-    expect = [
-        r["doc_id"]
-        for r in epoch_shuffle(df, seed=7).orderBy("shuffle_pos").collect()
-    ]
-    assert got == expect
-    # a different seed re-deals the order
-    write_training_shards(df, str(tmp_path / "s2"), num_shards=12, seed=8)
-    got2 = [
-        r["doc_id"]
-        for d in sorted(
-            x for x in _os.listdir(tmp_path / "s2") if x.startswith("shard=")
-        )
-        for r in spark.read.parquet(f"{tmp_path}/s2/{d}")
-        .orderBy("shuffle_pos")
-        .collect()
-    ]
-    assert got2 != got and sorted(got2) == sorted(got)
-
-
 def test_profile_columns_single_scan_known_answers(spark):
     from door2door_etl_spark.operators.relational import profile_columns
 
@@ -1633,6 +1570,60 @@ def test_profile_columns_single_scan_known_answers(spark):
     # one scan: the plan contains exactly one relation
     plan = profile_columns(df, ["x", "s"])._jdf.queryExecution().optimizedPlan().toString()
     assert plan.count("LogicalRDD") + plan.count("Relation") == 1
+
+
+def _greedy_merge(syms, left, right):
+    out, i = [], 0
+    while i < len(syms):
+        if i < len(syms) - 1 and syms[i] == left and syms[i + 1] == right:
+            out.append(left + right)
+            i += 2
+        else:
+            out.append(syms[i])
+            i += 1
+    return out
+
+
+def _words(text):
+    import re
+
+    return [w for w in re.split(X.TOKEN_SPLIT_REGEX, text.lower()) if w]
+
+
+def _reference_bpe_train(texts, num_merges):
+    """Naive BPE trainer, one merge per round: recount every adjacent
+    pair over the whole vocabulary, take the (count desc, pair asc)
+    argmax, apply it greedily left to right to every word."""
+    from collections import Counter
+
+    freq = Counter(w for t in texts if t is not None for w in _words(t))
+    syms = {w: list(w) for w in freq}
+    merges = []
+    for rank in range(num_merges):
+        counts = Counter()
+        for w, s in syms.items():
+            for p in zip(s, s[1:]):
+                counts[p] += freq[w]
+        if not counts:
+            break
+        (left, right), cnt = min(counts.items(), key=lambda kv: (-kv[1], kv[0]))
+        merges.append({"rank": rank, "left": left, "right": right,
+                       "merged": left + right, "pair_count": cnt})
+        syms = {w: _greedy_merge(s, left, right) for w, s in syms.items()}
+    return merges
+
+
+def _reference_bpe_encode(text, merges):
+    """Encode by applying the merges one by one in rank order."""
+    if text is None:
+        return None
+    out = []
+    for w in _words(text):
+        s = list(w)
+        for m in merges:
+            s = _greedy_merge(s, m["left"], m["right"])
+        out.extend(s)
+    return out
 
 
 def test_bpe_train_matches_sennrich_example_and_encode_roundtrips(spark):
@@ -1659,25 +1650,27 @@ def test_bpe_train_matches_sennrich_example_and_encode_roundtrips(spark):
 
 
 @pytest.mark.slow
-def test_bpe_train_batched_three_way_parity_and_job_budget(spark):
-    """The batched trainer (VERDICT r6 ask #2) must learn the EXACT merge
-    sequence of the sequential trainer — both its driver-exact regime and
-    its distributed disjoint-batched regime — while collapsing the
-    one-job-per-merge loop.  Three-way parity on the worked example, a
-    ≥500-merge property corpus (two independent implementations agreeing
-    merge-for-merge, anchored to the sequential trainer at 100 merges),
-    and the measured job budget: ≤ merges/20 Spark jobs for the default
-    path (the sequential loop is ~2 jobs per merge)."""
+def test_bpe_train_parity_and_job_budget(spark, force_distributed, monkeypatch):
+    """The trainer learns the EXACT merge sequence of the naive reference
+    trainer on both of its paths — the driver-exact loop behind the
+    small-input gate and the distributed disjoint-batched rounds —
+    without one Spark job per merge.  Parity on the worked example, a
+    500-merge property corpus (the two paths agreeing merge-for-merge,
+    anchored to the reference at 100 merges), and the measured job
+    budget: <= merges/20 Spark jobs on the default path."""
     import random
 
-    from door2door_etl_spark.operators.text import bpe_train, bpe_train_batched
+    from door2door_etl_spark.operators.text import bpe_train
 
-    # Worked example: all paths reproduce the sequential sequence.
+    # Worked example: both paths reproduce the reference sequence.
     text = " ".join(["low"] * 5 + ["lower"] * 2 + ["newest"] * 6 + ["widest"] * 3)
     ex = spark.createDataFrame([(text,)], "text string")
-    seq = bpe_train(ex, 10)
-    assert bpe_train_batched(ex, 10) == seq
-    assert bpe_train_batched(ex, 10, driver_vocab_rows=0, window=8) == seq
+    seq = _reference_bpe_train([text], 10)
+    assert bpe_train(ex, 10) == seq
+    with monkeypatch.context() as m, force_distributed() as declined:
+        m.setattr(X, "BPE_PAIR_WINDOW", 8)
+        assert bpe_train(ex, 10) == seq
+    assert declined
 
     # Property corpus: seeded random vocabulary rich enough for 500+
     # genuine merges (the testdata corpus exhausts its fixed word list
@@ -1695,20 +1688,21 @@ def test_bpe_train_batched_three_way_parity_and_job_budget(spark):
     corpus = corpus.localCheckpoint(eager=True)
 
     sc = spark.sparkContext
-    sc.setJobGroup("bpe-drv", "batched driver path")
-    drv = bpe_train_batched(corpus, 500)
+    sc.setJobGroup("bpe-drv", "driver path")
+    drv = bpe_train(corpus, 500)
     drv_jobs = len(sc.statusTracker().getJobIdsForGroup("bpe-drv"))
     sc.setJobGroup(None, None)
     assert len(drv) == 500
     assert drv_jobs <= 500 / 20, drv_jobs
 
     # Independent implementation agreement at the full 500 merges.
-    dist = bpe_train_batched(corpus, 500, driver_vocab_rows=0)
+    with force_distributed():
+        dist = bpe_train(corpus, 500)
     assert dist == drv
 
-    # Anchor to the sequential trainer (the original semantics) on a
-    # 100-merge prefix — a prefix of a longer run IS the shorter run.
-    assert bpe_train(corpus, 100) == drv[:100]
+    # Anchor to the reference trainer on a 100-merge prefix — a prefix
+    # of a longer run IS the shorter run.
+    assert _reference_bpe_train([r[0] for r in rows], 100) == drv[:100]
 
 
 def test_profile_columns_approx_path_brackets_exact(spark):
@@ -1795,24 +1789,19 @@ def test_negative_samples_deterministic_no_self_pairs(spark):
 
 
 def test_bpe_encode_scalable_matches_fold_on_worked_example(spark):
-    from door2door_etl_spark.operators.text import (
-        bpe_encode,
-        bpe_encode_scalable,
-        bpe_train,
-    )
+    from door2door_etl_spark.operators.text import bpe_encode, bpe_train
 
     text = " ".join(["low"] * 5 + ["lower"] * 2 + ["newest"] * 6 + ["widest"] * 3)
     df = spark.createDataFrame([(text,), (None,)], "text string")
     merges = bpe_train(df, 4)
-    fold = [r["bpe_tokens"] for r in bpe_encode(df, merges).collect()]
-    fast = [r["bpe_tokens"] for r in bpe_encode_scalable(df, merges).collect()]
+    fold = [_reference_bpe_encode(t, merges) for t in (text, None)]
+    fast = [r["bpe_tokens"] for r in bpe_encode(df, merges).collect()]
     assert fast == fold
-    assert fast[1] is None  # NULL text stays NULL in both twins
+    assert fast[1] is None  # NULL text stays NULL
 
     # >=1,000 merges: pad the learned sequence with inert vocabulary
     # entries (symbols this corpus never produces) interleaved around the
-    # real rules — the fold twin cannot build an expression this deep, so
-    # the 4-rule fold output IS the expected encoding.
+    # real rules, so the 4-rule fold output IS the expected encoding.
     padded = []
     rank = 0
     for i, m in enumerate(merges):
@@ -1826,7 +1815,7 @@ def test_bpe_encode_scalable_matches_fold_on_worked_example(spark):
         rank += 1
     assert len(padded) >= 1500
     fast_padded = [
-        r["bpe_tokens"] for r in bpe_encode_scalable(df, padded).collect()
+        r["bpe_tokens"] for r in bpe_encode(df, padded).collect()
     ]
     assert fast_padded == fold
 
@@ -1836,11 +1825,7 @@ def test_bpe_encode_scalable_equivalence_property(spark):
     genuinely interacting merges (chains, overlaps, repeats)."""
     import random
 
-    from door2door_etl_spark.operators.text import (
-        bpe_encode,
-        bpe_encode_scalable,
-        bpe_train,
-    )
+    from door2door_etl_spark.operators.text import bpe_encode, bpe_train
 
     rng = random.Random(42)
     vocab = ["aba", "abab", "bab", "aabb", "abba", "baab", "aaab", "abc",
@@ -1852,8 +1837,8 @@ def test_bpe_encode_scalable_equivalence_property(spark):
     df = spark.createDataFrame(docs, "text string")
     merges = bpe_train(df, 40)
     assert len(merges) >= 10  # the tiny alphabet must actually chain
-    fold = [r["bpe_tokens"] for r in bpe_encode(df, merges).collect()]
-    fast = [r["bpe_tokens"] for r in bpe_encode_scalable(df, merges).collect()]
+    fold = [_reference_bpe_encode(d[0], merges) for d in docs]
+    fast = [r["bpe_tokens"] for r in bpe_encode(df, merges).collect()]
     assert fast == fold
     # lossless on every row
     text_of = [d[0] for d in docs]

@@ -237,61 +237,6 @@ def test_compact_parquet_table(spark, tmp_path):
     assert after.agg({"id": "sum"}).collect()[0][0] == before_sum
 
 
-def test_incremental_rollup_matches_full_rebuild(spark, tmp_path):
-    """Partition-scoped rollup refresh after each ingested hour converges to
-    exactly the full recompute."""
-    from door2door_etl_spark.pipeline.rollup import (
-        hourly_rollup_frame,
-        read_rollup,
-        refresh_hourly_rollup,
-    )
-
-    def at(hour, minute):
-        return f"2022-11-24T{hour:02d}:{minute:02d}:00.000Z"
-
-    src = tmp_path / "landing"
-    src.mkdir()
-    lines = []
-    for h in (10, 11):
-        for i in range(3):
-            ev = _vehicle(h * 10 + i, i, org=f"org-{i % 2}")
-            ev["at"] = at(h, i)
-            ev["data"]["location"]["at"] = at(h, i)
-            lines.append(json.dumps(ev))
-    (src / "hours.json").write_text("\n".join(lines))
-    glob, lake = str(src / "*.json"), str(tmp_path / "lake")
-    base = f"{lake}/warehouse/vehicle_location"
-    rollup = f"{lake}/rollup/vehicle_hourly"
-
-    # Hour 10: ingest + first (full) refresh.
-    run_workflow(spark, glob, lake, workflow_id=str(uuid.uuid4()), fetch_hour=HOUR)
-    assert refresh_hourly_rollup(spark, base, rollup) == 1
-
-    # Hour 11: ingest + incremental refresh of just that hour.
-    h11 = HOUR + dt.timedelta(hours=1)
-    run_workflow(spark, glob, lake, workflow_id=str(uuid.uuid4()), fetch_hour=h11)
-    assert refresh_hourly_rollup(spark, base, rollup, touched_hours=[h11]) == 1
-
-    got = {
-        (r["hour_start"], r["organization_id"]): r["n_events"]
-        for r in read_rollup(spark, rollup).collect()
-    }
-    expect = {
-        (r["hour_start"], r["organization_id"]): r["n_events"]
-        for r in hourly_rollup_frame(
-            spark.read.parquet(base), "event_timestamp", ["organization_id"]
-        ).collect()
-    }
-    assert got == expect and len(got) == 4  # 2 hours x 2 orgs
-
-    # Replaying the same hour's refresh is idempotent.
-    refresh_hourly_rollup(spark, base, rollup, touched_hours=[h11])
-    assert {
-        (r["hour_start"], r["organization_id"]): r["n_events"]
-        for r in read_rollup(spark, rollup).collect()
-    } == expect
-
-
 def test_handler_pluggable_merge_sink(spark, tmp_path, landing):
     """K1 MergeSink protocol: the handler routes every warehouse upsert
     through sink_for, so a JDBC/Delta sink drops in without pipeline
@@ -415,73 +360,15 @@ def test_jdbc_upsert_composite_key_and_custom_staging():
     assert plan.writer_options["dbtable"] == "op_stage"
 
 
-def test_read_csv_table_schema_and_quarantine(spark, tmp_path):
-    from pyspark.sql import types as T
-
-    from door2door_etl_spark.io.readers import read_csv_table
-
-    p = tmp_path / "in.csv"
-    p.write_text(
-        "id,name,score\n"
-        "1,alice,3.5\n"
-        "2,bob,not_a_number\n"   # malformed: score fails the double cast
-        "3,carol,1.25\n"
-    )
-    schema = T.StructType(
-        [
-            T.StructField("id", T.LongType()),
-            T.StructField("name", T.StringType()),
-            T.StructField("score", T.DoubleType()),
-        ]
-    )
-    ok = read_csv_table(spark, str(p), schema)
-    rows = {r["id"]: (r["name"], r["score"]) for r in ok.collect()}
-    assert rows == {1: ("alice", 3.5), 3: ("carol", 1.25)}
-    assert "original_s3_file_path" in ok.columns
-
-    kept = read_csv_table(spark, str(p), schema, keep_corrupt=True)
-    bad = [r for r in kept.collect() if r["_corrupt_record"] is not None]
-    assert len(bad) == 1 and "not_a_number" in bad[0]["_corrupt_record"]
-
-
-def test_orc_round_trip_preserves_types_and_prunes(spark, tmp_path):
-    import datetime as dt
-
-    from door2door_etl_spark.io.readers import read_orc_table
-    from door2door_etl_spark.io.writers import write_orc_table
-
-    df = spark.createDataFrame(
-        [
-            (1, "a", dt.datetime(2022, 11, 24, 10, 0), [1.0, 2.0]),
-            (2, "b", dt.datetime(2022, 11, 24, 11, 0), [3.0]),
-        ],
-        "id long, tag string, ts timestamp, vec array<double>",
-    )
-    path = str(tmp_path / "t.orc")
-    write_orc_table(df, path)
-    back = read_orc_table(spark, path)
-    assert back.schema == df.schema
-    assert {r["id"] for r in back.collect()} == {1, 2}
-    # Predicate reaches the ORC scan (stripe-stat pushdown, parquet-parity)
-    flt = back.filter("id = 2")
-    plan = flt._jdf.queryExecution().executedPlan().toString()
-    assert "PushedFilters" in plan and "id" in plan
-
-
-def test_object_uri_normalization_and_hour_glob(spark):
-    import datetime as dt
-
+def test_object_uri_normalization_and_s3a_conf(spark):
     from door2door_etl_spark.io.objectstore import (
         configure_s3a,
-        hour_prefix_glob,
         normalize_object_uri,
     )
 
     assert normalize_object_uri("s3://b/k.json") == "s3a://b/k.json"
     assert normalize_object_uri("s3a://b/k.json") == "s3a://b/k.json"
     assert normalize_object_uri("/local/path") == "/local/path"
-    g = hour_prefix_glob("s3://lake", dt.datetime(2022, 11, 24, 7))
-    assert g == "s3a://lake/data/dt=2022-11-24/hr=07/*.json"
 
     configure_s3a(spark, endpoint="http://minio.local:9000", path_style=True)
     hc = spark.sparkContext._jsc.hadoopConfiguration()

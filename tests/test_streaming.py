@@ -13,6 +13,7 @@ from door2door_etl_spark.streaming import (
     stream_hourly_counts,
     stream_upsert_to_warehouse,
 )
+from view_reference import full_recompute
 
 
 def _vehicle(i, minute):
@@ -1084,7 +1085,7 @@ def test_stream_aggview_maintenance_tracks_commits(spark, tmp_path):
         got = sorted(map(tuple, view.read(spark).collect()))
         want = sorted(
             (str(r["grp"]), r["n_rows"], r["sum_v"], r["min_v"], r["max_v"])
-            for r in view.full_recompute_frame(spark).collect()
+            for r in full_recompute(spark, view).collect()
         )
         assert got == want
 
@@ -1675,7 +1676,7 @@ def test_stream_aggview_ingest_parity_and_replay(spark, tmp_path):
         (None if r["status"] is None else str(r["status"])): (
             r["n_rows"], r["sum_amount"], r["min_amount"], r["max_amount"]
         )
-        for r in view.full_recompute_frame(spark).collect()
+        for r in full_recompute(spark, view).collect()
         if r["n_rows"] > 0
     }
     assert served() == full
@@ -1684,62 +1685,6 @@ def test_stream_aggview_ingest_parity_and_replay(spark, tmp_path):
     # input — the production replay shape — must be a complete no-op
     run("ckpt1")
     assert served() == want
-
-
-def test_stream_proximity_pairs_across_batches(spark, tmp_path):
-    """Streaming proximity join: pairs within radius AND the time bound
-    emit exactly once, INCLUDING pairs whose two pings arrive in
-    DIFFERENT micro-batches (the stateful stream-stream join retains
-    in-horizon pings); far points and stale-time pairs never emit."""
-    import json as _json
-
-    from door2door_etl_spark.streaming.pipeline import stream_proximity_pairs
-
-    src = tmp_path / "in"
-    src.mkdir()
-    out_dir = tmp_path / "out"
-    b0 = [
-        {"id": 1, "x": 0.00, "y": 0.0, "ts": "2024-01-01 10:00:00"},
-        {"id": 2, "x": 0.30, "y": 0.0, "ts": "2024-01-01 10:05:00"},
-        {"id": 9, "x": 50.0, "y": 50.0, "ts": "2024-01-01 10:00:00"},  # far
-    ]
-    b1 = [
-        # near 1 and 2 spatially, within 10 min of both -> cross-batch pairs
-        {"id": 3, "x": 0.25, "y": 0.1, "ts": "2024-01-01 10:08:00"},
-        # near spatially but 2 hours later -> time bound excludes
-        {"id": 4, "x": 0.10, "y": 0.0, "ts": "2024-01-01 12:30:00"},
-    ]
-    stream = (
-        spark.readStream.schema("id long, x double, y double, ts string")
-        .json(str(src))
-        .withColumn("ts", F.col("ts").cast("timestamp"))
-    )
-    pairs = stream_proximity_pairs(
-        stream, "id", "x", "y", "ts", radius=0.5, within="10 minutes"
-    )
-
-    def run():
-        q = (
-            pairs.writeStream.format("parquet")
-            .option("path", str(out_dir))
-            .option("checkpointLocation", str(tmp_path / "ckpt"))
-            .trigger(availableNow=True)
-            .start()
-        )
-        q.awaitTermination(180)
-
-    (src / "b0.json").write_text("\n".join(_json.dumps(r) for r in b0))
-    run()
-    (src / "b1.json").write_text("\n".join(_json.dumps(r) for r in b1))
-    run()
-
-    got = sorted(
-        (r["id_a"], r["id_b"])
-        for r in spark.read.parquet(str(out_dir)).collect()
-    )
-    # (1,2) same-batch; (1,3) and (2,3) STRADDLE batches; 4 is in-radius
-    # of 1/2/3 but outside the 10-minute bound; 9 is out of radius
-    assert got == [(1, 2), (1, 3), (2, 3)]
 
 
 def test_stream_spatial_density_windowed_counts(spark, tmp_path):
@@ -1888,96 +1833,6 @@ def test_stream_enrich_with_dim_through_epoch_pin(spark, tmp_path):
     q2.awaitTermination(120)
     got = {r["fid"]: r["seg"] for r in spark.read.parquet(out).collect()}
     assert got == {1: "A", 2: "A2"}
-
-
-def test_stream_forward_fill_carries_across_micro_batches(spark, tmp_path):
-    """A null that arrives in a LATER micro-batch fills from the previous
-    batch's observation — the cross-batch property the stateless window
-    form can't give."""
-    import json
-
-    from door2door_etl_spark.streaming.pipeline import stream_forward_fill
-
-    src = tmp_path / "ev"
-    src.mkdir()
-    (src / "b0.json").write_text("\n".join([
-        json.dumps({"user_id": 1, "event_id": "a", "ts": "2024-01-01T00:00:00", "value": 7.5}),
-        json.dumps({"user_id": 1, "event_id": "b", "ts": "2024-01-01T00:01:00", "value": None}),
-        json.dumps({"user_id": 2, "event_id": "c", "ts": "2024-01-01T00:00:30", "value": None}),
-    ]))
-    stream = (
-        spark.readStream
-        .schema("user_id long, event_id string, ts timestamp, value double")
-        .option("maxFilesPerTrigger", 1)
-        .json(str(src))
-    )
-    out_dir = str(tmp_path / "locf_out")
-    filled = stream_forward_fill(stream)
-    q = (
-        filled.writeStream.format("parquet")
-        .option("path", out_dir)
-        .option("checkpointLocation", str(tmp_path / "ckpt"))
-        .outputMode("append").trigger(availableNow=True).start()
-    )
-    q.awaitTermination(120)
-    got = {r["event_id"]: r["value_filled"] for r in spark.read.parquet(out_dir).collect()}
-    assert got == {"a": 7.5, "b": 7.5, "c": None}
-
-    # batch 2: user 1's null fills from batch 1's observation; user 2
-    # observes for the first time
-    (src / "b1.json").write_text("\n".join([
-        json.dumps({"user_id": 1, "event_id": "d", "ts": "2024-01-01T00:02:00", "value": None}),
-        json.dumps({"user_id": 2, "event_id": "e", "ts": "2024-01-01T00:02:00", "value": 3.0}),
-    ]))
-    q2 = (
-        stream_forward_fill(
-            spark.readStream
-            .schema("user_id long, event_id string, ts timestamp, value double")
-            .option("maxFilesPerTrigger", 1)
-            .json(str(src))
-        )
-        .writeStream.format("parquet")
-        .option("path", out_dir)
-        .option("checkpointLocation", str(tmp_path / "ckpt"))
-        .outputMode("append").trigger(availableNow=True).start()
-    )
-    q2.awaitTermination(120)
-    got2 = {r["event_id"]: r["value_filled"] for r in spark.read.parquet(out_dir).collect()}
-    assert got2["d"] == 7.5   # carried across the batch boundary
-    assert got2["e"] == 3.0
-    assert got2["b"] == 7.5   # first run's rows intact in the sink
-
-
-@pytest.mark.slow
-def test_stream_forward_fill_with_ttl_runs(spark, tmp_path):
-    """TTL form smoke: ProcessingTimeTimeout wiring accepts state and
-    fills within the batch (expiry itself is wall-clock-driven and not
-    deterministically testable in availableNow mode)."""
-    import json
-
-    from door2door_etl_spark.streaming.pipeline import stream_forward_fill
-
-    src = tmp_path / "ev"
-    src.mkdir()
-    (src / "b0.json").write_text("\n".join([
-        json.dumps({"user_id": 1, "event_id": "a", "ts": "2024-01-01T00:00:00", "value": 2.0}),
-        json.dumps({"user_id": 1, "event_id": "b", "ts": "2024-01-01T00:01:00", "value": None}),
-    ]))
-    stream = (
-        spark.readStream
-        .schema("user_id long, event_id string, ts timestamp, value double")
-        .json(str(src))
-    )
-    out_dir = str(tmp_path / "out")
-    q = (
-        stream_forward_fill(stream, state_ttl_minutes=30)
-        .writeStream.format("parquet").option("path", out_dir)
-        .option("checkpointLocation", str(tmp_path / "ckpt"))
-        .outputMode("append").trigger(availableNow=True).start()
-    )
-    q.awaitTermination(120)
-    got = {r["event_id"]: r["value_filled"] for r in spark.read.parquet(out_dir).collect()}
-    assert got == {"a": 2.0, "b": 2.0}
 
 
 def test_stream_events_through_rate_source_seam(spark, tmp_path):
