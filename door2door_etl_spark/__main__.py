@@ -344,7 +344,7 @@ def _run_train_quality_filter(args) -> int:
 def _run_curate(args) -> int:
     """Run the composed curation funnel over a document corpus and land
     the result in the lake: survivors MERGE-upsert (idempotent, keyed by
-    doc_id) into ``<lake-root>/curated/documents`` — a versioned table,
+    doc_id) into ``<lake-root>/curated/documents`` — a committed table,
     so re-running the same curation is a no-op and downstream readers
     always see a committed snapshot — and the per-stage funnel report is
     appended to ``<lake-root>/curated/funnel`` with a run id.  Prints one
@@ -355,7 +355,7 @@ def _run_curate(args) -> int:
     from pyspark.sql import SparkSession
     from pyspark.sql import functions as F
 
-    from door2door_etl_spark.io.versioned import merge_versioned
+    from door2door_etl_spark.io.manifest import merge_manifest
     from door2door_etl_spark.pipeline.curation import curate_corpus
     from door2door_etl_spark.session import build_session
 
@@ -379,7 +379,7 @@ def _run_curate(args) -> int:
             budget_tokens=args.budget_tokens,
         )
         out_root = os.path.join(args.lake_root, "curated", "documents")
-        n_kept = merge_versioned(spark, out_root, kept, key="doc_id")
+        n_kept = merge_manifest(spark, out_root, kept, key="doc_id")
         run_id = str(uuid.uuid4())
         funnel_path = os.path.join(args.lake_root, "curated", "funnel")
         funnel.withColumn("run_id", F.lit(run_id)).write.mode("append").parquet(
@@ -716,13 +716,13 @@ def _run_search(args) -> int:
 def _run_maintenance(args) -> int:
     """Lake maintenance: ``-s compact`` rewrites small files into
     ~target-file-mb files as a NEW committed snapshot; ``-s vacuum`` drops
-    committed snapshots older than ``--keep-versions``.  Both operate per
-    warehouse table; the incremental MERGE sink accretes a version (and at
-    least one small file) per batch, so both are routine cron jobs on a
-    production lake."""
+    committed snapshots older than ``--keep-versions`` and sweeps orphaned
+    files.  Both operate per warehouse table; the incremental MERGE sink
+    accretes a version (and at least one small file) per batch, so both
+    are routine cron jobs on a production lake."""
     from pathlib import Path
 
-    from door2door_etl_spark.io.versioned import VersionedParquetTable
+    from door2door_etl_spark.io.manifest import ManifestTable
 
     warehouse = Path(args.lake_root) / "warehouse"
     if args.table:
@@ -736,27 +736,16 @@ def _run_maintenance(args) -> int:
         print(f"error: no warehouse tables under {warehouse}", file=sys.stderr)
         return 1
 
-    def is_manifest(root: Path) -> bool:
-        return (root / "_manifests").is_dir()
-
     report: dict[str, dict] = {}
     if args.step == "history":
-        # Pure metadata in both layouts: no Spark session.
-        from door2door_etl_spark.io.manifest import ManifestTable
-
+        # Pure metadata: no Spark session.
         for root in roots:
-            if is_manifest(root):
-                table = ManifestTable(str(root))
-                report[root.name] = {
-                    "history": table.describe_history(),
-                    "schema_evolution": table.schema_evolution(),
-                }
-            else:
-                hist = VersionedParquetTable(str(root)).describe_history()
-                report[root.name] = {"history": hist}
+            table = ManifestTable(str(root))
+            report[root.name] = {
+                "history": table.describe_history(),
+                "schema_evolution": table.schema_evolution(),
+            }
     elif args.step == "fsck":
-        from door2door_etl_spark.io.manifest import ManifestTable
-
         spark = built = None
         if args.deep:
             from pyspark.sql import SparkSession
@@ -768,12 +757,12 @@ def _run_maintenance(args) -> int:
                 spark = built = build_session(app_name="door2door-fsck")
         try:
             for root in roots:
-                if is_manifest(root):
-                    report[root.name] = ManifestTable(str(root)).fsck(
-                        spark, deep=args.deep
-                    )
-                else:
-                    report[root.name] = {"skipped": "not a manifest table"}
+                table = ManifestTable(str(root))
+                report[root.name] = (
+                    table.fsck(spark, deep=args.deep)
+                    if table.current_version() is not None
+                    else {"skipped": "no committed version"}
+                )
         finally:
             if built is not None:
                 built.stop()
@@ -787,36 +776,25 @@ def _run_maintenance(args) -> int:
 
             report["_epoch"] = {"findings": LakeEpoch(epoch_root).fsck()}
     elif args.step == "restore":
-        # Rollback is metadata-only in BOTH layouts: no Spark session.
+        # Rollback is metadata-only: no Spark session.
         if not args.table or args.to_version is None:
             print("error: restore requires --table and --to-version",
                   file=sys.stderr)
             return 1
         from door2door_etl_spark.io.manifest import restore_manifest
-        from door2door_etl_spark.io.versioned import restore_versioned
 
         root = roots[0]
-        if is_manifest(root):
-            new_v = restore_manifest(str(root), args.to_version)
-        else:
-            new_v = restore_versioned(str(root), args.to_version)
+        new_v = restore_manifest(str(root), args.to_version)
         report[root.name] = {"restored_to": args.to_version, "new_version": new_v}
     elif args.step == "vacuum":
-        from door2door_etl_spark.io.manifest import ManifestTable
-
         for root in roots:  # metadata-only: no Spark session needed
-            if is_manifest(root):
-                # Explicit maintenance is where the O(table) file GC runs
-                # (per-commit auto-vacuum only trims manifests).
-                removed = ManifestTable(str(root)).vacuum(
-                    keep=args.keep_versions,
-                    min_age_hours=args.min_age_hours,
-                    gc_files=True,
-                )
-            else:
-                removed = VersionedParquetTable(str(root)).vacuum(
-                    keep=args.keep_versions, min_age_hours=args.min_age_hours
-                )
+            # Explicit maintenance is where the O(table) orphan sweep runs
+            # (per-commit auto-vacuum frees only trimmed versions' files).
+            removed = ManifestTable(str(root)).vacuum(
+                keep=args.keep_versions,
+                min_age_hours=args.min_age_hours,
+                gc_files=True,
+            )
             report[root.name] = {"removed_snapshots": removed}
     elif args.step == "autocompact":
         # Policy first, session only if some table needs the rewrite —
@@ -826,11 +804,7 @@ def _run_maintenance(args) -> int:
             compaction_advice,
         )
 
-        advices = {
-            root: compaction_advice(str(root))
-            for root in roots
-            if is_manifest(root)
-        }
+        advices = {root: compaction_advice(str(root)) for root in roots}
         to_compact = [r for r, a in advices.items() if a["recommend"]]
         if to_compact:
             from pyspark.sql import SparkSession
@@ -855,7 +829,6 @@ def _run_maintenance(args) -> int:
             compact_manifest,
             purge_deletes_manifest,
         )
-        from door2door_etl_spark.io.writers import compact_parquet_table
         from door2door_etl_spark.session import build_session
 
         # Reuse an embedding caller's session (and leave its lifecycle to
@@ -865,17 +838,10 @@ def _run_maintenance(args) -> int:
         try:
             for root in roots:
                 if args.step == "purge":
-                    if not is_manifest(root):
-                        continue  # POSIX tables delete copy-on-write; no DVs
                     n = purge_deletes_manifest(spark, str(root))
                     report[root.name] = {"files_rewritten": n}
-                elif is_manifest(root):
-                    n = compact_manifest(
-                        spark, str(root), target_file_mb=args.target_file_mb
-                    )
-                    report[root.name] = {"files_after": n}
                 else:
-                    n = compact_parquet_table(
+                    n = compact_manifest(
                         spark, str(root), target_file_mb=args.target_file_mb
                     )
                     report[root.name] = {"files_after": n}

@@ -411,13 +411,7 @@ def convert_delta_to_manifest(
     the same reason (nothing local to link).  Local filesystems only,
     like the parquet-dir adoption it mirrors.
     """
-    import shutil
-
-    from door2door_etl_spark.io.manifest import (
-        ConcurrentWriteError,
-        ManifestTable,
-        _file_stats,
-    )
+    from door2door_etl_spark.io.manifest import ManifestTable, _adopt_files
 
     if _is_object_uri(delta_path) or _is_object_uri(root):
         raise NotImplementedError(
@@ -434,7 +428,7 @@ def convert_delta_to_manifest(
         raise ValueError(f"{root} already has a committed manifest")
     pcols = snap.partition_columns
     pairs: list[tuple[str, str]] = []  # (abs src, rel dest)
-    for rel, pv in sorted(snap.files.items()):
+    for rel in sorted(snap.files):
         if "://" in rel or rel.startswith("/"):
             raise DeltaUnsupportedError(
                 f"absolute-path (shallow clone) file {rel}: nothing "
@@ -451,33 +445,7 @@ def convert_delta_to_manifest(
                 "so adopting would drop the log's partition values"
             )
         pairs.append((os.path.join(delta_path, rel), rel.replace("/", os.sep)))
-    stats: dict = {}
-    rels: list[str] = []
-    for src, rel in pairs:
-        if stats_col:
-            stats[rel] = _file_stats(src, stats_col)
-        dest = os.path.join(table.files_dir, rel)
-        os.makedirs(os.path.dirname(dest), exist_ok=True)
-        try:
-            os.link(src, dest)
-        except FileExistsError:
-            if not os.path.samefile(src, dest):
-                raise
-        except OSError:
-            shutil.copy2(src, dest)
-        rels.append(rel)
-    if not table._claim(
-        1,
-        rels,
-        snap.schema,
-        pcols,
-        stats=stats if stats_col else None,
-        stats_col=stats_col,
-        op="convert-delta",
-    ):
-        raise ConcurrentWriteError(f"convert into {root} lost the claim race")
-    table.publish(1)
-    return len(rels)
+    return _adopt_files(table, pairs, snap.schema, pcols, stats_col, "convert-delta")
 
 
 # --------------------------------------------------------------------------

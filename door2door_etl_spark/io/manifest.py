@@ -1,66 +1,81 @@
-"""Object-store manifest mode for the versioned commit protocol.
+"""The table-commit protocol: per-version file manifests, one layout.
 
-:mod:`door2door_etl_spark.io.versioned` commits with three POSIX-isms —
-the claim *rename* (fails-if-exists), the *hardlink farm* that shares
-untouched partitions between snapshots, and the *root symlink* that keeps
-pointer-unaware readers working.  None of those exist on an object store,
-and at the stated 100 TB north star the table lives on S3.  This module is
-the same optimistic-concurrency protocol re-expressed in the only
-primitives an object store offers (reference analog: the warehouse's
-server-side transaction, src/helper/postgres.py:157-189; public design
-analog: the Delta log / Iceberg metadata commit):
+Every table this engine commits (warehouse MERGE targets, views, indexes,
+catalog fixtures) goes through this module.  Reference analog: the
+warehouse's server-side transaction (src/helper/postgres.py:157-189);
+public design analog: the Delta log / Iceberg metadata commit.
 
-Layout (a plain directory — NO symlinks, NO hardlinks anywhere)::
+Layout (one function, :func:`_state_dir`, decides it).  For a table
+rooted at ``warehouse/vehicle_location`` on a local filesystem::
 
-    warehouse/vehicle_location/
-      _current                        # cache: "data-v00000002" (optional)
-      _manifests/
-        data-v00000001.json           # the COMMIT RECORDS (immutable)
-        data-v00000002.json
-      _files/
-        part=2022-11-24T10/part-00000-<uuidA>.snappy.parquet
-        part=2022-11-24T11/part-00000-<uuidB>.snappy.parquet
+    warehouse/
+      vehicle_location -> .vehicle_location__versions/data-v00000002
+      .vehicle_location__versions/
+        _current                      # cache: "data-v00000002"
+        _manifests/
+          data-v00000001.json         # the COMMIT RECORDS (immutable)
+          data-v00000002.json
+        _files/                       # every data file, immutable
+          part=2022-11-24T10/part-00000-<uuidA>.snappy.parquet
+        data-v00000001/               # the VIEW of v1 (hard links)
+        data-v00000002/               # the VIEW of v2 (hard links)
+
+On an object store (``s3://``/``s3a://`` roots) the state lives AT the
+root (``<root>/_current``, ``<root>/_manifests/``, ``<root>/_files/``)
+and there is no view: no symlinks or hard links exist there.
 
 * **Data files are immutable and uniquely named.** Spark part-file names
   embed a per-write UUID, so concurrent writers never collide.  Files are
   written to a hidden staging dir, then moved into ``_files/`` preserving
   their ``col=value`` partition relpath — visible to nobody until a
   manifest references them.
-* **The manifest create IS the claim.** A writer computes its merge
+* **The manifest create IS the claim.** A writer computes its commit
   against manifest ``N`` and claims EXACTLY ``N+1`` by creating
   ``data-v{N+1}.json`` with put-if-absent semantics
-  (:meth:`FsOps.put_if_absent`): local backend ``open(O_CREAT|O_EXCL)``;
-  an S3 backend uses a conditional ``PUT If-None-Match: *`` (supported
-  natively since 2024) — exactly the primitive Delta uses for its log
-  record.  A loser recomputes against the winner's snapshot and retries.
-* **File reuse replaces the hardlink farm.** A manifest lists the
-  relative data paths that make up its snapshot; an hourly merge into an
-  hour-partitioned 100 TB table writes one partition's worth of new files
-  and RE-LISTS the other ~8,700 partitions' existing paths — a pure
-  metadata operation, cheaper than even the local mode's hardlinks.
-* **Readers resolve via the manifest — only.** :meth:`ManifestTable.read`
-  scans exactly the listed files (``basePath`` recovers the partition
-  columns from the dir names).  A naive ``spark.read.parquet(root)`` fails
-  LOUDLY (``_files``/``_manifests`` are underscore-hidden from Spark's
-  listing), never silently reads a mix of versions — the honest posture,
-  since object stores cannot support pointer-unaware readers at all.
+  (:meth:`FsOps.put_if_absent`): local backend ``link(2)`` of a fully
+  written temp file; an S3 backend a conditional ``PUT If-None-Match: *``
+  — the primitive Delta uses for its log record.  A loser recomputes
+  against the winner's snapshot and retries; a claimed number can never
+  skip over, and thereby orphan, a competitor's commit.
+* **File reuse, not copies.** A manifest lists the relative data paths of
+  its snapshot; an hourly merge into an hour-partitioned table writes one
+  partition's files and RE-LISTS the rest — metadata only.
+* **Readers resolve via the manifest.** :meth:`ManifestTable.read` scans
+  exactly the listed files (``basePath`` recovers the partition columns)
+  and masks deletion-vector rows.
+* **The view is a derived publication.** After the claim,
+  :meth:`ManifestTable.publish` refreshes ``_current`` and, on a local
+  filesystem, builds ``data-v{N}/`` — hard links to the manifest's files
+  — then atomically repoints the root symlink at it (relative target,
+  forward-only).  So a manifest-unaware reader,
+  ``spark.read.parquet(root)``, reads exactly the committed snapshot, and
+  a reader that resolved the old target keeps its snapshot until vacuum
+  trims that version.  The view is rebuilt from the manifest at will: a
+  crash between the claim and the view is rolled forward by the next
+  engine access (:meth:`ManifestTable.sync_view`).
+* **Deletion vectors never leak through the view.** A file a DV masks is
+  not hard-linked: the view holds a masked copy of just that file
+  (pyarrow, driver-side, O(DV'd files)), so a plain parquet read returns
+  exactly the rows :meth:`ManifestTable.read` returns.
 * **Durability.** The local backend fsyncs every data file before the
   claim and the manifest before publication, so a claimed snapshot
-  survives a power cut (same guarantee as :mod:`.versioned`); an object
-  store gives read-after-write consistency on PUT by contract.
-
+  survives a power cut; an object store gives read-after-write
+  consistency on PUT by contract.
 * **Merge-on-read deletes (deletion vectors).** ``delete_manifest`` /
   ``delete_where_manifest`` with ``mode="dv"`` commit a parquet sidecar
   of (file relpath, row_index) pairs instead of rewriting data files —
-  the Delta/Iceberg-v2 DV shape.  Readers mask the rows with a broadcast
-  anti-join on the scan's ``_metadata`` columns; merges and rewrite
-  deletes carry DVs forward for files they re-list;
-  :func:`purge_deletes_manifest` (or any full rewrite/compaction)
-  materializes them physically.
-
-Everything else — MERGE semantics, NULL-key rejection, schema-drift
-policy, snapshot isolation, time travel, retention-floored vacuum — is
-identical to the local mode and shares its tests' expectations.
+  the Delta/Iceberg-v2 DV shape.  Merges and rewrite deletes carry DVs
+  forward for files they re-list; :func:`purge_deletes_manifest` (or any
+  full rewrite/compaction) materializes them physically.
+* **Retention.** Every commit trims manifests beyond ``vacuum_keep`` that
+  are older than the time floor, removes their views, and deletes the
+  data files ONLY those trimmed manifests listed (computed from the
+  manifests — no ``_files`` walk).  The O(table) orphan sweep of crashed
+  writers' debris is the explicit ``vacuum(gc_files=True)``.
+* **Legacy adoption.** A pre-protocol plain parquet directory at the root
+  is adopted in place by :func:`convert_to_manifest` (hard links, one
+  claim) on the first write; a crash mid-adoption either leaves the plain
+  directory or is rolled forward.
 """
 
 from __future__ import annotations
@@ -80,7 +95,12 @@ from pyspark.sql.types import StructType
 
 from door2door_etl_spark.operators import local
 
-from .versioned import ConcurrentWriteError, changes_between
+
+class ConcurrentWriteError(RuntimeError):
+    """Raised when a writer loses the version-claim race ``max_retries``
+    times in a row — the caller is contending with a faster writer and
+    should back off rather than spin."""
+
 
 _MANIFEST_RE = re.compile(r"^data-v(\d{8})\.json$")
 
@@ -110,6 +130,64 @@ def _manifest_name(n: int) -> str:
 def _parse_manifest_version(name: str) -> int | None:
     m = _MANIFEST_RE.match(name)
     return int(m.group(1)) if m else None
+
+
+_VIEW_RE = re.compile(r"^data-v(\d{8})$")
+
+
+def _view_name(n: int) -> str:
+    return f"data-v{n:08d}"
+
+
+def _state_dir(root: str) -> str:
+    """THE layout decision: where a table's ``_current``, ``_manifests/``,
+    ``_files/``, staging dirs and views live.  An object store keeps them
+    at the root (it cannot hold a view).  A local table keeps them in the
+    hidden sibling ``.{name}__versions/``, so that the root itself can be
+    the view's symlink."""
+    if _is_object_uri(root):
+        return root
+    head, name = os.path.split(root.rstrip("/"))
+    return os.path.join(head, f".{name}__versions")
+
+
+def _legacy_aside(root: str) -> str:
+    """Where a plain directory root is parked while its adoption swaps
+    the view symlink in."""
+    head, name = os.path.split(root.rstrip("/"))
+    return os.path.join(head, f".{name}__legacy")
+
+
+def _fsync_path(path: str) -> None:
+    try:
+        fd = os.open(path, os.O_RDONLY)
+    except OSError:
+        return
+    try:
+        os.fsync(fd)
+    finally:
+        os.close(fd)
+
+
+def _write_masked_copy(src: str, dst: str, rows: set[int]) -> None:
+    """Copy parquet file ``src`` to ``dst`` without the row positions in
+    ``rows`` (a deletion vector applied physically, for the view).  The
+    Spark schema metadata and the INT96 timestamp encoding are kept, so
+    the copy reads back with the same Spark types as its siblings."""
+    import pyarrow as pa
+    import pyarrow.parquet as pq
+
+    pf = pq.ParquetFile(src)
+    int96 = any(
+        pf.schema.column(i).physical_type == "INT96"
+        for i in range(len(pf.schema))
+    )
+    tbl = pf.read()
+    keep = pa.array([i not in rows for i in range(tbl.num_rows)], pa.bool_())
+    pq.write_table(
+        tbl.filter(keep), dst, use_deprecated_int96_timestamps=int96
+    )
+    _fsync_path(dst)
 
 
 _JSON_SCALARS = (int, float, str, bool)
@@ -422,8 +500,8 @@ class LocalFsOps:
 
     Durability discipline: ``put_if_absent`` (the claim) and ``move_file``
     (data-file placement) fsync both the file and its directory, so by
-    the time a manifest exists its data files are on disk — the same
-    claimed-implies-durable invariant :mod:`.versioned` enforces.
+    the time a manifest exists its data files are on disk: a claimed
+    snapshot is always complete, on disk and not just in the page cache.
     """
 
     def put_if_absent(self, path: str, data: bytes) -> bool:
@@ -456,7 +534,7 @@ class LocalFsOps:
         finally:
             os.unlink(tmp)
         if claimed:
-            self._fsync_dir(d)
+            _fsync_path(d)
         return claimed
 
     def put_bytes(self, path: str, data: bytes) -> None:
@@ -467,7 +545,7 @@ class LocalFsOps:
             f.flush()
             os.fsync(f.fileno())
         os.replace(tmp, path)
-        self._fsync_dir(os.path.dirname(path))
+        _fsync_path(os.path.dirname(path))
 
     def read_bytes(self, path: str) -> bytes | None:
         try:
@@ -484,7 +562,7 @@ class LocalFsOps:
         finally:
             os.close(fd)
         os.rename(src, dst)
-        self._fsync_dir(os.path.dirname(dst))
+        _fsync_path(os.path.dirname(dst))
 
     def list_names(self, dir_path: str) -> list[str]:
         try:
@@ -537,22 +615,11 @@ class LocalFsOps:
 
         shutil.rmtree(path, ignore_errors=True)
 
-    @staticmethod
-    def _fsync_dir(path: str) -> None:
-        try:
-            dfd = os.open(path, os.O_RDONLY)
-        except OSError:
-            return
-        try:
-            os.fsync(dfd)
-        finally:
-            os.close(dfd)
-
 
 @dataclass(frozen=True)
 class ManifestTable:
-    """A parquet table committed through per-version file manifests —
-    the object-store half of the versioned protocol (see module doc)."""
+    """A parquet table committed through per-version file manifests (see
+    the module doc for the layout)."""
 
     root: str
     fs: FsOps = field(default_factory=LocalFsOps)
@@ -561,31 +628,47 @@ class ManifestTable:
         # One normalization point for object-store tables: s3:// becomes
         # s3a:// here, so every derived path (manifests, files, staging)
         # is readable by BOTH Spark (hadoop s3a connector) and S3FsOps
-        # (which parses s3 and s3a alike).  Local paths pass through.
+        # (which parses s3 and s3a alike).  Local paths lose a trailing
+        # slash, so the root names the view symlink itself.
         from .objectstore import normalize_object_uri
 
-        object.__setattr__(self, "root", normalize_object_uri(self.root))
+        root = normalize_object_uri(self.root)
+        object.__setattr__(
+            self, "root", root if _is_object_uri(root) else root.rstrip("/")
+        )
+
+    @property
+    def state_dir(self) -> str:
+        return _state_dir(self.root)
 
     @property
     def manifests_dir(self) -> str:
-        return os.path.join(self.root, "_manifests")
+        return os.path.join(self.state_dir, "_manifests")
 
     @property
     def files_dir(self) -> str:
-        return os.path.join(self.root, "_files")
+        return os.path.join(self.state_dir, "_files")
+
+    @property
+    def has_view(self) -> bool:
+        return not _is_object_uri(self.root)
+
+    def _staging_path(self, kind: str = "staging") -> str:
+        return os.path.join(self.state_dir, f".{kind}.{uuid.uuid4().hex}")
+
+    def versions(self) -> list[int]:
+        """Every retained (claimed, not yet trimmed) version, ascending."""
+        return sorted(
+            v
+            for v in map(_parse_manifest_version, self.fs.list_names(self.manifests_dir))
+            if v is not None
+        )
 
     def current_version(self) -> int | None:
-        versions = [
-            v
-            for v in (
-                _parse_manifest_version(n)
-                for n in self.fs.list_names(self.manifests_dir)
-            )
-            if v is not None
-        ]
+        versions = self.versions()
         if versions:
-            return max(versions)
-        cached = self.fs.read_bytes(os.path.join(self.root, "_current"))
+            return versions[-1]
+        cached = self.fs.read_bytes(os.path.join(self.state_dir, "_current"))
         if cached:
             return _parse_manifest_version(cached.decode().strip() + ".json")
         return None
@@ -595,10 +678,7 @@ class ManifestTable:
             os.path.join(self.manifests_dir, _manifest_name(version))
         )
         if raw is None:
-            have = sorted(
-                n for n in self.fs.list_names(self.manifests_dir)
-                if _parse_manifest_version(n) is not None
-            )
+            have = [_manifest_name(v) for v in self.versions()]
             raise ValueError(
                 f"version {version} of {self.root} is not retained "
                 f"(have: {have}); raise vacuum keep=/min_age_hours= to "
@@ -613,7 +693,7 @@ class ManifestTable:
         ``mode="dv"``).  An empty snapshot reproduces its schema from the
         manifest record instead of failing schema inference."""
         if version is None:
-            version = self.current_version()
+            version = self.sync_view()
             if version is None:
                 raise ValueError(f"{self.root} has no committed manifest")
         man = self.manifest(version)
@@ -658,17 +738,147 @@ class ManifestTable:
         ).drop("__dv_file", "__dv_row")
 
     def publish(self, version: int) -> None:
-        """Refresh the ``_current`` cache — pure convenience (readers
-        authoritative path is the manifest listing), FORWARD-ONLY."""
-        cached = self.fs.read_bytes(os.path.join(self.root, "_current"))
-        if cached:
-            prev = _parse_manifest_version(cached.decode().strip() + ".json")
-            if prev is not None and prev >= version:
-                return
-        self.fs.put_bytes(
-            os.path.join(self.root, "_current"),
-            _manifest_name(version).removesuffix(".json").encode(),
+        """Publish claimed ``version`` to the derived caches, each
+        FORWARD-ONLY: the ``_current`` pointer, then (local tables) the
+        view.  Neither is authoritative — the manifest listing is — so a
+        crash anywhere in here loses nothing (:meth:`sync_view`)."""
+        cached = self.fs.read_bytes(os.path.join(self.state_dir, "_current"))
+        prev = (
+            _parse_manifest_version(cached.decode().strip() + ".json")
+            if cached
+            else None
         )
+        if prev is None or prev < version:
+            self.fs.put_bytes(
+                os.path.join(self.state_dir, "_current"),
+                _view_name(version).encode(),
+            )
+        if self.has_view:
+            self._publish_view(version)
+
+    def _view_version(self) -> int | None:
+        """The version the root symlink points at (None: no symlink)."""
+        try:
+            m = _VIEW_RE.match(os.path.basename(os.readlink(self.root)))
+        except OSError:
+            return None
+        return int(m.group(1)) if m else None
+
+    def _dv_rows(self, man: dict) -> dict[str, set[int]]:
+        """``{file relpath: masked row positions}`` of a snapshot's
+        deletion vectors, for the files it still lists."""
+        from urllib.parse import unquote
+
+        import pyarrow.parquet as pq
+
+        listed = set(man["files"])
+        out: dict[str, set[int]] = {}
+        for rel in man.get("dvs") or []:
+            tbl = pq.read_table(os.path.join(self.files_dir, rel))
+            for f, r in zip(
+                tbl.column("__dv_file").to_pylist(),
+                tbl.column("__dv_row").to_pylist(),
+            ):
+                f = unquote(f)
+                if f in listed:
+                    out.setdefault(f, set()).add(r)
+        return out
+
+    def _build_view(self, version: int) -> str:
+        """Materialize the view dir of ``version``: a hard link per listed
+        file, or a masked copy where a deletion vector applies.  Built
+        under a hidden name and renamed into place, so a view dir that
+        exists is complete."""
+        view = os.path.join(self.state_dir, _view_name(version))
+        if os.path.isdir(view):
+            return view
+        man = self.manifest(version)
+        masked = self._dv_rows(man)
+        tmp = self._staging_path("view")
+        os.makedirs(tmp)
+        try:
+            for rel in man["files"]:
+                src = os.path.join(self.files_dir, rel)
+                dst = os.path.join(tmp, rel)
+                os.makedirs(os.path.dirname(dst), exist_ok=True)
+                if rel in masked:
+                    _write_masked_copy(src, dst, masked[rel])
+                else:
+                    os.link(src, dst)
+            for dirpath, _dirs, _files in os.walk(tmp):
+                _fsync_path(dirpath)
+            os.rename(tmp, view)
+        except OSError:
+            shutil.rmtree(tmp, ignore_errors=True)
+            if not os.path.isdir(view):
+                raise  # a real failure, not a concurrent publisher's win
+        return view
+
+    def _publish_view(self, version: int) -> None:
+        """Point the root symlink at the view of ``version`` (relative
+        target, atomic ``rename``), unless it already points at a newer
+        one.  A plain directory at the root is a legacy table whose
+        adoption claimed this snapshot: it is parked aside and replaced."""
+        shown = self._view_version()
+        if shown is not None and shown >= version:
+            return
+        self._build_view(version)
+        head, name = os.path.split(self.root)
+        aside = _legacy_aside(self.root)
+        if os.path.isdir(self.root) and not os.path.islink(self.root):
+            shutil.rmtree(aside, ignore_errors=True)
+            os.rename(self.root, aside)
+        tmp = os.path.join(head, f".{name}__lnk.{uuid.uuid4().hex}")
+        os.symlink(
+            os.path.join(os.path.basename(self.state_dir), _view_name(version)),
+            tmp,
+        )
+        os.replace(tmp, self.root)
+        _fsync_path(head or ".")
+        shutil.rmtree(aside, ignore_errors=True)
+        # Self-heal the check-then-act window: a higher claim that landed
+        # meanwhile may just have been shadowed by our older target.
+        latest = self.current_version()
+        if latest is not None and latest > version:
+            self._publish_view(latest)
+
+    def sync_view(self) -> int | None:
+        """Roll the derived caches forward to the committed version and
+        return it.  Repairs every crash window after a claim (no view, a
+        stale or missing symlink, a half-swapped legacy root) and, with
+        nothing claimed, restores a legacy root a crashed adoption had
+        parked aside.  Best-effort: a read-only caller still resolves."""
+        cur = self.current_version()
+        if not self.has_view:
+            return cur
+        try:
+            if cur is None:
+                aside = _legacy_aside(self.root)
+                if not os.path.lexists(self.root) and os.path.isdir(aside):
+                    os.rename(aside, self.root)
+            elif self._view_version() != cur:
+                self.publish(cur)
+        except OSError:
+            pass
+        return cur
+
+    def _prepare(self, spark: SparkSession, stats_col=None) -> None:
+        """Writer entry: adopt a pre-protocol plain parquet directory at
+        the root (once, through :func:`convert_to_manifest`) and roll a
+        lagging view forward."""
+        if not self.has_view:
+            return
+        if (
+            os.path.isdir(self.root)
+            and not os.path.islink(self.root)
+            and self.current_version() is None
+            and _staged_files(self.fs, self.root)
+        ):
+            try:
+                convert_to_manifest(spark, self.root, self.root, stats_col)
+            except ConcurrentWriteError:
+                pass  # a concurrent writer adopted the same files first
+        self.sync_view()
 
     def _stage_and_place(
         self,
@@ -742,6 +952,19 @@ class ManifestTable:
             os.path.join(self.manifests_dir, _manifest_name(version)), payload
         )
 
+    def _commit(
+        self, version: int, rels: list[str], schema: StructType,
+        partition_cols: list[str], keep: int, min_age_hours: float, **claim,
+    ) -> bool:
+        """Claim ``version``; on a win, publish it and run the per-commit
+        vacuum (manifests, views and the files only trimmed versions
+        listed — the O(table) orphan sweep stays a maintenance call)."""
+        if not self._claim(version, rels, schema, partition_cols, **claim):
+            return False
+        self.publish(version)
+        self.vacuum(keep=keep, min_age_hours=min_age_hours, gc_files=False)
+        return True
+
     def find_op_tag(self, tag: str) -> int | None:
         """Version whose manifest carries ``op_tag == tag``, or None —
         the idempotency probe transaction recovery uses to tell "this
@@ -750,10 +973,7 @@ class ManifestTable:
         metadata, O(retained versions)): recovery must therefore run
         before ``vacuum_keep`` further commits land on the table, which
         holds for any recovery triggered at writer startup."""
-        for name in self.fs.list_names(self.manifests_dir):
-            v = _parse_manifest_version(name)
-            if v is None:
-                continue
+        for v in self.versions():
             if self.manifest(v).get("op_tag") == tag:
                 return v
         return None
@@ -766,10 +986,7 @@ class ManifestTable:
         data I/O.  Versions trimmed by vacuum are absent — history depth
         IS the retention window, stated honestly."""
         out = []
-        for name in sorted(self.fs.list_names(self.manifests_dir), reverse=True):
-            v = _parse_manifest_version(name)
-            if v is None:
-                continue
+        for v in reversed(self.versions()):
             man = self.manifest(v)
             out.append(
                 {
@@ -790,17 +1007,9 @@ class ManifestTable:
         this column appear / change type" without replaying data.  Pure
         metadata (each manifest embeds its committed schema); the first
         retained version reports its full schema as ``added``."""
-        versions = sorted(
-            v
-            for v in (
-                _parse_manifest_version(n)
-                for n in self.fs.list_names(self.manifests_dir)
-            )
-            if v is not None
-        )
         out: list[dict] = []
         prev: dict[str, str] = {}
-        for v in versions:
+        for v in self.versions():
             man = self.manifest(v)
             schema = StructType.fromJson(json.loads(man["schema"]))
             cur = {f.name: f.dataType.simpleString() for f in schema.fields}
@@ -1004,9 +1213,9 @@ class ManifestTable:
         ``partition_by`` defaults to the snapshot's own partition
         columns.  Refuses to overwrite an existing destination (exports
         are immutable artifacts; write a new path per snapshot).
-        Returns ``{"version", "rows", "dest"}``.  Versioned-layer
-        tables (io.versioned) need no export — their snapshots are
-        already plain parquet directories (``resolve_table_path``)."""
+        Returns ``{"version", "rows", "dest"}``.  (A local table's
+        current snapshot is also readable in place through its view,
+        :func:`resolve_table_path`; the export is the relocatable copy.)"""
         from pyspark.sql import functions as F
 
         if version is None:
@@ -1081,17 +1290,9 @@ class ManifestTable:
             for rel in man.get("dvs", [])
             if self.fs.file_size(os.path.join(self.files_dir, rel)) <= 0
         ]
-        retained = sorted(
-            v
-            for v in (
-                _parse_manifest_version(n)
-                for n in self.fs.list_names(self.manifests_dir)
-            )
-            if v is not None
-        )
         referenced = {
             rel
-            for v in retained
+            for v in self.versions()
             for m in (self.manifest(v),)
             for rel in [*m["files"], *m.get("dvs", [])]
         }
@@ -1162,70 +1363,115 @@ class ManifestTable:
         stale_staging_hours: float = 24.0,
         gc_files: bool = True,
     ) -> list[str]:
-        """Retention sweep with a TIME floor: a manifest is removed only
+        """Retention sweep with a TIME floor: a manifest is trimmed only
         when it is BOTH older than the newest ``keep`` versions AND its
         record is older than ``min_age_hours`` — so a long-running reader
         that resolved a beyond-keep snapshot keeps its files until the
         retention window closes (Delta's retention-duration rule).
 
-        With ``gc_files``, data files referenced by no retained manifest
-        are garbage-collected — but never before ``stale_staging_hours``
-        of age (an in-flight writer's just-placed files are always
-        younger).  File GC lists the whole ``_files`` tree, an O(table)
-        metadata walk, so per-commit auto-vacuum passes ``gc_files=False``
-        (trim manifests only) and full GC is a periodic maintenance call —
-        exactly Delta's explicit-VACUUM split.  Returns removed manifest
-        names + file relpaths."""
-        cur = self.current_version()
+        Trimming a version removes its view and deletes the data files
+        (and DV sidecars) that ONLY trimmed manifests list — computed from
+        the manifests, O(retained manifests), never a ``_files`` walk — so
+        every commit's auto-vacuum frees the copies the table no longer
+        needs.  Files go before their manifest: a crash in between leaves
+        a manifest the next sweep trims again, never an orphan.
+
+        ``gc_files`` adds the O(table) sweep: files under ``_files`` no
+        retained manifest lists (crashed writers' debris) and abandoned
+        staging dirs, each only past ``stale_staging_hours`` of age (an
+        in-flight writer's just-placed files are always younger) — the
+        explicit maintenance half, Delta's VACUUM split.  Returns the
+        trimmed manifest names and the removed file relpaths.  The view is
+        rolled forward first, so the root symlink can never be left
+        pointing at a view this call removes."""
+        cur = self.sync_view()
         if cur is None:
             return []
-        removed: list[str] = []
+        trimmed: list[int] = []
         retained: list[int] = []
-        for name in self.fs.list_names(self.manifests_dir):
-            v = _parse_manifest_version(name)
-            if v is None:
-                continue
-            path = os.path.join(self.manifests_dir, name)
+        for v in self.versions():
+            path = os.path.join(self.manifests_dir, _manifest_name(v))
             if v <= cur - max(1, keep) and self.fs.file_age_s(path) >= (
                 min_age_hours * 3600
             ):
-                self.fs.delete_file(path)
-                removed.append(name)
+                trimmed.append(v)
             else:
                 retained.append(v)
+
+        def listed(man: dict) -> list[str]:
+            return [*man["files"], *man.get("dvs", [])]
+
+        referenced = {rel for v in retained for rel in listed(self.manifest(v))}
+        removed: list[str] = []
+        for v in trimmed:
+            try:
+                man = self.manifest(v)
+            except ValueError:
+                continue  # a concurrent vacuum trimmed it first
+            if self.has_view:
+                shutil.rmtree(
+                    os.path.join(self.state_dir, _view_name(v)), ignore_errors=True
+                )
+            for rel in listed(man):
+                if rel not in referenced:
+                    referenced.add(rel)  # delete once
+                    self.fs.delete_file(os.path.join(self.files_dir, rel))
+                    removed.append(rel)
+            self.fs.delete_file(os.path.join(self.manifests_dir, _manifest_name(v)))
+            removed.append(_manifest_name(v))
         if gc_files:
-            referenced = {
-                rel
-                for v in retained
-                for m in (self.manifest(v),)
-                for rel in [*m["files"], *m.get("dvs", [])]
-            }
+            age_floor = stale_staging_hours * 3600
             for path in self.fs.walk_files(self.files_dir):
                 rel = os.path.relpath(path, self.files_dir)
-                if rel not in referenced and self.fs.file_age_s(path) >= (
-                    stale_staging_hours * 3600
-                ):
+                if rel not in referenced and self.fs.file_age_s(path) >= age_floor:
                     self.fs.delete_file(path)
                     removed.append(rel)
-            # Hidden Spark staging dirs abandoned by crashed writes.
-            for name in self.fs.list_names(self.root):
-                if name.startswith(".staging."):
-                    p = os.path.join(self.root, name)
-                    if _is_object_uri(p):
-                        # Object stores have no dirs: GC each staged
-                        # object past the age floor individually.
-                        for pth in self.fs.walk_files(p):
-                            if self.fs.file_age_s(pth) >= (
-                                stale_staging_hours * 3600
-                            ):
-                                self.fs.delete_file(pth)
-                                removed.append(pth)
-                    elif os.path.isdir(p) and self.fs.file_age_s(p) >= (
-                        stale_staging_hours * 3600
-                    ):
-                        shutil.rmtree(p, ignore_errors=True)
-                        removed.append(name)
+            # Hidden staging dirs abandoned by crashed writes and views.
+            for name in self.fs.list_names(self.state_dir):
+                if not name.startswith((".staging.", ".view.")):
+                    continue
+                p = os.path.join(self.state_dir, name)
+                if _is_object_uri(p):
+                    # Object stores have no dirs: GC each staged object
+                    # past the age floor individually.
+                    for pth in self.fs.walk_files(p):
+                        if self.fs.file_age_s(pth) >= age_floor:
+                            self.fs.delete_file(pth)
+                            removed.append(pth)
+                elif os.path.isdir(p) and self.fs.file_age_s(p) >= age_floor:
+                    shutil.rmtree(p, ignore_errors=True)
+                    removed.append(name)
+        if self.has_view:
+            # Views of versions no longer retained (a crash between the
+            # manifest delete of an earlier sweep and its view removal).
+            keep_views = set(retained)
+            for name in self.fs.list_names(self.state_dir):
+                m = _VIEW_RE.match(name)
+                if m and int(m.group(1)) not in keep_views and int(m.group(1)) < cur:
+                    shutil.rmtree(os.path.join(self.state_dir, name), ignore_errors=True)
         return removed
+
+
+def _raise_on_failed_constraints(
+    source: DataFrame, constraints: list[str], seen: dict, root: str
+) -> None:
+    """Delta-style CHECK constraints on the batch: every expression must
+    not evaluate FALSE for any row (SQL-standard CHECK semantics — NULL /
+    UNKNOWN passes, as for ``CHECK`` in the reference's DDL,
+    migrations/init.sql).  ``seen`` holds the per-constraint FALSE counts
+    the staging write observed; only a violation pays for a sample."""
+    from pyspark.sql import functions as F
+
+    for i, expr in enumerate(constraints):
+        if seen[f"check{i}"]:
+            bad = (
+                source.filter(F.expr(expr).eqNullSafe(F.lit(False))).limit(3).collect()
+            )
+            sample = "; ".join(str(r.asDict()) for r in bad)
+            raise ValueError(
+                f"merge into {root}: CHECK constraint {expr!r} violated by "
+                f"{seen[f'check{i}']} row(s), e.g. {sample}"
+            )
 
 
 def merge_manifest(
@@ -1243,58 +1489,72 @@ def merge_manifest(
     constraints: list[str] | None = None,
     op_tag: str | None = None,
 ) -> int:
-    """MERGE-style upsert committed through the manifest protocol — the
-    object-store twin of :func:`door2door_etl_spark.io.versioned.merge_versioned`
-    with identical semantics (one row per key, new row wins, idempotent
-    replay, NULL keys rejected, schema drift rejected unless
-    ``evolve_schema``).
+    """MERGE-style upsert — the one MERGE of the engine.  Semantics are
+    the reference warehouse upsert's (src/helper/postgres.py:167-181):
+    one row per key survives within the batch, existing keys are UPDATEd
+    (new row wins), new keys INSERTed, and replaying a batch is a no-op
+    (idempotent).
 
-    With ``partition_col``, only touched partitions are written as new
-    files; every untouched partition's existing files are RE-LISTED in
-    the new manifest (metadata-only — the object-store equivalent of the
-    local mode's hardlink farm, and the reason an hourly batch into a
-    100 TB table costs one partition, not the table).
+    * **One pass over the source.** Its row count, the NULL-key check and
+      the CHECK ``constraints`` ride the staging write as one
+      ``Observation``; a failed check discards the staged files and
+      raises before the claim, so nothing is committed.  NULL keys are
+      rejected because the anti-join's equality never matches NULL: every
+      replay would re-insert the row (the reference declares the key
+      PRIMARY KEY NOT NULL, migrations/init.sql:29-51).
+    * **Optimistic concurrency.** The merge is computed against manifest
+      ``base`` and claims exactly ``base + 1``; a loser recomputes against
+      the winner's snapshot, up to ``max_retries``, then raises
+      :class:`ConcurrentWriteError`.
+    * **Partition scope.** With ``partition_col``, only the partitions the
+      batch touches (plus any a moved key leaves behind) are rewritten;
+      every other partition's files are RE-LISTED in the new manifest —
+      metadata only, so an hourly batch into a 100 TB hour-partitioned
+      table costs one partition, not the table.
+    * **Schema drift** (any change of the name → type mapping) is
+      rejected unless ``evolve_schema`` (Delta's mergeSchema analog): a
+      batch may then ADD columns (old rows read null) or OMIT target
+      columns (its rows get null there).  A drifted merge rewrites the
+      whole snapshot, so one snapshot never mixes physical schemas.
+
+    Returns the number of (deduplicated) source rows merged.
     """
+    from urllib.parse import unquote, urlparse
+
+    from pyspark.sql import Observation
     from pyspark.sql import functions as F
 
     table = ManifestTable(root, fs=fs) if fs is not None else ManifestTable(root)
-    if os.path.islink(root) or os.path.isdir(
-        os.path.join(os.path.dirname(root.rstrip("/")) or ".",
-                     f".{os.path.basename(root.rstrip('/'))}__versions")
-    ):
-        raise ValueError(
-            f"{root} is a POSIX-versioned table (io/versioned.py layout); "
-            "merge it with merge_versioned — writing manifests beside a "
-            "symlink-published table would split its version history"
-        )
     _reject_dv_reserved(source)
     source = source.dropDuplicates([key])
-    if source.filter(source[key].isNull()).limit(1).count() > 0:
-        raise ValueError(
-            f"merge into {root}: batch contains NULL values in merge key "
-            f"{key!r}; a NULL key cannot be matched for UPDATE and would "
-            "duplicate on every replay"
-        )
-    from .versioned import _check_constraints
-
-    _check_constraints(source, constraints, root)
-    n_source = source.count()
+    constraints = list(constraints or [])
+    # The batch's rows carry a marker through the merge, so its count and
+    # checks are observed on the very DataFrame that is written: a metric
+    # observed on the source alone would never arrive when the source
+    # belongs to another session than the write (a streaming micro-batch).
+    src = F.col("__merge_src")
+    checks = [
+        F.count_if(src).alias("rows"),
+        F.count_if(src & F.col(key).isNull()).alias("null_keys"),
+    ] + [
+        F.count_if(src & F.expr(c).eqNullSafe(F.lit(False))).alias(f"check{i}")
+        for i, c in enumerate(constraints)
+    ]
+    tagged = source.withColumn("__merge_src", F.lit(True))
     scol = stats_col or key  # data-skipping stats: per-file key min/max
+    table._prepare(spark, scol)
 
     for _attempt in range(max_retries):
         base = table.current_version() or 0
-        staging = os.path.join(table.root, f".staging.{uuid.uuid4().hex}")
+        staging = table._staging_path()
         new_rels: list[str] = []
         new_stats: dict = {}
+        man: dict = {}
+        reused: list[str] = []
+        pcols = [partition_col] if partition_col else []
         try:
             if base == 0:
-                writer = source.write.mode("overwrite")
-                if partition_col:
-                    writer = writer.partitionBy(partition_col)
-                new_rels = table._stage_and_place(writer, staging, scol, new_stats)
-                reused: list[str] = []
-                out_schema = source.schema
-                pcols = [partition_col] if partition_col else []
+                merged = tagged
             else:
                 man = table.manifest(base)
                 target = table.read(spark, base)
@@ -1310,12 +1570,7 @@ def merge_manifest(
                         "pass evolve_schema=True to evolve the table"
                     )
                 union_kw = {"allowMissingColumns": True} if evolve_schema else {}
-                partition_scoped = (
-                    partition_col
-                    and not drifted
-                    and man["partition_cols"] == [partition_col]
-                )
-                if partition_scoped:
+                if partition_col and not drifted and man["partition_cols"] == pcols:
                     touched_raw = [
                         r[0]
                         for r in source.select(partition_col).distinct().collect()
@@ -1353,28 +1608,25 @@ def merge_manifest(
                             v is None for v in stale_parts
                         )
                         is_touched = touched_pred(touched, include_null)
-                    merged_touched = (
+                    merged = (
                         target.filter(is_touched)
                         .join(source.select(key), on=key, how="left_anti")
-                        .unionByName(source, **union_kw)
+                        .withColumn("__merge_src", F.lit(False))
+                        .unionByName(tagged, **union_kw)
                     )
                     # Which top-level partition dirs do the touched rows
-                    # live in?  Resolved from actual file paths (realpath
-                    # both sides), never re-encoded from values.
-                    from urllib.parse import unquote, urlparse
-
+                    # live in?  Resolved from the actual file paths
+                    # (realpath on both sides, so a symlinked ancestor or
+                    # a relative root cannot mis-split them), never
+                    # re-encoded from values; this also catches a
+                    # partition the merge leaves EMPTY.  input_file_name()
+                    # needs a RAW single-source scan (target may carry a
+                    # DV anti-join).
                     abs_files = os.path.realpath(table.files_dir)
-                    # Dir resolution must run on a RAW single-source scan:
-                    # input_file_name() rejects multi-source plans, and
-                    # target may carry a DV anti-join (masked rows' files
-                    # still belong to their touched dir anyway).
                     raw_scan = spark.read.option(
                         "basePath", table.files_dir
                     ).parquet(
-                        *[
-                            os.path.join(table.files_dir, rel)
-                            for rel in man["files"]
-                        ]
+                        *[os.path.join(table.files_dir, rel) for rel in man["files"]]
                     )
                     touched_dirs = {
                         os.path.relpath(
@@ -1386,32 +1638,31 @@ def merge_manifest(
                         .distinct()
                         .collect()
                     }
-                    new_rels = table._stage_and_place(
-                        merged_touched.write.mode("overwrite").partitionBy(
-                            partition_col
-                        ),
-                        staging,
-                        scol,
-                        new_stats,
-                    )
                     reused = [
                         rel
                         for rel in man["files"]
                         if rel.split(os.sep, 1)[0] not in touched_dirs
                     ]
-                    out_schema = merged_touched.schema
-                    pcols = [partition_col]
                 else:
-                    merged = target.join(
-                        source.select(key), on=key, how="left_anti"
-                    ).unionByName(source, **union_kw)
-                    writer = merged.write.mode("overwrite")
-                    if partition_col:
-                        writer = writer.partitionBy(partition_col)
-                    new_rels = table._stage_and_place(writer, staging, scol, new_stats)
-                    reused = []
-                    out_schema = merged.schema
-                    pcols = [partition_col] if partition_col else []
+                    merged = (
+                        target.join(source.select(key), on=key, how="left_anti")
+                        .withColumn("__merge_src", F.lit(False))
+                        .unionByName(tagged, **union_kw)
+                    )
+            obs = Observation()
+            merged = merged.observe(obs, *checks).drop("__merge_src")
+            writer = merged.write.mode("overwrite")
+            if partition_col:
+                writer = writer.partitionBy(partition_col)
+            new_rels = table._stage_and_place(writer, staging, scol, new_stats)
+            seen = obs.get
+            if seen["null_keys"]:
+                raise ValueError(
+                    f"merge into {root}: batch contains NULL values in merge key "
+                    f"{key!r}; a NULL key cannot be matched for UPDATE and would "
+                    "duplicate on every replay"
+                )
+            _raise_on_failed_constraints(source, constraints, seen, root)
         except BaseException:
             _discard_staging(table.fs, staging)
             table._drop_files(new_rels)
@@ -1420,35 +1671,26 @@ def merge_manifest(
         # Carry forward reused files' stats when the prior manifest's stats
         # column matches; a prior different/absent stats column degrades
         # those entries to rows-only (pruning keeps them conservatively).
-        prev_stats = (man.get("stats", {}) if base else {})
-        prev_scols = _man_stats_cols(man) if base else []
+        prev_stats = man.get("stats", {})
+        same_scols = _man_stats_cols(man) == _norm_stats_cols(scol)
         carried = {
-            r: (
-                prev_stats[r]
-                if prev_scols == _norm_stats_cols(scol)
-                else {"rows": prev_stats[r]["rows"], "cols": {}}
-            )
+            r: prev_stats[r] if same_scols else {"rows": prev_stats[r]["rows"], "cols": {}}
             for r in reused
             if r in prev_stats
         }
-        if table._claim(
-            base + 1, reused + new_rels, out_schema, pcols,
+        if table._commit(
+            base + 1, reused + new_rels, merged.schema, pcols,
             stats={**carried, **new_stats}, stats_col=scol,
             # Re-listed files keep their deletion vectors; DV rows aimed at
             # rewritten (no-longer-listed) files are inert — part names are
             # never reused, so they can't false-match.  A full rewrite
             # (reused == []) materializes every DV and drops them.
-            dvs=(man.get("dvs") if base and reused else None),
+            dvs=(man.get("dvs") if reused else None),
             op="merge",
             op_tag=op_tag,
+            keep=vacuum_keep, min_age_hours=vacuum_min_age_hours,
         ):
-            table.publish(base + 1)
-            table.vacuum(
-                keep=vacuum_keep,
-                min_age_hours=vacuum_min_age_hours,
-                gc_files=False,  # O(table) file walk is a maintenance call
-            )
-            return n_source
+            return int(seen["rows"])
         # Lost the claim race: our files are referenced by nothing — drop
         # them and recompute against the winner's snapshot.
         table._drop_files(new_rels)
@@ -1485,17 +1727,9 @@ def append_manifest(
     Returns the committed version number.
     """
     table = ManifestTable(root, fs=fs) if fs is not None else ManifestTable(root)
-    if os.path.islink(root) or os.path.isdir(
-        os.path.join(os.path.dirname(root.rstrip("/")) or ".",
-                     f".{os.path.basename(root.rstrip('/'))}__versions")
-    ):
-        raise ValueError(
-            f"{root} is a POSIX-versioned table (io/versioned.py layout); "
-            "writing manifests beside a symlink-published table would "
-            "split its version history"
-        )
     _reject_dv_reserved(source)
     scol = stats_col
+    table._prepare(spark, scol)
 
     for _attempt in range(max_retries):
         base = table.current_version() or 0
@@ -1518,7 +1752,7 @@ def append_manifest(
                 )
             if scol is None:
                 scol = _man_stats_cols(man) or None
-        staging = os.path.join(table.root, f".staging.{uuid.uuid4().hex}")
+        staging = table._staging_path()
         new_rels: list[str] = []
         new_stats: dict = {}
         try:
@@ -1544,7 +1778,7 @@ def append_manifest(
             for r in reused
             if r in prev_stats
         }
-        if table._claim(
+        if table._commit(
             base + 1, reused + new_rels, source.schema,
             [partition_col] if partition_col else [],
             stats={**carried, **new_stats} if scol else None, stats_col=scol,
@@ -1553,13 +1787,8 @@ def append_manifest(
             dvs=(man.get("dvs") if man else None),
             op="append",
             op_tag=op_tag,
+            keep=vacuum_keep, min_age_hours=vacuum_min_age_hours,
         ):
-            table.publish(base + 1)
-            table.vacuum(
-                keep=vacuum_keep,
-                min_age_hours=vacuum_min_age_hours,
-                gc_files=False,
-            )
             return base + 1
         table._drop_files(new_rels)
     raise ConcurrentWriteError(
@@ -1582,8 +1811,9 @@ def delete_manifest(
     """Delete by key on a manifest table (right-to-be-forgotten).
 
     ``mode="rewrite"`` (copy-on-write): only files containing a doomed key
-    are rewritten; every other file is re-listed verbatim.  Object-store
-    twin of :func:`door2door_etl_spark.io.versioned.delete_versioned`.
+    are rewritten; every other file is re-listed verbatim — a GDPR
+    request rewrites the handful of files its keys live in, not the
+    corpus.  A batch matching nothing commits nothing and returns 0.
 
     ``mode="dv"`` (merge-on-read, the Delta/Iceberg-v2 deletion-vector
     shape): NO data file is touched — the commit writes a small parquet
@@ -1630,9 +1860,9 @@ def delete_where_manifest(
     fs: FsOps | None = None,
     mode: str = "rewrite",
 ) -> int:
-    """Predicate delete on a manifest table — object-store twin of
-    :func:`door2door_etl_spark.io.versioned.delete_where_versioned`
-    (same NULL discipline: NULL-evaluating rows are kept).  ``mode="dv"``
+    """Predicate delete (``DELETE WHERE condition``: TTL expiry, retention
+    sweeps, policy scrubs).  NULL discipline: a row where ``condition``
+    evaluates NULL is KEPT, as SQL's DELETE keeps it.  ``mode="dv"``
     commits a deletion vector instead of rewriting files (see
     :func:`delete_manifest`)."""
     from pyspark.sql import functions as F
@@ -1675,6 +1905,7 @@ def _file_level_delete_manifest(
     from pyspark.sql import functions as F
 
     table = ManifestTable(root, fs=fs) if fs is not None else ManifestTable(root)
+    table._prepare(spark)
     for _attempt in range(max_retries):
         base = table.current_version()
         if base is None:
@@ -1703,7 +1934,7 @@ def _file_level_delete_manifest(
         if not affected_rel:
             return 0
         n_deleted = doomed.count()
-        staging = os.path.join(table.root, f".staging.{uuid.uuid4().hex}")
+        staging = table._staging_path()
         new_rels: list[str] = []
         new_stats: dict = {}
         scol = _man_stats_cols(man) or None
@@ -1733,19 +1964,14 @@ def _file_level_delete_manifest(
         schema = StructType.fromJson(json.loads(man["schema"]))
         prev_stats = man.get("stats", {})
         carried = {r: prev_stats[r] for r in reused if r in prev_stats}
-        if table._claim(
+        if table._commit(
             base + 1, reused + new_rels, schema, man["partition_cols"],
             stats={**carried, **new_stats} if scol else None, stats_col=scol,
             dvs=(man.get("dvs") if reused else None),
             op="delete",
             op_tag=op_tag,
+            keep=vacuum_keep, min_age_hours=vacuum_min_age_hours,
         ):
-            table.publish(base + 1)
-            table.vacuum(
-                keep=vacuum_keep,
-                min_age_hours=vacuum_min_age_hours,
-                gc_files=False,
-            )
             return n_deleted
         table._drop_files(new_rels)
     raise ConcurrentWriteError(
@@ -1770,6 +1996,7 @@ def _dv_delete_manifest(
     from pyspark.sql import functions as F
 
     table = ManifestTable(root, fs=fs) if fs is not None else ManifestTable(root)
+    table._prepare(spark)
     for _attempt in range(max_retries):
         base = table.current_version()
         if base is None:
@@ -1797,7 +2024,7 @@ def _dv_delete_manifest(
         else:
             live = with_meta
         doomed = doom_of(live).select("__dv_file", "__dv_row")
-        staging = os.path.join(table.root, f".staging.{uuid.uuid4().hex}")
+        staging = table._staging_path()
         new_rels: list[str] = []
         try:
             doomed.write.mode("overwrite").parquet(staging)
@@ -1817,19 +2044,14 @@ def _dv_delete_manifest(
             table._drop_files(new_rels)
             return 0
         schema = StructType.fromJson(json.loads(man["schema"]))
-        if table._claim(
+        if table._commit(
             base + 1, list(man["files"]), schema, man["partition_cols"],
             stats=man.get("stats"), stats_col=_man_stats_cols(man) or None,
             dvs=dv_rels_old + new_rels,
             op="dv-delete",
             op_tag=op_tag,
+            keep=vacuum_keep, min_age_hours=vacuum_min_age_hours,
         ):
-            table.publish(base + 1)
-            table.vacuum(
-                keep=vacuum_keep,
-                min_age_hours=vacuum_min_age_hours,
-                gc_files=False,
-            )
             return n_deleted
         table._drop_files(new_rels)
     raise ConcurrentWriteError(
@@ -1853,6 +2075,7 @@ def purge_deletes_manifest(
     from pyspark.sql import functions as F
 
     table = ManifestTable(root, fs=fs) if fs is not None else ManifestTable(root)
+    table._prepare(spark)
     for _attempt in range(max_retries):
         base = table.current_version()
         if base is None:
@@ -1887,7 +2110,7 @@ def purge_deletes_manifest(
                 table.publish(base + 1)
                 return 0
             continue
-        staging = os.path.join(table.root, f".staging.{uuid.uuid4().hex}")
+        staging = table._staging_path()
         new_rels: list[str] = []
         new_stats: dict = {}
         try:
@@ -1911,17 +2134,12 @@ def purge_deletes_manifest(
         reused = [rel for rel in man["files"] if rel not in affected]
         prev_stats = man.get("stats", {})
         carried = {r: prev_stats[r] for r in reused if r in prev_stats}
-        if table._claim(
+        if table._commit(
             base + 1, reused + new_rels, schema, man["partition_cols"],
             stats={**carried, **new_stats} if scol else None, stats_col=scol,
             op="purge",
+            keep=vacuum_keep, min_age_hours=vacuum_min_age_hours,
         ):
-            table.publish(base + 1)
-            table.vacuum(
-                keep=vacuum_keep,
-                min_age_hours=vacuum_min_age_hours,
-                gc_files=False,
-            )
             return len(affected)
         table._drop_files(new_rels)
     raise ConcurrentWriteError(
@@ -1937,10 +2155,11 @@ def table_changes_manifest(
     to_version: int | None = None,
     fs: FsOps | None = None,
 ) -> DataFrame:
-    """Change feed between two manifest versions — the object-store twin
-    of :func:`door2door_etl_spark.io.versioned.table_changes`, sharing its
-    diff core (slim key+hash shuffle, union-of-schemas null-for-missing
-    convention)."""
+    """Change feed (CDC) between two committed versions: one row per key
+    whose content changed, with ``_change_type`` in {insert, update,
+    delete} and the NEW side's columns (null except ``key`` for deletes).
+    See :func:`changes_between` for the diff; a compaction-only version
+    reports zero changes."""
     table = ManifestTable(root, fs=fs) if fs is not None else ManifestTable(root)
     if to_version is None:
         to_version = table.current_version()
@@ -1951,6 +2170,137 @@ def table_changes_manifest(
     return changes_between(old, new, key)
 
 
+def changes_between(old: DataFrame, new: DataFrame, key: str) -> DataFrame:
+    """The CDC diff core.  Both snapshots project to (key, row-hash)
+    map-side, so the full-outer join shuffles two slim columns, never the
+    payload; the post-image columns come back via one join against only
+    the changed keys.
+
+    The diff runs over the UNION of both schemas with a null-for-missing
+    convention: a column only one side has hashes as a typed NULL on the
+    other, so after schema evolution a row whose only change is a value
+    in the newly added column (or one lost with a dropped column) still
+    reports as an update."""
+    from pyspark.sql import functions as F
+
+    all_cols = list(new.columns) + [c for c in old.columns if c not in set(new.columns)]
+
+    def row_hash(df: DataFrame):
+        have = set(df.columns)
+        parts = [
+            F.col(c)
+            if c in have
+            else F.lit(None).cast(
+                (new if c in set(new.columns) else old).schema[c].dataType
+            )
+            for c in all_cols
+        ]
+        return F.xxhash64(F.struct(*parts))
+
+    oldh = old.select(F.col(key).alias("_k"), row_hash(old).alias("_h_old"))
+    newh = new.select(F.col(key).alias("_k"), row_hash(new).alias("_h_new"))
+    diff = (
+        oldh.join(newh, "_k", "full_outer")
+        .select(
+            "_k",
+            F.when(F.col("_h_old").isNull(), F.lit("insert"))
+            .when(F.col("_h_new").isNull(), F.lit("delete"))
+            .when(F.col("_h_old") != F.col("_h_new"), F.lit("update"))
+            .alias("_change_type"),
+        )
+        .filter(F.col("_change_type").isNotNull())
+    )
+    # eqNullSafe: a NULL-key row written by an external writer must not
+    # silently vanish from the change feed (merges themselves reject NULL
+    # keys).  Deletes are excluded here — they have no new-side row, and
+    # a null key present on BOTH sides surfaces as delete+insert whose
+    # diff rows would otherwise both null-safe-match the new row.
+    non_delete = diff.filter(F.col("_change_type") != "delete")
+    post = new.join(non_delete, new[key].eqNullSafe(non_delete._k), "inner").select(
+        "_change_type", *new.columns
+    )
+    deletes = (
+        diff.filter(F.col("_change_type") == "delete")
+        .select(F.col("_k").alias(key), "_change_type")
+    )
+    if deletes.columns != post.columns:  # align: null post-image for deletes
+        for c in new.columns:
+            if c != key:
+                deletes = deletes.withColumn(c, F.lit(None).cast(new.schema[c].dataType))
+        deletes = deletes.select("_change_type", *new.columns)
+    return post.unionByName(deletes)
+
+
+@dataclass(frozen=True)
+class ChangeFeedCursor:
+    """Durable change-feed consumer position — the subscriber half of CDC
+    (Delta's ``readChangeFeed`` + checkpoint analog; reference analog:
+    the warehouse watermark bookkeeping, src/helper/postgres.py:118-140).
+
+    Protocol: ``poll()`` returns every change between the last COMMITTED
+    cursor position and the table's current version; the consumer applies
+    them (:func:`apply_changes_manifest` is idempotent), then calls
+    ``commit(to_version)`` — write-temp + fsync + rename, so a crash
+    between apply and commit re-delivers the same window on the next
+    poll (at-least-once + idempotent apply = effectively-once).
+
+    Retention contract: the source's vacuum ``keep``/``min_age_hours``
+    must exceed the consumer's maximum lag, or ``poll`` raises the
+    retained-versions error from time travel — loudly, never a silent
+    gap.
+    """
+
+    root: str
+    cursor_path: str
+
+    def last_committed(self) -> int | None:
+        try:
+            with open(self.cursor_path) as f:
+                return int(f.read().strip())
+        except (OSError, ValueError):
+            return None
+
+    def poll(self, spark: SparkSession, key: str):
+        """Returns ``(changes_df, to_version)`` for the window
+        (last_committed, current], or ``(None, last)`` when no new version
+        has landed.  A first poll on a fresh cursor starts from the
+        table's FIRST retained version (initial sync = seed the replica
+        with that version, then apply the feed — or simply full-copy and
+        ``commit(current)``)."""
+        table = ManifestTable(self.root)
+        versions = table.versions()
+        last = self.last_committed()
+        if not versions or (last is not None and versions[-1] <= last):
+            return None, last
+        from_v = last if last is not None else versions[0]
+        if from_v >= versions[-1]:
+            return None, last
+        return (
+            table_changes_manifest(
+                spark, self.root, key=key, from_version=from_v,
+                to_version=versions[-1],
+            ),
+            versions[-1],
+        )
+
+    def commit(self, version: int) -> None:
+        """Durably advance the cursor — only after the window's changes
+        are fully applied downstream."""
+        LocalFsOps().put_bytes(self.cursor_path, str(version).encode())
+
+
+def resolve_table_path(root: str) -> str:
+    """The directory holding the committed snapshot's files as plain
+    parquet: a local table's current view (rolled forward first, see
+    :meth:`ManifestTable.sync_view`), or ``root`` itself for a directory
+    that was never committed through the protocol."""
+    table = ManifestTable(root)
+    cur = table.sync_view()
+    if cur is None or not table.has_view:
+        return root
+    return os.path.join(table.state_dir, _view_name(cur))
+
+
 def apply_changes_manifest(
     spark: SparkSession,
     root: str,
@@ -1959,9 +2309,11 @@ def apply_changes_manifest(
     partition_col: str | None = None,
     fs: FsOps | None = None,
 ) -> dict:
-    """Apply a change feed to a manifest-mode replica (deletes first,
-    then one MERGE; idempotent on replay).  Twin of
-    :func:`door2door_etl_spark.io.versioned.apply_changes`."""
+    """Apply a change feed to a replica — the CDC consumer half: deletes
+    first (so a delete+reinsert of one key in one feed nets to the
+    reinsert), then one MERGE.  Replaying the same feed is a no-op, so
+    at-least-once delivery of change batches is safe.  Returns
+    ``{"deleted": n, "upserted": n}``."""
     from pyspark.sql import functions as F
 
     dels = changes.filter(F.col("_change_type") == "delete").select(key)
@@ -1995,8 +2347,8 @@ def compact_manifest(
     target_files: int | None = None,
 ) -> int:
     """Rewrite the current manifest snapshot into ~``target_file_mb``
-    files as a NEW committed version; returns the new file count — the
-    object-store twin of :func:`door2door_etl_spark.io.versioned.compact_versioned`.
+    files as a NEW committed version; returns the new file count.  A
+    partitioned snapshot keeps its partition layout.
 
     ``transform`` (optional ``DataFrame -> DataFrame``, schema-preserving)
     is applied to the PINNED snapshot before the rewrite — the hook that
@@ -2038,6 +2390,7 @@ def compact_manifest(
     if sort_by and zorder_by:
         raise ValueError("compact_manifest: sort_by and zorder_by are exclusive")
     table = ManifestTable(root, fs=fs) if fs is not None else ManifestTable(root)
+    table._prepare(spark)
     for _attempt in range(max_retries):
         base = table.current_version()
         if base is None:
@@ -2047,7 +2400,7 @@ def compact_manifest(
         if transform is not None:
             df = transform(df)
         pcols = man["partition_cols"]
-        staging = os.path.join(table.root, f".staging.{uuid.uuid4().hex}")
+        staging = table._staging_path()
         new_rels: list[str] = []
         try:
             if zorder_by:
@@ -2108,15 +2461,11 @@ def compact_manifest(
             table._drop_files(new_rels)
             raise
         schema = StructType.fromJson(json.loads(man["schema"]))
-        if table._claim(base + 1, new_rels, schema, pcols,
-                        stats=new_stats if scol else None, stats_col=scol,
-                        op="compact"):
-            table.publish(base + 1)
-            table.vacuum(
-                keep=vacuum_keep,
-                min_age_hours=vacuum_min_age_hours,
-                gc_files=False,
-            )
+        if table._commit(
+            base + 1, new_rels, schema, pcols,
+            stats=new_stats if scol else None, stats_col=scol, op="compact",
+            keep=vacuum_keep, min_age_hours=vacuum_min_age_hours,
+        ):
             return len(new_rels)
         table._drop_files(new_rels)
     raise ConcurrentWriteError(
@@ -2327,6 +2676,7 @@ def restore_manifest(
     data moves at any table size.  History is never rewritten; the bad
     versions stay inspectable until vacuum.  Returns the new version."""
     table = ManifestTable(root, fs=fs) if fs is not None else ManifestTable(root)
+    table.sync_view()
     for _attempt in range(max_retries):
         base = table.current_version()
         if base is None:
@@ -2402,21 +2752,24 @@ def convert_to_manifest(
     src_dir: str,
     root: str,
     stats_col: str | list[str] | None = None,
-    vacuum_keep: int = 2,
 ) -> int:
     """Adopt an EXISTING plain (optionally hive-partitioned) parquet
-    directory as a manifest table — the ``CONVERT TO DELTA`` analog.
+    directory as a table — the ``CONVERT TO DELTA`` analog.
 
     No data bytes move: every data file is HARD-LINKED into the table's
     ``_files/`` layout preserving its partition relpath, per-file stats
     come off the parquet footers (plus Bloom bitmaps for ``bloom:<col>``
     declarations), partition columns are inferred from ``key=value``
     path segments, and ONE manifest claim commits the whole adoption —
-    readers either see the full converted table or no table.  The source
-    directory is left untouched (links share the bytes), so a cutover
-    can keep legacy readers on ``src_dir`` while new readers move to the
-    manifest protocol; from then on merge/append/compact/DV operations
-    treat the adopted files as first-class.
+    readers either see the full converted table or no table.
+
+    ``src_dir == root`` adopts a pre-protocol table in place (every writer
+    does this on its first write): after the claim, publishing the view
+    parks the plain directory aside and swaps the root symlink in.  A
+    crash before the claim leaves the plain directory as it was; a crash
+    after it is rolled forward (:meth:`ManifestTable.sync_view`).
+    Otherwise ``src_dir`` is left untouched (links share the bytes) and
+    ``root`` must not exist yet.
 
     Local filesystems only (hard links are the zero-copy primitive; an
     object store has no rename-free adoption — copy into place with
@@ -2429,13 +2782,14 @@ def convert_to_manifest(
             "for object stores write through append_manifest"
         )
     table = ManifestTable(root)
+    src = src_dir.rstrip("/")
     if table.current_version() is not None:
         raise ValueError(f"{root} already has a committed manifest")
+    if src != table.root and os.path.lexists(table.root):
+        raise ValueError(f"{root} already exists")
     # Schema (including hive partition columns) from ONE Spark read of
     # the source layout.
-    df = spark.read.parquet(src_dir)
-    schema = df.schema
-    src = src_dir.rstrip("/")
+    schema = spark.read.parquet(src).schema
     pairs = _staged_files(LocalFsOps(), src)
     if not pairs:
         raise ValueError(f"{src_dir} contains no data files to adopt")
@@ -2449,10 +2803,25 @@ def convert_to_manifest(
                 f"inconsistent hive partitioning under {src_dir}: "
                 f"{segs} vs {pcols}"
             )
-    pcols = pcols or []
+    return _adopt_files(table, sorted(pairs), schema, pcols or [], stats_col, "convert")
+
+
+def _adopt_files(
+    table: ManifestTable,
+    pairs: list[tuple[str, str]],
+    schema: StructType,
+    pcols: list[str],
+    stats_col,
+    op: str,
+) -> int:
+    """Hard-link ``(source path, relpath)`` files into ``_files/`` and
+    commit them as version 1 — the one adoption commit behind
+    :func:`convert_to_manifest` and the Delta converter.  A link left by
+    an earlier crashed adoption is reused; adopted files predate the
+    protocol and are fsync'd before the claim."""
     rels: list[str] = []
     stats: dict = {}
-    for path, rel in sorted(pairs):
+    for path, rel in pairs:
         if stats_col:
             stats[rel] = _file_stats(path, stats_col)
         dest = os.path.join(table.files_dir, rel)
@@ -2460,18 +2829,19 @@ def convert_to_manifest(
         try:
             os.link(path, dest)
         except FileExistsError:
-            # a prior crashed conversion left this link; same inode is
+            # a prior crashed adoption left this link; same inode is
             # fine, anything else is a foreign file collision
             if not os.path.samefile(path, dest):
                 raise
         except OSError:
             shutil.copy2(path, dest)  # cross-device fallback
+        _fsync_path(dest)
         rels.append(rel)
     if not table._claim(
         1, rels, schema, pcols,
         stats=stats if stats_col else None,
-        stats_col=stats_col, op="convert",
+        stats_col=stats_col, op=op,
     ):
-        raise ConcurrentWriteError(f"convert into {root} lost the claim race")
+        raise ConcurrentWriteError(f"{op} into {table.root} lost the claim race")
     table.publish(1)
     return len(rels)

@@ -213,27 +213,12 @@ class LakeEpoch:
     def read_table(self, spark: SparkSession, table_root: str) -> DataFrame:
         """Read ``table_root`` at its epoch-pinned version — the reader
         half of cross-table snapshot isolation.  Unpinned tables read
-        current.  Layout-aware like :class:`ChangeFeedCursor`: manifest
-        tables (``_manifests`` dir) resolve through the manifest
-        protocol, POSIX-versioned tables through time travel."""
-        import os as _os
-
+        current."""
         from door2door_etl_spark.io.manifest import ManifestTable
         from door2door_etl_spark.io.objectstore import normalize_object_uri
 
         pin = self.pins().get(normalize_object_uri(table_root))
-        if _os.path.isdir(_os.path.join(table_root, "_manifests")) or not _os.path.isdir(
-            table_root
-        ):
-            return ManifestTable(table_root).read(spark, version=pin)
-        from door2door_etl_spark.io.versioned import (
-            VersionedParquetTable,
-            read_version,
-        )
-
-        if pin is None:
-            return VersionedParquetTable(table_root).read(spark)
-        return read_version(spark, table_root, pin)
+        return ManifestTable(table_root).read(spark, version=pin)
 
 
 class MultiTableTransaction:

@@ -1,9 +1,10 @@
 """Sinks: parquet table writer, key-based MERGE-style upsert, bookkeeping append.
 
 Covers SURVEY.md §2.2:
-  K1  upsert into warehouse table -> :func:`merge_upsert_parquet` (parquet
-      lake) and :func:`write_jdbc_upsert` (JDBC warehouse: staged parallel
-      write + one server-side set-based upsert)
+  K1  upsert into warehouse table -> :class:`ParquetMergeSink` (parquet
+      lake, :func:`~door2door_etl_spark.io.manifest.merge_manifest`) and
+      :func:`write_jdbc_upsert` (JDBC warehouse: staged parallel write +
+      one server-side set-based upsert)
       (reference src/helper/postgres.py:157-189 INSERT … ON CONFLICT DO
       UPDATE, row-at-a-time executemany — here a distributed anti-join +
       union rewrite with new-rows-win semantics, idempotent by construction)
@@ -23,13 +24,12 @@ read-merge-overwrite), not the whole table.
 from __future__ import annotations
 
 from dataclasses import dataclass
-from pathlib import Path
 from typing import Protocol, runtime_checkable
 
 from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql import functions as F
 
-from door2door_etl_spark.io.versioned import compact_versioned, merge_versioned
+from door2door_etl_spark.io.manifest import merge_manifest
 from door2door_etl_spark.operators import local
 
 
@@ -60,74 +60,6 @@ def append_rows(
     df.write.mode("append").parquet(path)
 
 
-def compact_parquet_table(
-    spark: SparkSession,
-    path: str,
-    target_file_mb: int = 128,
-) -> int:
-    """Rewrite a parquet table into ~``target_file_mb`` files; returns the
-    new file count.
-
-    Incremental MERGE/append sinks accrete small files (every upsert batch
-    writes at least one), and at 100 TB small-file explosion is the top
-    operational failure of a parquet lake: listing slows, task counts blow
-    up, scan throughput collapses.  Sizing uses the actual on-disk bytes
-    (not row counts), and the compacted table is committed as a new
-    SNAPSHOT through the versioned-manifest protocol
-    (:mod:`door2door_etl_spark.io.versioned`) — the previous snapshot stays
-    committed until the new one is published, so a crash at any point never
-    leaves the table truncated or absent (the round-3 backup-move/rename
-    window is gone by construction).
-    """
-    import shutil
-
-    p = Path(path)
-    # Recovery from a ROUND-3 era crash: the old swap scheme could die
-    # between moving the table to its backup and renaming the compacted
-    # tree in, leaving the table path absent.  Restore the backup before
-    # migrating to the versioned layout.
-    backup = p.parent / f".{p.name}__precompact"
-    if not p.exists() and backup.is_dir():
-        shutil.move(str(backup), str(p))
-    elif backup.is_dir():
-        shutil.rmtree(backup)  # table exists: the backup is stale garbage
-    return compact_versioned(spark, path, target_file_mb=target_file_mb)
-
-
-def merge_upsert_parquet(
-    spark: SparkSession,
-    target_path: str,
-    source: DataFrame,
-    key: str,
-    partition_col: str | None = None,
-) -> int:
-    """MERGE-style upsert of ``source`` into the parquet table at ``target_path``.
-
-    Semantics (identical to reference src/helper/postgres.py:167-181):
-    - within the batch, one row per key survives (caller is expected to have
-      deduplicated; we defensively dropDuplicates on the key);
-    - keys already in the target are UPDATEd (new row wins), new keys are
-      INSERTed;
-    - re-running the same batch leaves the table unchanged (idempotent).
-
-    Physical strategy: the logical plan MERGE lowers to — target ⟕anti⟖
-    source ∪ source — committed through the versioned-manifest protocol
-    (:mod:`door2door_etl_spark.io.versioned`): write a new immutable
-    snapshot, fsync the ``_current`` pointer, atomically repoint the table
-    root.  Readers never observe a partial table; concurrent writers
-    serialize optimistically (the loser of the version-claim race recomputes
-    and retries).  With ``partition_col`` set, only target partitions present
-    in the source batch are written — untouched partition directories are
-    hard-linked from the previous snapshot, so an hourly batch into a 100 TB
-    hour-partitioned table writes one partition's worth of data.
-
-    Returns the number of source rows merged.
-    """
-    return merge_versioned(
-        spark, target_path, source, key=key, partition_col=partition_col
-    )
-
-
 # -- Pluggable MERGE sink (K1) ----------------------------------------------
 
 @runtime_checkable
@@ -146,18 +78,15 @@ class MergeSink(Protocol):
 
     Atomicity contract (implementation-graded, documented per impl):
     a reader must never observe a partially-merged table.
-    :class:`ParquetMergeSink` commits through the versioned-manifest
-    protocol (:mod:`door2door_etl_spark.io.versioned`): immutable
-    snapshots + a fsync'd pointer, so readers always see a complete
-    committed snapshot, crashes auto-recover, and concurrent writers
-    serialize optimistically via the POSIX version-claim rename.  On an
-    object store (no rename-if-absent, no symlinks/hardlinks) use
-    :class:`ManifestMergeSink` — the same protocol with a per-version
-    file manifest whose put-if-absent create is the claim
-    (:mod:`door2door_etl_spark.io.manifest`) — or
-    :class:`JdbcMergeSink` (the upsert statement is one server-side
-    transaction).  All three drop in behind this protocol without
-    touching pipeline code.
+    :class:`ParquetMergeSink` commits through the lake's one table-commit
+    protocol (:mod:`door2door_etl_spark.io.manifest`): the merge stages
+    immutable files, and a put-if-absent manifest create is the commit,
+    so readers always see a complete committed snapshot — through the
+    manifest, or through the root symlink's view on a local filesystem —
+    crashes roll forward, and concurrent writers serialize
+    optimistically.  The same sink commits to an object store.
+    :class:`JdbcMergeSink` commits with one server-side transaction.
+    Both drop in behind this protocol without touching pipeline code.
     """
 
     def merge(self, source: DataFrame, key: str) -> int:
@@ -166,9 +95,10 @@ class MergeSink(Protocol):
 
 @dataclass(frozen=True)
 class ParquetMergeSink:
-    """Parquet-lake MergeSink: delegates to :func:`merge_versioned`
-    (anti-join ∪ union, partition-scoped write + hardlinked untouched
-    partitions, versioned-manifest commit, optional CHECK constraints)."""
+    """Parquet-lake MergeSink: delegates to
+    :func:`~door2door_etl_spark.io.manifest.merge_manifest` (anti-join ∪
+    union, partition-scoped rewrite with untouched partitions re-listed,
+    manifest commit, optional CHECK constraints)."""
 
     spark: SparkSession
     target_path: str
@@ -176,33 +106,9 @@ class ParquetMergeSink:
     constraints: tuple[str, ...] = ()
 
     def merge(self, source: DataFrame, key: str) -> int:
-        return merge_versioned(
+        return merge_manifest(
             self.spark, self.target_path, source, key=key,
             partition_col=self.partition_col,
-            constraints=list(self.constraints) or None,
-        )
-
-
-@dataclass(frozen=True)
-class ManifestMergeSink:
-    """Object-store MergeSink: delegates to
-    :func:`door2door_etl_spark.io.manifest.merge_manifest` (same MERGE
-    semantics as :class:`ParquetMergeSink`; per-version file manifests
-    replace symlinks/hardlinks, put-if-absent manifest create replaces the
-    claim rename — the layout a 100 TB lake on S3 actually needs).
-    Readers resolve through
-    :meth:`door2door_etl_spark.io.manifest.ManifestTable.read`."""
-
-    spark: SparkSession
-    target_path: str
-    partition_col: str | None = None
-    constraints: tuple[str, ...] = ()
-
-    def merge(self, source: DataFrame, key: str) -> int:
-        from door2door_etl_spark.io.manifest import merge_manifest
-
-        return merge_manifest(
-            self.spark, self.target_path, source, key, self.partition_col,
             constraints=list(self.constraints) or None,
         )
 

@@ -11,14 +11,14 @@ group, and the view's absolute values advance by the delta.
 
 Why this matters at 100 TB: a refresh costs O(changed keys), never
 O(table).  The change feed itself is a slim key+hash diff of two
-manifests (``io/versioned.table_changes``); the only base-table touch is
+manifests (``io/manifest.table_changes_manifest``); the only base-table touch is
 one semi-join of the OLD snapshot against the changed keys to recover
 pre-images (the MERGE sink stores no preimages — same posture as Delta's
 CDF-less tables), and the view MERGE touches only the affected groups.
 
 Effectively-once discipline: the applied window's ledger row commits in
 the SAME atomic view version as the group updates (one
-``merge_versioned`` batch), so an at-least-once redelivery of a window
+``merge_manifest`` batch), so an at-least-once redelivery of a window
 (crash between view commit and cursor commit) is detected by its ledger
 row and skipped — the same batch-ledger argument as
 ``streaming/pipeline.stream_cms_maintenance``, moved into the table's
@@ -35,12 +35,11 @@ from pathlib import Path
 from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql import functions as F
 
-from door2door_etl_spark.io.versioned import (
+from door2door_etl_spark.io.manifest import (
     ChangeFeedCursor,
-    VersionedParquetTable,
-    merge_versioned,
-    read_version,
-    table_changes,
+    ManifestTable,
+    merge_manifest,
+    table_changes_manifest,
 )
 from door2door_etl_spark.operators import local
 
@@ -150,48 +149,10 @@ def _group_key_expr(group_cols: list[str]):
     return F.concat_ws(_SEP, *parts)
 
 
-# -- source-layout dispatch (POSIX-versioned vs object-store manifest;
-# the join view resolves each of its two sources the same way) ----------
-
-def _is_manifest(root: str) -> bool:
-    return (Path(root) / "_manifests").is_dir()
-
-
-def _source_version(root: str) -> int | None:
-    if _is_manifest(root):
-        from door2door_etl_spark.io.manifest import ManifestTable
-
-        return ManifestTable(root).current_version()
-    return VersionedParquetTable(root).current_version()
-
-
-def _read_source(spark: SparkSession, root: str, version: int) -> DataFrame:
-    if _is_manifest(root):
-        from door2door_etl_spark.io.manifest import ManifestTable
-
-        return ManifestTable(root).read(spark, version)
-    return read_version(spark, root, version)
-
-
-def _source_changes(
-    spark: SparkSession, root: str, key: str, from_v: int, to_v: int
-) -> DataFrame:
-    if _is_manifest(root):
-        from door2door_etl_spark.io.manifest import table_changes_manifest
-
-        return table_changes_manifest(
-            spark, root, key=key, from_version=from_v, to_version=to_v
-        )
-    return table_changes(
-        spark, root, key=key, from_version=from_v, to_version=to_v
-    )
-
-
 @dataclass(frozen=True)
 class IncrementalAggView:
     """A standing ``GROUP BY group_cols -> count + sums`` view over a
-    POSIX-versioned or object-store-manifest table, maintained from its
-    change feed.
+    committed table, maintained from its change feed.
 
     ``sum_cols``: numeric source columns to SUM per group (NULLs
     contribute nothing, matching SQL SUM).  ``avg_cols``: columns to
@@ -235,9 +196,8 @@ class IncrementalAggView:
     disables the ledger entirely and restores the round-8 contract
     (ever-inserted upper bound, no rescan ever).
 
-    The view table (always POSIX-versioned, independent of the source's
-    layout) holds one row per group plus one ledger row per applied
-    window.
+    The view table (itself a committed table) holds one row per group
+    plus one ledger row per applied window.
     """
 
     source_root: str
@@ -372,7 +332,7 @@ class IncrementalAggView:
         values — SQL AVG), ``distinct_est_<c>`` = HLL estimate of the
         maintained registers (ever-inserted distinct; see the class
         retraction contract)."""
-        df = VersionedParquetTable(self.view_root).read(spark)
+        df = ManifestTable(self.view_root).read(spark)
         return df.filter(
             (~F.col("_group_key").startswith(_LEDGER_PREFIX))
             & (F.col("n_rows") > 0)
@@ -436,7 +396,7 @@ class IncrementalAggView:
 
     def _live_state(self, spark: SparkSession) -> DataFrame:
         """Stored per-group state rows (ledger + tombstones filtered)."""
-        df = VersionedParquetTable(self.view_root).read(spark)
+        df = ManifestTable(self.view_root).read(spark)
         return df.filter(
             (~F.col("_group_key").startswith(_LEDGER_PREFIX))
             & (F.col("n_rows") > 0)
@@ -565,7 +525,7 @@ class IncrementalAggView:
         for per-group quantiles without touching the source table."""
         if c not in self.hdr_cols:
             raise ValueError(f"{c!r} is not in hdr_cols={self.hdr_cols}")
-        df = VersionedParquetTable(self.view_root).read(spark)
+        df = ManifestTable(self.view_root).read(spark)
         return (
             df.filter(
                 (~F.col("_group_key").startswith(_LEDGER_PREFIX))
@@ -648,9 +608,9 @@ class IncrementalAggView:
         return local.frame(spark, [tuple(fields)], ", ".join(parts))
 
     def _window_applied(self, spark: SparkSession, from_v: int, to_v: int) -> bool:
-        if VersionedParquetTable(self.view_root).current_version() is None:
+        if ManifestTable(self.view_root).current_version() is None:
             return False
-        df = VersionedParquetTable(self.view_root).read(spark)
+        df = ManifestTable(self.view_root).read(spark)
         tag = f"{_LEDGER_PREFIX}:{from_v}:{to_v}"
         return df.filter(F.col("_group_key") == tag).limit(1).count() > 0
 
@@ -662,9 +622,9 @@ class IncrementalAggView:
         landed and must not be applied again, even if the source has since
         advanced past ``v`` (so the exact-window replay check would miss
         it).  Bounded scan: ledger rows are one per applied window."""
-        if VersionedParquetTable(self.view_root).current_version() is None:
+        if ManifestTable(self.view_root).current_version() is None:
             return None
-        df = VersionedParquetTable(self.view_root).read(spark)
+        df = ManifestTable(self.view_root).read(spark)
         pref = f"{_LEDGER_PREFIX}:{from_v}:"
         rows = (
             df.filter(F.col("_group_key").startswith(pref))
@@ -688,7 +648,7 @@ class IncrementalAggView:
         atomically with the group updates; the cursor commits last).
         Returns ``{"action", "from_version", "to_version", "groups_touched"}``.
         """
-        cur = _source_version(self.source_root)
+        cur = ManifestTable(self.source_root).current_version()
         if cur is None:
             raise ValueError(f"{self.source_root} has no committed versions")
         cursor = self._cursor()
@@ -698,10 +658,10 @@ class IncrementalAggView:
             # Initial sync: materialize the aggregate of the CURRENT
             # snapshot, then start the feed from there.
             seed = self._view_schema_frame(
-                spark, self._agg(_read_source(spark, self.source_root, cur))
+                spark, self._agg(ManifestTable(self.source_root).read(spark, cur))
             )
             ledger = self._ledger_row(spark, 0, cur)
-            n = merge_versioned(
+            n = merge_manifest(
                 spark, self.view_root, seed.unionByName(ledger), key="_group_key"
             )
             cursor.commit(cur)
@@ -745,9 +705,9 @@ class IncrementalAggView:
                 "to_version": to_v, "groups_touched": 0,
             }
 
-        feed = _source_changes(spark, self.source_root, self.key, from_v, to_v)
+        feed = table_changes_manifest(spark, self.source_root, self.key, from_v, to_v)
         changed_keys = feed.select(F.col(self.key).alias("_ck")).distinct()
-        old = _read_source(spark, self.source_root, from_v)
+        old = ManifestTable(self.source_root).read(spark, from_v)
         pre = old.join(
             changed_keys, old[self.key].eqNullSafe(F.col("_ck")), "leftsemi"
         ).withColumn("_w", F.lit(-1))
@@ -882,7 +842,7 @@ class IncrementalAggView:
                     F.broadcast(d_map), "_group_key", "left"
                 ).join(F.broadcast(big), "_group_key", "left")
 
-        view = VersionedParquetTable(self.view_root).read(spark)
+        view = ManifestTable(self.view_root).read(spark)
         current = view.filter(
             ~F.col("_group_key").startswith(_LEDGER_PREFIX)
         ).select(
@@ -941,7 +901,7 @@ class IncrementalAggView:
             flagged = joined.filter(needs_any & (new_n > 0)).select(
                 "_group_key", F.lit(True).alias("_recomputed")
             )
-            snap = _read_source(spark, self.source_root, to_v)
+            snap = ManifestTable(self.source_root).read(spark, to_v)
             rec = (
                 snap.withColumn("_group_key", _group_key_expr(self.group_cols))
                 .join(F.broadcast(flagged.select("_group_key")), "_group_key", "leftsemi")
@@ -1007,7 +967,7 @@ class IncrementalAggView:
                 "_group_key", F.lit(True).alias("_dv_rec")
             )
             snap_dv = (
-                _read_source(spark, self.source_root, to_v)
+                ManifestTable(self.source_root).read(spark, to_v)
                 .withColumn("_group_key", _group_key_expr(self.group_cols))
                 .join(
                     F.broadcast(dv_flagged.select("_group_key")),
@@ -1130,7 +1090,7 @@ class IncrementalAggView:
         )
         ledger = self._ledger_row(spark, from_v, to_v)
         batch = updated.unionByName(ledger)
-        n = merge_versioned(spark, self.view_root, batch, key="_group_key")
+        n = merge_manifest(spark, self.view_root, batch, key="_group_key")
         cursor.commit(to_v)
         return {
             "action": "delta", "from_version": from_v, "to_version": to_v,

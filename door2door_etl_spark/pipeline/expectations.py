@@ -262,7 +262,7 @@ def checked_merge(
     come back as driver data (bounded: one row per rule).  Fail-mode
     violations abort BEFORE any write — the target never sees a batch
     that breaks an invariant."""
-    from door2door_etl_spark.io.versioned import merge_versioned
+    from door2door_etl_spark.io.manifest import merge_manifest
 
     # The tagged frame feeds four actions (fail check, quarantine count,
     # quarantine write, metrics, plus the MERGE of passing rows) — persist
@@ -279,7 +279,7 @@ def checked_merge(
         if n_bad:
             bad.write.mode("append").parquet(quarantine_root)
             n_quarantined = n_bad
-        merge_versioned(spark, target_root, passed, key=key)
+        merge_manifest(spark, target_root, passed, key=key)
         return {
             "batch_id": batch_id,
             "n_quarantined": n_quarantined,
@@ -316,7 +316,7 @@ def replay_quarantine(
     """
     import os
 
-    from door2door_etl_spark.io.versioned import merge_versioned
+    from door2door_etl_spark.io.manifest import merge_manifest
 
     if not os.path.isdir(quarantine_root):
         return {"n_replayed": 0, "n_admitted": 0, "n_still_quarantined": 0}
@@ -329,7 +329,7 @@ def replay_quarantine(
         n_replayed = tagged.count()
         n_admitted = passed.count()
         if n_admitted:
-            merge_versioned(
+            merge_manifest(
                 spark, target_root, passed.drop("_batch_id"), key=key
             )
         survivors = (

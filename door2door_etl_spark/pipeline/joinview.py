@@ -55,15 +55,11 @@ from pathlib import Path
 from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql import functions as F
 
-from door2door_etl_spark.io.versioned import (
+from door2door_etl_spark.io.manifest import (
     ChangeFeedCursor,
-    VersionedParquetTable,
-    merge_versioned,
-)
-from door2door_etl_spark.pipeline.aggview import (
-    _read_source,
-    _source_changes,
-    _source_version,
+    ManifestTable,
+    merge_manifest,
+    table_changes_manifest,
 )
 
 _LEDGER_PREFIX = "\x00ledger"
@@ -115,9 +111,9 @@ class IncrementalJoinView:
         return f"{_LEDGER_PREFIX}:{ll}:{lv}:{rl}:{rv}"
 
     def _view_raw(self, spark: SparkSession) -> DataFrame | None:
-        if VersionedParquetTable(self.view_root).current_version() is None:
+        if ManifestTable(self.view_root).current_version() is None:
             return None
-        return VersionedParquetTable(self.view_root).read(spark)
+        return ManifestTable(self.view_root).read(spark)
 
     def _landed_frontier(self, spark: SparkSession) -> tuple[int, int] | None:
         """Largest (left_to, right_to) among committed ledger rows — the
@@ -203,8 +199,8 @@ class IncrementalJoinView:
         Returns ``{"action", "left_window", "right_window",
         "rows_touched"}``.
         """
-        lv = _source_version(self.left_root)
-        rv = _source_version(self.right_root)
+        lv = ManifestTable(self.left_root).current_version()
+        rv = ManifestTable(self.right_root).current_version()
         if lv is None or rv is None:
             raise ValueError("both sources need a committed version")
         lcur, rcur = self._cursors()
@@ -227,11 +223,11 @@ class IncrementalJoinView:
                 ll, rl = flv, frv
         if ll is None or rl is None:
             seed = self._joined(
-                _read_source(spark, self.left_root, lv),
-                _read_source(spark, self.right_root, rv),
+                ManifestTable(self.left_root).read(spark, lv),
+                ManifestTable(self.right_root).read(spark, rv),
             )
             ledger = self._ledger_row(spark, seed, 0, lv, 0, rv)
-            n = merge_versioned(
+            n = merge_manifest(
                 spark, self.view_root, seed.unionByName(ledger), key="_vk"
             )
             lcur.commit(lv)
@@ -273,19 +269,19 @@ class IncrementalJoinView:
                 "rows_touched": 0,
             }
 
-        left_new = _read_source(spark, self.left_root, lv)
-        right_new = _read_source(spark, self.right_root, rv)
+        left_new = ManifestTable(self.left_root).read(spark, lv)
+        right_new = ManifestTable(self.right_root).read(spark, rv)
 
         # Affected left keys: changed left rows, plus left rows whose fk
         # points at a changed right key (insert, update, or delete — a
         # late-arriving dimension row back-fills here).
         affected = None
         if lv > ll:
-            affected = _source_changes(
+            affected = table_changes_manifest(
                 spark, self.left_root, self.left_key, ll, lv
             ).select(F.col(self.left_key).cast("string").alias("_vk"))
         if rv > rl:
-            dr_keys = _source_changes(
+            dr_keys = table_changes_manifest(
                 spark, self.right_root, self.right_key, rl, rv
             ).select(
                 F.col(self.right_key).cast("string").alias("_fk")
@@ -326,7 +322,7 @@ class IncrementalJoinView:
         )
         ledger = self._ledger_row(spark, rows, ll, lv, rl, rv)
         out = rows.unionByName(dead_rows).unionByName(ledger)
-        n = merge_versioned(spark, self.view_root, out, key="_vk")
+        n = merge_manifest(spark, self.view_root, out, key="_vk")
         lcur.commit(lv)
         rcur.commit(rv)
         return {

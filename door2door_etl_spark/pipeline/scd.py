@@ -65,10 +65,7 @@ def scd2_merge(
 
     Returns ``{n_new, n_changed, n_closed_missing}``.
     """
-    from door2door_etl_spark.io.versioned import (
-        VersionedParquetTable,
-        merge_versioned,
-    )
+    from door2door_etl_spark.io.manifest import ManifestTable, merge_manifest
 
     eff = F.lit(effective_ts).cast("timestamp")
     b = batch.select(key, *tracked_cols).dropDuplicates([key])
@@ -82,11 +79,11 @@ def scd2_merge(
             F.lit(True).alias("is_current"),
         )
 
-    table = VersionedParquetTable(dim_root)
+    table = ManifestTable(dim_root)
     if table.current_version() is None:
         opened = _open_rows(b)
         n_new = opened.count()
-        merge_versioned(
+        merge_manifest(
             spark, dim_root,
             opened.withColumn("_scd_key", _scd_key(key)),
             key="_scd_key",
@@ -154,7 +151,7 @@ def scd2_merge(
             )
         )
     try:
-        merge_versioned(
+        merge_manifest(
             spark, dim_root, rows.withColumn("_scd_key", _scd_key(key)),
             key="_scd_key",
         )
@@ -169,9 +166,9 @@ def scd2_merge(
 
 def read_dim(spark: SparkSession, dim_root: str) -> DataFrame:
     """The full SCD2 history (bookkeeping key dropped)."""
-    from door2door_etl_spark.io.versioned import VersionedParquetTable
+    from door2door_etl_spark.io.manifest import ManifestTable
 
-    return VersionedParquetTable(dim_root).read(spark).drop("_scd_key")
+    return ManifestTable(dim_root).read(spark).drop("_scd_key")
 
 
 def read_current(spark: SparkSession, dim_root: str) -> DataFrame:

@@ -1235,7 +1235,7 @@ def q_cdc_agg_view(spark: SparkSession, sf: str) -> DataFrame:
     import shutil
     import tempfile
 
-    from door2door_etl_spark.io.versioned import delete_versioned, merge_versioned
+    from door2door_etl_spark.io.manifest import delete_manifest, merge_manifest
     from door2door_etl_spark.pipeline.aggview import IncrementalAggView
 
     k = F.col("o_orderkey")
@@ -1258,7 +1258,7 @@ def q_cdc_agg_view(spark: SparkSession, sf: str) -> DataFrame:
     src = os.path.join(root, "src")
     cols = ["okey", "status", "n_chars"]
 
-    merge_versioned(
+    merge_manifest(
         spark, src, orders.filter(F.col("_k") % 3 != 0).select(*cols), key="okey"
     )
     view = IncrementalAggView(
@@ -1280,10 +1280,10 @@ def q_cdc_agg_view(spark: SparkSession, sf: str) -> DataFrame:
         .withColumn("status", F.lit("U"))
         .withColumn("n_chars", F.col("n_chars") + 4)
     )
-    merge_versioned(
+    merge_manifest(
         spark, src, inserts.unionByName(updates).select(*cols), key="okey"
     )
-    delete_versioned(
+    delete_manifest(
         spark,
         src,
         orders.filter((F.col("_k") % 11 == 0) & (F.col("_k") % 3 != 0)).select("okey"),
@@ -1550,7 +1550,7 @@ def q_aggview_rollup_serving(spark: SparkSession, sf: str) -> DataFrame:
     import shutil
     import tempfile
 
-    from door2door_etl_spark.io.versioned import delete_versioned, merge_versioned
+    from door2door_etl_spark.io.manifest import delete_manifest, merge_manifest
     from door2door_etl_spark.pipeline.aggview import IncrementalAggView
 
     k = F.col("o_orderkey")
@@ -1570,7 +1570,7 @@ def q_aggview_rollup_serving(spark: SparkSession, sf: str) -> DataFrame:
     src = os.path.join(root, "src")
     cols = ["okey", "status", "prio", "n_chars"]
 
-    merge_versioned(
+    merge_manifest(
         spark, src, orders.filter(F.col("_k") % 3 != 0).select(*cols), key="okey"
     )
     view = IncrementalAggView(
@@ -1591,10 +1591,10 @@ def q_aggview_rollup_serving(spark: SparkSession, sf: str) -> DataFrame:
         .withColumn("status", F.lit("U"))
         .withColumn("n_chars", F.col("n_chars") + 4)
     )
-    merge_versioned(
+    merge_manifest(
         spark, src, inserts.unionByName(updates).select(*cols), key="okey"
     )
-    delete_versioned(
+    delete_manifest(
         spark,
         src,
         orders.filter((F.col("_k") % 11 == 0) & (F.col("_k") % 3 != 0)).select("okey"),
@@ -1643,7 +1643,7 @@ def q_cdc_hdr_quantiles(spark: SparkSession, sf: str) -> DataFrame:
     import shutil
     import tempfile
 
-    from door2door_etl_spark.io.versioned import delete_versioned, merge_versioned
+    from door2door_etl_spark.io.manifest import delete_manifest, merge_manifest
     from door2door_etl_spark.operators.sketches import hdr_quantiles
     from door2door_etl_spark.pipeline.aggview import IncrementalAggView
 
@@ -1663,7 +1663,7 @@ def q_cdc_hdr_quantiles(spark: SparkSession, sf: str) -> DataFrame:
     src = os.path.join(root, "src")
     cols = ["okey", "status", "n_chars"]
 
-    merge_versioned(
+    merge_manifest(
         spark, src, orders.filter(F.col("_k") % 3 != 0).select(*cols), key="okey"
     )
     view = IncrementalAggView(
@@ -1681,10 +1681,10 @@ def q_cdc_hdr_quantiles(spark: SparkSession, sf: str) -> DataFrame:
         .withColumn("status", F.lit("U"))
         .withColumn("n_chars", F.col("n_chars") + 4)
     )
-    merge_versioned(
+    merge_manifest(
         spark, src, inserts.unionByName(updates).select(*cols), key="okey"
     )
-    delete_versioned(
+    delete_manifest(
         spark,
         src,
         orders.filter((F.col("_k") % 11 == 0) & (F.col("_k") % 3 != 0)).select("okey"),

@@ -847,7 +847,7 @@ def q_cdc_join_view(spark: SparkSession, sf: str) -> DataFrame:
     import shutil
     import tempfile
 
-    from door2door_etl_spark.io.versioned import delete_versioned, merge_versioned
+    from door2door_etl_spark.io.manifest import delete_manifest, merge_manifest
     from door2door_etl_spark.pipeline.joinview import IncrementalJoinView
 
     k = F.col("_k")
@@ -870,10 +870,10 @@ def q_cdc_join_view(spark: SparkSession, sf: str) -> DataFrame:
     src_l, src_r = os.path.join(root, "orders"), os.path.join(root, "cust")
     lcols, rcols = ["okey", "ckey", "total"], ["ckey", "segment"]
 
-    merge_versioned(
+    merge_manifest(
         spark, src_l, orders.filter(k % 3 != 0).select(*lcols), key="okey"
     )
-    merge_versioned(
+    merge_manifest(
         spark, src_r, cust.filter(c % 5 != 0).select(*rcols), key="ckey"
     )
     view = IncrementalJoinView(
@@ -897,8 +897,8 @@ def q_cdc_join_view(spark: SparkSession, sf: str) -> DataFrame:
         .withColumn("total", F.col("total") + 1.0)
         .select(*lcols)
     )
-    merge_versioned(spark, src_l, l_inserts.unionByName(l_updates), key="okey")
-    delete_versioned(
+    merge_manifest(spark, src_l, l_inserts.unionByName(l_updates), key="okey")
+    delete_manifest(
         spark, src_l, orders.filter(k % 11 == 0).select("okey"), key="okey"
     )
     r_updates = (
@@ -907,8 +907,8 @@ def q_cdc_join_view(spark: SparkSession, sf: str) -> DataFrame:
         .select(*rcols)
     )
     r_inserts = cust.filter(c % 5 == 0).select(*rcols)
-    merge_versioned(spark, src_r, r_updates.unionByName(r_inserts), key="ckey")
-    delete_versioned(
+    merge_manifest(spark, src_r, r_updates.unionByName(r_inserts), key="ckey")
+    delete_manifest(
         spark, src_r, cust.filter(c % 9 == 0).select("ckey"), key="ckey"
     )
     if view.refresh(spark)["action"] != "delta":

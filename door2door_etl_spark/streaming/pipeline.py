@@ -23,7 +23,7 @@ from __future__ import annotations
 from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql import functions as F
 
-from door2door_etl_spark.io.writers import merge_upsert_parquet
+from door2door_etl_spark.io.manifest import ManifestTable, merge_manifest
 from door2door_etl_spark.operators import local
 from door2door_etl_spark.pipeline.aggview import _group_key_expr
 from door2door_etl_spark.schemas.normalize import normalize
@@ -262,10 +262,10 @@ def stream_upsert_to_warehouse(
     key + MERGE — the streaming exactly-once pattern without a txn sink).
 
     ``sink`` is any :class:`door2door_etl_spark.io.writers.MergeSink`;
-    default is the local versioned-commit parquet path.  Pass a
-    ``ManifestMergeSink`` to stream onto an object-store manifest table, or
-    a ``JdbcMergeSink`` to land in a transactional warehouse — the
-    micro-batch loop is identical."""
+    default is the lake's manifest MERGE
+    (:func:`~door2door_etl_spark.io.manifest.merge_manifest`, local or
+    object store).  Pass a ``JdbcMergeSink`` to land in a transactional
+    warehouse — the micro-batch loop is identical."""
     table = schema.target_table or schema.entity
     target = f"{warehouse_root}/{table}"
     filtered = events.filter(F.col("on") == schema.entity)
@@ -277,7 +277,7 @@ def stream_upsert_to_warehouse(
         if sink is not None:
             sink.merge(silver, key="event_generated_id")
         else:
-            merge_upsert_parquet(spark, target, silver, key="event_generated_id")
+            merge_manifest(spark, target, silver, key="event_generated_id")
 
     return _run_foreach_batch(filtered, checkpoint_dir, upsert_batch)
 
@@ -374,7 +374,7 @@ def stream_hll_maintenance(
     (CMS) would double-count on replay and needs the MERGE-key ledger the
     warehouse sink uses.
 
-    State is committed through the versioned MERGE protocol keyed on
+    State is committed through the manifest MERGE keyed on
     (group…, bucket) — snapshot isolation means a reader never sees a
     half-merged sketch, and the commit itself tolerates a concurrent
     batch writer.  Scale: the shuffled state per batch is register
@@ -405,7 +405,7 @@ def stream_hll_maintenance(
         keyed = combined.withColumn(
             "sketch_key", _group_key_expr([*group_cols, "bucket"])
         )
-        merge_upsert_parquet(spark, table_root, keyed, key="sketch_key")
+        merge_manifest(spark, table_root, keyed, key="sketch_key")
 
     return _run_foreach_batch(stream_df, checkpoint_dir, merge_batch)
 
@@ -444,7 +444,7 @@ def stream_cms_maintenance(
         keyed = cells.withColumn(
             "cell_key", _group_key_expr(["batch_id", "row", "col"])
         )
-        merge_upsert_parquet(spark, table_root, keyed, key="cell_key")
+        merge_manifest(spark, table_root, keyed, key="cell_key")
 
     return _run_foreach_batch(stream_df, checkpoint_dir, merge_batch)
 
@@ -543,11 +543,11 @@ def stream_replicate_manifest_table(
 ):
     """Streaming CDC replication: tail a manifest table's commit log as a
     MICRO-BATCH SOURCE and apply its change feed to a replica — the
-    continuous form of the :class:`~door2door_etl_spark.io.versioned
+    continuous form of the :class:`~door2door_etl_spark.io.manifest
     .ChangeFeedCursor` poll/commit loop (VERDICT r5 ask #5).
 
-    The source is Spark's own file stream over ``_manifests/``: every
-    commit creates exactly ONE new immutable ``data-vNNNNNNNN.json``, so
+    The source is Spark's own file stream over the table's manifests
+    directory: every commit creates exactly ONE new immutable manifest, so
     the file-source checkpoint — which records exactly which files each
     batch consumed — IS the consumer cursor, with no bespoke offset
     bookkeeping.  Each micro-batch holds the commit records that landed
@@ -574,7 +574,6 @@ def stream_replicate_manifest_table(
     import os as _os
 
     from door2door_etl_spark.io.manifest import (
-        ManifestTable,
         apply_changes_manifest,
         table_changes_manifest,
     )
@@ -821,8 +820,6 @@ def stream_quality_filter_hot_reload(
     model is an upgrade, not a correctness violation; pin to a fixed
     version via stream_quality_filter with a read_version snapshot if
     bitwise replay matters more than freshness)."""
-    from door2door_etl_spark.io.manifest import ManifestTable
-
     def score_batch(batch_df: DataFrame, batch_id: int) -> None:
         spark = batch_df.sparkSession
         table = (
@@ -874,7 +871,7 @@ def stream_hdr_maintenance(
         keyed = bins.withColumn(
             "cell_key", _group_key_expr(["batch_id", *group_cols, "bin"])
         )
-        merge_upsert_parquet(spark, table_root, keyed, key="cell_key")
+        merge_manifest(spark, table_root, keyed, key="cell_key")
 
     return _run_foreach_batch(stream_df, checkpoint_dir, merge_batch)
 
@@ -914,8 +911,6 @@ def stream_aggview_maintenance(
     delivery guarantees; the stream only bounds STALENESS.
     """
     import os as _os
-
-    from door2door_etl_spark.io.manifest import ManifestTable
 
     src = ManifestTable(view.source_root)
 
@@ -982,7 +977,6 @@ def stream_curate(
     """
     import os as _os
 
-    from door2door_etl_spark.io.versioned import merge_versioned
     from door2door_etl_spark.operators.text import (
         gopher_quality_flags,
         normalize_text,
@@ -1040,7 +1034,7 @@ def stream_curate(
         stages.append(("near_dedup_admission", n_cur, n_kept))
 
         if n_kept:
-            merge_versioned(spark, docs_root, kept, key=id_col)
+            merge_manifest(spark, docs_root, kept, key=id_col)
         funnel = local.frame(
             spark,
             [
@@ -1146,8 +1140,6 @@ def stream_validate(
     STOPS rather than landing a batch that breaks an invariant, which
     is exactly Delta's CHECK-constraint posture carried to streaming.
     """
-    from door2door_etl_spark.io.versioned import merge_versioned
-
     def validate_batch(batch_df: DataFrame, batch_id: int) -> None:
         passed, quarantined, metrics = suite.validate(batch_df)
         bad = quarantined.withColumn(
@@ -1161,7 +1153,7 @@ def stream_validate(
                 f"{metrics_root}/batch_id={batch_id}"
             )
         if not passed.isEmpty():
-            merge_versioned(spark, target_root, passed, key=key)
+            merge_manifest(spark, target_root, passed, key=key)
 
     return _run_foreach_batch(batches, checkpoint_dir, validate_batch)
 
@@ -1169,12 +1161,10 @@ def stream_validate(
 def _merge_then_refresh(spark: SparkSession, view, root: str, key: str):
     """foreachBatch body of the ingest-driven views: MERGE the batch into
     the view's source ``root`` by ``key``, then advance the view."""
-    from door2door_etl_spark.io.versioned import merge_versioned
-
     def apply_batch(batch_df: DataFrame, batch_id: int) -> None:
         if batch_df.isEmpty():
             return
-        merge_versioned(spark, root, batch_df, key=key)
+        merge_manifest(spark, root, batch_df, key=key)
         view.refresh(spark)
 
     return apply_batch
@@ -1346,7 +1336,7 @@ def stream_enrich_with_dim(
     broadcast_dim: bool = True,
 ):
     """Stream-static enrichment against a HOT dimension table: every
-    micro-batch re-resolves the dimension through its versioned pointer
+    micro-batch re-resolves the dimension's current manifest
     (or through a :class:`door2door_etl_spark.io.txn.LakeEpoch` pin when
     ``epoch`` is passed) AT BATCH TIME — so a dimension MERGE landing
     between micro-batches is visible to every later batch.  This is the
@@ -1367,14 +1357,12 @@ def stream_enrich_with_dim(
     enrichment shape); pass ``broadcast_dim=False`` for a dimension past
     executor memory and let AQE pick the join strategy.
     """
-    from door2door_etl_spark.io.versioned import VersionedParquetTable
-
     def enrich_batch(batch_df: DataFrame, batch_id: int) -> None:
         spark = batch_df.sparkSession
         if epoch is not None:
             dim = epoch.read_table(spark, dim_root)
         else:
-            dim = VersionedParquetTable(dim_root).read(spark)
+            dim = ManifestTable(dim_root).read(spark)
         dim = dim.select(F.col(dim_key).alias(fk), *dim_cols)
         if broadcast_dim:
             dim = F.broadcast(dim)

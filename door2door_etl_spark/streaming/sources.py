@@ -23,7 +23,8 @@ Two contracts exist:
 
 * **Commit-log source** (:func:`stream_replicate_manifest_table` /
   :func:`stream_aggview_maintenance`): one ``value: string`` row per
-  manifest commit record.  The default tails ``_manifests/`` as a text
+  manifest commit record.  The default tails the table's manifests
+  directory (``ManifestTable.manifests_dir``) as a text
   file stream (:func:`commit_log_source`); a bus-backed lakehouse would
   publish commit JSON to a topic and adapt it to the same single-column
   shape.
@@ -68,7 +69,7 @@ def commit_log_source(
     manifests_dir: str, max_files_per_trigger: int | None = None
 ) -> StreamSourceFactory:
     """The default commit-log source: a text file stream over a manifest
-    table's ``_manifests/`` directory — one immutable JSON file per
+    table's manifests directory — one immutable JSON file per
     commit, so the file-source checkpoint IS the consumer cursor.
     ``max_files_per_trigger`` bounds commits-per-batch."""
 

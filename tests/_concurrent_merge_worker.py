@@ -1,11 +1,11 @@
 """Subprocess worker for the cross-process claim-race test.
 
 Each worker is a SEPARATE driver JVM merging batches into the SAME
-versioned table — POSIX rename atomicity across processes is the actual
+table — the put-if-absent manifest claim across processes is the actual
 production claim (two Spark drivers on a shared filesystem), which the
 in-process race tests cannot exercise.
 
-argv: <table_root> <writer_id> <n_batches> [mode]   (mode: posix|manifest)
+argv: <table_root> <writer_id> <n_batches>
 """
 
 from __future__ import annotations
@@ -15,13 +15,9 @@ import sys
 
 def main() -> int:
     root, writer_id, n_batches = sys.argv[1], int(sys.argv[2]), int(sys.argv[3])
-    mode = sys.argv[4] if len(sys.argv) > 4 else "posix"
     sys.path.insert(0, "/root/repo")
     from door2door_etl_spark.io.manifest import merge_manifest
-    from door2door_etl_spark.io.versioned import merge_versioned
     from door2door_etl_spark.session import build_session
-
-    merge = merge_versioned if mode == "posix" else merge_manifest
 
     spark = build_session(
         app_name=f"claim-race-worker-{writer_id}",
@@ -40,7 +36,7 @@ def main() -> int:
             )
             # Default max_retries: the point of the test is that two live
             # writers resolve contention within the default budget.
-            merge(spark, root, batch, key="k", vacuum_keep=99)
+            merge_manifest(spark, root, batch, key="k", vacuum_keep=99)
     finally:
         spark.stop()
     return 0

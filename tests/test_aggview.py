@@ -13,11 +13,10 @@ from pathlib import Path
 
 import pytest
 
-from door2door_etl_spark.io.manifest import delete_manifest, merge_manifest
-from door2door_etl_spark.io.versioned import (
-    VersionedParquetTable,
-    delete_versioned,
-    merge_versioned,
+from door2door_etl_spark.io.manifest import (
+    ManifestTable,
+    delete_manifest,
+    merge_manifest,
 )
 from door2door_etl_spark.pipeline.aggview import IncrementalAggView
 from view_reference import full_recompute
@@ -73,7 +72,7 @@ def _assert_parity(spark, view):
 @pytest.mark.slow
 def test_aggview_seed_then_delta_parity(spark, tmp_path):
     src = tmp_path / "src"
-    merge_versioned(
+    merge_manifest(
         spark,
         str(src),
         _rows(
@@ -94,7 +93,7 @@ def test_aggview_seed_then_delta_parity(spark, tmp_path):
     _assert_parity(spark, view)
 
     # Window 2: insert, plain update, group-moving update, delete.
-    merge_versioned(
+    merge_manifest(
         spark,
         str(src),
         _rows(
@@ -107,7 +106,7 @@ def test_aggview_seed_then_delta_parity(spark, tmp_path):
         ),
         key="id",
     )
-    delete_versioned(
+    delete_manifest(
         spark, str(src), spark.createDataFrame([("b",)], "id string"), key="id"
     )
     out = view.refresh(spark)
@@ -121,14 +120,14 @@ def test_aggview_seed_then_delta_parity(spark, tmp_path):
 
 def test_aggview_redelivered_window_is_skipped(spark, tmp_path):
     src = tmp_path / "src"
-    merge_versioned(
+    merge_manifest(
         spark, str(src), _rows(spark, [("a", "open", 1.0)]), key="id"
     )
     view = _view(tmp_path, src)
     view.refresh(spark)
     seeded_at = view._cursor().last_committed()
 
-    merge_versioned(
+    merge_manifest(
         spark, str(src), _rows(spark, [("b", "open", 2.0)]), key="id"
     )
     view.refresh(spark)
@@ -146,7 +145,7 @@ def test_aggview_redelivered_window_is_skipped(spark, tmp_path):
 
 def test_aggview_null_group_distinct_from_literal_null_string(spark, tmp_path):
     src = tmp_path / "src"
-    merge_versioned(
+    merge_manifest(
         spark,
         str(src),
         _rows(spark, [("a", None, 1.0), ("b", "null", 2.0)]),
@@ -161,7 +160,7 @@ def test_aggview_null_group_distinct_from_literal_null_string(spark, tmp_path):
 
 def test_aggview_sum_ignores_nulls(spark, tmp_path):
     src = tmp_path / "src"
-    merge_versioned(
+    merge_manifest(
         spark,
         str(src),
         _rows(spark, [("a", "open", None), ("b", "open", 3.0)]),
@@ -169,7 +168,7 @@ def test_aggview_sum_ignores_nulls(spark, tmp_path):
     )
     view = _view(tmp_path, src)
     view.refresh(spark)
-    merge_versioned(  # update the null-amount row to a value
+    merge_manifest(  # update the null-amount row to a value
         spark, str(src), _rows(spark, [("a", "open", 4.0)]), key="id"
     )
     view.refresh(spark)
@@ -205,12 +204,12 @@ def test_aggview_multi_window_converges(spark, tmp_path):
     """Several maintenance windows in sequence stay exactly convergent."""
     src = tmp_path / "src"
     view = _view(tmp_path, src)
-    merge_versioned(
+    merge_manifest(
         spark, str(src), _rows(spark, [("r0", "g0", 0.5)]), key="id"
     )
     view.refresh(spark)
     for i in range(1, 4):
-        merge_versioned(
+        merge_manifest(
             spark,
             str(src),
             _rows(
@@ -232,10 +231,9 @@ def test_aggview_minmax_retraction_paths(spark, tmp_path):
     """Both min/max maintenance paths: a delete of a NON-extreme value must
     keep bounds without recompute; a delete of the stored MAX must trigger
     the group-scoped recompute; an insert above the max merges in place."""
-    from door2door_etl_spark.io.versioned import delete_versioned, merge_versioned
 
     src = tmp_path / "src"
-    merge_versioned(
+    merge_manifest(
         spark,
         str(src),
         _rows(
@@ -248,7 +246,7 @@ def test_aggview_minmax_retraction_paths(spark, tmp_path):
     view.refresh(spark)
 
     # Delete the middle value: bounds survive the merge path.
-    delete_versioned(
+    delete_manifest(
         spark, str(src), spark.createDataFrame([("b",)], "id string"), key="id"
     )
     view.refresh(spark)
@@ -257,7 +255,7 @@ def test_aggview_minmax_retraction_paths(spark, tmp_path):
     _assert_parity(spark, view)
 
     # Delete the max: recompute path must find the new max 1.0.
-    delete_versioned(
+    delete_manifest(
         spark, str(src), spark.createDataFrame([("c",)], "id string"), key="id"
     )
     view.refresh(spark)
@@ -266,7 +264,7 @@ def test_aggview_minmax_retraction_paths(spark, tmp_path):
     _assert_parity(spark, view)
 
     # Insert a new extreme: merges without recompute.
-    merge_versioned(
+    merge_manifest(
         spark, str(src), _rows(spark, [("d", "g", 42.0)]), key="id"
     )
     view.refresh(spark)
@@ -278,20 +276,19 @@ def test_aggview_minmax_retraction_paths(spark, tmp_path):
 def test_aggview_group_emptied_then_revived_resets_bounds(spark, tmp_path):
     """A tombstoned group revived by later inserts must NOT resurrect its
     pre-tombstone min/max."""
-    from door2door_etl_spark.io.versioned import delete_versioned, merge_versioned
 
     src = tmp_path / "src"
-    merge_versioned(
+    merge_manifest(
         spark, str(src), _rows(spark, [("a", "g", 99.0)]), key="id"
     )
     view = _view(tmp_path, src)
     view.refresh(spark)
-    delete_versioned(
+    delete_manifest(
         spark, str(src), spark.createDataFrame([("a",)], "id string"), key="id"
     )
     view.refresh(spark)
     assert view.read(spark).count() == 0
-    merge_versioned(
+    merge_manifest(
         spark, str(src), _rows(spark, [("b", "g", 3.0)]), key="id"
     )
     view.refresh(spark)
@@ -308,7 +305,7 @@ def test_aggview_crashed_window_survives_source_advance(spark, tmp_path):
     crashed window's deltas are applied twice (double-counted n_rows and
     sums, breaking effectively-once)."""
     src = tmp_path / "src"
-    merge_versioned(
+    merge_manifest(
         spark, str(src), _rows(spark, [("a", "open", 1.0)]), key="id"
     )
     view = _view(tmp_path, src)
@@ -316,7 +313,7 @@ def test_aggview_crashed_window_survives_source_advance(spark, tmp_path):
     seeded_at = view._cursor().last_committed()
 
     # Window (seed -> v1) applies and lands its ledger row...
-    merge_versioned(
+    merge_manifest(
         spark, str(src), _rows(spark, [("b", "open", 2.0)]), key="id"
     )
     view.refresh(spark)
@@ -324,7 +321,7 @@ def test_aggview_crashed_window_survives_source_advance(spark, tmp_path):
     Path(view._cursor().cursor_path).write_text(str(seeded_at))
     # Source advances BEFORE the next refresh — the exact-window replay
     # check cannot see the landed (seed -> v1) row anymore.
-    merge_versioned(
+    merge_manifest(
         spark, str(src), _rows(spark, [("c", "open", 4.0)]), key="id"
     )
     view.refresh(spark)
@@ -341,13 +338,13 @@ def test_aggview_crashed_window_source_unmoved_replay_skips(spark, tmp_path):
     change (the pre-existing exact-window behavior, now served by the
     landed-window scan)."""
     src = tmp_path / "src"
-    merge_versioned(
+    merge_manifest(
         spark, str(src), _rows(spark, [("a", "open", 1.0)]), key="id"
     )
     view = _view(tmp_path, src)
     view.refresh(spark)
     seeded_at = view._cursor().last_committed()
-    merge_versioned(
+    merge_manifest(
         spark, str(src), _rows(spark, [("b", "open", 2.0)]), key="id"
     )
     view.refresh(spark)
@@ -382,7 +379,7 @@ def test_aggview_avg_and_distinct_maintenance(spark, tmp_path):
         ("c", "open", None),   # NULL: counts in n_rows, not in avg
         ("d", "done", 5.0),
     ]
-    merge_versioned(spark, str(src), _rows(spark, seed_rows), key="id")
+    merge_manifest(spark, str(src), _rows(spark, seed_rows), key="id")
     view = IncrementalAggView(
         source_root=str(src),
         view_root=str(tmp_path / "view"),
@@ -404,13 +401,13 @@ def test_aggview_avg_and_distinct_maintenance(spark, tmp_path):
     assert g["done"][:2] == (1, 5.0)
 
     # wave: insert, update changing a value, delete the doc holding 20.0
-    merge_versioned(
+    merge_manifest(
         spark,
         str(src),
         _rows(spark, [("e", "open", 40.0), ("a", "open", 11.0)]),
         key="id",
     )
-    delete_versioned(
+    delete_manifest(
         spark, str(src), spark.createDataFrame([("b",)], "id string"), key="id"
     )
     assert view.refresh(spark)["action"] == "delta"
@@ -437,7 +434,7 @@ def test_aggview_avg_and_distinct_maintenance(spark, tmp_path):
         distinct_exact_k=0,
     )
     legacy.refresh(spark)  # seeds over live {open: 11,40; done: 5}
-    delete_versioned(
+    delete_manifest(
         spark, str(src), spark.createDataFrame([("e",)], "id string"), key="id"
     )
     assert legacy.refresh(spark)["action"] == "delta"
@@ -488,7 +485,7 @@ def test_aggview_hdr_quantile_maintenance_exactly_retractable(spark, tmp_path):
     )
 
     src = tmp_path / "src"
-    merge_versioned(
+    merge_manifest(
         spark,
         str(src),
         _rows(
@@ -519,7 +516,7 @@ def test_aggview_hdr_quantile_maintenance_exactly_retractable(spark, tmp_path):
         }
 
     def live_bins():
-        snap = VersionedParquetTable(str(src)).read(spark)
+        snap = ManifestTable(str(src)).read(spark)
         return {
             (r["status"], r["bin"]): r["cnt"]
             for r in hdr_histogram_table(
@@ -531,13 +528,13 @@ def test_aggview_hdr_quantile_maintenance_exactly_retractable(spark, tmp_path):
 
     # wave: insert, update moving a value ACROSS bins, delete one of the
     # two rows sharing bin(3) (the bin must drop to 1, not vanish)
-    merge_versioned(
+    merge_manifest(
         spark,
         str(src),
         _rows(spark, [("f", "open", 9000.0), ("c", "open", 4.0)]),
         key="id",
     )
-    delete_versioned(
+    delete_manifest(
         spark, str(src), spark.createDataFrame([("a",)], "id string"), key="id"
     )
     assert view.refresh(spark)["action"] == "delta"
@@ -545,7 +542,7 @@ def test_aggview_hdr_quantile_maintenance_exactly_retractable(spark, tmp_path):
 
     # drain the 'done' group entirely: its bins converge to empty and the
     # group tombstones out of read_hdr
-    delete_versioned(
+    delete_manifest(
         spark, str(src), spark.createDataFrame([("d",)], "id string"), key="id"
     )
     view.refresh(spark)
@@ -559,7 +556,7 @@ def test_aggview_hdr_quantile_maintenance_exactly_retractable(spark, tmp_path):
             view.read_hdr(spark, "amount"), ["status"], [0.5, 0.9]
         ).collect()
     }
-    snap = VersionedParquetTable(str(src)).read(spark)
+    snap = ManifestTable(str(src)).read(spark)
     batch = {
         r["status"]: (r["n"], r["q_50"], r["q_90"])
         for r in hdr_quantiles(
@@ -610,7 +607,7 @@ def test_aggview_rollup_serving_from_maintained_state(spark, tmp_path):
         )
 
     src = tmp_path / "src"
-    merge_versioned(spark, str(src), mk(rows), key="id")
+    merge_manifest(spark, str(src), mk(rows), key="id")
     view = IncrementalAggView(
         source_root=str(src),
         view_root=str(tmp_path / "view"),
@@ -624,18 +621,18 @@ def test_aggview_rollup_serving_from_maintained_state(spark, tmp_path):
     )
     view.refresh(spark)
     # wave: insert, cross-group update, delete (fine grain maintained)
-    merge_versioned(
+    merge_manifest(
         spark,
         str(src),
         mk([("g", "open", "eu", 9000.0), ("c", "done", "us", 4.0)]),
         key="id",
     )
-    delete_versioned(
+    delete_manifest(
         spark, str(src), spark.createDataFrame([("b",)], "id string"), key="id"
     )
     assert view.refresh(spark)["action"] == "delta"
 
-    snap = VersionedParquetTable(str(src)).read(spark)
+    snap = ManifestTable(str(src)).read(spark)
 
     def scratch(grain):
         gb = snap.groupBy(*grain) if grain else snap.groupBy()
@@ -733,7 +730,7 @@ def test_aggview_distinct_overflow_and_delete_recompute(spark, tmp_path):
         }["g"]
 
     src = tmp_path / "src"
-    merge_versioned(
+    merge_manifest(
         spark,
         str(src),
         _rows(spark, [(f"id{i}", "g", float(i)) for i in range(6)]),
@@ -756,7 +753,7 @@ def test_aggview_distinct_overflow_and_delete_recompute(spark, tmp_path):
     assert est() == est_of(range(6))
 
     # 2. delete three docs -> 3 live values -> recompute -> exact 3.0
-    delete_versioned(
+    delete_manifest(
         spark,
         str(src),
         spark.createDataFrame([("id3",), ("id4",), ("id5",)], "id string"),
@@ -766,7 +763,7 @@ def test_aggview_distinct_overflow_and_delete_recompute(spark, tmp_path):
     assert est() == 3.0
 
     # 3a. exact-regime delete: plain ledger decrement, still exact
-    delete_versioned(
+    delete_manifest(
         spark, str(src), spark.createDataFrame([("id2",)], "id string"),
         key="id",
     )
@@ -776,7 +773,7 @@ def test_aggview_distinct_overflow_and_delete_recompute(spark, tmp_path):
     # 3b. insert burst re-overflows; registers cover values since the
     # last recompute ({0,1,2} from step 2, minus nothing — the exact
     # delete of 2.0 never touches registers — plus the new burst)
-    merge_versioned(
+    merge_manifest(
         spark,
         str(src),
         _rows(spark, [(f"new{i}", "g", float(100 + i)) for i in range(5)]),

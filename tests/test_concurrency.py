@@ -1,12 +1,12 @@
-"""Cross-process and cross-thread contention on the versioned commit
+"""Cross-process and cross-thread contention on the table-commit
 protocol (VERDICT r4 asks #6 and #8):
 
-- two separate driver JVMs merging into the same table (POSIX rename
-  atomicity across processes — the actual production claim);
-- the manifest mode's put-if-absent claim raced by many OS processes;
-- a Structured Streaming foreachBatch MERGE racing a batch
-  merge_versioned on the same table, with the retry path exercised
-  end-to-end.
+- two separate driver JVMs merging into the same table (the
+  put-if-absent manifest claim across processes — the actual production
+  claim), read back through the view and through the manifest;
+- the put-if-absent claim primitive raced by many OS processes;
+- a Structured Streaming foreachBatch MERGE racing a batch MERGE on the
+  same table, with the retry path exercised end-to-end.
 """
 
 from __future__ import annotations
@@ -20,10 +20,7 @@ from pathlib import Path
 
 import pytest
 
-from door2door_etl_spark.io.versioned import (
-    VersionedParquetTable,
-    merge_versioned,
-)
+from door2door_etl_spark.io.manifest import ManifestTable, merge_manifest
 
 
 @pytest.mark.slow
@@ -47,6 +44,8 @@ def test_two_process_concurrent_merge_versioned(spark, tmp_path):
         out, err = p.communicate(timeout=300)
         assert p.returncode == 0, f"worker failed:\n{err.decode()[-2000:]}"
 
+    # The view (plain parquet read of the root symlink) shows every batch.
+    assert os.path.islink(root)
     rows = {r["k"]: r["v"] for r in spark.read.parquet(root).collect()}
     want = {
         wid * 1000 + i: f"w{wid}b{i}"
@@ -55,13 +54,8 @@ def test_two_process_concurrent_merge_versioned(spark, tmp_path):
     }
     assert rows == want
     # Version chain: 6 commits, contiguous 1..6, nothing skipped/orphaned.
-    table = VersionedParquetTable(root)
-    versions = sorted(
-        int(e.name.removeprefix("data-v"))
-        for e in table.versions_dir.iterdir()
-        if e.name.startswith("data-v")
-    )
-    assert versions == list(range(1, 2 * n_batches + 1))
+    table = ManifestTable(root)
+    assert table.versions() == list(range(1, 2 * n_batches + 1))
     assert table.current_version() == 2 * n_batches
 
 
@@ -104,7 +98,7 @@ def test_manifest_claim_race_across_processes(tmp_path):
 
 
 def test_streaming_merge_races_batch_merge(spark, tmp_path, monkeypatch):
-    """A streaming micro-batch MERGE and a batch merge_versioned contend
+    """A streaming micro-batch MERGE and a batch merge_manifest contend
     for the same table: the batch writer wins the claim mid-flight, the
     streaming merge retries against the new snapshot, and BOTH commits
     land (retry path exercised end-to-end through foreachBatch)."""
@@ -143,12 +137,12 @@ def test_streaming_merge_races_batch_merge(spark, tmp_path, monkeypatch):
     q0.awaitTermination(120)
     seeded = spark.read.parquet(target).count()
     assert seeded == 3
-    base_version = VersionedParquetTable(target).current_version()
+    base_version = ManifestTable(target).current_version()
 
-    original_claim = VersionedParquetTable.claim
+    original_claim = ManifestTable._claim
     state = {"raced": False, "lost_once": False}
 
-    def racing_claim(self, staging, version):
+    def racing_claim(self, version, *args, **kwargs):
         # Only interfere with the warehouse table's first claim after arm.
         if not state["raced"] and self.root == target:
             state["raced"] = True
@@ -156,16 +150,16 @@ def test_streaming_merge_races_batch_merge(spark, tmp_path, monkeypatch):
             # streaming merge is about to claim (source = current rows,
             # so the upsert is schema-identical and idempotent).
             competitor = spark.read.parquet(target)
-            merge_versioned(
+            merge_manifest(
                 spark, target, competitor, key="event_generated_id",
                 vacuum_keep=99,
             )
-            ok = original_claim(self, staging, version)
+            ok = original_claim(self, version, *args, **kwargs)
             state["lost_once"] = not ok
             return ok
-        return original_claim(self, staging, version)
+        return original_claim(self, version, *args, **kwargs)
 
-    monkeypatch.setattr(VersionedParquetTable, "claim", racing_claim)
+    monkeypatch.setattr(ManifestTable, "_claim", racing_claim)
 
     # New events arrive; the streaming MERGE must retry past the batch
     # writer's commit and still land its rows.
@@ -184,24 +178,22 @@ def test_streaming_merge_races_batch_merge(spark, tmp_path, monkeypatch):
     final = spark.read.parquet(target)
     assert final.count() == 5
     # ...and the version chain advanced past both writers with no gaps.
-    table = VersionedParquetTable(target)
+    table = ManifestTable(target)
     assert table.current_version() == base_version + 2
 
 
 @pytest.mark.slow
 def test_two_process_concurrent_merge_manifest(spark, tmp_path):
-    """The manifest protocol's cross-process claim: two independent Spark
-    drivers merge into the same MANIFEST table; all batches land, the
-    version chain is contiguous, no files leak."""
-    from door2door_etl_spark.io.manifest import ManifestTable
-
+    """The cross-process claim seen from the manifest side: two
+    independent Spark drivers merge into the same table; all batches
+    land through the manifest read, the version chain is contiguous, and
+    the metadata-only row count agrees with the data."""
     root = str(tmp_path / "tbl")
     n_batches = 3
     worker = Path(__file__).parent / "_concurrent_merge_worker.py"
     procs = [
         subprocess.Popen(
-            [sys.executable, str(worker), root, str(wid), str(n_batches),
-             "manifest"],
+            [sys.executable, str(worker), root, str(wid), str(n_batches)],
             stdout=subprocess.PIPE,
             stderr=subprocess.PIPE,
             cwd=str(tmp_path),
@@ -223,15 +215,7 @@ def test_two_process_concurrent_merge_manifest(spark, tmp_path):
     assert table.current_version() == 2 * n_batches
     # Every manifest claim landed exactly once: contiguous 1..6 among
     # retained versions (default auto-vacuum keeps the young ones).
-    from door2door_etl_spark.io.manifest import LocalFsOps, _parse_manifest_version
-
-    versions = sorted(
-        v for v in (
-            _parse_manifest_version(n)
-            for n in LocalFsOps().list_names(str(Path(root) / "_manifests"))
-        ) if v is not None
-    )
-    assert versions == list(range(1, 2 * n_batches + 1))
+    assert table.versions() == list(range(1, 2 * n_batches + 1))
     # Exact metadata row count agrees with the data.
     assert table.count_rows() == len(want)
 

@@ -122,7 +122,7 @@ def test_duplicate_rule_names_rejected(spark):
 
 
 def test_checked_merge_routes_and_commits(spark, tmp_path):
-    from door2door_etl_spark.io.versioned import VersionedParquetTable
+    from door2door_etl_spark.io.manifest import ManifestTable
 
     target = str(tmp_path / "target")
     quarantine = str(tmp_path / "quarantine")
@@ -136,7 +136,7 @@ def test_checked_merge_routes_and_commits(spark, tmp_path):
         batch_id="batch-1",
     )
     assert out["n_quarantined"] == 6
-    live = VersionedParquetTable(target).read(spark)
+    live = ManifestTable(target).read(spark)
     assert {r["id"] for r in live.collect()} == {"a"}
     qdf = spark.read.parquet(quarantine)
     got = {
@@ -157,7 +157,7 @@ def test_checked_merge_routes_and_commits(spark, tmp_path):
             spark, suite_fail, _df(spark), target_root=target,
             quarantine_root=str(tmp_path / "q2"), key="id", batch_id="batch-2",
         )
-    assert VersionedParquetTable(target).read(spark).count() == 1
+    assert ManifestTable(target).read(spark).count() == 1
 
 
 def test_rules_stay_codegen_friendly(spark):
@@ -229,7 +229,7 @@ def test_replay_quarantine_after_rule_relaxation(spark, tmp_path):
     now-passing rows into the target (idempotent MERGE), keeps the
     still-failing rows with refreshed tags, and a second replay is a
     no-op."""
-    from door2door_etl_spark.io.versioned import VersionedParquetTable
+    from door2door_etl_spark.io.manifest import ManifestTable
     from door2door_etl_spark.pipeline.expectations import replay_quarantine
 
     target = str(tmp_path / "target")
@@ -250,7 +250,7 @@ def test_replay_quarantine_after_rule_relaxation(spark, tmp_path):
     def target_ids():
         return sorted(
             r["id"]
-            for r in VersionedParquetTable(target).read(spark).collect()
+            for r in ManifestTable(target).read(spark).collect()
         )
 
     assert target_ids() == ["a"]
@@ -283,7 +283,7 @@ def test_cli_validate_then_replay_quarantine(spark, tmp_path, capsys):
     import json as _json
 
     from door2door_etl_spark.__main__ import main
-    from door2door_etl_spark.io.versioned import VersionedParquetTable
+    from door2door_etl_spark.io.manifest import ManifestTable
 
     batch = spark.createDataFrame(
         [("a", 50), ("b", 7), ("c", 3)], "id string, qty int"
@@ -304,7 +304,7 @@ def test_cli_validate_then_replay_quarantine(spark, tmp_path, capsys):
     out = _json.loads(capsys.readouterr().out.strip().splitlines()[-1])
     assert out["n_quarantined"] == 2
 
-    target = VersionedParquetTable(str(lake / "warehouse" / "items"))
+    target = ManifestTable(str(lake / "warehouse" / "items"))
     assert sorted(r["id"] for r in target.read(spark).collect()) == ["a"]
 
     rules.write_text(_json.dumps(

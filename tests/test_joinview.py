@@ -8,10 +8,10 @@ import tempfile
 
 import pytest
 
-from door2door_etl_spark.io.versioned import (
-    VersionedParquetTable,
-    delete_versioned,
-    merge_versioned,
+from door2door_etl_spark.io.manifest import (
+    ManifestTable,
+    delete_manifest,
+    merge_manifest,
 )
 from door2door_etl_spark.pipeline.joinview import IncrementalJoinView
 from view_reference import full_recompute
@@ -64,11 +64,11 @@ def _assert_parity(spark, view):
 
 
 def test_joinview_seed_and_both_side_deltas(spark, roots):
-    merge_versioned(
+    merge_manifest(
         spark, roots["left"],
         _orders(spark, [(1, 10, 5.0), (2, 20, 7.0), (3, 30, 9.0)]), key="okey",
     )
-    merge_versioned(
+    merge_manifest(
         spark, roots["right"], _cust(spark, [(10, "A"), (20, "B")]), key="ckey"
     )
     view = _mk_view(roots)
@@ -79,11 +79,11 @@ def test_joinview_seed_and_both_side_deltas(spark, roots):
     # left wave: insert 4->20, update 1's total, re-point 2 to ckey 10,
     # delete... (delete comes in a later test); right wave: update B,
     # late-arriving dim 30 back-fills order 3
-    merge_versioned(
+    merge_manifest(
         spark, roots["left"],
         _orders(spark, [(4, 20, 1.0), (1, 10, 6.0), (2, 10, 7.0)]), key="okey",
     )
-    merge_versioned(
+    merge_manifest(
         spark, roots["right"], _cust(spark, [(20, "B2"), (30, "C")]), key="ckey"
     )
     res = view.refresh(spark)
@@ -95,18 +95,18 @@ def test_joinview_seed_and_both_side_deltas(spark, roots):
 
 
 def test_joinview_deletes_both_sides(spark, roots):
-    merge_versioned(
+    merge_manifest(
         spark, roots["left"],
         _orders(spark, [(1, 10, 5.0), (2, 20, 7.0), (3, 20, 9.0)]), key="okey",
     )
-    merge_versioned(
+    merge_manifest(
         spark, roots["right"], _cust(spark, [(10, "A"), (20, "B")]), key="ckey"
     )
     view = _mk_view(roots)
     view.refresh(spark)
     # delete fact 1; delete dim 20 (orphans facts 2 and 3 under inner)
-    delete_versioned(spark, roots["left"], _orders(spark, [(1, 10, 5.0)]).select("okey"), key="okey")
-    delete_versioned(spark, roots["right"], _cust(spark, [(20, "B")]).select("ckey"), key="ckey")
+    delete_manifest(spark, roots["left"], _orders(spark, [(1, 10, 5.0)]).select("okey"), key="okey")
+    delete_manifest(spark, roots["right"], _cust(spark, [(20, "B")]).select("ckey"), key="ckey")
     assert view.refresh(spark)["action"] == "delta"
     assert _assert_parity(spark, view) == []
     # noop when nothing changed
@@ -114,16 +114,16 @@ def test_joinview_deletes_both_sides(spark, roots):
 
 
 def test_joinview_left_outer_keeps_unmatched(spark, roots):
-    merge_versioned(
+    merge_manifest(
         spark, roots["left"], _orders(spark, [(1, 10, 5.0), (2, 99, 7.0)]), key="okey"
     )
-    merge_versioned(spark, roots["right"], _cust(spark, [(10, "A")]), key="ckey")
+    merge_manifest(spark, roots["right"], _cust(spark, [(10, "A")]), key="ckey")
     view = _mk_view(roots, how="left")
     view.refresh(spark)
     got = _assert_parity(spark, view)
     assert ("2", "99", 7.0, None) in got
     # dim 99 arrives late: the null row upgrades in place
-    merge_versioned(spark, roots["right"], _cust(spark, [(99, "Z")]), key="ckey")
+    merge_manifest(spark, roots["right"], _cust(spark, [(99, "Z")]), key="ckey")
     view.refresh(spark)
     got = _assert_parity(spark, view)
     assert ("2", "99", 7.0, "Z") in got
@@ -131,18 +131,18 @@ def test_joinview_left_outer_keeps_unmatched(spark, roots):
 
 
 def test_joinview_crash_between_view_and_cursor_commits(spark, roots):
-    merge_versioned(spark, roots["left"], _orders(spark, [(1, 10, 5.0)]), key="okey")
-    merge_versioned(spark, roots["right"], _cust(spark, [(10, "A")]), key="ckey")
+    merge_manifest(spark, roots["left"], _orders(spark, [(1, 10, 5.0)]), key="okey")
+    merge_manifest(spark, roots["right"], _cust(spark, [(10, "A")]), key="ckey")
     view = _mk_view(roots)
     view.refresh(spark)
-    merge_versioned(spark, roots["left"], _orders(spark, [(2, 10, 8.0)]), key="okey")
+    merge_manifest(spark, roots["left"], _orders(spark, [(2, 10, 8.0)]), key="okey")
     view.refresh(spark)
     before = _assert_parity(spark, view)
 
     # simulate "view committed, cursor commit lost": rewind the left cursor
     lcur, rcur = view._cursors()
-    lv = VersionedParquetTable(roots["left"]).current_version()
-    rv = VersionedParquetTable(roots["right"]).current_version()
+    lv = ManifestTable(roots["left"]).current_version()
+    rv = ManifestTable(roots["right"]).current_version()
     lcur.commit(lv - 1)  # pretend the delta window's cursor commit was lost
     res = view.refresh(spark)
     # the landed-ledger frontier must advance the cursor WITHOUT re-applying
@@ -152,11 +152,11 @@ def test_joinview_crash_between_view_and_cursor_commits(spark, roots):
 
 
 def test_joinview_exact_window_redelivery_is_skipped(spark, roots):
-    merge_versioned(spark, roots["left"], _orders(spark, [(1, 10, 5.0)]), key="okey")
-    merge_versioned(spark, roots["right"], _cust(spark, [(10, "A")]), key="ckey")
+    merge_manifest(spark, roots["left"], _orders(spark, [(1, 10, 5.0)]), key="okey")
+    merge_manifest(spark, roots["right"], _cust(spark, [(10, "A")]), key="ckey")
     view = _mk_view(roots)
     view.refresh(spark)
-    merge_versioned(spark, roots["left"], _orders(spark, [(2, 10, 8.0)]), key="okey")
+    merge_manifest(spark, roots["left"], _orders(spark, [(2, 10, 8.0)]), key="okey")
     view.refresh(spark)
     before = _assert_parity(spark, view)
     # re-run with nothing new: must be a pure noop, state unchanged
@@ -172,9 +172,9 @@ def test_stream_joinview_ingest_follows_both_sides(spark, roots, tmp_path):
 
     from door2door_etl_spark.streaming.pipeline import stream_joinview_ingest
 
-    merge_versioned(spark, roots["right"], _cust(spark, [(10, "A")]), key="ckey")
+    merge_manifest(spark, roots["right"], _cust(spark, [(10, "A")]), key="ckey")
     # seed the left source so the view can seed before streaming
-    merge_versioned(spark, roots["left"], _orders(spark, [(1, 10, 5.0)]), key="okey")
+    merge_manifest(spark, roots["left"], _orders(spark, [(1, 10, 5.0)]), key="okey")
     view = _mk_view(roots)
     view.refresh(spark)
 
@@ -189,7 +189,7 @@ def test_stream_joinview_ingest_follows_both_sides(spark, roots, tmp_path):
     assert ("2", "10", 8.0, "A") in got
 
     # dimension hot update + another fact file: next run reflects both
-    merge_versioned(spark, roots["right"], _cust(spark, [(10, "A2")]), key="ckey")
+    merge_manifest(spark, roots["right"], _cust(spark, [(10, "A2")]), key="ckey")
     (src / "f1.json").write_text(json.dumps({"okey": 3, "ckey": 10, "total": 9.0}))
     stream2 = spark.readStream.schema("okey int, ckey int, total double").json(str(src))
     q2 = stream_joinview_ingest(spark, stream2, view, ckpt)
@@ -213,11 +213,11 @@ def test_cli_refresh_views_agg_and_join(spark, roots, tmp_path, capsys):
 
     from door2door_etl_spark.__main__ import main
 
-    merge_versioned(
+    merge_manifest(
         spark, roots["left"],
         _orders(spark, [(1, 10, 5.0), (2, 20, 7.0)]), key="okey",
     )
-    merge_versioned(
+    merge_manifest(
         spark, roots["right"], _cust(spark, [(10, "A"), (20, "B")]), key="ckey"
     )
     decl = tmp_path / "views.json"
@@ -235,7 +235,7 @@ def test_cli_refresh_views_agg_and_join(spark, roots, tmp_path, capsys):
     out = _json.loads(capsys.readouterr().out.strip().splitlines()[-1])
     assert [v["action"] for v in out["views"]] == ["seed", "seed"]
 
-    merge_versioned(spark, roots["left"], _orders(spark, [(3, 10, 2.0)]), key="okey")
+    merge_manifest(spark, roots["left"], _orders(spark, [(3, 10, 2.0)]), key="okey")
     rc = main(["-s", "refresh-views", "--views", str(decl),
                "--lake-root", str(tmp_path)])
     assert rc == 0
@@ -265,7 +265,6 @@ def test_joinview_manifest_source_layout(spark, roots, tmp_path):
     """Both sources on the object-store manifest layout: the view's
     version/changes/read dispatch resolves through the manifest protocol
     (the aggview dual-layout discipline), deltas included."""
-    from door2door_etl_spark.io.manifest import delete_manifest, merge_manifest
 
     left = str(tmp_path / "m_orders")
     right = str(tmp_path / "m_cust")
@@ -296,11 +295,11 @@ def test_joinview_seed_crash_before_cursor_commit_no_ghosts(spark, roots):
     — recovery must roll the cursors to the landed ledger frontier and
     take the DELTA path (which retracts), never re-seed (an upsert-only
     merge that cannot retract)."""
-    merge_versioned(
+    merge_manifest(
         spark, roots["left"],
         _orders(spark, [(1, 10, 5.0), (2, 20, 7.0)]), key="okey",
     )
-    merge_versioned(
+    merge_manifest(
         spark, roots["right"], _cust(spark, [(10, "A"), (20, "B")]), key="ckey"
     )
     view = _mk_view(roots)
@@ -310,11 +309,11 @@ def test_joinview_seed_crash_before_cursor_commit_no_ghosts(spark, roots):
 
     # both sides move before the next refresh: fact 1 deleted, dim 20
     # deleted (orphans fact 2 under inner join)
-    delete_versioned(
+    delete_manifest(
         spark, roots["left"],
         _orders(spark, [(1, 10, 5.0)]).select("okey"), key="okey",
     )
-    delete_versioned(
+    delete_manifest(
         spark, roots["right"],
         _cust(spark, [(20, "B")]).select("ckey"), key="ckey",
     )
@@ -322,8 +321,8 @@ def test_joinview_seed_crash_before_cursor_commit_no_ghosts(spark, roots):
     assert res["action"] == "delta", res
     assert _assert_parity(spark, view) == []
 
-    lv = VersionedParquetTable(roots["left"]).current_version()
-    rv = VersionedParquetTable(roots["right"]).current_version()
+    lv = ManifestTable(roots["left"]).current_version()
+    rv = ManifestTable(roots["right"]).current_version()
     assert (lcur.last_committed(), rcur.last_committed()) == (lv, rv)
 
 
@@ -331,8 +330,8 @@ def test_joinview_seed_crash_both_cursors_lost_noop_recovery(spark, roots):
     """Same window with BOTH cursor commits lost and no source movement:
     recovery lands on the ledger frontier and reports a clean noop with
     the view untouched."""
-    merge_versioned(spark, roots["left"], _orders(spark, [(1, 10, 5.0)]), key="okey")
-    merge_versioned(spark, roots["right"], _cust(spark, [(10, "A")]), key="ckey")
+    merge_manifest(spark, roots["left"], _orders(spark, [(1, 10, 5.0)]), key="okey")
+    merge_manifest(spark, roots["right"], _cust(spark, [(10, "A")]), key="ckey")
     view = _mk_view(roots)
     view.refresh(spark)
     before = _assert_parity(spark, view)

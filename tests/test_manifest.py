@@ -1,23 +1,24 @@
-"""Object-store manifest mode (io/manifest.py): the versioned commit
-protocol re-expressed in object-store primitives — manifest-create as the
-claim (put-if-absent), file re-listing instead of hardlinks, and
-manifest-only reader resolution with no symlinks anywhere.
-
-Mirrors the guarantees tests/test_versioned.py pins for the POSIX layout;
-reference analog is the same server-side warehouse transaction
-(reference src/helper/postgres.py:157-189).
+"""The table-commit protocol (io/manifest.py) in object-store terms:
+manifest-create as the claim (put-if-absent), file re-listing instead of
+copies, manifest-only reader resolution that needs no symlink or hard
+link (the local view is a derived publication), DVs, stats, and the S3
+backend.  tests/test_versioned.py pins the snapshot, crash-window and
+retention guarantees; reference analog is the server-side warehouse
+transaction (reference src/helper/postgres.py:157-189).
 """
 
 from __future__ import annotations
 
 import json
 import os
+import shutil
 from pathlib import Path
 
 import pytest
 from pyspark.sql import functions as F
 
 from door2door_etl_spark.io.manifest import (
+    ConcurrentWriteError,
     LocalFsOps,
     ManifestTable,
     apply_changes_manifest,
@@ -25,7 +26,6 @@ from door2door_etl_spark.io.manifest import (
     merge_manifest,
     table_changes_manifest,
 )
-from door2door_etl_spark.io.versioned import ConcurrentWriteError
 
 
 def _mk(spark, rows, schema="k int, v string, part string"):
@@ -39,29 +39,25 @@ def _as_dict(spark, root):
     }
 
 
-def _no_links(root):
-    """Manifest mode must work where symlinks/hardlinks don't exist."""
-    for dirpath, dirs, files in os.walk(root):
-        for name in dirs + files:
-            p = os.path.join(dirpath, name)
-            assert not os.path.islink(p), f"symlink found: {p}"
-            if os.path.isfile(p):
-                assert os.stat(p).st_nlink == 1, f"hardlink found: {p}"
-
-
 def test_merge_creates_manifest_layout_resolves_without_links(spark, tmp_path):
     root = str(tmp_path / "tbl")
     merge_manifest(spark, root, _mk(spark, [(1, "a", "p1")]), key="k")
     table = ManifestTable(root)
     assert table.current_version() == 1
     assert _as_dict(spark, root) == {1: ("a", "p1")}
-    # The object-store contract: resolution uses ONLY listing + manifest
-    # contents — no symlink or hardlink anywhere in the tree.
-    _no_links(root)
-    # And a pointer-unaware naive read fails LOUDLY instead of silently
-    # reading a mix of versions (underscore dirs are hidden from Spark).
-    with pytest.raises(Exception, match="UNABLE_TO_INFER_SCHEMA|Path does not exist"):
-        spark.read.parquet(root).collect()
+    # A manifest-unaware plain read sees the committed snapshot through
+    # the derived view (root symlink -> hard-linked version dir)...
+    assert {r["k"] for r in spark.read.parquet(root).collect()} == {1}
+    # ...but resolution itself needs ONLY listing + manifest contents (the
+    # object-store contract): with the view gone, the pinned read works.
+    os.unlink(root)
+    shutil.rmtree(os.path.join(table.state_dir, "data-v00000001"))
+    assert table.current_version() == 1
+    assert {r["k"] for r in table.read(spark, 1).collect()} == {1}
+    # The next current-version access rebuilds the view from the manifest.
+    assert _as_dict(spark, root) == {1: ("a", "p1")}
+    assert os.path.islink(root)
+    assert {r["k"] for r in spark.read.parquet(root).collect()} == {1}
 
 
 def test_upsert_semantics_and_idempotent_replay(spark, tmp_path):
@@ -143,7 +139,7 @@ def test_losing_the_claim_recomputes_against_winner(spark, tmp_path, monkeypatch
             state["raced"] = True
             # Competitor lands the same version number first.
             comp = _mk(spark, [(1, "a", "p1"), (5, "competitor", "p2")])
-            staging = os.path.join(self.root, ".staging.competitor")
+            staging = os.path.join(self.state_dir, ".staging.competitor")
             comp_rels = self._stage_and_place(
                 comp.write.mode("overwrite"), staging
             )
@@ -178,9 +174,10 @@ def test_crash_between_claim_and_publish_resolves_forward(spark, tmp_path):
     merge_manifest(spark, root, _mk(spark, [(1, "a", "p1")]), key="k")
     merge_manifest(spark, root, _mk(spark, [(2, "b", "p1")]), key="k")
     # Simulate a crash that left the cache at v1 (or absent entirely).
-    LocalFsOps().put_bytes(os.path.join(root, "_current"), b"data-v00000001")
+    state = ManifestTable(root).state_dir
+    LocalFsOps().put_bytes(os.path.join(state, "_current"), b"data-v00000001")
     assert ManifestTable(root).current_version() == 2
-    os.unlink(os.path.join(root, "_current"))
+    os.unlink(os.path.join(state, "_current"))
     assert ManifestTable(root).current_version() == 2
     assert _as_dict(spark, root) == {1: ("a", "p1"), 2: ("b", "p1")}
 
@@ -311,10 +308,10 @@ def test_manifest_claim_is_put_if_absent(tmp_path):
 
 
 def test_streaming_upsert_onto_manifest_table(spark, tmp_path):
-    """The streaming foreachBatch MERGE lands on an object-store manifest
-    table through ManifestMergeSink — same idempotent-replay contract as
-    the POSIX-versioned sink, no symlinks anywhere."""
-    from door2door_etl_spark.io.writers import ManifestMergeSink
+    """The streaming foreachBatch MERGE lands on a manifest table through
+    an injected ParquetMergeSink — idempotent replay, and the view agrees
+    with the manifest read."""
+    from door2door_etl_spark.io.writers import ParquetMergeSink
     from door2door_etl_spark.schemas.registry import builtin_door2door_schemas
     from door2door_etl_spark.streaming import (
         stream_events,
@@ -340,7 +337,7 @@ def test_streaming_upsert_onto_manifest_table(spark, tmp_path):
     schema = builtin_door2door_schemas()["vehicle"]
     warehouse = tmp_path / "warehouse"
     target = str(warehouse / "vehicle_location")
-    sink = ManifestMergeSink(spark, target)
+    sink = ParquetMergeSink(spark, target)
 
     q = stream_upsert_to_warehouse(
         spark, stream_events(spark, str(src)), schema, str(warehouse),
@@ -349,7 +346,7 @@ def test_streaming_upsert_onto_manifest_table(spark, tmp_path):
     q.awaitTermination(120)
     table = ManifestTable(target)
     assert table.read(spark).count() == 3
-    _no_links(target)
+    assert spark.read.parquet(target).count() == 3
 
     # Fresh-checkpoint replay of the same data converges, not duplicates.
     q2 = stream_upsert_to_warehouse(
@@ -358,22 +355,6 @@ def test_streaming_upsert_onto_manifest_table(spark, tmp_path):
     )
     q2.awaitTermination(120)
     assert table.read(spark).count() == 3
-
-
-def test_cross_mode_guards(spark, tmp_path):
-    """A table committed in one layout cannot be accidentally merged
-    through the other: both entry points refuse loudly."""
-    from door2door_etl_spark.io.versioned import merge_versioned
-
-    man = str(tmp_path / "man_tbl")
-    merge_manifest(spark, man, _mk(spark, [(1, "a", "p1")]), key="k")
-    with pytest.raises(ValueError, match="MANIFEST table"):
-        merge_versioned(spark, man, _mk(spark, [(2, "b", "p1")]), key="k")
-
-    posix = str(tmp_path / "posix_tbl")
-    merge_versioned(spark, posix, _mk(spark, [(1, "a", "p1")]), key="k")
-    with pytest.raises(ValueError, match="POSIX-versioned"):
-        merge_manifest(spark, posix, _mk(spark, [(2, "b", "p1")]), key="k")
 
 
 def test_compact_manifest_rewrites_filesets(spark, tmp_path):
@@ -426,14 +407,18 @@ def test_cli_maintenance_detects_manifest_tables(spark, tmp_path, capsys):
 
 
 def test_posix_and_manifest_modes_agree_on_batch_sequence(spark, tmp_path):
-    """Cross-mode invariant: the same MERGE/delete sequence through the
-    POSIX-versioned and object-store-manifest protocols yields identical
-    table contents at every step (they implement ONE semantics over two
-    storage layouts)."""
-    from door2door_etl_spark.io.versioned import delete_versioned, merge_versioned
+    """View invariant: through a MERGE/delete sequence (update, insert,
+    partition move, replay, delete) the POSIX view (plain
+    ``spark.read.parquet`` of the root) and the manifest read return
+    identical contents at every step."""
+    root = str(tmp_path / "tbl")
 
-    posix = str(tmp_path / "posix")
-    man = str(tmp_path / "man")
+    def view():
+        return {
+            r["k"]: (r["v"], r["part"])
+            for r in spark.read.parquet(root).collect()
+        }
+
     batches = [
         [(1, "a", "p1"), (2, "b", "p2"), (3, "c", "p2")],   # initial load
         [(2, "B", "p2"), (4, "d", "p3")],                    # update + insert
@@ -441,24 +426,13 @@ def test_posix_and_manifest_modes_agree_on_batch_sequence(spark, tmp_path):
         [(2, "B", "p2")],                                    # idempotent replay
     ]
     for rows in batches:
-        src = _mk(spark, rows)
-        merge_versioned(spark, posix, src, key="k", partition_col="part",
-                        vacuum_keep=99)
-        merge_manifest(spark, man, src, key="k", partition_col="part",
-                       vacuum_keep=99)
-        got_posix = {
-            r["k"]: (r["v"], r["part"])
-            for r in spark.read.parquet(posix).collect()
-        }
-        assert got_posix == _as_dict(spark, man), f"diverged after {rows}"
+        merge_manifest(spark, root, _mk(spark, rows), key="k",
+                       partition_col="part", vacuum_keep=99)
+        assert view() == _as_dict(spark, root), f"diverged after {rows}"
 
-    dooms = spark.createDataFrame([(2,), (4,)], "k int")
-    delete_versioned(spark, posix, dooms, key="k")
-    delete_manifest(spark, man, dooms, key="k")
-    got_posix = {
-        r["k"]: (r["v"], r["part"]) for r in spark.read.parquet(posix).collect()
-    }
-    assert got_posix == _as_dict(spark, man) == {
+    delete_manifest(spark, root, spark.createDataFrame([(2,), (4,)], "k int"),
+                    key="k")
+    assert view() == _as_dict(spark, root) == {
         1: ("a", "p1"), 3: ("c2", "p1"),
     }
 
@@ -1089,7 +1063,7 @@ def test_file_gc_never_sweeps_young_unclaimed_staging_output(spark, tmp_path):
     merge_manifest(spark, root, _mk(spark, [(1, "a", "p0")]), key="k")
     table = ManifestTable(root)
     # simulate a concurrent writer mid-commit: files placed, claim pending
-    staging = os.path.join(root, ".staging.inflight")
+    staging = os.path.join(table.state_dir, ".staging.inflight")
     placed = table._stage_and_place(
         _mk(spark, [(9, "pending", "p0")]).write.mode("overwrite"), staging
     )
@@ -1588,7 +1562,9 @@ def test_convert_to_manifest_adopts_parquet_in_place(spark, tmp_path):
 
     # zero-copy: every adopted file shares its inode with the source
     rel0 = man["files"][0]
-    assert os.stat(os.path.join(root, "_files", rel0)).st_nlink == 2
+    assert os.path.samefile(
+        os.path.join(src, rel0), os.path.join(table.files_dir, rel0)
+    )
     # stats landed and prune
     assert all(s["cols"]["k"]["min"] is not None for s in man["stats"].values())
     assert len(table._prune(man, {"k": (0, 0)})) <= len(man["files"])

@@ -1157,9 +1157,18 @@ def test_incremental_lsh_dedup_cache_lifetime_bounded(spark):
     corpus = spark.createDataFrame(
         [Row(doc_id=i, text=f"corpus doc {i} aaa bbb ccc ddd") for i in range(20)]
     )
-    gc.collect()
-    time.sleep(0.5)  # let the cleaner drain other tests' leftovers
-    before = spark.sparkContext._jsc.getPersistentRDDs().size()
+    sc = spark.sparkContext
+    # Count only RDDs created by the five calls below: every RDD id from
+    # here on is above this watermark, so other tests' leftovers (which
+    # the shared session's cleaner drains at its own pace) never count.
+    watermark = sc._jsc.sc().newRddId()
+
+    def persisted_since() -> int:
+        return sum(
+            1 for rdd_id in sc._jsc.getPersistentRDDs().keySet()
+            if rdd_id > watermark
+        )
+
     for i in range(5):
         batch = spark.createDataFrame(
             [Row(doc_id=100 + 10 * i + j,
@@ -1168,18 +1177,19 @@ def test_incremental_lsh_dedup_cache_lifetime_bounded(spark):
         )
         incremental_lsh_dedup(batch, corpus).count()
         del batch
-    gc.collect()  # drop py4j refs so the context cleaner can run
-    # The cleaner is async and this session is shared with ~400 tests, so
-    # poll generously and allow +2 slack: a real per-batch leak would add
-    # ~5+ entries (one per batch), which the bound still catches.
+    # The context cleaner is async and acts on JVM weak references: drop
+    # the py4j refs (Python gc), then run a JVM gc so the cleaner sees
+    # them cleared.  A real per-batch leak would leave ~5+ entries (one
+    # per batch), which the +2 bound still catches.
     for _ in range(40):
-        if spark.sparkContext._jsc.getPersistentRDDs().size() <= before + 2:
+        gc.collect()
+        sc._jvm.System.gc()
+        if persisted_since() <= 2:
             break
         time.sleep(0.5)
-        gc.collect()
-    n_cached = spark.sparkContext._jsc.getPersistentRDDs().size()
-    assert n_cached <= before + 2, (
-        f"{n_cached} persistent RDDs after 5 batches (started at {before})"
+    n_cached = persisted_since()
+    assert n_cached <= 2, (
+        f"{n_cached} persistent RDDs created by 5 batches are still cached"
     )
 
 

@@ -216,9 +216,10 @@ def test_multi_hour_backfill_watermark_driven(spark, tmp_path):
 
 
 def test_compact_parquet_table(spark, tmp_path):
-    """Compaction collapses an accreted many-file table to few files with
-    identical contents."""
-    from door2door_etl_spark.io.writers import compact_parquet_table
+    """Compaction collapses an accreted many-file plain table to few files
+    with identical contents: the first commit adopts the directory in
+    place, and plain readers keep reading the root."""
+    from door2door_etl_spark.io.manifest import compact_manifest
 
     path = str(tmp_path / "accreted")
     for i in range(8):  # 8 append batches -> >= 8 files
@@ -230,7 +231,7 @@ def test_compact_parquet_table(spark, tmp_path):
     assert before_files >= 8
     before_sum = spark.read.parquet(path).agg({"id": "sum"}).collect()[0][0]
 
-    n_after = compact_parquet_table(spark, path, target_file_mb=128)
+    n_after = compact_manifest(spark, path, target_file_mb=128)
     assert n_after < before_files
     after = spark.read.parquet(path)
     assert after.count() == 800
@@ -507,7 +508,7 @@ def test_cli_curate_lands_versioned_survivors(spark, tmp_path, capsys):
     from pyspark.sql import Row
 
     from door2door_etl_spark.__main__ import main
-    from door2door_etl_spark.io.versioned import VersionedParquetTable
+    from door2door_etl_spark.io.manifest import ManifestTable
 
     good = (
         "the quick brown fox jumps over the lazy dog and then walks to the "
@@ -536,7 +537,7 @@ def test_cli_curate_lands_versioned_survivors(spark, tmp_path, capsys):
     assert summary["funnel"]["quality_rules"] == [3, 2]
     assert summary["funnel"]["exact_dedup"] == [2, 1]
 
-    table = VersionedParquetTable(str(lake / "curated" / "documents"))
+    table = ManifestTable(str(lake / "curated" / "documents"))
     kept = table.read(spark).collect()
     assert [r["doc_id"] for r in kept] == [1]
     v1 = table.current_version()

@@ -9,6 +9,7 @@ slowdown at scale that a 60k-row correctness test would never catch.
 """
 
 import ast
+import re
 from pathlib import Path
 
 import pytest
@@ -1144,6 +1145,34 @@ def test_create_dataframe_only_in_local_frame():
                 and node.func.attr == "createDataFrame"
             ):
                 offenders.append(f"{path.relative_to(pkg)}:{node.lineno}")
+    assert offenders == [], offenders
+
+
+def test_one_table_commit_layout():
+    """One table-commit protocol: ``io/versioned.py`` is gone, and no
+    engine module but ``io/manifest.py`` spells a layout name or defines
+    a layout predicate — so a second commit format, or a caller that
+    branches on the layout, cannot come back unnoticed."""
+    pkg = Path(__file__).resolve().parent.parent / "door2door_etl_spark"
+    assert not (pkg / "io" / "versioned.py").exists()
+    layout = re.compile(r"_manifests|(?<![A-Za-z0-9_])_files\b|__versions|data-v")
+    predicate = re.compile(r"_?is_(manifest|versioned|posix)")
+    offenders = []
+    for path in sorted(pkg.rglob("*.py")):
+        if path == pkg / "io" / "manifest.py":
+            continue
+        for node in ast.walk(ast.parse(path.read_text(), str(path))):
+            where = f"{path.relative_to(pkg)}:{getattr(node, 'lineno', '?')}"
+            if (
+                isinstance(node, ast.Constant)
+                and isinstance(node.value, str)
+                and layout.search(node.value)
+            ):
+                offenders.append(f"{where} layout name")
+            elif isinstance(
+                node, (ast.FunctionDef, ast.AsyncFunctionDef)
+            ) and predicate.fullmatch(node.name):
+                offenders.append(f"{where} layout predicate {node.name}")
     assert offenders == [], offenders
 
 

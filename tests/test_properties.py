@@ -226,18 +226,18 @@ def test_merge_upsert_preserves_null_partition_rows(spark, tmp_path):
     neither 'touched' (no NULLs in the batch) nor silently dropped by a
     three-valued-logic isin(); and when the batch DOES carry NULLs, the
     NULL partition merges by key like any other."""
-    from door2door_etl_spark.io.writers import merge_upsert_parquet
+    from door2door_etl_spark.io.manifest import merge_manifest
 
     lake = str(tmp_path / "t")
     base = spark.createDataFrame(
         [("k1", "a", "p1"), ("k2", "b", None), ("k3", "c", "p2")],
         "k string, v string, part string",
     )
-    merge_upsert_parquet(spark, lake, base, key="k", partition_col="part")
+    merge_manifest(spark, lake, base, key="k", partition_col="part")
 
     # Batch touching only p1: the NULL-partition row k2 must survive.
     b1 = spark.createDataFrame([("k1", "a2", "p1")], "k string, v string, part string")
-    n = merge_upsert_parquet(spark, lake, b1, key="k", partition_col="part")
+    n = merge_manifest(spark, lake, b1, key="k", partition_col="part")
     got = {r["k"]: (r["v"], r["part"]) for r in spark.read.parquet(lake).collect()}
     assert n == 1
     assert got == {"k1": ("a2", "p1"), "k2": ("b", None), "k3": ("c", "p2")}
@@ -246,7 +246,7 @@ def test_merge_upsert_preserves_null_partition_rows(spark, tmp_path):
     b2 = spark.createDataFrame(
         [("k2", "b2", None), ("k4", "d", None)], "k string, v string, part string"
     )
-    merge_upsert_parquet(spark, lake, b2, key="k", partition_col="part")
+    merge_manifest(spark, lake, b2, key="k", partition_col="part")
     got = {r["k"]: (r["v"], r["part"]) for r in spark.read.parquet(lake).collect()}
     assert got == {
         "k1": ("a2", "p1"), "k2": ("b2", None), "k3": ("c", "p2"), "k4": ("d", None),
@@ -620,39 +620,33 @@ def test_kmv_sketch_merge_is_exact(spark):
 )
 @pytest.mark.slow
 def test_property_posix_and_manifest_modes_equivalent(spark, tmp_path_factory, batches):
-    """Randomized cross-mode invariant: ANY merge sequence (random keys,
-    updates, partition moves, intra-batch dup keys) through the POSIX and
-    manifest protocols yields identical final contents — and both equal
-    the naive sequential-upsert model."""
+    """Randomized view invariant: after ANY merge sequence (random keys,
+    updates, partition moves, intra-batch dup keys) the POSIX view
+    (plain ``spark.read.parquet`` of the root symlink) and the manifest
+    read return identical contents, and the key set equals the naive
+    sequential-upsert model's."""
     from door2door_etl_spark.io.manifest import ManifestTable, merge_manifest
-    from door2door_etl_spark.io.versioned import merge_versioned
 
-    tmp = tmp_path_factory.mktemp("modes")
-    posix = str(tmp / "posix")
-    man = str(tmp / "man")
+    root = str(tmp_path_factory.mktemp("modes") / "tbl")
     model: dict = {}
     for rows in batches:
         src = spark.createDataFrame(rows, "k int, v string, part string")
-        merge_versioned(spark, posix, src, key="k", partition_col="part",
-                        vacuum_keep=99)
-        merge_manifest(spark, man, src, key="k", partition_col="part",
+        merge_manifest(spark, root, src, key="k", partition_col="part",
                        vacuum_keep=99)
-        # dropDuplicates([k]) keeps an arbitrary row per key — mirror by
-        # applying whichever row the engine kept is not possible; instead
-        # dedup deterministically and assert both ENGINES agree with each
-        # other exactly, and with the model on the KEY SET.
+        # dropDuplicates([k]) keeps an arbitrary row per key, so the model
+        # is checked on the KEY SET; the two reads must agree exactly.
         for k, v, p in rows:
             model[k] = (v, p)
-    got_posix = {
+    got_view = {
         r["k"]: (r["v"], r["part"])
-        for r in spark.read.parquet(posix).collect()
+        for r in spark.read.parquet(root).collect()
     }
     got_man = {
         r["k"]: (r["v"], r["part"])
-        for r in ManifestTable(man).read(spark).collect()
+        for r in ManifestTable(root).read(spark).collect()
     }
-    assert got_posix == got_man          # the two protocols never diverge
-    assert got_posix.keys() == model.keys()  # key set matches the model
+    assert got_view == got_man          # the view never diverges
+    assert got_view.keys() == model.keys()  # key set matches the model
 
 
 @settings(max_examples=8, deadline=None, suppress_health_check=list(HealthCheck))
@@ -910,10 +904,10 @@ def test_aggview_hdr_invariant_random_waves(spark, tmp_path_factory, waves):
     """The strongest aggview invariant, fuzzed: after ANY sequence of
     insert/update/delete waves, the maintained HDR bin map equals the
     histogram of the live snapshot (bin counts retract exactly)."""
-    from door2door_etl_spark.io.versioned import (
-        VersionedParquetTable,
-        delete_versioned,
-        merge_versioned,
+    from door2door_etl_spark.io.manifest import (
+        ManifestTable,
+        delete_manifest,
+        merge_manifest,
     )
     from door2door_etl_spark.operators.sketches import hdr_histogram_table
     from door2door_etl_spark.pipeline.aggview import IncrementalAggView
@@ -938,7 +932,7 @@ def test_aggview_hdr_invariant_random_waves(spark, tmp_path_factory, waves):
         # within-wave duplicate keys: keep the LAST (merge batch contract)
         dedup = list({r[0]: r for r in ups}.values())
         if dedup:
-            merge_versioned(
+            merge_manifest(
                 spark,
                 src,
                 spark.createDataFrame(
@@ -948,7 +942,7 @@ def test_aggview_hdr_invariant_random_waves(spark, tmp_path_factory, waves):
             )
             seeded = True
         if dels and seeded:
-            delete_versioned(
+            delete_manifest(
                 spark,
                 src,
                 spark.createDataFrame([(x,) for x in dels], "id string"),
@@ -956,7 +950,7 @@ def test_aggview_hdr_invariant_random_waves(spark, tmp_path_factory, waves):
             )
         if seeded:
             view.refresh(spark)
-            snap = VersionedParquetTable(src).read(spark)
+            snap = ManifestTable(src).read(spark)
             got = {
                 (r["grp"], r["bin"]): r["cnt"]
                 for r in view.read_hdr(spark, "val").collect()

@@ -1125,7 +1125,7 @@ def test_stream_curate_matches_sequential_batch_admission(spark, tmp_path):
 
     from pyspark.sql import Row
 
-    from door2door_etl_spark.io.versioned import VersionedParquetTable
+    from door2door_etl_spark.io.manifest import ManifestTable
     from door2door_etl_spark.operators.dedup import ManifestLshBandIndex
     from door2door_etl_spark.operators.text import (
         gopher_quality_flags,
@@ -1186,7 +1186,7 @@ def test_stream_curate_matches_sequential_batch_admission(spark, tmp_path):
         q.awaitTermination()
         q.stop()
 
-    table = VersionedParquetTable(os.path.join(lake, "curated", "documents"))
+    table = ManifestTable(os.path.join(lake, "curated", "documents"))
 
     def curated_ids():
         return {r["doc_id"] for r in table.read(spark).collect()}
@@ -1452,7 +1452,7 @@ def test_stream_curate_neardup_recall_at_least_batch_banding(spark, tmp_path):
 
     from pyspark.sql import Row
 
-    from door2door_etl_spark.io.versioned import VersionedParquetTable
+    from door2door_etl_spark.io.manifest import ManifestTable
     from door2door_etl_spark.operators.dedup import (
         ManifestLshBandIndex,
         minhash_similarity_pairs,
@@ -1538,7 +1538,7 @@ def test_stream_curate_neardup_recall_at_least_batch_banding(spark, tmp_path):
 
     admitted = {
         r["doc_id"]
-        for r in VersionedParquetTable(
+        for r in ManifestTable(
             f"{lake}/curated/documents"
         ).read(spark).collect()
     }
@@ -1560,7 +1560,7 @@ def test_stream_validate_contract_enforcement_and_replay(spark, tmp_path):
     fresh-checkpoint replay of the same input leaves target and
     quarantine row counts unchanged (MERGE idempotence + per-batch
     overwrite)."""
-    from door2door_etl_spark.io.versioned import VersionedParquetTable
+    from door2door_etl_spark.io.manifest import ManifestTable
     from door2door_etl_spark.pipeline.expectations import (
         Expectation,
         ExpectationSuite,
@@ -1594,7 +1594,7 @@ def test_stream_validate_contract_enforcement_and_replay(spark, tmp_path):
         q.awaitTermination(120)
 
     run("ckpt1")
-    live = {r["id"] for r in VersionedParquetTable(str(target)).read(spark).collect()}
+    live = {r["id"] for r in ManifestTable(str(target)).read(spark).collect()}
     assert live == {"a"}
     qrows = sorted(
         (r["id"], r["qty"], tuple(sorted(r["_quarantined_rules"])))
@@ -1613,7 +1613,7 @@ def test_stream_validate_contract_enforcement_and_replay(spark, tmp_path):
 
     # fresh checkpoint, same input: effectively-once end state
     run("ckpt2")
-    assert VersionedParquetTable(str(target)).read(spark).count() == 1
+    assert ManifestTable(str(target)).read(spark).count() == 1
     assert spark.read.parquet(str(quarantine)).count() == 3
 
 
@@ -1747,11 +1747,11 @@ def test_stream_enrich_with_dim_hot_reload(spark, tmp_path):
     batches (the plan-time-snapshot staleness pitfall, avoided)."""
     import json
 
-    from door2door_etl_spark.io.versioned import merge_versioned
+    from door2door_etl_spark.io.manifest import merge_manifest
     from door2door_etl_spark.streaming.pipeline import stream_enrich_with_dim
 
     dim_root = str(tmp_path / "dim")
-    merge_versioned(
+    merge_manifest(
         spark,
         dim_root,
         spark.createDataFrame([(10, "A"), (20, "B")], "ckey int, seg string"),
@@ -1770,7 +1770,7 @@ def test_stream_enrich_with_dim_hot_reload(spark, tmp_path):
     assert rows == {1: "A"}
 
     # hot dimension update + a new fact: the next batch must see seg=A2
-    merge_versioned(
+    merge_manifest(
         spark, dim_root,
         spark.createDataFrame([(10, "A2")], "ckey int, seg string"), key="ckey",
     )
@@ -1791,21 +1791,18 @@ def test_stream_enrich_with_dim_through_epoch_pin(spark, tmp_path):
     import json
 
     from door2door_etl_spark.io.txn import LakeEpoch
-    from door2door_etl_spark.io.versioned import (
-        VersionedParquetTable,
-        merge_versioned,
-    )
+    from door2door_etl_spark.io.manifest import ManifestTable, merge_manifest
     from door2door_etl_spark.streaming.pipeline import stream_enrich_with_dim
 
     dim_root = str(tmp_path / "dim")
-    merge_versioned(
+    merge_manifest(
         spark, dim_root,
         spark.createDataFrame([(10, "A")], "ckey int, seg string"), key="ckey",
     )
     epoch = LakeEpoch(str(tmp_path / "epochs"))
-    epoch.publish({dim_root: VersionedParquetTable(dim_root).current_version()})
+    epoch.publish({dim_root: ManifestTable(dim_root).current_version()})
     # dim advances, epoch NOT yet flipped
-    merge_versioned(
+    merge_manifest(
         spark, dim_root,
         spark.createDataFrame([(10, "A2")], "ckey int, seg string"), key="ckey",
     )
@@ -1823,7 +1820,7 @@ def test_stream_enrich_with_dim_through_epoch_pin(spark, tmp_path):
     assert {r["seg"] for r in spark.read.parquet(out).collect()} == {"A"}
 
     # epoch flips -> the next batch sees the new version
-    epoch.publish({dim_root: VersionedParquetTable(dim_root).current_version()})
+    epoch.publish({dim_root: ManifestTable(dim_root).current_version()})
     (src / "f1.json").write_text(json.dumps({"fid": 2, "ckey": 10}))
     stream2 = spark.readStream.schema("fid long, ckey int").json(str(src))
     q2 = stream_enrich_with_dim(

@@ -402,8 +402,9 @@ def test_epoch_fsck_flags_dangling_pins(spark, tmp_path):
     ta = ManifestTable(str(a))
     pinned = epoch.pins()[str(a)]
     os.remove(os.path.join(ta.manifests_dir, f"data-v{pinned:08d}.json"))
-    # and drop table b entirely
-    shutil.rmtree(b)
+    # and drop table b entirely: its state and its view symlink
+    shutil.rmtree(ManifestTable(str(b)).state_dir)
+    os.unlink(b)
 
     issues = {f["table"]: f["issue"] for f in epoch.fsck()}
     assert "not retained" in issues[str(a)]

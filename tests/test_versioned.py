@@ -1,6 +1,9 @@
-"""Versioned-manifest commit protocol (io/versioned.py): snapshot isolation
-for readers, crash recovery at every step, optimistic concurrent writers,
-and the partition-scoped hardlink merge.
+"""Versioned tables through the one table-commit protocol (io/manifest.py):
+snapshot isolation for readers, crash recovery at every step (claim,
+view publication, legacy adoption), optimistic concurrent writers,
+partition-scoped merges, retention, and the POSIX view — the root
+symlink onto a hard-linked version dir — that keeps plain
+``spark.read.parquet(root)`` readers on the committed snapshot.
 
 Reference analog: the Postgres warehouse upsert is one server-side
 transaction (reference src/helper/postgres.py:157-189); these tests pin the
@@ -10,15 +13,24 @@ equivalent guarantees for the filesystem lake sink.
 from __future__ import annotations
 
 import os
+import time
 from pathlib import Path
 
 import pytest
 
-from door2door_etl_spark.io.versioned import (
+from door2door_etl_spark.io.manifest import (
+    ChangeFeedCursor,
     ConcurrentWriteError,
-    VersionedParquetTable,
-    merge_versioned,
+    LocalFsOps,
+    ManifestTable,
+    apply_changes_manifest,
+    compact_manifest,
+    delete_manifest,
+    delete_where_manifest,
+    merge_manifest,
     resolve_table_path,
+    restore_manifest,
+    table_changes_manifest,
 )
 
 
@@ -35,39 +47,62 @@ def _as_dict(spark, path):
     return {r["k"]: (r["v"], r["part"]) for r in spark.read.parquet(path).collect()}
 
 
+def _view(root, version):
+    """The view dir of ``version``: hard links to the snapshot's files."""
+    return Path(ManifestTable(root).state_dir) / f"data-v{version:08d}"
+
+
+def _views(root):
+    state = Path(ManifestTable(root).state_dir)
+    return sorted(e.name for e in state.iterdir() if e.name.startswith("data-v"))
+
+
+def _inodes(view_dir, part):
+    return sorted(f.stat().st_ino for f in (view_dir / f"part={part}").glob("*.parquet"))
+
+
+def _commit_rows(spark, root, version, rows):
+    """An external writer's full-snapshot commit of ``version``."""
+    table = ManifestTable(root)
+    df = _mk(spark, rows)
+    rels = table._stage_and_place(df.write.mode("overwrite"), table._staging_path())
+    assert table._claim(version, rels, df.schema, [])
+    table.publish(version)
+
+
 def test_merge_creates_versioned_layout_and_plain_reads_resolve(spark, tmp_path):
     root = str(tmp_path / "tbl")
-    merge_versioned(spark, root, _mk(spark, [(1, "a", "p1")]), key="k")
-    # Root is a symlink; the pointer file is the authoritative manifest.
+    merge_manifest(spark, root, _mk(spark, [(1, "a", "p1")]), key="k")
+    # Root is a symlink onto the view; the manifest is authoritative.
     assert Path(root).is_symlink()
-    table = VersionedParquetTable(root)
+    table = ManifestTable(root)
     assert table.current_version() == 1
     assert resolve_table_path(root).endswith("data-v00000001")
-    # Pointer-unaware readers (spark.read.parquet on the root) keep working.
+    # Manifest-unaware readers (spark.read.parquet on the root) keep working.
     assert _as_dict(spark, root) == {1: ("a", "p1")}
 
 
 def test_merge_upsert_semantics_and_idempotent_replay(spark, tmp_path):
     root = str(tmp_path / "tbl")
-    merge_versioned(spark, root, _mk(spark, [(1, "a", "p1"), (2, "b", "p1")]), key="k")
+    merge_manifest(spark, root, _mk(spark, [(1, "a", "p1"), (2, "b", "p1")]), key="k")
     batch = _mk(spark, [(2, "B", "p1"), (3, "c", "p2")])
-    assert merge_versioned(spark, root, batch, key="k") == 2
+    assert merge_manifest(spark, root, batch, key="k") == 2
     want = {1: ("a", "p1"), 2: ("B", "p1"), 3: ("c", "p2")}
     assert _as_dict(spark, root) == want
     # Replaying the identical batch changes nothing but the version number.
-    merge_versioned(spark, root, batch, key="k")
+    merge_manifest(spark, root, batch, key="k")
     assert _as_dict(spark, root) == want
-    assert VersionedParquetTable(root).current_version() == 3
+    assert ManifestTable(root).current_version() == 3
 
 
 def test_concurrent_reader_keeps_consistent_snapshot_during_merge(spark, tmp_path):
-    """A reader that resolved the pointer BEFORE a merge reads the old
+    """A reader that resolved the view BEFORE a merge reads the old
     snapshot, complete and unchanged, while and after the merge commits."""
     root = str(tmp_path / "tbl")
-    merge_versioned(spark, root, _mk(spark, [(1, "a", "p1"), (2, "b", "p2")]), key="k")
+    merge_manifest(spark, root, _mk(spark, [(1, "a", "p1"), (2, "b", "p2")]), key="k")
     reader_path = resolve_table_path(root)  # the in-flight reader's view
-    merge_versioned(spark, root, _mk(spark, [(2, "B", "p2")]), key="k")
-    # Old snapshot: still on disk (vacuum keeps current + previous), still
+    merge_manifest(spark, root, _mk(spark, [(2, "B", "p2")]), key="k")
+    # Old view: still on disk (vacuum keeps current + previous), still
     # the pre-merge content.
     assert _as_dict(spark, reader_path) == {1: ("a", "p1"), 2: ("b", "p2")}
     # New resolution sees the merged table.
@@ -75,29 +110,32 @@ def test_concurrent_reader_keeps_consistent_snapshot_during_merge(spark, tmp_pat
 
 
 def test_crash_between_claim_and_publish_rolls_forward(spark, tmp_path, monkeypatch):
-    """The claim rename is the commit point: a writer dying after the claim
-    but before the pointer/symlink publication has COMMITTED — the next
-    access rolls the caches forward to the claimed snapshot, and nothing
-    is lost or reverted."""
+    """The manifest claim is the commit point: a writer dying after the
+    claim but before the pointer/view publication has COMMITTED — the next
+    read rolls the view forward to the claimed snapshot, and nothing is
+    lost or reverted."""
     root = str(tmp_path / "tbl")
-    merge_versioned(spark, root, _mk(spark, [(1, "a", "p1")]), key="k")
+    merge_manifest(spark, root, _mk(spark, [(1, "a", "p1")]), key="k")
 
     def boom(self, version):
         raise RuntimeError("simulated crash before publish")
 
-    monkeypatch.setattr(VersionedParquetTable, "publish", boom)
+    monkeypatch.setattr(ManifestTable, "publish", boom)
     with pytest.raises(RuntimeError, match="simulated crash"):
-        merge_versioned(spark, root, _mk(spark, [(2, "b", "p1")]), key="k")
+        merge_manifest(spark, root, _mk(spark, [(2, "b", "p1")]), key="k")
     monkeypatch.undo()
 
-    # Claimed v2 IS the committed state; resolution rolls forward and the
-    # stale symlink/pointer are repaired on access.
-    table = VersionedParquetTable(root)
+    # Claimed v2 IS the committed state; the view still shows v1 until the
+    # next engine read, which rolls it forward.
+    table = ManifestTable(root)
     assert table.current_version() == 2
+    assert os.readlink(root).endswith("data-v00000001")
+    assert {r["k"] for r in table.read(spark).collect()} == {1, 2}
+    assert os.readlink(root).endswith("data-v00000002")
     assert resolve_table_path(root).endswith("data-v00000002")
     assert _as_dict(spark, root) == {1: ("a", "p1"), 2: ("b", "p1")}
     # The next merge builds on v2 — version numbers stay contiguous.
-    merge_versioned(spark, root, _mk(spark, [(3, "c", "p1")]), key="k")
+    merge_manifest(spark, root, _mk(spark, [(3, "c", "p1")]), key="k")
     assert table.current_version() == 3
     assert _as_dict(spark, root) == {1: ("a", "p1"), 2: ("b", "p1"), 3: ("c", "p1")}
 
@@ -109,67 +147,83 @@ def test_concurrent_commits_never_skipped_or_reverted(spark, tmp_path, monkeypat
     the competitor's snapshot, and the final table holds BOTH batches with
     contiguous version numbers."""
     root = str(tmp_path / "tbl")
-    merge_versioned(spark, root, _mk(spark, [(1, "a", "p1")]), key="k")
+    merge_manifest(spark, root, _mk(spark, [(1, "a", "p1")]), key="k")
 
-    original_claim = VersionedParquetTable.claim
+    original_claim = ManifestTable._claim
     state = {"injected": False}
 
-    def delayed_claim(self, staging, version):
+    def delayed_claim(self, version, rels, schema, pcols, **kw):
         if not state["injected"]:
             state["injected"] = True
             # Competitor lands a full commit AFTER we computed our merge
             # (against v1) but BEFORE our claim.
-            competitor = self._staging()
-            _mk(spark, [(1, "a", "p1"), (7, "competitor", "p1")]).write.mode(
-                "overwrite"
-            ).parquet(str(competitor))
-            assert original_claim(self, competitor, version)
+            comp = _mk(spark, [(1, "a", "p1"), (7, "competitor", "p1")])
+            comp_rels = self._stage_and_place(
+                comp.write.mode("overwrite"), self._staging_path()
+            )
+            assert original_claim(self, version, comp_rels, comp.schema, [])
             self.publish(version)
-        return original_claim(self, staging, version)
+        return original_claim(self, version, rels, schema, pcols, **kw)
 
-    monkeypatch.setattr(VersionedParquetTable, "claim", delayed_claim)
-    merge_versioned(
+    monkeypatch.setattr(ManifestTable, "_claim", delayed_claim)
+    merge_manifest(
         spark, root, _mk(spark, [(2, "b", "p1")]), key="k",
         vacuum_min_age_hours=0.0,  # assert immediate trim below
     )
     monkeypatch.undo()
 
-    table = VersionedParquetTable(root)
     assert _as_dict(spark, root) == {
         1: ("a", "p1"),
         2: ("b", "p1"),
         7: ("competitor", "p1"),
     }
-    names = sorted(
-        e.name for e in table.versions_dir.iterdir() if e.name.startswith("data-v")
-    )
-    assert names == ["data-v00000002", "data-v00000003"]  # v1 vacuumed; no gaps
+    assert ManifestTable(root).versions() == [2, 3]  # v1 vacuumed; no gaps
+    assert _views(root) == ["data-v00000002", "data-v00000003"]
 
 
 def test_crash_after_pointer_before_symlink_self_heals(spark, tmp_path):
     root = str(tmp_path / "tbl")
-    merge_versioned(spark, root, _mk(spark, [(1, "a", "p1")]), key="k")
+    merge_manifest(spark, root, _mk(spark, [(1, "a", "p1")]), key="k")
     os.unlink(root)  # simulate: pointer published, symlink swap never ran
     assert resolve_table_path(root).endswith("data-v00000001")
     assert Path(root).is_symlink()  # repaired
     assert _as_dict(spark, root) == {1: ("a", "p1")}
 
 
-def test_legacy_plain_table_migrates_and_crash_mid_migration_restores(spark, tmp_path):
-    # A pre-protocol plain parquet directory is adopted as snapshot v1.
+def test_legacy_plain_table_migrates_and_crash_mid_migration_restores(
+    spark, tmp_path, monkeypatch
+):
+    # A pre-protocol plain parquet directory is adopted as version 1.
     root = str(tmp_path / "tbl")
     _mk(spark, [(1, "a", "p1")]).write.parquet(root)
     assert not Path(root).is_symlink()
-    merge_versioned(spark, root, _mk(spark, [(2, "b", "p1")]), key="k")
+    merge_manifest(spark, root, _mk(spark, [(2, "b", "p1")]), key="k")
     assert Path(root).is_symlink()
+    assert ManifestTable(root).manifest(1)["op"] == "convert"
     assert _as_dict(spark, root) == {1: ("a", "p1"), 2: ("b", "p1")}
 
-    # Crash window inside migration: root moved aside, pointer never
-    # published.  resolve_table_path restores the original directory.
+    # Crash window inside adoption: root moved aside, nothing claimed.
+    # Resolution restores the original directory.
     root2 = str(tmp_path / "tbl2")
     _mk(spark, [(9, "z", "p1")]).write.parquet(root2)
     os.rename(root2, str(tmp_path / ".tbl2__legacy"))
     assert resolve_table_path(root2) == root2
+    assert _as_dict(spark, root2) == {9: ("z", "p1")}
+
+    # Crash window after the adoption's claim, before its view swap: the
+    # root is still the plain directory; the next access finishes it.
+    def boom(self, version):
+        raise RuntimeError("simulated crash before publish")
+
+    monkeypatch.setattr(ManifestTable, "publish", boom)
+    with pytest.raises(RuntimeError, match="simulated crash"):
+        merge_manifest(spark, root2, _mk(spark, [(8, "y", "p1")]), key="k")
+    monkeypatch.undo()
+    assert not Path(root2).is_symlink()
+    assert ManifestTable(root2).current_version() == 1
+    assert resolve_table_path(root2).endswith("data-v00000001")
+    assert Path(root2).is_symlink()
+    assert not (tmp_path / ".tbl2__legacy").exists()
     assert _as_dict(spark, root2) == {9: ("z", "p1")}
 
 
@@ -178,28 +232,28 @@ def test_losing_the_version_claim_recomputes_against_winner(spark, tmp_path, mon
     our writer must lose the claim, recompute against the competitor's
     commit, and produce the union of both batches."""
     root = str(tmp_path / "tbl")
-    merge_versioned(spark, root, _mk(spark, [(1, "a", "p1")]), key="k")
+    merge_manifest(spark, root, _mk(spark, [(1, "a", "p1")]), key="k")
 
-    original_claim = VersionedParquetTable.claim
+    original_claim = ManifestTable._claim
     state = {"raced": False}
 
-    def racing_claim(self, staging, version):
+    def racing_claim(self, version, rels, schema, pcols, **kw):
         if not state["raced"]:
             state["raced"] = True
             # Competitor commits first (bypassing our patched claim).
-            competitor = self._staging()
-            _mk(spark, [(1, "a", "p1"), (5, "competitor", "p2")]).write.mode(
-                "overwrite"
-            ).parquet(str(competitor))
-            assert original_claim(self, competitor, version)
+            comp = _mk(spark, [(1, "a", "p1"), (5, "competitor", "p2")])
+            comp_rels = self._stage_and_place(
+                comp.write.mode("overwrite"), self._staging_path()
+            )
+            assert original_claim(self, version, comp_rels, comp.schema, [])
             self.publish(version)
             # Now our own claim of the same version must fail.
-            assert not original_claim(self, staging, version)
+            assert not original_claim(self, version, rels, schema, pcols, **kw)
             return False
-        return original_claim(self, staging, version)
+        return original_claim(self, version, rels, schema, pcols, **kw)
 
-    monkeypatch.setattr(VersionedParquetTable, "claim", racing_claim)
-    merge_versioned(spark, root, _mk(spark, [(2, "b", "p1")]), key="k")
+    monkeypatch.setattr(ManifestTable, "_claim", racing_claim)
+    merge_manifest(spark, root, _mk(spark, [(2, "b", "p1")]), key="k")
     assert _as_dict(spark, root) == {
         1: ("a", "p1"),
         2: ("b", "p1"),
@@ -209,40 +263,30 @@ def test_losing_the_version_claim_recomputes_against_winner(spark, tmp_path, mon
 
 def test_claim_exhaustion_raises_concurrent_write_error(spark, tmp_path, monkeypatch):
     root = str(tmp_path / "tbl")
-    merge_versioned(spark, root, _mk(spark, [(1, "a", "p1")]), key="k")
-    monkeypatch.setattr(VersionedParquetTable, "claim", lambda self, s, v: False)
+    merge_manifest(spark, root, _mk(spark, [(1, "a", "p1")]), key="k")
+    monkeypatch.setattr(ManifestTable, "_claim", lambda self, *a, **kw: False)
     with pytest.raises(ConcurrentWriteError):
-        merge_versioned(
+        merge_manifest(
             spark, root, _mk(spark, [(2, "b", "p1")]), key="k", max_retries=2
         )
 
 
 def test_partition_scoped_merge_hardlinks_untouched_partitions(spark, tmp_path):
     """A batch touching one partition must not rewrite the others: the
-    untouched partition's data files in the new snapshot share inodes with
-    the previous snapshot (metadata-only carry-forward)."""
+    new manifest re-lists the untouched partitions' files, so they share
+    inodes between the two versions' views (metadata-only carry-forward)."""
     root = str(tmp_path / "tbl")
     base = _mk(spark, [(1, "a", "p1"), (2, "b", "p2"), (3, "c", "p3")])
-    merge_versioned(spark, root, base, key="k", partition_col="part")
-    table = VersionedParquetTable(root)
-    v1 = table.versions_dir / "data-v00000001"
-
-    merge_versioned(
+    merge_manifest(spark, root, base, key="k", partition_col="part")
+    merge_manifest(
         spark, root, _mk(spark, [(2, "B", "p2")]), key="k", partition_col="part"
     )
-    v2 = table.versions_dir / "data-v00000002"
-
-    def inodes(version_dir, part):
-        return sorted(
-            f.stat().st_ino
-            for f in (version_dir / f"part={part}").glob("*.parquet")
-        )
-
-    # Untouched partitions: same inodes (hardlinked, zero data written).
-    assert inodes(v2, "p1") == inodes(v1, "p1")
-    assert inodes(v2, "p3") == inodes(v1, "p3")
+    v1, v2 = _view(root, 1), _view(root, 2)
+    # Untouched partitions: same inodes (re-listed, zero data written).
+    assert _inodes(v2, "p1") == _inodes(v1, "p1")
+    assert _inodes(v2, "p3") == _inodes(v1, "p3")
     # Touched partition: freshly written files.
-    assert not set(inodes(v2, "p2")) & set(inodes(v1, "p2"))
+    assert not set(_inodes(v2, "p2")) & set(_inodes(v1, "p2"))
     assert _as_dict(spark, root) == {
         1: ("a", "p1"),
         2: ("B", "p2"),
@@ -252,14 +296,14 @@ def test_partition_scoped_merge_hardlinks_untouched_partitions(spark, tmp_path):
 
 def test_partitioned_merge_with_null_partition_values(spark, tmp_path):
     root = str(tmp_path / "tbl")
-    merge_versioned(
+    merge_manifest(
         spark,
         root,
         _mk(spark, [(1, "a", "p1"), (2, "b", None)]),
         key="k",
         partition_col="part",
     )
-    merge_versioned(
+    merge_manifest(
         spark,
         root,
         _mk(spark, [(2, "B", None), (3, "c", None)]),
@@ -272,86 +316,79 @@ def test_partitioned_merge_with_null_partition_values(spark, tmp_path):
 def test_vacuum_drops_old_snapshots_keeps_current_and_previous(spark, tmp_path):
     root = str(tmp_path / "tbl")
     for i in range(4):
-        merge_versioned(
+        merge_manifest(
             spark, root, _mk(spark, [(i, f"v{i}", "p1")]), key="k",
             vacuum_min_age_hours=0.0,
         )
-    table = VersionedParquetTable(root)
-    names = sorted(
-        e.name for e in table.versions_dir.iterdir() if e.name.startswith("data-v")
-    )
-    # vacuum(keep=2, no age floor) ran inside each merge: v3 + v4 survive.
-    assert names == ["data-v00000003", "data-v00000004"]
+    table = ManifestTable(root)
+    # vacuum(keep=2, no age floor) ran inside each merge: v3 + v4 survive,
+    # manifests and views alike.
+    assert table.versions() == [3, 4]
+    assert _views(root) == ["data-v00000003", "data-v00000004"]
     assert table.current_version() == 4
 
 
 def test_vacuum_time_retention_floor(spark, tmp_path):
-    """VERDICT r4 ask #4: a beyond-keep snapshot YOUNGER than the floor
+    """VERDICT r4 ask #4: a beyond-keep version YOUNGER than the floor
     survives vacuum (a long-running reader may still be scanning it); an
-    old one is removed."""
+    old one is removed, with its view and the files only it listed."""
     root = str(tmp_path / "tbl")
     for i in range(4):
-        merge_versioned(
+        merge_manifest(
             spark, root, _mk(spark, [(i, f"v{i}", "p1")]), key="k",
             vacuum_keep=99,
         )
-    table = VersionedParquetTable(root)
-    # All four snapshots are seconds old: the default 1 h floor keeps them.
+    table = ManifestTable(root)
+    # All four versions are seconds old: the default 1 h floor keeps them.
     assert table.vacuum(keep=2) == []
     # Backdate v1 beyond the floor: now it (and only it) is removable.
-    v1 = table.versions_dir / "data-v00000001"
-    old = 3 * 3600
-    import time as _t
-    os.utime(v1, (_t.time() - old, _t.time() - old))
+    v1 = os.path.join(table.manifests_dir, "data-v00000001.json")
+    old = time.time() - 3 * 3600
+    os.utime(v1, (old, old))
+    v1_files = table.manifest(1)["files"]
     removed = table.vacuum(keep=2, min_age_hours=1.0)
-    assert removed == ["data-v00000001"]
-    names = sorted(
-        e.name for e in table.versions_dir.iterdir() if e.name.startswith("data-v")
-    )
-    assert names == ["data-v00000002", "data-v00000003", "data-v00000004"]
+    assert [n for n in removed if n.endswith(".json")] == ["data-v00000001.json"]
+    assert set(v1_files) <= set(removed)  # listed by v1 only: freed
+    assert _views(root) == ["data-v00000002", "data-v00000003", "data-v00000004"]
 
 
-def test_compact_parquet_table_versioned_commit_and_backup_recovery(spark, tmp_path):
-    from door2door_etl_spark.io.writers import compact_parquet_table
-
-    # Simulate the ROUND-3 crash state: table path absent, data sitting in
-    # the .__precompact backup.  compact must restore, then compact via a
-    # versioned commit (table never absent mid-compaction afterwards).
+def test_compact_adopts_plain_table_as_new_commit(spark, tmp_path):
+    """Compacting a plain many-file directory first adopts it in place as
+    version 1, then commits the compacted snapshot as version 2: the
+    table is never absent mid-compaction, and the root becomes the view."""
     root = tmp_path / "tbl"
     _mk(spark, [(i, f"v{i}", "p1") for i in range(10)]).repartition(8).write.parquet(
         str(root)
     )
-    os.rename(root, tmp_path / ".tbl__precompact")
-    assert not root.exists()
-
-    n_files = compact_parquet_table(spark, str(root), target_file_mb=128)
+    n_files = compact_manifest(spark, str(root), target_file_mb=128)
     assert n_files == 1
     assert Path(root).is_symlink()  # committed through the protocol
+    assert ManifestTable(str(root)).current_version() == 2
     assert {r["k"] for r in spark.read.parquet(str(root)).collect()} == set(range(10))
 
 
 def test_merge_schema_drift_rejected_by_default(spark, tmp_path):
     root = str(tmp_path / "tbl")
-    merge_versioned(spark, root, _mk(spark, [(1, "a", "p1")]), key="k")
+    merge_manifest(spark, root, _mk(spark, [(1, "a", "p1")]), key="k")
     wider = spark.createDataFrame(
         [(2, "b", "p1", "extra")], "k int, v string, part string, note string"
     )
     with pytest.raises(ValueError, match="evolve_schema=True"):
-        merge_versioned(spark, root, wider, key="k")
+        merge_manifest(spark, root, wider, key="k")
 
 
 def test_merge_schema_evolution_add_and_omit_columns(spark, tmp_path):
     root = str(tmp_path / "tbl")
-    merge_versioned(
+    merge_manifest(
         spark, root, _mk(spark, [(1, "a", "p1")]), key="k", partition_col="part"
     )
     # Batch ADDS a column: old rows read null there; the evolving merge
-    # must rewrite the full snapshot (no mixed-schema hardlink carry-over),
-    # so a plain pointer read — no mergeSchema option — sees the column.
+    # must rewrite the full snapshot (no mixed-schema re-listing), so a
+    # plain view read — no mergeSchema option — sees the column.
     wider = spark.createDataFrame(
         [(2, "b", "p2", "note-2")], "k int, v string, part string, note string"
     )
-    merge_versioned(
+    merge_manifest(
         spark, root, wider, key="k", partition_col="part", evolve_schema=True
     )
     got = {r["k"]: (r["v"], r["note"]) for r in spark.read.parquet(root).collect()}
@@ -359,32 +396,27 @@ def test_merge_schema_evolution_add_and_omit_columns(spark, tmp_path):
 
     # Batch OMITS a column: its rows get null there, new row still wins.
     narrower = spark.createDataFrame([(1, "A", "p1")], "k int, v string, part string")
-    merge_versioned(
+    merge_manifest(
         spark, root, narrower, key="k", partition_col="part", evolve_schema=True
     )
     got = {r["k"]: (r["v"], r["note"]) for r in spark.read.parquet(root).collect()}
     assert got == {1: ("A", None), 2: ("b", "note-2")}
 
-    # Once schemas agree again, the partition-scoped hardlink path resumes.
-    table = VersionedParquetTable(root)
-    v_before = table.current_version()
+    # Once schemas agree again, the partition-scoped re-listing resumes.
+    v_before = ManifestTable(root).current_version()
     same_shape = spark.createDataFrame(
         [(3, "c", "p3", None)], "k int, v string, part string, note string"
     )
-    merge_versioned(
+    merge_manifest(
         spark, root, same_shape, key="k", partition_col="part", evolve_schema=True
     )
-    v1 = table.versions_dir / f"data-v{v_before:08d}"
-    v2 = table.versions_dir / f"data-v{v_before + 1:08d}"
-    ino = lambda d, p: sorted(
-        f.stat().st_ino for f in (d / f"part={p}").glob("*.parquet")
-    )
-    assert ino(v2, "p1") == ino(v1, "p1")  # untouched partition hardlinked
+    # untouched partition re-listed: same inodes in both views
+    assert _inodes(_view(root, v_before + 1), "p1") == _inodes(_view(root, v_before), "p1")
 
 
 def test_cli_compact_and_vacuum_maintenance(spark, tmp_path, capsys):
     """`-s compact` rewrites each warehouse table's small files as one new
-    committed snapshot; `-s vacuum` drops old snapshots.  Both report one
+    committed snapshot; `-s vacuum` drops old versions.  Both report one
     JSON summary line per invocation."""
     import json as _json
 
@@ -393,20 +425,19 @@ def test_cli_compact_and_vacuum_maintenance(spark, tmp_path, capsys):
     lake = tmp_path / "lake"
     root = str(lake / "warehouse" / "tbl")
     for i in range(3):  # 3 merges -> multiple small files + versions
-        merge_versioned(
+        merge_manifest(
             spark, root, _mk(spark, [(i, f"v{i}", "p1")]), key="k", vacuum_keep=99
         )
-    table = VersionedParquetTable(root)
-    assert table.current_version() == 3
+    assert ManifestTable(root).current_version() == 3
 
     assert main([
         "-s", "vacuum", "--lake-root", str(lake), "--keep-versions", "1",
         "--min-age-hours", "0",
     ]) == 0
     vac = _json.loads(capsys.readouterr().out.strip().splitlines()[-1])
-    assert vac["tables"]["tbl"]["removed_snapshots"] == [
-        "data-v00000001", "data-v00000002"
-    ]
+    assert [
+        n for n in vac["tables"]["tbl"]["removed_snapshots"] if n.endswith(".json")
+    ] == ["data-v00000001.json", "data-v00000002.json"]
 
     assert main(["-s", "compact", "--lake-root", str(lake)]) == 0
     comp = _json.loads(capsys.readouterr().out.strip().splitlines()[-1])
@@ -417,57 +448,48 @@ def test_cli_compact_and_vacuum_maintenance(spark, tmp_path, capsys):
 
 
 def test_time_travel_read_version(spark, tmp_path):
-    from door2door_etl_spark.io.versioned import read_version
-
     root = str(tmp_path / "tbl")
-    merge_versioned(spark, root, _mk(spark, [(1, "a", "p1")]), key="k", vacuum_keep=99)
-    merge_versioned(spark, root, _mk(spark, [(1, "A", "p1")]), key="k", vacuum_keep=99)
-    assert {r["v"] for r in read_version(spark, root, 1).collect()} == {"a"}
-    assert {r["v"] for r in read_version(spark, root, 2).collect()} == {"A"}
+    merge_manifest(spark, root, _mk(spark, [(1, "a", "p1")]), key="k", vacuum_keep=99)
+    merge_manifest(spark, root, _mk(spark, [(1, "A", "p1")]), key="k", vacuum_keep=99)
+    table = ManifestTable(root)
+    assert {r["v"] for r in table.read(spark, 1).collect()} == {"a"}
+    assert {r["v"] for r in table.read(spark, 2).collect()} == {"A"}
     with pytest.raises(ValueError, match="not retained"):
-        read_version(spark, root, 9)
+        table.read(spark, 9)
 
 
 def test_table_changes_cdc_between_versions(spark, tmp_path):
     """Change feed: v1->v2 reports the update and the insert with new-side
     post-images; a compaction-only version reports zero changes; a delete
     (simulated via an external overwrite commit) reports the key."""
-    from door2door_etl_spark.io.versioned import compact_versioned, table_changes
-
     root = str(tmp_path / "tbl")
     base = _mk(spark, [(1, "a", "p1"), (2, "b", "p1")])
-    merge_versioned(spark, root, base, key="k", vacuum_keep=99)
-    merge_versioned(
+    merge_manifest(spark, root, base, key="k", vacuum_keep=99)
+    merge_manifest(
         spark, root, _mk(spark, [(2, "B", "p1"), (3, "c", "p2")]), key="k",
         vacuum_keep=99,
     )
     changes = {
         r["k"]: (r["_change_type"], r["v"])
-        for r in table_changes(spark, root, key="k", from_version=1).collect()
+        for r in table_changes_manifest(spark, root, key="k", from_version=1).collect()
     }
     assert changes == {2: ("update", "B"), 3: ("insert", "c")}
 
-    compact_versioned(spark, root, vacuum_keep=99)
-    assert table_changes(spark, root, "k", from_version=2, to_version=3).count() == 0
+    compact_manifest(spark, root, vacuum_keep=99)
+    assert table_changes_manifest(spark, root, "k", from_version=2, to_version=3).count() == 0
 
     # Simulate a delete via an external rewrite committed as v4.
-    table = VersionedParquetTable(root)
-    staging = table._staging()
-    _mk(spark, [(1, "a", "p1"), (3, "c", "p2")]).write.mode("overwrite").parquet(
-        str(staging)
-    )
-    assert table.claim(staging, 4)
-    table.publish(4)
-    dels = table_changes(spark, root, "k", from_version=3, to_version=4).collect()
+    _commit_rows(spark, root, 4, [(1, "a", "p1"), (3, "c", "p2")])
+    dels = table_changes_manifest(spark, root, "k", from_version=3, to_version=4).collect()
     assert {(r["k"], r["_change_type"], r["v"]) for r in dels} == {(2, "delete", None)}
 
 
 def test_partition_value_change_removes_stale_row(spark, tmp_path):
     """A key whose partition value changes must not leave its old row
-    behind in a hard-linked untouched partition (one-row-per-key
+    behind in a re-listed untouched partition (one-row-per-key
     contract), and replaying the move stays idempotent."""
     root = str(tmp_path / "tbl")
-    merge_versioned(
+    merge_manifest(
         spark,
         root,
         _mk(spark, [(1, "a", "p1"), (2, "b", "p2")]),
@@ -475,12 +497,12 @@ def test_partition_value_change_removes_stale_row(spark, tmp_path):
         partition_col="part",
     )
     move = _mk(spark, [(1, "A", "p2")])  # k=1 moves p1 -> p2
-    merge_versioned(spark, root, move, key="k", partition_col="part")
+    merge_manifest(spark, root, move, key="k", partition_col="part")
     # Row count first: a stale duplicate would be masked in the dict view
     # by collect-order luck.
     assert spark.read.parquet(root).count() == 2
     assert _as_dict(spark, root) == {1: ("A", "p2"), 2: ("b", "p2")}
-    merge_versioned(spark, root, move, key="k", partition_col="part")  # replay
+    merge_manifest(spark, root, move, key="k", partition_col="part")  # replay
     assert spark.read.parquet(root).count() == 2
     assert _as_dict(spark, root) == {1: ("A", "p2"), 2: ("b", "p2")}
 
@@ -489,27 +511,20 @@ def test_compact_preserves_partition_layout(spark, tmp_path):
     """Compaction must keep the partition-dir layout (and therefore
     file-level pruning and the partition-scoped merge path) — not flatten
     the table into root-level files."""
-    from door2door_etl_spark.io.versioned import compact_versioned
-
     root = str(tmp_path / "tbl")
     base = _mk(spark, [(i, f"v{i}", f"p{i % 3}") for i in range(30)])
-    merge_versioned(spark, root, base, key="k", partition_col="part")
-    compact_versioned(spark, root)
+    merge_manifest(spark, root, base, key="k", partition_col="part")
+    compact_manifest(spark, root)
     snap = Path(resolve_table_path(root))
     part_dirs = sorted(e.name for e in snap.iterdir() if e.is_dir())
     assert part_dirs == ["part=p0", "part=p1", "part=p2"]
-    # The partition-scoped hardlink path still applies after compaction.
-    table = VersionedParquetTable(root)
-    v_before = table.current_version()
-    merge_versioned(
+    # The partition-scoped re-listing still applies after compaction.
+    v_before = ManifestTable(root).current_version()
+    merge_manifest(
         spark, root, _mk(spark, [(0, "V0", "p0")]), key="k", partition_col="part"
     )
-    v_after = table.versions_dir / f"data-v{v_before + 1:08d}"
-    v_prev = table.versions_dir / f"data-v{v_before:08d}"
-    ino = lambda d, p: sorted(
-        f.stat().st_ino for f in (d / f"part={p}").glob("*.parquet")
-    )
-    assert ino(v_after, "p1") == ino(v_prev, "p1")  # untouched: hardlinked
+    # untouched partition: re-listed, same inodes in both views
+    assert _inodes(_view(root, v_before + 1), "p1") == _inodes(_view(root, v_before), "p1")
     assert _as_dict(spark, root)[0] == ("V0", "p0")
 
 
@@ -524,25 +539,31 @@ def test_zorder_rejects_sign_bit_overflow(spark, sf001):
 
 
 def test_null_merge_key_rejected(spark, tmp_path):
+    """A NULL key is found by the staging write's observation and raises
+    before the claim: nothing is committed and no staged file survives."""
     root = str(tmp_path / "tbl")
     bad = spark.createDataFrame([(None, "a", "p1")], "k int, v string, part string")
     with pytest.raises(ValueError, match="NULL values in merge key"):
-        merge_versioned(spark, root, bad, key="k")
+        merge_manifest(spark, root, bad, key="k")
+    table = ManifestTable(root)
+    assert table.current_version() is None
+    assert LocalFsOps().walk_files(table.files_dir) == []
+    assert not os.path.lexists(root)
 
 
 def test_type_only_schema_drift_detected(spark, tmp_path):
     """Same column NAMES with a changed type must count as drift — letting
-    it into the hardlink path would mix physical schemas in one
+    it into the re-listing path would mix physical schemas in one
     snapshot."""
     root = str(tmp_path / "tbl")
-    merge_versioned(
+    merge_manifest(
         spark, root, _mk(spark, [(1, "a", "p1")]), key="k", partition_col="part"
     )
     retyped = spark.createDataFrame(
         [(2, 9.5, "p2")], "k int, v double, part string"
     )
     with pytest.raises(ValueError, match="evolve_schema=True"):
-        merge_versioned(spark, root, retyped, key="k", partition_col="part")
+        merge_manifest(spark, root, retyped, key="k", partition_col="part")
 
 
 def test_partition_move_with_relative_root(spark, tmp_path):
@@ -554,14 +575,14 @@ def test_partition_move_with_relative_root(spark, tmp_path):
     would desynchronize the Python and JVM sides.)"""
     root = os.path.join(os.path.relpath(str(tmp_path), os.getcwd()), "tbl")
     assert not os.path.isabs(root)
-    merge_versioned(
+    merge_manifest(
         spark,
         root,
         _mk(spark, [(1, "a", "p1"), (2, "b", "p2")]),
         key="k",
         partition_col="part",
     )
-    merge_versioned(
+    merge_manifest(
         spark, root, _mk(spark, [(1, "A", "p2")]), key="k", partition_col="part"
     )
     assert spark.read.parquet(str(tmp_path / "tbl")).count() == 2
@@ -571,17 +592,14 @@ def test_partition_move_with_relative_root(spark, tmp_path):
 
 
 def test_vacuum_sweeps_stale_staging_dirs(spark, tmp_path):
-    import os as _os
-    import time as _time
-
     root = str(tmp_path / "tbl")
-    merge_versioned(spark, root, _mk(spark, [(1, "a", "p1")]), key="k")
-    table = VersionedParquetTable(root)
-    stale = table.versions_dir / ".staging.deadbeef"
+    merge_manifest(spark, root, _mk(spark, [(1, "a", "p1")]), key="k")
+    table = ManifestTable(root)
+    stale = Path(table.state_dir) / ".staging.deadbeef"
     stale.mkdir()
-    old = _time.time() - 48 * 3600
-    _os.utime(stale, (old, old))
-    fresh = table.versions_dir / ".staging.cafebabe"
+    old = time.time() - 48 * 3600
+    os.utime(stale, (old, old))
+    fresh = Path(table.state_dir) / ".staging.cafebabe"
     fresh.mkdir()  # an in-flight writer's staging: must survive
     removed = table.vacuum(keep=2)
     assert ".staging.deadbeef" in removed
@@ -590,32 +608,27 @@ def test_vacuum_sweeps_stale_staging_dirs(spark, tmp_path):
 
 def test_delete_versioned_file_level_rewrite(spark, tmp_path):
     """Deletion rewrites ONLY the files containing doomed keys; every
-    other file hard-links into the new snapshot (same inode)."""
-    from door2door_etl_spark.io.versioned import delete_versioned
-
+    other file is re-listed into the new version (same inode in both
+    views)."""
     root = str(tmp_path / "tbl")
     base = _mk(spark, [(i, f"v{i}", f"p{i % 3}") for i in range(30)])
-    merge_versioned(spark, root, base, key="k", partition_col="part", vacuum_keep=99)
-    table = VersionedParquetTable(root)
-    v1 = table.versions_dir / "data-v00000001"
+    merge_manifest(spark, root, base, key="k", partition_col="part", vacuum_keep=99)
+    table = ManifestTable(root)
 
     dooms = spark.createDataFrame([(0,), (3,)], "k int")  # both in part=p0
-    n = delete_versioned(spark, root, dooms, key="k")
+    n = delete_manifest(spark, root, dooms, key="k")
     assert n == 2
-    v2 = table.versions_dir / "data-v00000002"
     left = {r["k"] for r in spark.read.parquet(root).collect()}
     assert left == set(range(30)) - {0, 3}
 
-    ino = lambda d, p: sorted(
-        f.stat().st_ino for f in (d / f"part={p}").glob("*.parquet")
-    )
-    # Partitions without doomed keys: files carried forward by hardlink.
-    assert ino(v2, "p1") == ino(v1, "p1")
-    assert ino(v2, "p2") == ino(v1, "p2")
+    v1, v2 = _view(root, 1), _view(root, 2)
+    # Partitions without doomed keys: files carried forward.
+    assert _inodes(v2, "p1") == _inodes(v1, "p1")
+    assert _inodes(v2, "p2") == _inodes(v1, "p2")
 
     # A no-match delete commits nothing.
     v_before = table.current_version()
-    assert delete_versioned(spark, root, spark.createDataFrame([(999,)], "k int"), key="k") == 0
+    assert delete_manifest(spark, root, spark.createDataFrame([(999,)], "k int"), key="k") == 0
     assert table.current_version() == v_before
 
 
@@ -623,36 +636,24 @@ def test_apply_changes_syncs_replica(spark, tmp_path):
     """CDC round-trip: diff source v_from -> v_to, apply to a replica of
     v_from, and the replica matches v_to exactly — including a delete.
     Replaying the same feed is a no-op."""
-    from door2door_etl_spark.io.versioned import (
-        apply_changes,
-        read_version,
-        table_changes,
-    )
-
     src = str(tmp_path / "src")
     rep = str(tmp_path / "rep")
     v1_data = _mk(spark, [(1, "a", "p1"), (2, "b", "p1"), (3, "c", "p2")])
-    merge_versioned(spark, src, v1_data, key="k", vacuum_keep=99)
-    merge_versioned(spark, rep, v1_data, key="k", vacuum_keep=99)  # replica @ v1
+    merge_manifest(spark, src, v1_data, key="k", vacuum_keep=99)
+    merge_manifest(spark, rep, v1_data, key="k", vacuum_keep=99)  # replica @ v1
 
     # Source evolves: update k=2, insert k=4, delete k=3 (external rewrite).
-    table = VersionedParquetTable(src)
-    staging = table._staging()
-    _mk(spark, [(1, "a", "p1"), (2, "B", "p1"), (4, "d", "p2")]).write.mode(
-        "overwrite"
-    ).parquet(str(staging))
-    assert table.claim(staging, 2)
-    table.publish(2)
+    _commit_rows(spark, src, 2, [(1, "a", "p1"), (2, "B", "p1"), (4, "d", "p2")])
 
-    feed = table_changes(spark, src, key="k", from_version=1, to_version=2)
-    stats = apply_changes(spark, rep, feed, key="k")
+    feed = table_changes_manifest(spark, src, key="k", from_version=1, to_version=2)
+    stats = apply_changes_manifest(spark, rep, feed, key="k")
     assert stats == {"deleted": 1, "upserted": 2}
 
     want = {r["k"]: (r["v"], r["part"])
-            for r in read_version(spark, src, 2).collect()}
+            for r in ManifestTable(src).read(spark, 2).collect()}
     assert _as_dict(spark, rep) == want
     # Idempotent replay.
-    apply_changes(spark, rep, feed, key="k")
+    apply_changes_manifest(spark, rep, feed, key="k")
     assert _as_dict(spark, rep) == want
 
 
@@ -660,10 +661,8 @@ def test_table_changes_sees_new_column_only_updates(spark, tmp_path):
     """ADVICE r4: after schema evolution, a row whose ONLY change is a value
     in the newly added column must still appear in the CDC feed (the old
     intersection-hash silently dropped exactly those updates)."""
-    from door2door_etl_spark.io.versioned import table_changes
-
     root = str(tmp_path / "tbl")
-    merge_versioned(
+    merge_manifest(
         spark, root, _mk(spark, [(1, "a", "p1"), (2, "b", "p1")]), key="k",
         vacuum_keep=99,
     )
@@ -672,8 +671,8 @@ def test_table_changes_sees_new_column_only_updates(spark, tmp_path):
         # carries information.  k=2 untouched.
         [(1, "a", "p1", "extra")], "k int, v string, part string, note string"
     )
-    merge_versioned(spark, root, wider, key="k", evolve_schema=True, vacuum_keep=99)
-    feed = table_changes(spark, root, key="k", from_version=1, to_version=2)
+    merge_manifest(spark, root, wider, key="k", evolve_schema=True, vacuum_keep=99)
+    feed = table_changes_manifest(spark, root, key="k", from_version=1, to_version=2)
     rows = {r["k"]: r["_change_type"] for r in feed.collect()}
     assert rows == {1: "update"}
 
@@ -681,21 +680,21 @@ def test_table_changes_sees_new_column_only_updates(spark, tmp_path):
 def test_partition_scoped_merge_under_symlinked_lake_path(spark, tmp_path):
     """ADVICE r4: with a symlinked ancestor in the lake path the touched-dir
     bookkeeping must still be right — a partition emptied by the merge must
-    NOT be hard-linked back from the old snapshot (stale-row resurrection)."""
+    NOT be re-listed from the old version (stale-row resurrection)."""
     real = tmp_path / "real_lake"
     real.mkdir()
     link = tmp_path / "lake_link"
     os.symlink(real, link)
     root = str(link / "tbl")
 
-    merge_versioned(
+    merge_manifest(
         spark, root,
         _mk(spark, [(1, "a", "p1"), (2, "b", "p2")]),
         key="k", partition_col="part", vacuum_keep=99,
     )
     # Move k=2 from p2 to p1: p2 becomes EMPTY; a mis-normalized relpath
     # would treat p2 as untouched and resurrect the old (2, "b", "p2") row.
-    merge_versioned(
+    merge_manifest(
         spark, root,
         _mk(spark, [(2, "b2", "p1")]),
         key="k", partition_col="part", vacuum_keep=99,
@@ -706,90 +705,74 @@ def test_partition_scoped_merge_under_symlinked_lake_path(spark, tmp_path):
 def test_delete_versioned_under_symlinked_lake_path(spark, tmp_path):
     """The file-level delete's basePath/affected-file bookkeeping under a
     symlinked ancestor (the inverse normalization mix failed loudly)."""
-    from door2door_etl_spark.io.versioned import delete_versioned
-
     real = tmp_path / "real_lake2"
     real.mkdir()
     link = tmp_path / "lake_link2"
     os.symlink(real, link)
     root = str(link / "tbl")
-    merge_versioned(
+    merge_manifest(
         spark, root,
         _mk(spark, [(1, "a", "p1"), (2, "b", "p2"), (3, "c", "p2")]),
         key="k", partition_col="part", vacuum_keep=99,
     )
-    n = delete_versioned(spark, root, spark.createDataFrame([(2,)], "k int"), key="k")
+    n = delete_manifest(spark, root, spark.createDataFrame([(2,)], "k int"), key="k")
     assert n == 1
     assert _as_dict(spark, root) == {1: ("a", "p1"), 3: ("c", "p2")}
 
 
 def test_delete_where_predicate_file_level(spark, tmp_path):
     """DELETE WHERE at file granularity: matching rows go, unaffected
-    files hard-link forward, and NULL-evaluating rows are KEPT (SQL
+    files are re-listed forward, and NULL-evaluating rows are KEPT (SQL
     three-valued logic — the classic silent-drop bug)."""
-    from door2door_etl_spark.io.versioned import delete_where_versioned
-
     root = str(tmp_path / "tbl")
     rows = [(1, "keep", "p1"), (2, "expired", "p1"), (3, None, "p2"),
             (4, "expired", "p2"), (5, "keep", "p3")]
-    merge_versioned(spark, root, _mk(spark, rows), key="k",
-                    partition_col="part", vacuum_keep=99)
-    table = VersionedParquetTable(root)
-    v1 = table.versions_dir / "data-v00000001"
+    merge_manifest(spark, root, _mk(spark, rows), key="k",
+                   partition_col="part", vacuum_keep=99)
+    table = ManifestTable(root)
 
-    n = delete_where_versioned(spark, root, "v = 'expired'")
+    n = delete_where_manifest(spark, root, "v = 'expired'")
     assert n == 2
     got = _as_dict(spark, root)
     # k=3 (v NULL -> predicate NULL) survives; only true matches deleted.
     assert got == {1: ("keep", "p1"), 3: (None, "p2"), 5: ("keep", "p3")}
-    # p3 had no match: its file carries forward by hardlink (same inode).
-    v2 = table.versions_dir / "data-v00000002"
-    ino = lambda d: sorted(
-        f.stat().st_ino for f in (d / "part=p3").glob("*.parquet")
-    )
-    assert ino(v2) == ino(v1)
+    # p3 had no match: its file carries forward (same inode in both views).
+    assert _inodes(_view(root, 2), "p3") == _inodes(_view(root, 1), "p3")
     # No-match predicate commits nothing.
     v_before = table.current_version()
-    assert delete_where_versioned(spark, root, "v = 'nothing-has-this'") == 0
+    assert delete_where_manifest(spark, root, "v = 'nothing-has-this'") == 0
     assert table.current_version() == v_before
 
 
 def test_change_feed_cursor_effectively_once_replication(spark, tmp_path):
     """CDC subscriber loop: poll -> apply -> commit.  A crash between
     apply and commit re-delivers the window (at-least-once), and the
-    idempotent apply makes replication effectively-once.  Works over both
-    table layouts."""
-    from door2door_etl_spark.io.versioned import (
-        ChangeFeedCursor,
-        apply_changes,
-        merge_versioned,
-    )
-
+    idempotent apply makes replication effectively-once."""
     src = str(tmp_path / "src")
     rep = str(tmp_path / "rep")
     cursor = ChangeFeedCursor(src, str(tmp_path / "cursors" / "rep.v"))
 
     v1 = _mk(spark, [(1, "a", "p1"), (2, "b", "p1")])
-    merge_versioned(spark, src, v1, key="k", vacuum_keep=99)
-    merge_versioned(spark, rep, v1, key="k", vacuum_keep=99)  # initial sync
+    merge_manifest(spark, src, v1, key="k", vacuum_keep=99)
+    merge_manifest(spark, rep, v1, key="k", vacuum_keep=99)  # initial sync
     cursor.commit(1)
 
     # No new version -> nothing to do.
     feed, to_v = cursor.poll(spark, key="k")
     assert feed is None and to_v == 1
 
-    merge_versioned(spark, src, _mk(spark, [(2, "B", "p1"), (3, "c", "p2")]),
-                    key="k", vacuum_keep=99)
-    merge_versioned(spark, src, _mk(spark, [(4, "d", "p2")]), key="k",
-                    vacuum_keep=99)
+    merge_manifest(spark, src, _mk(spark, [(2, "B", "p1"), (3, "c", "p2")]),
+                   key="k", vacuum_keep=99)
+    merge_manifest(spark, src, _mk(spark, [(4, "d", "p2")]), key="k",
+                   vacuum_keep=99)
 
     feed, to_v = cursor.poll(spark, key="k")
     assert to_v == 3
-    apply_changes(spark, rep, feed, key="k")
+    apply_changes_manifest(spark, rep, feed, key="k")
     # CRASH before commit: the next poll re-delivers the same window...
     feed2, to_v2 = cursor.poll(spark, key="k")
     assert to_v2 == 3
-    apply_changes(spark, rep, feed2, key="k")  # ...and replay is a no-op
+    apply_changes_manifest(spark, rep, feed2, key="k")  # ...and replay is a no-op
     cursor.commit(to_v2)
 
     assert _as_dict(spark, rep) == _as_dict(spark, src) == {
@@ -799,9 +782,6 @@ def test_change_feed_cursor_effectively_once_replication(spark, tmp_path):
 
 
 def test_change_feed_cursor_over_manifest_table(spark, tmp_path):
-    from door2door_etl_spark.io.manifest import merge_manifest
-    from door2door_etl_spark.io.versioned import ChangeFeedCursor
-
     src = str(tmp_path / "src")
     merge_manifest(spark, src, _mk(spark, [(1, "a", "p1")]), key="k",
                    vacuum_keep=99)
@@ -819,83 +799,44 @@ def test_change_feed_cursor_over_manifest_table(spark, tmp_path):
 def test_merge_check_constraints(spark, tmp_path):
     """Delta-style CHECK constraints: FALSE rows reject the whole batch
     before any commit; NULL/UNKNOWN passes (SQL CHECK semantics)."""
-    from door2door_etl_spark.io.manifest import ManifestTable, merge_manifest
-
     root = str(tmp_path / "tbl")
     ok = _mk(spark, [(1, "a", "p1"), (2, None, "p1")])  # NULL v: passes
-    merge_versioned(spark, root, ok, key="k",
-                    constraints=["k >= 0", "v != 'forbidden'"])
-    assert VersionedParquetTable(root).current_version() == 1
+    merge_manifest(spark, root, ok, key="k",
+                   constraints=["k >= 0", "v != 'forbidden'"])
+    assert ManifestTable(root).current_version() == 1
 
     bad = _mk(spark, [(3, "forbidden", "p1")])
     with pytest.raises(ValueError, match="CHECK constraint"):
-        merge_versioned(spark, root, bad, key="k",
-                        constraints=["v != 'forbidden'"])
+        merge_manifest(spark, root, bad, key="k",
+                       constraints=["v != 'forbidden'"])
     # Nothing committed: the violating batch never reached a snapshot.
-    assert VersionedParquetTable(root).current_version() == 1
+    assert ManifestTable(root).current_version() == 1
 
-    # Manifest-mode twin.
-    man = str(tmp_path / "man")
+    # A violating first batch leaves no table at all.
+    fresh = str(tmp_path / "fresh")
     with pytest.raises(ValueError, match="CHECK constraint"):
-        merge_manifest(spark, man, _mk(spark, [(1, "x", "p1")]), key="k",
+        merge_manifest(spark, fresh, _mk(spark, [(1, "x", "p1")]), key="k",
                        constraints=["k > 5"])
-    assert ManifestTable(man).current_version() is None
-
-
-def test_clone_versioned_zero_copy_independent_history(spark, tmp_path):
-    """Snapshot clone: instant (hardlinks, no data copy), contents equal
-    the source snapshot, and the two tables' histories and vacuums are
-    fully independent afterwards."""
-    from door2door_etl_spark.io.versioned import clone_versioned
-
-    src = str(tmp_path / "src")
-    dst = str(tmp_path / "dst")
-    merge_versioned(spark, src, _mk(spark, [(1, "a", "p1"), (2, "b", "p2")]),
-                    key="k", partition_col="part", vacuum_keep=99)
-    clone_versioned(src, dst)
-
-    assert _as_dict(spark, dst) == _as_dict(spark, src)
-    # Zero-copy: the clone's v1 files share inodes with the source snapshot.
-    s_table, d_table = VersionedParquetTable(src), VersionedParquetTable(dst)
-    s_inodes = {f.stat().st_ino
-                for f in (s_table.versions_dir / "data-v00000001").rglob("*.parquet")}
-    d_inodes = {f.stat().st_ino
-                for f in (d_table.versions_dir / "data-v00000001").rglob("*.parquet")}
-    assert d_inodes == s_inodes
-
-    # Diverge both sides: neither sees the other's writes.
-    merge_versioned(spark, src, _mk(spark, [(3, "c", "p1")]), key="k",
-                    partition_col="part", vacuum_keep=99)
-    merge_versioned(spark, dst, _mk(spark, [(9, "z", "p9")]), key="k",
-                    partition_col="part", vacuum_keep=99)
-    assert 9 not in _as_dict(spark, src) and 3 not in _as_dict(spark, dst)
-    # Vacuum the source to the bone: the clone still reads fine (own links).
-    s_table.vacuum(keep=1, min_age_hours=0.0)
-    assert _as_dict(spark, dst)[1] == ("a", "p1")
-
-    with pytest.raises(ValueError, match="already exists"):
-        clone_versioned(src, dst)
+    assert ManifestTable(fresh).current_version() is None
 
 
 def test_restore_rolls_back_without_rewriting_history(spark, tmp_path):
     """RESTORE: a bad batch is rolled back by committing the good snapshot
     as a NEW version — chain contiguous, bad version still inspectable,
     and a subsequent merge builds on the restored state."""
-    from door2door_etl_spark.io.versioned import read_version, restore_versioned
-
     root = str(tmp_path / "tbl")
-    merge_versioned(spark, root, _mk(spark, [(1, "good", "p1")]), key="k",
-                    vacuum_keep=99)
-    merge_versioned(spark, root, _mk(spark, [(1, "BAD", "p1"), (2, "BAD", "p1")]),
-                    key="k", vacuum_keep=99)
-    assert restore_versioned(root, 1) == 3
+    merge_manifest(spark, root, _mk(spark, [(1, "good", "p1")]), key="k",
+                   vacuum_keep=99)
+    merge_manifest(spark, root, _mk(spark, [(1, "BAD", "p1"), (2, "BAD", "p1")]),
+                   key="k", vacuum_keep=99)
+    assert restore_manifest(root, 1) == 3
     assert _as_dict(spark, root) == {1: ("good", "p1")}
     # The bad version is still there for forensics (until vacuum).
-    assert {r["v"] for r in read_version(spark, root, 2).collect()} == {"BAD"}
+    assert {r["v"] for r in ManifestTable(root).read(spark, 2).collect()} == {"BAD"}
     # Restoring the current version is a no-op.
-    assert restore_versioned(root, 3) == 3
-    merge_versioned(spark, root, _mk(spark, [(5, "next", "p1")]), key="k",
-                    vacuum_keep=99)
+    assert restore_manifest(root, 3) == 3
+    merge_manifest(spark, root, _mk(spark, [(5, "next", "p1")]), key="k",
+                   vacuum_keep=99)
     assert _as_dict(spark, root) == {1: ("good", "p1"), 5: ("next", "p1")}
 
 
@@ -906,10 +847,10 @@ def test_cli_restore_step(spark, tmp_path, capsys):
 
     lake = tmp_path / "lake"
     root = str(lake / "warehouse" / "tbl")
-    merge_versioned(spark, root, _mk(spark, [(1, "good", "p1")]), key="k",
-                    vacuum_keep=99)
-    merge_versioned(spark, root, _mk(spark, [(1, "BAD", "p1")]), key="k",
-                    vacuum_keep=99)
+    merge_manifest(spark, root, _mk(spark, [(1, "good", "p1")]), key="k",
+                   vacuum_keep=99)
+    merge_manifest(spark, root, _mk(spark, [(1, "BAD", "p1")]), key="k",
+                   vacuum_keep=99)
     assert main([
         "-s", "restore", "--lake-root", str(lake), "--table", "tbl",
         "--to-version", "1",
@@ -920,29 +861,77 @@ def test_cli_restore_step(spark, tmp_path, capsys):
 
 
 def test_describe_history_posix_layout(spark, tmp_path):
-    from door2door_etl_spark.io.versioned import (
-        VersionedParquetTable,
-        merge_versioned,
-    )
-
     root = str(tmp_path / "tbl")
     df1 = spark.createDataFrame([(1, "a")], "k int, v string")
     df2 = spark.createDataFrame([(2, "b")], "k int, v string")
-    merge_versioned(spark, root, df1, key="k")
-    merge_versioned(spark, root, df2, key="k")
-    hist = VersionedParquetTable(root).describe_history()
+    merge_manifest(spark, root, df1, key="k")
+    merge_manifest(spark, root, df2, key="k")
+    hist = ManifestTable(root).describe_history()
     assert [h["version"] for h in hist] == [2, 1]
-    assert hist[0]["current"] and not hist[1]["current"]
+    assert [h["op"] for h in hist] == ["merge", "merge"]
+    assert [h["rows"] for h in hist] == [2, 1]
     assert all(h["n_files"] >= 1 and h["committed_at"] for h in hist)
 
 
 def test_describe_history_plain_directory_degrades_gracefully(tmp_path):
-    from door2door_etl_spark.io.versioned import VersionedParquetTable
-
     plain = tmp_path / "never_committed"
     plain.mkdir()
-    assert VersionedParquetTable(str(plain)).describe_history() == []
-    assert VersionedParquetTable(str(tmp_path / "missing")).describe_history() == []
+    assert ManifestTable(str(plain)).describe_history() == []
+    assert ManifestTable(str(tmp_path / "missing")).describe_history() == []
+
+
+def test_view_masks_deletion_vector_rows(spark, tmp_path):
+    """The view never shows a DV-masked row: a file a deletion vector
+    touches is a masked copy in the view, every other file a hard link,
+    and a plain read equals the manifest read.  Purging the DVs turns the
+    view back into links only."""
+    from door2door_etl_spark.io.manifest import purge_deletes_manifest
+
+    root = str(tmp_path / "tbl")
+    rows = [(i, f"v{i}", f"p{i % 2}") for i in range(20)]
+    merge_manifest(spark, root, _mk(spark, rows), key="k", partition_col="part")
+    delete_where_manifest(spark, root, "k IN (0, 2, 4)", mode="dv")
+    table = ManifestTable(root)
+    man = table.manifest(2)
+    assert man.get("dvs")
+    got = {r["k"] for r in spark.read.parquet(root).collect()}
+    assert got == {r["k"] for r in table.read(spark).collect()}
+    assert got == set(range(20)) - {0, 2, 4}
+
+    view = _view(root, 2)
+    for rel in man["files"]:
+        linked = os.path.samefile(view / rel, os.path.join(table.files_dir, rel))
+        assert linked == rel.startswith("part=p1"), rel  # DVs hit p0 only
+
+    purge_deletes_manifest(spark, root)
+    man = table.manifest(3)
+    assert not man.get("dvs")
+    assert {r["k"] for r in spark.read.parquet(root).collect()} == got
+    for rel in man["files"]:
+        assert os.path.samefile(_view(root, 3) / rel, os.path.join(table.files_dir, rel))
+
+
+def test_hourly_merges_keep_only_retained_files(spark, tmp_path):
+    """Per-commit vacuum frees the copies an hourly full-rewrite MERGE
+    leaves behind: after 5 merges under a zero retention floor, ``_files``
+    holds exactly the files the retained manifests list, and only the
+    retained versions have views."""
+    root = str(tmp_path / "tbl")
+    for hour in range(5):
+        merge_manifest(
+            spark, root, _mk(spark, [(hour, f"h{hour}", "p")]), key="k",
+            vacuum_min_age_hours=0.0,
+        )
+    table = ManifestTable(root)
+    assert table.versions() == [4, 5]
+    listed = {rel for v in table.versions() for rel in table.manifest(v)["files"]}
+    on_disk = {
+        os.path.relpath(p, table.files_dir)
+        for p in LocalFsOps().walk_files(table.files_dir)
+    }
+    assert on_disk == listed
+    assert _views(root) == ["data-v00000004", "data-v00000005"]
+    assert {r["k"] for r in spark.read.parquet(root).collect()} == set(range(5))
 
 
 def test_zorder_equal_depth_balances_skewed_buckets(spark):

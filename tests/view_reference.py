@@ -2,15 +2,12 @@
 evaluated from scratch over its sources' CURRENT snapshots, which the
 incrementally maintained state must equal."""
 
-from door2door_etl_spark.pipeline.aggview import (
-    IncrementalAggView,
-    _read_source,
-    _source_version,
-)
+from door2door_etl_spark.io.manifest import ManifestTable
+from door2door_etl_spark.pipeline.aggview import IncrementalAggView
 
 
 def _current(spark, root):
-    return _read_source(spark, root, _source_version(root))
+    return ManifestTable(root).read(spark)
 
 
 def full_recompute(spark, view):
