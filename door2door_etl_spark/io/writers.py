@@ -1,4 +1,4 @@
-"""Sinks: parquet table writer, key-based MERGE-style upsert, bookkeeping append.
+"""Sinks: key-based MERGE-style upsert, bookkeeping append, clustered exports.
 
 Covers SURVEY.md §2.2:
   K1  upsert into warehouse table -> :class:`ParquetMergeSink` (parquet
@@ -10,8 +10,8 @@ Covers SURVEY.md §2.2:
       union rewrite with new-rows-win semantics, idempotent by construction)
   K2  append-only metadata insert -> :func:`append_rows`
       (reference src/helper/postgres.py:35-86)
-  K3  staged-blob write           -> :func:`write_parquet_table` /
-      ``df.write.json`` bronze stage (reference src/helper/helper.py:30-40)
+  K3  staged-blob write           -> the ingestor's bronze parquet write,
+      ``pipeline/ingestor.py`` (reference src/helper/helper.py:30-40)
 
 Design note (scale): Delta Lake's MERGE would be the production answer
 (SURVEY.md §2.2 K1) but is not available in this container, so the upsert is
@@ -31,14 +31,6 @@ from pyspark.sql import functions as F
 
 from door2door_etl_spark.io.manifest import merge_manifest
 from door2door_etl_spark.operators import local
-
-
-def write_parquet_table(df: DataFrame, path: str, partition_by: list[str] | None = None) -> None:
-    """Overwrite-write a parquet table, optionally hour/date partitioned."""
-    writer = df.write.mode("overwrite")
-    if partition_by:
-        writer = writer.partitionBy(*partition_by)
-    writer.parquet(path)
 
 
 def append_rows(

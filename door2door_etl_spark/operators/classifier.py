@@ -227,6 +227,33 @@ def score_logreg(
     )
 
 
+def quality_keep(
+    docs: DataFrame,
+    weights: DataFrame,
+    text_col: str = "text",
+    id_col: str = "doc_id",
+    dim: int = 64,
+    binary: bool = True,
+    intercept: bool = True,
+    min_score: float = 0.5,
+) -> DataFrame:
+    """The rows of ``docs`` the trained classifier ``weights`` keeps: the
+    serving side of the quality filter.  The featurization config
+    (dim/binary/intercept) must match training.  At the default 0.5 the
+    exact margin-sign ``pred`` of :func:`score_logreg` decides (sigmoid is
+    monotone, so the boundary is float-robust); other thresholds compare
+    the score directly."""
+    feats = hashed_features(
+        docs, text_col=text_col, id_col=id_col, dim=dim, binary=binary,
+        intercept=intercept,
+    )
+    scored = score_logreg(docs, feats, weights, id_col=id_col)
+    keep = (
+        F.col("pred") if min_score == 0.5 else (F.col("score") >= F.lit(min_score))
+    )
+    return docs.join(scored.filter(keep).select(id_col), id_col, "left_semi")
+
+
 def dense_weights(
     spark, weights: DataFrame, dim: int, intercept: bool = True
 ) -> DataFrame:

@@ -21,7 +21,7 @@ the SAME atomic view version as the group updates (one
 ``merge_manifest`` batch), so an at-least-once redelivery of a window
 (crash between view commit and cursor commit) is detected by its ledger
 row and skipped — the same batch-ledger argument as
-``streaming/pipeline.stream_cms_maintenance``, moved into the table's
+``streaming/pipeline.stream_sketch_ledger``, moved into the table's
 own commit protocol.  Groups whose row count reaches zero stay as
 tombstoned rows (``n_rows = 0``) and are filtered on read; MERGE never
 needs a second (non-atomic) delete commit.

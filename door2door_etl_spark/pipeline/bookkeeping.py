@@ -94,21 +94,24 @@ class Bookkeeping:
 
     # -- S4: staged-file path lookup ----------------------------------------
     def ingestor_output_path(self, workflow_id: str) -> str | None:
-        """Point lookup: staged file path for a workflow (postgres.py:108-129)."""
+        """Point lookup: staged file path for a workflow (postgres.py:108-129).
+        When several executions match, the latest one wins (ties broken by
+        path).  The matching rows, one per execution of the workflow, are
+        collected in one job; ``limit(1)`` would be an incremental take,
+        which runs one or two jobs depending on which file it scans first."""
         df = self._read("ingestor")
         if df is None:
             return None
-        row = (
+        rows = (
             df.filter(
                 (F.col("workflow_id") == F.lit(workflow_id))
                 & F.col("traceback").isNull()
                 & (F.col("number_of_files_fetched") > 0)
             )
-            .select("file_destination_path")
-            .limit(1)
-            .first()
+            .select("code_execution_date", "file_destination_path")
+            .collect()
         )
-        return row[0] if row else None
+        return max(rows)[1] if rows else None
 
     # -- K2: append-only metadata inserts -----------------------------------
     def record_ingestor(

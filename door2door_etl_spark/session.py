@@ -71,6 +71,14 @@ def ensure_runtime_confs(spark: SparkSession) -> SparkSession:
     return spark
 
 
+def _default_driver_memory() -> str:
+    """Driver heap when ``SPARK_GRAFT_DRIVER_MEM`` does not set one: half
+    the host's physical memory, capped at 24g.  A fixed 24g let a driver
+    on a 15 GB host grow until the kernel killed it."""
+    half_mb = os.sysconf("SC_PAGE_SIZE") * os.sysconf("SC_PHYS_PAGES") // 2**21
+    return f"{min(half_mb, 24 * 1024)}m"
+
+
 def build_session(
     app_name: str = "door2door-etl-spark",
     master: str | None = None,
@@ -103,7 +111,10 @@ def build_session(
         # Arrow for the (rare) pandas-UDF paths and fast toPandas in tests.
         .config("spark.sql.execution.arrow.pyspark.enabled", "true")
         .config("spark.ui.enabled", "false")
-        .config("spark.driver.memory", os.environ.get("SPARK_GRAFT_DRIVER_MEM", "24g"))
+        .config(
+            "spark.driver.memory",
+            os.environ.get("SPARK_GRAFT_DRIVER_MEM") or _default_driver_memory(),
+        )
     )
     for key, value in (extra_confs or {}).items():
         builder = builder.config(key, value)

@@ -10,7 +10,7 @@ Structured Streaming provides each natively:
 | watermark table + (+1h)      | file-source checkpoint (exactly-once list)  |
 | hourly batch window          | ``F.window(at, '1 hour')`` tumbling window  |
 | in-batch dedup by derived id | ``dropDuplicatesWithinWatermark``           |
-| cross-batch upsert           | ``foreachBatch`` → MERGE (idempotent)       |
+| cross-batch upsert           | ``stream_batches`` → MERGE (idempotent)     |
 | late/malformed handling      | ``withWatermark`` + PERMISSIVE corrupt drop |
 
 Tests drive these with ``trigger(availableNow=True)`` — the batch-bounded
@@ -24,26 +24,74 @@ from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql import functions as F
 
 from door2door_etl_spark.io.manifest import ManifestTable, merge_manifest
+from door2door_etl_spark.io.writers import ParquetMergeSink
 from door2door_etl_spark.operators import local
 from door2door_etl_spark.pipeline.aggview import _group_key_expr
-from door2door_etl_spark.schemas.normalize import normalize
 from door2door_etl_spark.schemas.registry import EntitySchema
 from door2door_etl_spark.session import ensure_runtime_confs
 
 
-def _run_foreach_batch(
+def stream_batches(
     stream: DataFrame,
     checkpoint_dir: str,
-    fn,
+    batch_fn,
+    sink=None,
+    *,
+    key: str | None = None,
     query_name: str | None = None,
     available_now: bool = True,
 ):
-    """Start ``stream`` with ``fn(batch_df, batch_id)`` as its
-    ``foreachBatch`` sink and progress kept in ``checkpoint_dir``.  With
-    ``available_now`` the query processes what is available and stops;
-    without it, it keeps running until stopped.  Returns the
-    ``StreamingQuery``."""
-    writer = stream.writeStream.foreachBatch(fn).option(
+    """Run a batch operator on every micro-batch of ``stream``: the
+    engine's one ``foreachBatch`` adapter.  ``batch_fn(batch_df,
+    batch_id)`` sees each micro-batch as a static DataFrame, so any batch
+    operator runs on a stream unchanged.  Progress is kept in
+    ``checkpoint_dir``.  With ``available_now`` the query processes what
+    is available and stops; without it, it runs until stopped.  Returns
+    the ``StreamingQuery``.
+
+    **At-least-once in, effectively-once out.**  ``foreachBatch``
+    delivery is at-least-once: a crash between a batch's writes and the
+    checkpoint's commit marker redelivers that batch on restart, with
+    the same ``batch_id`` and the same input.  So a batch may land only
+    through a write that a redelivery repeats without changing the
+    result, as the reference does with a deterministic key and an upsert
+    (src/helper/helper.py:144-148, src/helper/postgres.py:173-181).
+    ``sink`` names the write:
+
+    * a directory (``str``): ``batch_fn`` returns a DataFrame that
+      OVERWRITES ``<sink>/batch_id=N``.  A redelivery rewrites the same
+      directory instead of appending a duplicate.
+    * a :class:`~door2door_etl_spark.io.writers.MergeSink`
+      (``ParquetMergeSink``, ``JdbcMergeSink``): ``batch_fn`` returns a
+      DataFrame that is MERGEd by ``key``.  Re-merging the same rows is a
+      no-op.  An empty result merges nothing.
+    * ``None``: ``batch_fn`` commits by itself, idempotently per batch,
+      and its return value is ignored.  Either the commit is keyed by the
+      batch id (a ``MultiTableTransaction`` whose ``txn_id`` derives from
+      it, an index commit tagged with it, a ledger row), or it is
+      idempotent by construction (a view's own window ledger, a MAX
+      merge, a tombstone).
+
+    A ``batch_fn`` that reads fresher state on a redelivery (the current
+    version of a dimension or of a model) converges to the fresher
+    answer.
+    """
+    if isinstance(sink, str):
+        def run(batch_df: DataFrame, batch_id: int) -> None:
+            batch_fn(batch_df, batch_id).write.mode("overwrite").parquet(
+                f"{sink}/batch_id={batch_id}"
+            )
+    elif sink is not None:
+        if key is None:
+            raise ValueError("a MergeSink discipline needs the merge key")
+
+        def run(batch_df: DataFrame, batch_id: int) -> None:
+            out = batch_fn(batch_df, batch_id)
+            if not out.isEmpty():
+                sink.merge(out, key=key)
+    else:
+        run = batch_fn
+    writer = stream.writeStream.foreachBatch(run).option(
         "checkpointLocation", checkpoint_dir
     )
     if query_name is not None:
@@ -248,109 +296,6 @@ def stream_sessionize(
     )
 
 
-def stream_upsert_to_warehouse(
-    spark: SparkSession,
-    events: DataFrame,
-    schema: EntitySchema,
-    warehouse_root: str,
-    checkpoint_dir: str,
-    sink=None,
-):
-    """foreachBatch MERGE: normalize each micro-batch with the same compiled
-    schema plan the batch handler uses, then idempotently upsert.  Restarted
-    or replayed micro-batches converge to the same table state (deterministic
-    key + MERGE — the streaming exactly-once pattern without a txn sink).
-
-    ``sink`` is any :class:`door2door_etl_spark.io.writers.MergeSink`;
-    default is the lake's manifest MERGE
-    (:func:`~door2door_etl_spark.io.manifest.merge_manifest`, local or
-    object store).  Pass a ``JdbcMergeSink`` to land in a transactional
-    warehouse — the micro-batch loop is identical."""
-    table = schema.target_table or schema.entity
-    target = f"{warehouse_root}/{table}"
-    filtered = events.filter(F.col("on") == schema.entity)
-
-    def upsert_batch(batch_df: DataFrame, batch_id: int) -> None:
-        silver = normalize(batch_df, schema)
-        if silver.isEmpty():
-            return
-        if sink is not None:
-            sink.merge(silver, key="event_generated_id")
-        else:
-            merge_manifest(spark, target, silver, key="event_generated_id")
-
-    return _run_foreach_batch(filtered, checkpoint_dir, upsert_batch)
-
-
-def stream_decontaminate(
-    docs_stream: DataFrame,
-    benchmark: DataFrame,
-    out_dir: str,
-    checkpoint_dir: str,
-    text_col: str = "text",
-    id_col: str = "doc_id",
-    shingle_n: int = 3,
-):
-    """Streaming corpus hygiene: continuously drop incoming documents that
-    share any word n-gram with a *static* benchmark/eval set — the
-    continuous-ingest twin of operators.dedup.ngram_decontaminate.
-
-    Doc-level "none of my shingles hit" cannot be a single stream-static
-    join (the contaminated-id set derives from the stream, and a
-    stream-stream anti join needs watermark bounds it doesn't have), so
-    this uses ``foreachBatch``: each micro-batch is a static frame and the
-    batch operator runs verbatim — benchmark shingles broadcast, map-side
-    semi + anti.  foreachBatch delivery is at-least-once (a batch can
-    replay after a partial failure), so each batch OVERWRITES its own
-    ``batch_id=N`` subdirectory — the replay rewrites the same files
-    instead of appending duplicates (effectively-once).  No streaming
-    state store; throughput is the batch operator's.
-    """
-    from door2door_etl_spark.operators.dedup import ngram_decontaminate
-
-    def filter_batch(batch_df: DataFrame, batch_id: int) -> None:
-        kept = ngram_decontaminate(
-            batch_df, benchmark, text_col=text_col, id_col=id_col, shingle_n=shingle_n
-        )
-        kept.write.mode("overwrite").parquet(f"{out_dir}/batch_id={batch_id}")
-
-    return _run_foreach_batch(docs_stream, checkpoint_dir, filter_batch)
-
-
-def stream_incremental_lsh_dedup(
-    docs_stream: DataFrame,
-    index,
-    out_dir: str,
-    checkpoint_dir: str,
-):
-    """Continuous-ingest admission filter: the streaming twin of
-    operators.dedup.incremental_lsh_dedup.  ``index`` is the STATIC
-    persisted band index of the already-admitted corpus (a
-    :class:`~door2door_etl_spark.operators.dedup.ManifestLshBandIndex`,
-    which carries the text/id columns and MinHash parameters); each
-    micro-batch runs the index's own admission rule
-    (``index.admit(update_index=False)``) and appends only the survivors.
-    The index is never updated here — for a self-updating index see
-    :func:`stream_manifest_lsh_admission`.
-
-    foreachBatch rather than a stream-static join for the same reason as
-    stream_decontaminate: the admitted-id set is an aggregate over the
-    batch's own band rows (doc-level "no band collided"), which a single
-    stream-static join cannot express.  foreachBatch delivery is
-    at-least-once — a batch can replay after a partial failure — so each
-    batch OVERWRITES its own ``batch_id=N`` subdirectory: the replay
-    rewrites the same files instead of appending duplicates, which is what
-    upgrades the sink to effectively-once.  No streaming state store is
-    involved; the only per-batch cost is the probe join itself.
-    """
-
-    def admit_batch(batch_df: DataFrame, batch_id: int) -> None:
-        kept = index.admit(batch_df, update_index=False)
-        kept.write.mode("overwrite").parquet(f"{out_dir}/batch_id={batch_id}")
-
-    return _run_foreach_batch(docs_stream, checkpoint_dir, admit_batch)
-
-
 def stream_hll_maintenance(
     spark: SparkSession,
     stream_df: DataFrame,
@@ -367,17 +312,11 @@ def stream_hll_maintenance(
     O(groups x 2^p) rows without re-scanning history — the streaming form
     of ``operators.sketches.hll_register_table``.
 
-    Why HLL (and Bloom), not CMS, is the streaming-native sketch here:
-    foreachBatch delivery is at-least-once, and MAX/union merges are
-    IDEMPOTENT — replaying a batch re-merges the same registers to the
-    same values, so no batch-id ledger is needed.  A SUM-merged sketch
-    (CMS) would double-count on replay and needs the MERGE-key ledger the
-    warehouse sink uses.
-
-    State is committed through the manifest MERGE keyed on
-    (group…, bucket) — snapshot isolation means a reader never sees a
-    half-merged sketch, and the commit itself tolerates a concurrent
-    batch writer.  Scale: the shuffled state per batch is register
+    MAX-merge is idempotent: a redelivered batch re-merges the same
+    registers to the same values, so no batch ledger is needed (compare
+    :func:`stream_sketch_ledger` for SUM-merged sketches).  The state
+    lands through :func:`stream_batches`' MERGE discipline, keyed on
+    (group…, bucket).  Scale: the shuffled state per batch is register
     partials (<= groups x 2^p rows), never event rows.
     """
     from pyspark.errors import AnalysisException
@@ -387,77 +326,71 @@ def stream_hll_maintenance(
         hll_register_table,
     )
 
-    def read_state() -> DataFrame | None:
+    def registers(batch_df: DataFrame, batch_id: int) -> DataFrame:
+        regs = hll_register_table(batch_df, group_cols, col, p=p, salt=salt)
         try:
-            cur = spark.read.parquet(table_root)
+            current = spark.read.parquet(table_root)
         except AnalysisException:
-            return None  # before the first commit
-        return cur.select(*group_cols, "bucket", "register")
-
-    def merge_batch(batch_df: DataFrame, batch_id: int) -> None:
-        batch_regs = hll_register_table(batch_df, group_cols, col, p=p, salt=salt)
-        current = read_state()
-        combined = (
-            hll_merge(current.unionByName(batch_regs), group_cols)
-            if current is not None
-            else batch_regs
-        )
-        keyed = combined.withColumn(
+            pass  # before the first commit
+        else:
+            regs = hll_merge(
+                current.select(*group_cols, "bucket", "register").unionByName(regs),
+                group_cols,
+            )
+        return regs.withColumn(
             "sketch_key", _group_key_expr([*group_cols, "bucket"])
         )
-        merge_manifest(spark, table_root, keyed, key="sketch_key")
 
-    return _run_foreach_batch(stream_df, checkpoint_dir, merge_batch)
+    return stream_batches(
+        stream_df, checkpoint_dir, registers,
+        ParquetMergeSink(spark, table_root), key="sketch_key",
+    )
 
 
-def stream_cms_maintenance(
+def stream_sketch_ledger(
     spark: SparkSession,
     stream_df: DataFrame,
-    item_col: str,
+    sketch_fn,
     table_root: str,
     checkpoint_dir: str,
-    depth: int = 3,
-    width: int = 64,
-    salt: str = "cms",
 ):
-    """Incrementally maintained Count-Min sketch over a stream — the
-    NON-idempotent-merge case :func:`stream_hll_maintenance` calls out,
-    solved with a batch ledger: state rows are keyed by
-    ``(batch_id, row, col)``, so an at-least-once replay of batch N
-    OVERWRITES batch N's own cells (MERGE upsert — idempotent) instead of
-    double-counting into a global cell.  Structured Streaming's
-    checkpoint guarantees batch ids are stable across restarts, which is
-    exactly what makes the ledger sound.
+    """Incrementally maintained SUM-merged sketch over a stream.
+    ``sketch_fn(batch_df)`` is the batch sketch operator, for example
+    ``lambda df: operators.sketches.cms_sketch_table(df, [], "tok")``
+    (Count-Min) or ``lambda df: hdr_histogram_table(df, ["g"], "v")``
+    (HDR histogram); it returns cells ``(cell…, cnt)``.
 
-    Read-side estimates SUM across batch rows (CMS merge is SUM —
-    :func:`read_cms_state` returns the collapsed global sketch).  State
-    is O(batches x depth x width) rows; periodic compaction folds old
-    batches together if the stream runs for years (sum rows into a
-    single negative batch_id via one MERGE).
+    SUM-merge is not idempotent: re-adding a redelivered batch would
+    double-count.  So the state is a batch ledger: each batch's cells are
+    keyed by ``(batch_id, cell…)`` and land through
+    :func:`stream_batches`' MERGE discipline, so a redelivered batch N
+    overwrites batch N's own rows.  Batch ids are stable across restarts
+    of one checkpoint, which is what makes the ledger sound.  The key
+    encodes NULLs per column, so NULL-bearing group tuples stay distinct.
+    :func:`read_sketch_ledger` collapses the ledger to the global sketch.
+    State is O(batches x cells) rows.
     """
-    from door2door_etl_spark.operators.sketches import cms_sketch_table
-
-    def merge_batch(batch_df: DataFrame, batch_id: int) -> None:
-        cells = cms_sketch_table(
-            batch_df, [], item_col, depth=depth, width=width, salt=salt
-        ).withColumn("batch_id", F.lit(batch_id))
-        keyed = cells.withColumn(
-            "cell_key", _group_key_expr(["batch_id", "row", "col"])
+    def ledger_rows(batch_df: DataFrame, batch_id: int) -> DataFrame:
+        cells = sketch_fn(batch_df)
+        cell_cols = [c for c in cells.columns if c != "cnt"]
+        return cells.withColumn("batch_id", F.lit(batch_id)).withColumn(
+            "cell_key", _group_key_expr(["batch_id", *cell_cols])
         )
-        merge_manifest(spark, table_root, keyed, key="cell_key")
 
-    return _run_foreach_batch(stream_df, checkpoint_dir, merge_batch)
-
-
-def read_cms_state(spark: SparkSession, table_root: str) -> DataFrame:
-    """Collapse a maintained CMS ledger to the global sketch
-    ``(row, col, cnt)`` — SUM across batch rows (the lossless CMS
-    merge); feed to ``operators.sketches.cms_point_estimate``."""
-    return (
-        spark.read.parquet(table_root)
-        .groupBy("row", "col")
-        .agg(F.sum("cnt").alias("cnt"))
+    return stream_batches(
+        stream_df, checkpoint_dir, ledger_rows,
+        ParquetMergeSink(spark, table_root), key="cell_key",
     )
+
+
+def read_sketch_ledger(spark: SparkSession, table_root: str) -> DataFrame:
+    """Collapse a :func:`stream_sketch_ledger` table to the global sketch
+    ``(cell…, cnt)``: SUM across batches, the lossless merge of Count-Min
+    and HDR.  Feed it to ``operators.sketches.cms_point_estimate`` or
+    ``hdr_quantiles``."""
+    ledger = spark.read.parquet(table_root)
+    cells = [c for c in ledger.columns if c not in ("batch_id", "cell_key", "cnt")]
+    return ledger.groupBy(*cells).agg(F.sum("cnt").alias("cnt"))
 
 
 def stream_heavy_hitters(
@@ -557,12 +490,11 @@ def stream_replicate_manifest_table(
     distributed key+hash diff, pinned to those snapshots) and applies it
     via :func:`apply_changes_manifest` (deletes, then MERGE).
 
-    Effectively-once: a crash between apply and checkpoint-commit
-    re-delivers the SAME manifest files next start, the diff recomputes
-    byte-identically against the same pinned versions, and the apply is
-    idempotent — the streaming twin of the cursor's at-least-once +
-    idempotent-apply contract.  A first batch that includes version 1
-    seeds the replica (the v0→v1 diff is "everything inserted").
+    Replay: :func:`stream_batches` with no sink.  A redelivered batch
+    holds the same manifest files, the diff recomputes against the same
+    pinned versions, and the apply is idempotent.  A first batch that
+    includes version 1 seeds the replica (the v0→v1 diff is "everything
+    inserted").
 
     Retention contract (same as the cursor): the source's vacuum keep
     floor must exceed the replica's maximum lag, or the diff raises the
@@ -613,7 +545,7 @@ def stream_replicate_manifest_table(
             fs=fs,
         )
 
-    return _run_foreach_batch(
+    return stream_batches(
         feed,
         checkpoint_dir,
         apply_batch,
@@ -666,8 +598,6 @@ def _admit_tagged(index, batch_df: DataFrame, tag: str) -> DataFrame:
         .join(other, id_col, "left_anti")
         .localCheckpoint(eager=True)
     )
-    if new.limit(1).count() == 0:
-        return seen
     return seen.unionByName(index.admit(new, tag=tag))
 
 
@@ -681,12 +611,14 @@ def stream_manifest_lsh_admission(
     micro-batch is admission-filtered against (and atomically appended
     to) a :class:`~door2door_etl_spark.operators.dedup.ManifestLshBandIndex`
     — the streaming completion of the manifest-versioned index story.
-    Where :func:`stream_incremental_lsh_dedup` probes a STATIC corpus
-    index, here today's admissions collide tomorrow's batch, and every
-    update lands bands + admitted ids in ONE manifest commit.
+    Where ``index.admit(batch, update_index=False)`` under
+    :func:`stream_batches` probes a STATIC corpus index, here today's
+    admissions collide tomorrow's batch, and every update lands bands +
+    admitted ids in ONE manifest commit.
 
-    Replay safety (foreachBatch is at-least-once): every admission is
-    committed TAGGED with its batch id, so the handler can tell a true
+    Replay: :func:`stream_batches`' overwrite discipline, plus an index
+    that remembers the batch.  Every admission is committed TAGGED with
+    its batch id, so the handler can tell a true
     REPLAY (this batch's own prior delivery — its admissions carry THIS
     batch id and must be re-emitted so the per-batch overwrite
     converges) from RE-DELIVERY of a document admitted by an EARLIER
@@ -708,87 +640,14 @@ def stream_manifest_lsh_admission(
     # batch's own replay (re-emitting instead of dropping them).
     run_id = _admission_run_id(checkpoint_dir)
 
-    def admit_batch(batch_df: DataFrame, batch_id: int) -> None:
-        kept = _admit_tagged(index, batch_df, f"{run_id}:{batch_id}")
-        kept.write.mode("overwrite").parquet(f"{out_dir}/batch_id={batch_id}")
-
-    return _run_foreach_batch(docs_stream, checkpoint_dir, admit_batch)
-
-
-def _quality_kept(
-    batch_df: DataFrame,
-    weights: DataFrame,
-    text_col: str,
-    id_col: str,
-    dim: int,
-    binary: bool,
-    intercept: bool,
-    min_score: float,
-) -> DataFrame:
-    """The rows of ``batch_df`` the classifier ``weights`` keeps."""
-    from door2door_etl_spark.operators.classifier import (
-        hashed_features,
-        score_logreg,
+    return stream_batches(
+        docs_stream,
+        checkpoint_dir,
+        lambda batch_df, batch_id: _admit_tagged(
+            index, batch_df, f"{run_id}:{batch_id}"
+        ),
+        out_dir,
     )
-
-    feats = hashed_features(
-        batch_df,
-        text_col=text_col,
-        id_col=id_col,
-        dim=dim,
-        binary=binary,
-        intercept=intercept,
-    )
-    scored = score_logreg(batch_df, feats, weights, id_col=id_col)
-    # sigmoid is monotone, so at the default 0.5 the exact margin-sign
-    # `pred` decides (float-robust boundary); other thresholds compare
-    # the score directly.
-    keep = (
-        F.col("pred") if min_score == 0.5 else (F.col("score") >= F.lit(min_score))
-    )
-    return batch_df.join(scored.filter(keep).select(id_col), id_col, "left_semi")
-
-
-def stream_quality_filter(
-    docs_stream: DataFrame,
-    weights: DataFrame,
-    out_dir: str,
-    checkpoint_dir: str,
-    text_col: str = "text",
-    id_col: str = "doc_id",
-    dim: int = 64,
-    binary: bool = True,
-    intercept: bool = True,
-    min_score: float = 0.5,
-):
-    """Deploy a trained quality classifier on the ingest stream: the
-    serving twin of operators.classifier (train offline on the corpus,
-    score every incoming document, keep the ones above ``min_score``).
-
-    ``weights`` is the STATIC trained weight relation (feature, w) from
-    train_logreg — dim-bounded, so the per-batch margin join always
-    broadcasts.  The featurization config (dim/binary/intercept) must
-    match training; the margin is exact arithmetic, and min_score = 0.5
-    reproduces the batch operator's margin-sign ``pred``.
-
-    foreachBatch rather than a stream-static join because the margin is a
-    per-document aggregate over the batch's own exploded feature rows —
-    not expressible as a single stream-static join without an unbounded
-    aggregation state.  foreachBatch delivery is at-least-once, so each
-    batch OVERWRITES its own ``batch_id=N`` subdirectory (replay rewrites
-    the same files — effectively-once, same discipline as
-    stream_decontaminate).  No streaming state store; per-batch cost is
-    one broadcast join + one partial aggregation.
-    """
-
-    def score_batch(batch_df: DataFrame, batch_id: int) -> None:
-        kept = _quality_kept(
-            batch_df, weights, text_col, id_col, dim, binary, intercept,
-            min_score,
-        )
-        kept.write.mode("overwrite").parquet(f"{out_dir}/batch_id={batch_id}")
-
-    return _run_foreach_batch(docs_stream, checkpoint_dir, score_batch)
 
 
 def stream_quality_filter_hot_reload(
@@ -804,23 +663,27 @@ def stream_quality_filter_hot_reload(
     min_score: float = 0.5,
     fs=None,
 ):
-    """:func:`stream_quality_filter` with the model served from a MODEL
-    REGISTRY: ``weights_root`` is a manifest table (io.manifest) holding
-    the trained weight relation, committed densely
-    (operators.classifier.dense_weights + merge_manifest key='feature' —
-    every version a full replacement).
+    """Deploy the trained quality classifier on the ingest stream, with
+    the model served from a MODEL REGISTRY: ``weights_root`` is a
+    manifest table (io.manifest) holding the trained weight relation,
+    committed densely (operators.classifier.dense_weights +
+    merge_manifest key='feature' — every version a full replacement).
+    Each micro-batch keeps the documents
+    :func:`~door2door_etl_spark.operators.classifier.quality_keep` keeps;
+    the featurization config (dim/binary/intercept) must match training.
 
     Each micro-batch resolves the LATEST COMMITTED version once and
     scores with that pinned snapshot, so a retrain landing mid-stream
     swaps the model atomically BETWEEN batches, never within one, and
-    every output row carries ``model_version`` for provenance.  Replays
-    of a batch re-resolve the version — with the overwrite-per-batch
-    sink that makes the replay adopt the NEWEST model, which is the
-    desired behavior for a quality filter (re-scoring with a better
-    model is an upgrade, not a correctness violation; pin to a fixed
-    version via stream_quality_filter with a read_version snapshot if
-    bitwise replay matters more than freshness)."""
-    def score_batch(batch_df: DataFrame, batch_id: int) -> None:
+    every output row carries ``model_version`` for provenance.  Output
+    lands through :func:`stream_batches`' overwrite discipline in
+    ``out_dir/batch_id=N``; a redelivered batch re-resolves the version
+    and so adopts the NEWEST model (re-scoring with a better model is an
+    upgrade, not a correctness violation).  To pin a fixed model, run
+    ``quality_keep`` with fixed weights under :func:`stream_batches`."""
+    from door2door_etl_spark.operators.classifier import quality_keep
+
+    def score_batch(batch_df: DataFrame, batch_id: int) -> DataFrame:
         spark = batch_df.sparkSession
         table = (
             ManifestTable(weights_root, fs=fs)
@@ -834,101 +697,12 @@ def stream_quality_filter_hot_reload(
                 "merge_manifest a dense weight relation first"
             )
         weights = table.read(spark, version).select("feature", "w")
-        kept = _quality_kept(
+        return quality_keep(
             batch_df, weights, text_col, id_col, dim, binary, intercept,
             min_score,
         ).withColumn("model_version", F.lit(version))
-        kept.write.mode("overwrite").parquet(f"{out_dir}/batch_id={batch_id}")
 
-    return _run_foreach_batch(docs_stream, checkpoint_dir, score_batch)
-
-
-def stream_hdr_maintenance(
-    spark: SparkSession,
-    stream_df: DataFrame,
-    group_cols: list[str],
-    value_col: str,
-    table_root: str,
-    checkpoint_dir: str,
-    sub_bits: int = 4,
-):
-    """Incrementally maintained HDR histogram over a stream — same
-    batch-ledger discipline as :func:`stream_cms_maintenance` (HDR merge
-    is SUM, i.e. non-idempotent, so an at-least-once replay must
-    overwrite its own batch's rows, never re-add them): state rows are
-    keyed by ``(batch_id, group..., bin)`` and MERGE-upserted per batch.
-
-    Read back with :func:`read_hdr_state` and feed
-    ``operators.sketches.hdr_quantiles`` — streaming ingestion thereby
-    keeps per-group quantile estimates continuously fresh with
-    O(batches x groups x bins) state and no raw-value retention."""
-    from door2door_etl_spark.operators.sketches import hdr_histogram_table
-
-    def merge_batch(batch_df: DataFrame, batch_id: int) -> None:
-        bins = hdr_histogram_table(
-            batch_df, group_cols, value_col, sub_bits=sub_bits
-        ).withColumn("batch_id", F.lit(batch_id))
-        keyed = bins.withColumn(
-            "cell_key", _group_key_expr(["batch_id", *group_cols, "bin"])
-        )
-        merge_manifest(spark, table_root, keyed, key="cell_key")
-
-    return _run_foreach_batch(stream_df, checkpoint_dir, merge_batch)
-
-
-def read_hdr_state(
-    spark: SparkSession, table_root: str, group_cols: list[str]
-) -> DataFrame:
-    """Collapse a maintained HDR ledger to the global per-group bin table
-    ``(group..., bin, cnt)`` — SUM across batch rows (the lossless HDR
-    merge); feed to ``operators.sketches.hdr_quantiles``."""
-    return (
-        spark.read.parquet(table_root)
-        .groupBy(*group_cols, "bin")
-        .agg(F.sum("cnt").alias("cnt"))
-    )
-
-
-def stream_aggview_maintenance(
-    spark: SparkSession,
-    view,
-    checkpoint_dir: str,
-    available_now: bool = True,
-    source: "StreamSourceFactory | None" = None,
-):
-    """Continuous incremental view maintenance: tail a MANIFEST source
-    table's commit log (same micro-batch file source as
-    :func:`stream_replicate_manifest_table`) and advance an
-    :class:`~door2door_etl_spark.pipeline.aggview.IncrementalAggView`
-    once per discovered commit batch.
-
-    Unlike the replication stream, the commit stream here is purely a
-    NOTIFICATION channel — the refresh itself is driven by the view's own
-    durable cursor, and its window ledger commits atomically with the
-    group updates, so a redelivered notification (crash between refresh
-    and checkpoint commit) triggers a refresh that no-ops or
-    replay-skips.  Nothing about correctness depends on the stream's
-    delivery guarantees; the stream only bounds STALENESS.
-    """
-    import os as _os
-
-    src = ManifestTable(view.source_root)
-
-    def refresh_batch(batch_df: DataFrame, batch_id: int) -> None:
-        if batch_df.limit(1).count() == 0:
-            return
-        view.refresh(spark)
-
-    from door2door_etl_spark.streaming.sources import commit_log_source
-
-    feed = (source or commit_log_source(src.manifests_dir))(spark)
-    return _run_foreach_batch(
-        feed,
-        checkpoint_dir,
-        refresh_batch,
-        query_name=f"aggview:{_os.path.basename(view.view_root.rstrip('/'))}",
-        available_now=available_now,
-    )
+    return stream_batches(docs_stream, checkpoint_dir, score_batch, out_dir)
 
 
 def stream_curate(
@@ -959,7 +733,8 @@ def stream_curate(
     stage is redundant here — admission subsumes it) → MERGE-upsert into
     the curated versioned table.
 
-    Replay safety, layered end to end (foreachBatch is at-least-once):
+    Replay safety, layered end to end (:func:`stream_batches` with no
+    sink; the batch commits itself):
 
     * the admission stage reuses :func:`stream_manifest_lsh_admission`'s
       run-id-namespaced batch tags, so a true replay re-emits this
@@ -1048,7 +823,7 @@ def stream_curate(
             f"{funnel_root}/batch_id={batch_id}"
         )
 
-    return _run_foreach_batch(docs_stream, checkpoint_dir, curate_batch)
+    return stream_batches(docs_stream, checkpoint_dir, curate_batch)
 
 
 def stream_index_documents(
@@ -1061,10 +836,9 @@ def stream_index_documents(
     :class:`~door2door_etl_spark.operators.search.ManifestBM25Index`
     commit, stamped with a run-id-namespaced batch tag.
 
-    Replay safety (foreachBatch is at-least-once): a crash between the
-    index commit and the checkpoint commit re-delivers the batch; the
-    tag test (:meth:`~door2door_etl_spark.operators.search.ManifestBM25Index.has_tag`)
-    skips the re-delivery, so postings are never double-counted.
+    Replay: :func:`stream_batches` with no sink; the tag test
+    (:meth:`~door2door_etl_spark.operators.search.ManifestBM25Index.has_tag`)
+    skips a redelivered batch, so postings are never double-counted.
     DOCUMENT-level dedup is deliberately not this stream's job — an
     upstream admission stage (:func:`stream_curate` /
     :func:`stream_manifest_lsh_admission`) owns which documents exist;
@@ -1074,45 +848,10 @@ def stream_index_documents(
 
     def index_batch(batch_df: DataFrame, batch_id: int) -> None:
         tag = f"{run_id}:{batch_id}"
-        if index.has_tag(tag):
-            return  # true replay: this delivery already committed
-        if batch_df.limit(1).count() == 0:
-            return
-        index.add(batch_df.localCheckpoint(eager=True), tag=tag)
+        if not index.has_tag(tag):  # else a redelivery, already committed
+            index.add(batch_df, tag=tag)
 
-    return _run_foreach_batch(docs_stream, checkpoint_dir, index_batch)
-
-
-def stream_index_removals(
-    changes_stream: DataFrame,
-    index,
-    checkpoint_dir: str,
-    id_col: str = "doc_id",
-):
-    """Continuous inverted-index REMOVAL maintenance: deletes flowing
-    off the curated lake (a change feed carrying ``_change_type``, or
-    any stream of doomed ids) tombstone their documents out of the
-    :class:`~door2door_etl_spark.operators.search.ManifestBM25Index`
-    via :meth:`~door2door_etl_spark.operators.search.ManifestBM25Index.remove`
-    — one atomic tombstone + negative-stat commit per micro-batch, so a
-    doc deleted upstream stops being served and N/avgdl stay honest.
-
-    Replay safety needs no tag here: ``remove`` is idempotent (an
-    already-tombstoned id contributes nothing and an all-duplicate
-    batch commits nothing), so at-least-once redelivery is a no-op.
-    Rows with a ``_change_type`` column are filtered to deletes;
-    streams without the column are treated as pure delete feeds."""
-
-    def remove_batch(batch_df: DataFrame, batch_id: int) -> None:
-        doomed = batch_df
-        if "_change_type" in batch_df.columns:
-            doomed = batch_df.filter(F.col("_change_type") == "delete")
-        doomed = doomed.select(id_col)
-        if doomed.limit(1).count() == 0:
-            return
-        index.remove(doomed.localCheckpoint(eager=True))
-
-    return _run_foreach_batch(changes_stream, checkpoint_dir, remove_batch)
+    return stream_batches(docs_stream, checkpoint_dir, index_batch)
 
 
 def stream_validate(
@@ -1132,15 +871,14 @@ def stream_validate(
     per-rule metrics append to a ledger keyed by batch id (the
     data-quality time series an operator alarms on).
 
-    Replay posture (the family's standing at-least-once discipline):
-    the target MERGE is idempotent by key; quarantine and metrics are
-    per-batch OVERWRITES of their own ``batch_id=N`` subdirectory, so a
-    replayed batch rewrites the same files instead of appending
-    duplicates.  Fail-mode rules abort the batch function — the stream
-    STOPS rather than landing a batch that breaks an invariant, which
-    is exactly Delta's CHECK-constraint posture carried to streaming.
+    Replay: passing rows land through :func:`stream_batches`' MERGE
+    discipline; quarantine and metrics overwrite their own
+    ``batch_id=N`` subdirectory.  Fail-mode rules abort the batch
+    function — the stream STOPS rather than landing a batch that breaks
+    an invariant, which is exactly Delta's CHECK-constraint posture
+    carried to streaming.
     """
-    def validate_batch(batch_df: DataFrame, batch_id: int) -> None:
+    def validate_batch(batch_df: DataFrame, batch_id: int) -> DataFrame:
         passed, quarantined, metrics = suite.validate(batch_df)
         bad = quarantined.withColumn(
             "_quarantined_rules", F.col("_violated")
@@ -1152,52 +890,11 @@ def stream_validate(
             metrics.write.mode("overwrite").parquet(
                 f"{metrics_root}/batch_id={batch_id}"
             )
-        if not passed.isEmpty():
-            merge_manifest(spark, target_root, passed, key=key)
+        return passed
 
-    return _run_foreach_batch(batches, checkpoint_dir, validate_batch)
-
-
-def _merge_then_refresh(spark: SparkSession, view, root: str, key: str):
-    """foreachBatch body of the ingest-driven views: MERGE the batch into
-    the view's source ``root`` by ``key``, then advance the view."""
-    def apply_batch(batch_df: DataFrame, batch_id: int) -> None:
-        if batch_df.isEmpty():
-            return
-        merge_manifest(spark, root, batch_df, key=key)
-        view.refresh(spark)
-
-    return apply_batch
-
-
-def stream_aggview_ingest(
-    spark: SparkSession,
-    batches: DataFrame,
-    view,
-    checkpoint_dir: str,
-):
-    """INGEST-driven continuously maintained aggregate view: each
-    micro-batch MERGEs into the view's source table and immediately
-    advances the :class:`pipeline.aggview.IncrementalAggView` from the
-    change feed — dashboard-grain aggregates that lag ingestion by one
-    micro-batch, never recomputed from scratch.  Sibling of
-    :func:`stream_aggview_maintenance` (the COMMIT-LOG-driven form that
-    watches an existing table's commits); this form owns the ingest
-    itself, for views whose source the stream is the sole writer of.
-
-    Replay posture: the source MERGE is idempotent by the view's key,
-    and ``refresh()`` is effectively-once BY CONSTRUCTION — the applied
-    window's ledger row commits atomically with the group updates, and
-    the landed-ledger scan advances the cursor past windows a crash
-    already applied (`pipeline/aggview.py` crash-window tests).  So an
-    at-least-once redelivery of a micro-batch converges: the re-MERGE
-    is a no-op, the re-refresh sees an empty change window.  Per-batch
-    maintenance cost is O(touched groups), the module's standing
-    contract."""
-    return _run_foreach_batch(
-        batches,
-        checkpoint_dir,
-        _merge_then_refresh(spark, view, view.source_root, view.key),
+    return stream_batches(
+        batches, checkpoint_dir, validate_batch,
+        ParquetMergeSink(spark, target_root), key=key,
     )
 
 
@@ -1221,8 +918,9 @@ def stream_scd2_maintenance(
     Grain: SCD2 intervals are per micro-batch — multiple changes of one
     key inside a batch collapse to the latest (ordered by ``ts_col``
     with the tracked attributes as deterministic tiebreak).  Replay
-    posture: the effective timestamp derives from the BATCH DATA (max
-    event time), so an at-least-once redelivery re-applies at the same
+    (:func:`stream_batches` with no sink): the effective timestamp
+    derives from the BATCH DATA (max event time), so a redelivery
+    re-applies at the same
     effective time, classifies every key as unchanged, and merges
     nothing — idempotent by construction.  A FRESH-checkpoint replay of
     historical batches against an already-advanced dimension is
@@ -1235,9 +933,9 @@ def stream_scd2_maintenance(
     from door2door_etl_spark.pipeline.scd import scd2_merge
 
     def apply_batch(batch_df: DataFrame, batch_id: int) -> None:
-        if batch_df.isEmpty():
-            return
         eff = batch_df.agg(F.max(ts_col).cast("string")).collect()[0][0]
+        if eff is None:
+            return  # no event time in the batch: nothing to apply
         latest = dedup_first_wins(
             batch_df,
             [key],
@@ -1253,48 +951,7 @@ def stream_scd2_maintenance(
             effective_ts=eff,
         )
 
-    return _run_foreach_batch(batches, checkpoint_dir, apply_batch)
-
-
-def stream_txn_co_commit(
-    spark: SparkSession,
-    batches: DataFrame,
-    ops_builder,
-    journal_root: str,
-    checkpoint_dir: str,
-    epoch=None,
-):
-    """Exactly-once MULTI-TABLE streaming sink: each micro-batch's
-    derived table operations commit through one journaled
-    :class:`io.txn.MultiTableTransaction` — the curated corpus and its
-    stats ledger (or any composite state) move together, with
-    roll-forward crash recovery, and (with ``epoch``) cross-table
-    snapshot isolation for readers.
-
-    ``ops_builder(batch_df) -> list[TxnOp]`` declares what the batch
-    writes.  Exactly-once: the transaction id derives from the
-    micro-batch id, so an at-least-once redelivery finds the completed
-    journal entry and returns without touching any table (appends
-    included — the usual streaming-append double-write hazard is
-    closed by the journal, not by tag probes alone); a crash mid-batch
-    resumes from the STAGED payloads, never re-reading the (possibly
-    changed) input.  Journal scope: batch ids restart at zero for a
-    fresh checkpoint, so a lost-checkpoint rerun over the SAME input is
-    skipped by the journal (the desired exactly-once outcome) — but a
-    fresh checkpoint over DIFFERENT input needs a fresh journal, or its
-    early batches would be wrongly skipped."""
-    from door2door_etl_spark.io.txn import MultiTableTransaction
-
-    txn = MultiTableTransaction(journal_root, epoch=epoch)
-
-    def apply_batch(batch_df: DataFrame, batch_id: int) -> None:
-        if batch_df.isEmpty():
-            return
-        ops = ops_builder(batch_df)
-        if ops:
-            txn.run(spark, ops, txn_id=f"batch{batch_id:08d}")
-
-    return _run_foreach_batch(batches, checkpoint_dir, apply_batch)
+    return stream_batches(batches, checkpoint_dir, apply_batch)
 
 
 def stream_spatial_density(
@@ -1320,79 +977,4 @@ def stream_spatial_density(
         )
         .agg(F.count(F.lit(1)).alias("n_points"))
         .select(F.col("_w.start").alias("window_start"), "cx", "cy", "n_points")
-    )
-
-
-def stream_enrich_with_dim(
-    facts_stream: DataFrame,
-    dim_root: str,
-    out_dir: str,
-    checkpoint_dir: str,
-    fk: str,
-    dim_key: str,
-    dim_cols: list[str],
-    how: str = "left",
-    epoch=None,
-    broadcast_dim: bool = True,
-):
-    """Stream-static enrichment against a HOT dimension table: every
-    micro-batch re-resolves the dimension's current manifest
-    (or through a :class:`door2door_etl_spark.io.txn.LakeEpoch` pin when
-    ``epoch`` is passed) AT BATCH TIME — so a dimension MERGE landing
-    between micro-batches is visible to every later batch.  This is the
-    fix for the classic stream-static join staleness pitfall: a plan-time
-    static side is snapshotted once per *query* start, while production
-    dimensions change under a long-running stream.  With ``epoch``, the
-    batch additionally reads the same atomic version set as every other
-    epoch reader (no torn multi-table views mid-transaction).
-
-    Effectively-once: foreachBatch is at-least-once, so each batch
-    OVERWRITES its own ``batch_id=N`` directory (the
-    ``stream_decontaminate`` discipline) — a replayed batch rewrites the
-    same files.  Note the replayed batch re-reads the dimension's CURRENT
-    version, so replay convergence is to the fresher enrichment — the
-    correct answer for a hot dimension.
-
-    Scale: the dimension is broadcast by default (the many-to-one
-    enrichment shape); pass ``broadcast_dim=False`` for a dimension past
-    executor memory and let AQE pick the join strategy.
-    """
-    def enrich_batch(batch_df: DataFrame, batch_id: int) -> None:
-        spark = batch_df.sparkSession
-        if epoch is not None:
-            dim = epoch.read_table(spark, dim_root)
-        else:
-            dim = ManifestTable(dim_root).read(spark)
-        dim = dim.select(F.col(dim_key).alias(fk), *dim_cols)
-        if broadcast_dim:
-            dim = F.broadcast(dim)
-        out = batch_df.join(dim, fk, how)
-        out.write.mode("overwrite").parquet(f"{out_dir}/batch_id={batch_id}")
-
-    return _run_foreach_batch(facts_stream, checkpoint_dir, enrich_batch)
-
-
-def stream_joinview_ingest(
-    spark: SparkSession,
-    facts: DataFrame,
-    view,
-    checkpoint_dir: str,
-):
-    """INGEST-driven continuously maintained JOIN view: each micro-batch
-    MERGEs the incoming facts into the view's LEFT source table and
-    immediately advances the
-    :class:`pipeline.joinview.IncrementalJoinView` from BOTH change
-    feeds — so the maintained enrichment stays one micro-batch behind
-    ingestion AND picks up any dimension commits (updates, deletes,
-    late-arriving rows) other writers landed since the last batch.
-    Sibling of :func:`stream_aggview_ingest`, same replay posture: the
-    fact MERGE is idempotent by the left key, and ``refresh()`` is
-    effectively-once by the window ledger + landed-frontier recovery
-    (`tests/test_joinview.py` crash-window tests), so an at-least-once
-    micro-batch redelivery converges.  Per-batch maintenance cost is
-    O(|batch|) + O(facts referencing changed dimension keys)."""
-    return _run_foreach_batch(
-        facts,
-        checkpoint_dir,
-        _merge_then_refresh(spark, view, view.left_root, view.left_key),
     )

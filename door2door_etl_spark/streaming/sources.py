@@ -21,9 +21,9 @@ Two contracts exist:
   columns.  :func:`rate_events_source` is the in-sandbox contract proof:
   it adapts Spark's broker-free ``rate`` source to the same shape.
 
-* **Commit-log source** (:func:`stream_replicate_manifest_table` /
-  :func:`stream_aggview_maintenance`): one ``value: string`` row per
-  manifest commit record.  The default tails the table's manifests
+* **Commit-log source** (:func:`stream_replicate_manifest_table`, or
+  any :func:`stream_batches` caller that follows a table's commits): one
+  ``value: string`` row per manifest commit record.  The default tails the table's manifests
   directory (``ManifestTable.manifests_dir``) as a text
   file stream (:func:`commit_log_source`); a bus-backed lakehouse would
   publish commit JSON to a topic and adapt it to the same single-column

@@ -102,11 +102,10 @@ def test_streaming_merge_races_batch_merge(spark, tmp_path, monkeypatch):
     for the same table: the batch writer wins the claim mid-flight, the
     streaming merge retries against the new snapshot, and BOTH commits
     land (retry path exercised end-to-end through foreachBatch)."""
+    from door2door_etl_spark.io.writers import ParquetMergeSink
+    from door2door_etl_spark.schemas.normalize import normalize
     from door2door_etl_spark.schemas.registry import builtin_door2door_schemas
-    from door2door_etl_spark.streaming import (
-        stream_events,
-        stream_upsert_to_warehouse,
-    )
+    from door2door_etl_spark.streaming import stream_batches, stream_events
 
     src = tmp_path / "landing"
     src.mkdir()
@@ -126,14 +125,17 @@ def test_streaming_merge_races_batch_merge(spark, tmp_path, monkeypatch):
 
     (src / "a.json").write_text("\n".join(vehicle(i, i) for i in range(1, 4)))
     schema = builtin_door2door_schemas()["vehicle"]
-    warehouse = tmp_path / "warehouse"
-    target = str(warehouse / "vehicle_location")
+    target = str(tmp_path / "warehouse" / "vehicle_location")
+
+    def upsert():
+        return stream_batches(
+            stream_events(spark, str(src)), str(tmp_path / "ckpt0"),
+            lambda df, _: normalize(df, schema),
+            ParquetMergeSink(spark, target), key="event_generated_id",
+        )
 
     # Seed the table so the streaming merge computes against version >= 1.
-    q0 = stream_upsert_to_warehouse(
-        spark, stream_events(spark, str(src)), schema, str(warehouse),
-        str(tmp_path / "ckpt0"),
-    )
+    q0 = upsert()
     q0.awaitTermination(120)
     seeded = spark.read.parquet(target).count()
     assert seeded == 3
@@ -164,10 +166,7 @@ def test_streaming_merge_races_batch_merge(spark, tmp_path, monkeypatch):
     # New events arrive; the streaming MERGE must retry past the batch
     # writer's commit and still land its rows.
     (src / "b.json").write_text("\n".join(vehicle(i, 30 + i) for i in (8, 9)))
-    q = stream_upsert_to_warehouse(
-        spark, stream_events(spark, str(src)), schema, str(warehouse),
-        str(tmp_path / "ckpt0"),
-    )
+    q = upsert()
     q.awaitTermination(120)
     monkeypatch.undo()
 

@@ -170,7 +170,7 @@ def test_stream_joinview_ingest_follows_both_sides(spark, roots, tmp_path):
     new input leaves it unchanged."""
     import json
 
-    from door2door_etl_spark.streaming.pipeline import stream_joinview_ingest
+    from door2door_etl_spark.streaming import stream_batches
 
     merge_manifest(spark, roots["right"], _cust(spark, [(10, "A")]), key="ckey")
     # seed the left source so the view can seed before streaming
@@ -183,7 +183,13 @@ def test_stream_joinview_ingest_follows_both_sides(spark, roots, tmp_path):
     (src / "f0.json").write_text(json.dumps({"okey": 2, "ckey": 10, "total": 8.0}))
     stream = spark.readStream.schema("okey int, ckey int, total double").json(str(src))
     ckpt = str(tmp_path / "ckpt")
-    q = stream_joinview_ingest(spark, stream, view, ckpt)
+
+    def ingest(df, _):
+        # MERGE the facts into the left source, then advance the view
+        merge_manifest(spark, roots["left"], df, key="okey")
+        view.refresh(spark)
+
+    q = stream_batches(stream, ckpt, ingest)
     q.awaitTermination(120)
     got = _assert_parity(spark, view)
     assert ("2", "10", 8.0, "A") in got
@@ -192,7 +198,7 @@ def test_stream_joinview_ingest_follows_both_sides(spark, roots, tmp_path):
     merge_manifest(spark, roots["right"], _cust(spark, [(10, "A2")]), key="ckey")
     (src / "f1.json").write_text(json.dumps({"okey": 3, "ckey": 10, "total": 9.0}))
     stream2 = spark.readStream.schema("okey int, ckey int, total double").json(str(src))
-    q2 = stream_joinview_ingest(spark, stream2, view, ckpt)
+    q2 = stream_batches(stream2, ckpt, ingest)
     q2.awaitTermination(120)
     got = _assert_parity(spark, view)
     assert ("3", "10", 9.0, "A2") in got
@@ -201,7 +207,7 @@ def test_stream_joinview_ingest_follows_both_sides(spark, roots, tmp_path):
     before = got
     # replay with no new input: converged, untouched
     stream3 = spark.readStream.schema("okey int, ckey int, total double").json(str(src))
-    q3 = stream_joinview_ingest(spark, stream3, view, ckpt)
+    q3 = stream_batches(stream3, ckpt, ingest)
     q3.awaitTermination(120)
     assert _assert_parity(spark, view) == before
 

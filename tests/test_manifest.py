@@ -312,11 +312,9 @@ def test_streaming_upsert_onto_manifest_table(spark, tmp_path):
     an injected ParquetMergeSink — idempotent replay, and the view agrees
     with the manifest read."""
     from door2door_etl_spark.io.writers import ParquetMergeSink
+    from door2door_etl_spark.schemas.normalize import normalize
     from door2door_etl_spark.schemas.registry import builtin_door2door_schemas
-    from door2door_etl_spark.streaming import (
-        stream_events,
-        stream_upsert_to_warehouse,
-    )
+    from door2door_etl_spark.streaming import stream_batches, stream_events
 
     src = tmp_path / "landing"
     src.mkdir()
@@ -335,24 +333,24 @@ def test_streaming_upsert_onto_manifest_table(spark, tmp_path):
     ]
     (src / "a.json").write_text("\n".join(lines))
     schema = builtin_door2door_schemas()["vehicle"]
-    warehouse = tmp_path / "warehouse"
-    target = str(warehouse / "vehicle_location")
+    target = str(tmp_path / "warehouse" / "vehicle_location")
     sink = ParquetMergeSink(spark, target)
 
-    q = stream_upsert_to_warehouse(
-        spark, stream_events(spark, str(src)), schema, str(warehouse),
-        str(tmp_path / "ckpt1"), sink=sink,
-    )
+    def upsert(ckpt):
+        return stream_batches(
+            stream_events(spark, str(src)), str(tmp_path / ckpt),
+            lambda df, _: normalize(df, schema), sink,
+            key="event_generated_id",
+        )
+
+    q = upsert("ckpt1")
     q.awaitTermination(120)
     table = ManifestTable(target)
     assert table.read(spark).count() == 3
     assert spark.read.parquet(target).count() == 3
 
     # Fresh-checkpoint replay of the same data converges, not duplicates.
-    q2 = stream_upsert_to_warehouse(
-        spark, stream_events(spark, str(src)), schema, str(warehouse),
-        str(tmp_path / "ckpt2"), sink=sink,
-    )
+    q2 = upsert("ckpt2")
     q2.awaitTermination(120)
     assert table.read(spark).count() == 3
 

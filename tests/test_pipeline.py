@@ -129,6 +129,32 @@ def test_failed_hour_excluded_from_watermark(spark, tmp_path):
     assert book.next_fetch_hour() == HOUR + dt.timedelta(hours=1)
 
 
+def test_ingestor_output_path_latest_execution_wins(spark, tmp_path):
+    book = Bookkeeping(spark, str(tmp_path / "monitor"))
+    book.record_ingestor("w1", HOUR, 3, "/first")
+    book.record_ingestor("w1", HOUR, 3, "/second")
+    book.record_ingestor("w1", HOUR, 3, "/failed", traceback="boom")
+    assert book.ingestor_output_path("w1") == "/second"
+
+
+def test_ingestor_output_path_runs_fixed_jobs(spark, tmp_path):
+    """The lookup runs one job whichever bookkeeping file holds the match;
+    an incremental take ran one or two."""
+    book = Bookkeeping(spark, str(tmp_path / "monitor"))
+    for i in range(4):  # one appended file per execution
+        book.record_ingestor(f"w{i}", HOUR, 1, f"/p{i}")
+    sc = spark.sparkContext
+    jobs = []
+    try:
+        for i in range(4):
+            sc.setJobGroup(f"lookup-w{i}", "ingestor_output_path")
+            assert book.ingestor_output_path(f"w{i}") == f"/p{i}"
+            jobs.append(len(sc.statusTracker().getJobIdsForGroup(f"lookup-w{i}")))
+    finally:
+        sc.setJobGroup(None, None)
+    assert jobs == [1, 1, 1, 1], jobs
+
+
 def test_failed_first_append_leaves_bookkeeping_readable(spark, tmp_path, monkeypatch):
     """A first bookkeeping append that dies inside its write job leaves an
     empty table directory behind.  The watermark and staged-path lookups

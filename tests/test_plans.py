@@ -1184,10 +1184,16 @@ TEST_ONLY_ALLOWLIST = {
     "ManifestTable.prune_files": "file-skipping probe over manifest stats; the pruning half of read_where, pinned by the stats tests",
     "ManifestTable.read_where": "range-predicate pruned read of a manifest table (read_keys is its equality form)",
     "ManifestTable.export_snapshot": "hand-off of a snapshot as plain parquet to readers that do not speak the manifest protocol",
+    "resolve_table_path": "the current view's directory: a path an in-flight plain-parquet reader can pin across commits",
+    "delete_where_manifest": "predicate DELETE (copy-on-write or deletion vectors) for callers that hold a predicate, not a key frame",
+    "convert_delta_to_manifest": "one-off adoption of an existing Delta table into the manifest protocol",
+    "JdbcMergeSink": "the MergeSink for a JDBC warehouse; a deployment injects it, and no JDBC server runs here",
     "configure_s3a": "non-secret s3a settings for S3-compatible stores; only the opt-in live S3 test has an endpoint",
     "ChangeFeedCursor.poll": "pull-style change-feed window for replicas outside the streaming path",
     "write_sorted_parquet": "range-clustered parquet export with disjoint per-file key ranges",
     "write_zorder_parquet": "Morton-clustered parquet export for multi-column data skipping",
+    # schemas
+    "load_schema_registry": "loads a deployment's entity YAML; the pipeline itself runs the built-in entities",
     # operators
     "sample_frames": "video frame sampling over the AVI frame rows",
     "decode_image": "single-asset decode entry over the per-format decoders the batch operators use",
@@ -1203,23 +1209,27 @@ TEST_ONLY_ALLOWLIST = {
     # pipeline
     "read_current": "the live slice of an SCD2 dimension written by scd2_merge",
     "read_asof": "the point-in-time slice of an SCD2 dimension",
-    # streaming: the continuous forms of batch operators; a deployment
-    # starts them, nothing in the repo runs a long-lived stream
-    "read_hdr_state": "reader of stream_hdr_maintenance's ledger, like read_cms_state",
-    "stream_decontaminate": "continuous n-gram decontamination",
-    "stream_incremental_lsh_dedup": "continuous near-duplicate admission against a static index",
-    "stream_quality_filter": "continuous quality-classifier filter with a fixed model",
+    # streaming: a deployment starts these, nothing in the repo runs a
+    # long-lived stream.  Batch operators run on a stream through
+    # stream_batches; what is left here is a real streaming plan or a
+    # batch body with its own per-batch logic.
+    "stream_events": "event stream source with the corrupt-line policy and watermark",
+    "stream_hourly_counts": "tumbling 1-hour windowed event counts",
+    "stream_dedup_by_key": "watermark-bounded duplicate collapse on the surrogate key",
+    "stream_stream_interval_join": "time-bounded stream-stream join",
+    "stream_sessionize": "stateful gap sessions (applyInPandasWithState)",
+    "stream_heavy_hitters": "stateful bounded Space-Saving leaderboard",
+    "stream_spatial_density": "continuously maintained grid-cell heatmap",
+    "stream_hll_maintenance": "continuously MAX-merged HyperLogLog registers",
+    "stream_sketch_ledger": "continuously maintained SUM-merged sketch (Count-Min, HDR) as a batch ledger",
+    "read_sketch_ledger": "reader of stream_sketch_ledger's state",
+    "stream_replicate_manifest_table": "continuous CDC replication off a table's commit log",
+    "stream_manifest_lsh_admission": "continuous near-duplicate admission into a self-updating index",
     "stream_quality_filter_hot_reload": "continuous quality filter reading the model registry per batch",
-    "stream_hdr_maintenance": "continuously maintained HDR histograms",
-    "stream_aggview_maintenance": "commit-log-driven aggregate view maintenance",
-    "stream_aggview_ingest": "ingest-driven aggregate view maintenance",
-    "stream_joinview_ingest": "ingest-driven join view maintenance",
-    "stream_index_removals": "continuous BM25 index removals from a delete feed",
+    "stream_curate": "continuous curation funnel into the curated lake table",
+    "stream_index_documents": "continuous BM25 indexing with tagged, replay-safe commits",
     "stream_validate": "continuous expectation-checked loading with quarantine",
     "stream_scd2_maintenance": "continuously maintained SCD2 dimension",
-    "stream_txn_co_commit": "exactly-once multi-table streaming sink",
-    "stream_spatial_density": "continuously maintained grid-cell heatmap",
-    "stream_enrich_with_dim": "stream-static enrichment against a hot dimension",
     "rate_events_source": "broker-free event source for the stream_events contract",
     "kafka_events_source": "Kafka event source; only the opt-in live test has a broker",
 }
@@ -1227,8 +1237,10 @@ TEST_ONLY_ALLOWLIST = {
 
 def _named_outside_tests(root: Path) -> set[str]:
     """Every identifier that non-test code uses: names, attributes,
-    imported names, and identifier-shaped strings (``__all__``,
-    ``getattr``).  Mentions in docstrings and comments do not count."""
+    imported names, and identifier-shaped strings (``getattr``).
+    Mentions in docstrings and comments do not count, and neither does a
+    package ``__init__.py`` re-exporting a name (its imports and
+    ``__all__``): a re-export is not a use."""
     sources = [
         *(root / "door2door_etl_spark").rglob("*.py"),
         *(root / "tools").glob("*.py"),
@@ -1237,7 +1249,17 @@ def _named_outside_tests(root: Path) -> set[str]:
     ]
     named = set()
     for path in sources:
-        for node in ast.walk(ast.parse(path.read_text(), str(path))):
+        tree = ast.parse(path.read_text(), str(path))
+        if path.name == "__init__.py":
+            tree.body = [
+                n for n in tree.body
+                if not isinstance(n, (ast.Import, ast.ImportFrom))
+                and not (
+                    isinstance(n, ast.Assign)
+                    and [getattr(t, "id", None) for t in n.targets] == ["__all__"]
+                )
+            ]
+        for node in ast.walk(tree):
             if isinstance(node, ast.Name):
                 named.add(node.id)
             elif isinstance(node, ast.Attribute):

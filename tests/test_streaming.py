@@ -1,17 +1,23 @@
 """Structured Streaming pipeline tests: availableNow-triggered ingest with
-watermark, windowed counts, and idempotent foreachBatch MERGE (restart and
-replay converge to the same warehouse state)."""
+watermark, windowed counts, and batch operators run per micro-batch through
+the one ``stream_batches`` adapter (restart and redelivery converge to the
+same output under each of its sink disciplines)."""
 
+import glob
 import json
+import os
+import re
 
 import pytest
 from pyspark.sql import functions as F
 
+from door2door_etl_spark.io.writers import ParquetMergeSink
+from door2door_etl_spark.schemas.normalize import normalize
 from door2door_etl_spark.schemas.registry import builtin_door2door_schemas
 from door2door_etl_spark.streaming import (
+    stream_batches,
     stream_events,
     stream_hourly_counts,
-    stream_upsert_to_warehouse,
 )
 from view_reference import full_recompute
 
@@ -28,6 +34,35 @@ def _vehicle(i, minute):
                          "at": f"2022-11-24T10:{minute:02d}:00.000Z"},
         },
     }
+
+
+def _drop_last_commit(ckpt) -> None:
+    """Simulate a crash between a batch's writes and its checkpoint
+    commit: remove the last ``commits/N`` marker and its checksum
+    sidecar, so a restart from ``ckpt`` redelivers batch N."""
+    commits = sorted(
+        glob.glob(f"{ckpt}/commits/[0-9]*"),
+        key=lambda p: int(os.path.basename(p)),
+    )
+    os.remove(commits[-1])
+    crc = os.path.join(os.path.dirname(commits[-1]),
+                       f".{os.path.basename(commits[-1])}.crc")
+    if os.path.exists(crc):
+        os.remove(crc)
+
+
+def _upsert_vehicles(spark, source_dir, warehouse, ckpt):
+    """The streaming warehouse upsert: each micro-batch is normalized with
+    the batch handler's schema plan and MERGEd by the derived key."""
+    schema = builtin_door2door_schemas()["vehicle"]
+    events = stream_events(spark, str(source_dir)).filter(
+        F.col("on") == schema.entity
+    )
+    return stream_batches(
+        events, str(ckpt), lambda df, _: normalize(df, schema),
+        ParquetMergeSink(spark, f"{warehouse}/vehicle_location"),
+        key="event_generated_id",
+    )
 
 
 @pytest.fixture()
@@ -62,13 +97,9 @@ def test_stream_hourly_counts(spark, tmp_path, stream_source):
 
 
 def test_stream_upsert_idempotent_replay(spark, tmp_path, stream_source):
-    schema = builtin_door2door_schemas()["vehicle"]
     warehouse = tmp_path / "warehouse"
 
-    events = stream_events(spark, str(stream_source))
-    q = stream_upsert_to_warehouse(
-        spark, events, schema, str(warehouse), str(tmp_path / "ckpt1")
-    )
+    q = _upsert_vehicles(spark, stream_source, warehouse, tmp_path / "ckpt1")
     q.awaitTermination(120)
 
     veh = spark.read.parquet(str(warehouse / "vehicle_location"))
@@ -76,20 +107,14 @@ def test_stream_upsert_idempotent_replay(spark, tmp_path, stream_source):
 
     # Replay from a FRESH checkpoint (simulates reprocessing the same data):
     # the MERGE converges to identical state instead of duplicating.
-    events2 = stream_events(spark, str(stream_source))
-    q2 = stream_upsert_to_warehouse(
-        spark, events2, schema, str(warehouse), str(tmp_path / "ckpt2")
-    )
+    q2 = _upsert_vehicles(spark, stream_source, warehouse, tmp_path / "ckpt2")
     q2.awaitTermination(120)
     veh2 = spark.read.parquet(str(warehouse / "vehicle_location"))
     assert veh2.count() == 5
 
     # New file arrives -> incremental micro-batch picks up only the delta.
     (stream_source / "b.json").write_text(json.dumps(_vehicle(9, 30)))
-    events3 = stream_events(spark, str(stream_source))
-    q3 = stream_upsert_to_warehouse(
-        spark, events3, schema, str(warehouse), str(tmp_path / "ckpt1")
-    )
+    q3 = _upsert_vehicles(spark, stream_source, warehouse, tmp_path / "ckpt1")
     q3.awaitTermination(120)
     veh3 = spark.read.parquet(str(warehouse / "vehicle_location"))
     assert veh3.count() == 6  # ckpt1 already processed a.json; only b.json new
@@ -289,7 +314,10 @@ def test_stream_stream_interval_join(spark, tmp_path):
 
 
 def test_stream_decontaminate_drops_overlapping_docs(spark, tmp_path):
-    from door2door_etl_spark.streaming.pipeline import stream_decontaminate
+    """ngram_decontaminate run per micro-batch, each overwriting its own
+    ``batch_id=N`` dir.  A real redelivery of a batch is
+    test_stream_batches_redelivered_batch_converges."""
+    from door2door_etl_spark.operators.dedup import ngram_decontaminate
 
     src = tmp_path / "docs_in"
     src.mkdir()
@@ -308,9 +336,14 @@ def test_stream_decontaminate_drops_overlapping_docs(spark, tmp_path):
         .json(str(src))
     )
     out = tmp_path / "docs_out"
-    q = stream_decontaminate(
-        stream, bench, str(out), str(tmp_path / "ckpt_decon")
-    )
+
+    def run():
+        return stream_batches(
+            stream, str(tmp_path / "ckpt_decon"),
+            lambda df, _: ngram_decontaminate(df, bench), str(out),
+        )
+
+    q = run()
     q.awaitTermination(120)
     kept = sorted(
         r["doc_id"] for r in spark.read.parquet(str(out)).collect()
@@ -318,11 +351,108 @@ def test_stream_decontaminate_drops_overlapping_docs(spark, tmp_path):
     assert kept == [2, 3]  # doc 1 shares the 3-gram "alpha beta gamma"
 
     # Replay with the same checkpoint: no new input → no duplicate appends.
-    q2 = stream_decontaminate(
-        stream, bench, str(out), str(tmp_path / "ckpt_decon")
-    )
+    q2 = run()
     q2.awaitTermination(120)
     assert spark.read.parquet(str(out)).count() == 2
+
+
+@pytest.mark.parametrize("discipline", ["overwrite", "merge", "none"])
+def test_stream_batches_redelivered_batch_converges(spark, tmp_path, discipline):
+    """A crash between a batch's writes and its checkpoint commit
+    redelivers the batch on restart.  Under each sink discipline of
+    ``stream_batches``: two micro-batches run, the last commit marker is
+    removed, the restart really runs batch 1 again, and the output — for
+    the overwrite discipline also the file set under ``batch_id=1`` — is
+    unchanged."""
+    from door2door_etl_spark.io.manifest import ManifestTable
+    from door2door_etl_spark.io.txn import MultiTableTransaction, TxnOp
+    from door2door_etl_spark.operators.dedup import ngram_decontaminate
+
+    src = tmp_path / "in"
+    src.mkdir()
+    texts = ["alpha beta gamma delta", "one two three four", "red green blue"]
+    for b in range(2):
+        (src / f"b{b}.json").write_text("\n".join(
+            json.dumps({"doc_id": 10 * b + i, "text": f"{t} {b}"})
+            for i, t in enumerate(texts)
+        ))
+    bench = spark.createDataFrame(
+        [(99, "xx alpha beta gamma yy")], "doc_id long, text string"
+    )
+    out, ledger = str(tmp_path / "out"), str(tmp_path / "ledger")
+    ckpt = str(tmp_path / "ckpt")
+    delivered = []
+
+    def decontaminated(df, batch_id):
+        delivered.append(batch_id)
+        return ngram_decontaminate(df, bench)
+
+    def rows(root):
+        return sorted(
+            tuple(r) for r in ManifestTable(root).read(spark).collect()
+        )
+
+    if discipline == "overwrite":
+        fn, sink, key = decontaminated, out, None
+
+        def snapshot():
+            batch_dir = os.path.join(out, "batch_id=1")
+            # part-file names carry the write job's uuid; the rest of the
+            # name (part number, codec) is the file set
+            files = sorted(
+                re.sub(r"[0-9a-f]{8}(-[0-9a-f]{4}){3}-[0-9a-f]{12}", "<job>", f)
+                for f in os.listdir(batch_dir)
+            )
+            got = sorted(tuple(r) for r in spark.read.parquet(out).collect())
+            return got, files
+    elif discipline == "merge":
+        fn, sink, key = decontaminated, ParquetMergeSink(spark, out), "doc_id"
+
+        def snapshot():
+            return rows(out)
+    else:
+        txn = MultiTableTransaction(str(tmp_path / "journal"))
+
+        def fn(df, batch_id):
+            kept = decontaminated(df, batch_id)
+            txn.run(spark, [
+                TxnOp("merge", out, payload=kept, key="doc_id"),
+                TxnOp("append", ledger, payload=kept.groupBy().count()),
+            ], txn_id=f"batch{batch_id:08d}")
+
+        sink = key = None
+
+        def snapshot():
+            return rows(out), rows(ledger)
+
+    def run():
+        stream = (
+            spark.readStream.schema("doc_id long, text string")
+            .option("maxFilesPerTrigger", 1)
+            .json(str(src))
+        )
+        q = stream_batches(stream, ckpt, fn, sink, key=key)
+        q.awaitTermination(120)
+        q.stop()
+
+    run()
+    assert delivered == [0, 1]
+    before = snapshot()
+    _drop_last_commit(ckpt)
+    run()
+    assert delivered == [0, 1, 1]  # batch 1 really ran again
+    assert snapshot() == before
+    # doc 0 shares "alpha beta gamma" with the benchmark in both batches
+    assert {r[0] for r in spark.read.parquet(out).collect()} == {1, 2, 11, 12}
+
+
+def test_stream_batches_merge_sink_needs_key(spark, tmp_path):
+    stream = spark.readStream.schema("doc_id long").json(str(tmp_path))
+    with pytest.raises(ValueError, match="merge key"):
+        stream_batches(
+            stream, str(tmp_path / "ckpt"), lambda df, _: df,
+            ParquetMergeSink(spark, str(tmp_path / "t")),
+        )
 
 
 def test_stream_sliding_chunks_stateless(spark, tmp_path):
@@ -360,7 +490,6 @@ def test_stream_incremental_lsh_dedup_admits_only_novel(spark, tmp_path):
     verbatim near-dup, admits the novel doc, and the checkpoint makes replay
     append-free."""
     from door2door_etl_spark.operators.dedup import ManifestLshBandIndex
-    from door2door_etl_spark.streaming.pipeline import stream_incremental_lsh_dedup
 
     corpus = spark.createDataFrame(
         [
@@ -386,15 +515,18 @@ def test_stream_incremental_lsh_dedup_admits_only_novel(spark, tmp_path):
         .json(str(src))
     )
     out = tmp_path / "ingest_out"
-    q = stream_incremental_lsh_dedup(
-        stream, idx, str(out), str(tmp_path / "ckpt_ingest")
-    )
+
+    def run():
+        return stream_batches(
+            stream, str(tmp_path / "ckpt_ingest"),
+            lambda df, _: idx.admit(df, update_index=False), str(out),
+        )
+
+    q = run()
     q.awaitTermination(120)
     assert [r["doc_id"] for r in spark.read.parquet(str(out)).collect()] == [101]
 
-    q2 = stream_incremental_lsh_dedup(
-        stream, idx, str(out), str(tmp_path / "ckpt_ingest")
-    )
+    q2 = run()
     q2.awaitTermination(120)
     assert spark.read.parquet(str(out)).count() == 1
 
@@ -538,9 +670,9 @@ def test_stream_cms_maintenance_ledger_replay_safe(spark, tmp_path):
     import json as _json
 
     from door2door_etl_spark.operators.sketches import cms_sketch_table
-    from door2door_etl_spark.streaming.pipeline import (
-        read_cms_state,
-        stream_cms_maintenance,
+    from door2door_etl_spark.streaming import (
+        read_sketch_ledger,
+        stream_sketch_ledger,
     )
 
     src = tmp_path / "src"
@@ -557,8 +689,9 @@ def test_stream_cms_maintenance_ledger_replay_safe(spark, tmp_path):
             .option("maxFilesPerTrigger", 1)
             .json(str(src))
         )
-        q = stream_cms_maintenance(
-            spark, stream, "tok", str(tmp_path / "sketch"), str(tmp_path / ckpt)
+        q = stream_sketch_ledger(
+            spark, stream, lambda df: cms_sketch_table(df, [], "tok"),
+            str(tmp_path / "sketch"), str(tmp_path / ckpt),
         )
         q.awaitTermination(120)
 
@@ -571,14 +704,14 @@ def test_stream_cms_maintenance_ledger_replay_safe(spark, tmp_path):
     }
     got = {
         (r["row"], r["col"]): r["cnt"]
-        for r in read_cms_state(spark, str(tmp_path / "sketch")).collect()
+        for r in read_sketch_ledger(spark, str(tmp_path / "sketch")).collect()
     }
     assert got == direct
 
     run("ck2")  # full replay, fresh checkpoint: same batch ids, same cells
     got2 = {
         (r["row"], r["col"]): r["cnt"]
-        for r in read_cms_state(spark, str(tmp_path / "sketch")).collect()
+        for r in read_sketch_ledger(spark, str(tmp_path / "sketch")).collect()
     }
     assert got2 == direct
 
@@ -642,9 +775,6 @@ def test_stream_manifest_lsh_admission_self_updating_and_replay_safe(
     bands/ids invariant holds after every batch, and a crash-replay of
     the last batch (removed checkpoint commit marker) reproduces the
     same output without self-collision or index duplication."""
-    import glob
-    import os
-
     from pyspark.sql import Row
 
     from door2door_etl_spark.operators.dedup import ManifestLshBandIndex
@@ -711,12 +841,7 @@ def test_stream_manifest_lsh_admission_self_updating_and_replay_safe(
     assert out_ids() == {101, 201}
 
     # Crash-replay of the last batch: same output, no index duplication.
-    commits = sorted(glob.glob(f"{ckpt}/commits/[0-9]*"))
-    os.remove(commits[-1])
-    crc = os.path.join(os.path.dirname(commits[-1]),
-                       f".{os.path.basename(commits[-1])}.crc")
-    if os.path.exists(crc):
-        os.remove(crc)
+    _drop_last_commit(ckpt)
     run()
     assert admitted() == {1, 101, 201}
 
@@ -771,10 +896,10 @@ def test_stream_quality_filter_serves_trained_weights(spark, tmp_path):
     appends nothing (effectively-once sink)."""
     from door2door_etl_spark.operators.classifier import (
         hashed_features,
+        quality_keep,
         score_logreg,
         train_logreg,
     )
-    from door2door_etl_spark.streaming.pipeline import stream_quality_filter
 
     # train offline: tiny separable corpus; y = 1 is the KEEP (quality)
     # class, and the junk docs all mention "noise"
@@ -817,9 +942,14 @@ def test_stream_quality_filter_serves_trained_weights(spark, tmp_path):
     )
     stream = spark.readStream.schema("doc_id long, text string").json(str(src))
     out = tmp_path / "clf_out"
-    q = stream_quality_filter(
-        stream, w, str(out), str(tmp_path / "ckpt_clf"), **cfg
-    )
+
+    def run():
+        return stream_batches(
+            stream, str(tmp_path / "ckpt_clf"),
+            lambda df, _: quality_keep(df, w, **cfg), str(out),
+        )
+
+    q = run()
     q.awaitTermination(120)
     stream_kept = sorted(
         r["doc_id"] for r in spark.read.parquet(str(out)).collect()
@@ -828,9 +958,7 @@ def test_stream_quality_filter_serves_trained_weights(spark, tmp_path):
     # the filter actually separates: junk doc 11 dropped, clean ones kept
     assert 11 not in stream_kept and 10 in stream_kept and 12 in stream_kept
 
-    q2 = stream_quality_filter(
-        stream, w, str(out), str(tmp_path / "ckpt_clf"), **cfg
-    )
+    q2 = run()
     q2.awaitTermination(120)
     assert spark.read.parquet(str(out)).count() == len(stream_kept)
 
@@ -932,9 +1060,9 @@ def test_stream_hdr_maintenance_matches_batch_and_survives_replay(spark, tmp_pat
         hdr_histogram_table,
         hdr_quantiles,
     )
-    from door2door_etl_spark.streaming.pipeline import (
-        read_hdr_state,
-        stream_hdr_maintenance,
+    from door2door_etl_spark.streaming import (
+        read_sketch_ledger,
+        stream_sketch_ledger,
     )
 
     src = tmp_path / "hdr_in"
@@ -951,7 +1079,13 @@ def test_stream_hdr_maintenance_matches_batch_and_survives_replay(spark, tmp_pat
         .json(str(src))
     )
     root, ckpt = str(tmp_path / "hdr_state"), str(tmp_path / "hdr_ckpt")
-    q = stream_hdr_maintenance(spark, stream, ["g"], "v", root, ckpt)
+    def run():
+        return stream_sketch_ledger(
+            spark, stream, lambda df: hdr_histogram_table(df, ["g"], "v"),
+            root, ckpt,
+        )
+
+    q = run()
     q.awaitTermination(120)
 
     all_rows = spark.createDataFrame(
@@ -961,7 +1095,7 @@ def test_stream_hdr_maintenance_matches_batch_and_survives_replay(spark, tmp_pat
         (r["g"], r["bin"]): r["cnt"]
         for r in hdr_histogram_table(all_rows, ["g"], "v").collect()
     }
-    state = read_hdr_state(spark, root, ["g"])
+    state = read_sketch_ledger(spark, root)
     got = {(r["g"], r["bin"]): r["cnt"] for r in state.collect()}
     assert got == expect
 
@@ -978,11 +1112,11 @@ def test_stream_hdr_maintenance_matches_batch_and_survives_replay(spark, tmp_pat
     assert eq == bq
 
     # replay with the same checkpoint: no new input, state unchanged
-    q2 = stream_hdr_maintenance(spark, stream, ["g"], "v", root, ckpt)
+    q2 = run()
     q2.awaitTermination(120)
     got2 = {
         (r["g"], r["bin"]): r["cnt"]
-        for r in read_hdr_state(spark, root, ["g"]).collect()
+        for r in read_sketch_ledger(spark, root).collect()
     }
     assert got2 == expect
 
@@ -1059,9 +1193,13 @@ def test_stream_aggview_maintenance_tracks_commits(spark, tmp_path):
     the view to full-recompute parity; re-running the drained stream (no new
     commits) leaves the view untouched; notifications for already-applied
     windows no-op via the view's own cursor."""
-    from door2door_etl_spark.io.manifest import delete_manifest, merge_manifest
+    from door2door_etl_spark.io.manifest import (
+        ManifestTable,
+        delete_manifest,
+        merge_manifest,
+    )
     from door2door_etl_spark.pipeline.aggview import IncrementalAggView
-    from door2door_etl_spark.streaming.pipeline import stream_aggview_maintenance
+    from door2door_etl_spark.streaming.sources import commit_log_source
 
     src = str(tmp_path / "msrc")
     ckpt = str(tmp_path / "ckpt")
@@ -1089,14 +1227,19 @@ def test_stream_aggview_maintenance_tracks_commits(spark, tmp_path):
         )
         assert got == want
 
-    q = stream_aggview_maintenance(spark, view, ckpt)
-    q.awaitTermination(120)
+    def run():
+        # the view's source commit log is a notification channel; the
+        # refresh is effectively-once by the view's own window ledger
+        commits = commit_log_source(ManifestTable(src).manifests_dir)(spark)
+        q = stream_batches(commits, ckpt, lambda df, _: view.refresh(spark))
+        q.awaitTermination(120)
+
+    run()
     parity()
     v1 = sorted(map(tuple, view.read(spark).collect()))
 
     # Drained restart with no new commits: nothing moves.
-    q = stream_aggview_maintenance(spark, view, ckpt)
-    q.awaitTermination(120)
+    run()
     assert sorted(map(tuple, view.read(spark).collect())) == v1
 
     # New commits (insert + delete-the-max) drain into the view.
@@ -1104,8 +1247,7 @@ def test_stream_aggview_maintenance_tracks_commits(spark, tmp_path):
     delete_manifest(
         spark, src, spark.createDataFrame([("b",)], "id string"), key="id"
     )
-    q = stream_aggview_maintenance(spark, view, ckpt)
-    q.awaitTermination(120)
+    run()
     parity()
     assert {r["grp"] for r in view.read(spark).collect()} == {"x"}
 
@@ -1120,9 +1262,6 @@ def test_stream_curate_matches_sequential_batch_admission(spark, tmp_path):
     index state; (b) replay safety — crash-replaying the last batch
     leaves the curated table's content unchanged; (c) the per-batch
     funnel report."""
-    import glob
-    import os
-
     from pyspark.sql import Row
 
     from door2door_etl_spark.io.manifest import ManifestTable
@@ -1215,12 +1354,7 @@ def test_stream_curate_matches_sequential_batch_admission(spark, tmp_path):
 
     # Crash-replay of the last batch: content converges (MERGE is keyed,
     # admission tags re-emit this batch's own admissions).
-    commits = sorted(glob.glob(f"{ckpt}/commits/[0-9]*"))
-    os.remove(commits[-1])
-    crc = os.path.join(os.path.dirname(commits[-1]),
-                       f".{os.path.basename(commits[-1])}.crc")
-    if os.path.exists(crc):
-        os.remove(crc)
+    _drop_last_commit(ckpt)
     run()
     assert curated_ids() == {12, 14, 21}
     assert {r[0] for r in idx.admitted_ids().collect()} == {1, 12, 14, 21}
@@ -1259,9 +1393,7 @@ def test_stream_index_documents_replay_safe(spark, tmp_path):
     equals batch BM25 over the full corpus, and a crash-replay of the
     last batch neither double-counts postings nor inflates the corpus
     stats."""
-    import glob
     import json as _json
-    import os
 
     from door2door_etl_spark.operators.search import ManifestBM25Index
     from door2door_etl_spark.operators.text import bm25_topk
@@ -1312,12 +1444,7 @@ def test_stream_index_documents_replay_safe(spark, tmp_path):
     assert n_docs == 4
 
     # crash-replay of the last batch: tag test skips the re-delivery
-    commits = sorted(glob.glob(f"{ckpt}/commits/[0-9]*"))
-    os.remove(commits[-1])
-    crc = os.path.join(os.path.dirname(commits[-1]),
-                       f".{os.path.basename(commits[-1])}.crc")
-    if os.path.exists(crc):
-        os.remove(crc)
+    _drop_last_commit(ckpt)
     run()
     assert idx.corpus_stats()[0] == 4  # no stat inflation
     got2 = [(r["doc_id"], r["score"])
@@ -1332,9 +1459,9 @@ def test_stream_hdr_maintenance_null_group_tuples_stay_distinct(spark, tmp_path)
     would collapse to one cell_key and merge-overwrite each other's bin
     counts."""
     from door2door_etl_spark.operators.sketches import hdr_histogram_table
-    from door2door_etl_spark.streaming.pipeline import (
-        read_hdr_state,
-        stream_hdr_maintenance,
+    from door2door_etl_spark.streaming import (
+        read_sketch_ledger,
+        stream_sketch_ledger,
     )
 
     src = tmp_path / "hdr_null_in"
@@ -1351,7 +1478,10 @@ def test_stream_hdr_maintenance_null_group_tuples_stay_distinct(spark, tmp_path)
         .json(str(src))
     )
     root, ckpt = str(tmp_path / "hdrn_state"), str(tmp_path / "hdrn_ckpt")
-    q = stream_hdr_maintenance(spark, stream, ["g1", "g2"], "v", root, ckpt)
+    q = stream_sketch_ledger(
+        spark, stream, lambda df: hdr_histogram_table(df, ["g1", "g2"], "v"),
+        root, ckpt,
+    )
     q.awaitTermination(120)
 
     all_rows = spark.createDataFrame(
@@ -1364,7 +1494,7 @@ def test_stream_hdr_maintenance_null_group_tuples_stay_distinct(spark, tmp_path)
     }
     got = {
         (r["g1"], r["g2"], r["bin"]): r["cnt"]
-        for r in read_hdr_state(spark, root, ["g1", "g2"]).collect()
+        for r in read_sketch_ledger(spark, root).collect()
     }
     assert got == expect
     # the two null-bearing tuples are distinct groups with their own counts
@@ -1382,7 +1512,6 @@ def test_stream_index_removals_deletes_from_serving(spark, tmp_path):
 
     from door2door_etl_spark.operators.search import ManifestBM25Index
     from door2door_etl_spark.operators.text import bm25_topk
-    from door2door_etl_spark.streaming.pipeline import stream_index_removals
 
     vocab = ["spark", "scan", "merge", "join", "stream"]
     docs = spark.createDataFrame(
@@ -1411,7 +1540,12 @@ def test_stream_index_removals_deletes_from_serving(spark, tmp_path):
         .json(str(src))
     )
     ckpt = str(tmp_path / "rm_ckpt")
-    q = stream_index_removals(stream, idx, ckpt)
+
+    def remove_deletes(df, _):
+        # a change feed: only its deletes tombstone documents
+        idx.remove(df.filter(F.col("_change_type") == "delete").select("doc_id"))
+
+    q = stream_batches(stream, ckpt, remove_deletes)
     q.awaitTermination(120)
 
     surviving = docs.filter(F.col("doc_id") % 4 != 0)
@@ -1426,10 +1560,10 @@ def test_stream_index_removals_deletes_from_serving(spark, tmp_path):
     ).count() == 1
 
     # replay on the same checkpoint: no new input, nothing changes
-    q2 = stream_index_removals(stream, idx, ckpt)
+    q2 = stream_batches(stream, ckpt, remove_deletes)
     q2.awaitTermination(120)
     # redelivery on a FRESH checkpoint (at-least-once): still a no-op
-    q3 = stream_index_removals(stream, idx, str(tmp_path / "rm_ckpt2"))
+    q3 = stream_batches(stream, str(tmp_path / "rm_ckpt2"), remove_deletes)
     q3.awaitTermination(120)
     assert [
         (r["doc_id"], r["score"])
@@ -1623,8 +1757,8 @@ def test_stream_aggview_ingest_parity_and_replay(spark, tmp_path):
     equals the from-scratch aggregate of the source's final snapshot, and
     a fresh-checkpoint replay of the same files changes nothing (MERGE
     idempotence + the view's ledger discipline)."""
+    from door2door_etl_spark.io.manifest import merge_manifest
     from door2door_etl_spark.pipeline.aggview import IncrementalAggView
-    from door2door_etl_spark.streaming.pipeline import stream_aggview_ingest
 
     src_dir = tmp_path / "in"
     src_dir.mkdir()
@@ -1649,8 +1783,13 @@ def test_stream_aggview_ingest_parity_and_replay(spark, tmp_path):
         "id string, status string, amount double"
     ).json(str(src_dir))
 
+    def ingest(df, _):
+        # MERGE is idempotent by key, and refresh() by the view's ledger
+        merge_manifest(spark, view.source_root, df, key=view.key)
+        view.refresh(spark)
+
     def run(ckpt):
-        q = stream_aggview_ingest(spark, stream, view, str(tmp_path / ckpt))
+        q = stream_batches(stream, str(tmp_path / ckpt), ingest)
         q.awaitTermination(180)
 
     # deterministic micro-batches: land each file, then drain availableNow
@@ -1747,8 +1886,7 @@ def test_stream_enrich_with_dim_hot_reload(spark, tmp_path):
     batches (the plan-time-snapshot staleness pitfall, avoided)."""
     import json
 
-    from door2door_etl_spark.io.manifest import merge_manifest
-    from door2door_etl_spark.streaming.pipeline import stream_enrich_with_dim
+    from door2door_etl_spark.io.manifest import ManifestTable, merge_manifest
 
     dim_root = str(tmp_path / "dim")
     merge_manifest(
@@ -1762,9 +1900,13 @@ def test_stream_enrich_with_dim_hot_reload(spark, tmp_path):
     (src / "f0.json").write_text(json.dumps({"fid": 1, "ckey": 10}))
     stream = spark.readStream.schema("fid long, ckey int").json(str(src))
     out, ckpt = str(tmp_path / "out"), str(tmp_path / "ckpt")
-    q = stream_enrich_with_dim(
-        stream, dim_root, out, ckpt, fk="ckey", dim_key="ckey", dim_cols=["seg"]
-    )
+
+    def enrich(df, _):
+        # the dimension's current version, resolved at batch time
+        dim = ManifestTable(dim_root).read(spark).select("ckey", "seg")
+        return df.join(F.broadcast(dim), "ckey", "left")
+
+    q = stream_batches(stream, ckpt, enrich, out)
     q.awaitTermination(120)
     rows = {r["fid"]: r["seg"] for r in spark.read.parquet(out).collect()}
     assert rows == {1: "A"}
@@ -1776,9 +1918,7 @@ def test_stream_enrich_with_dim_hot_reload(spark, tmp_path):
     )
     (src / "f1.json").write_text(json.dumps({"fid": 2, "ckey": 10}))
     stream2 = spark.readStream.schema("fid long, ckey int").json(str(src))
-    q2 = stream_enrich_with_dim(
-        stream2, dim_root, out, ckpt, fk="ckey", dim_key="ckey", dim_cols=["seg"]
-    )
+    q2 = stream_batches(stream2, ckpt, enrich, out)
     q2.awaitTermination(120)
     rows = {r["fid"]: r["seg"] for r in spark.read.parquet(out).collect()}
     assert rows == {1: "A", 2: "A2"}  # old batch untouched, new batch fresh
@@ -1792,7 +1932,6 @@ def test_stream_enrich_with_dim_through_epoch_pin(spark, tmp_path):
 
     from door2door_etl_spark.io.txn import LakeEpoch
     from door2door_etl_spark.io.manifest import ManifestTable, merge_manifest
-    from door2door_etl_spark.streaming.pipeline import stream_enrich_with_dim
 
     dim_root = str(tmp_path / "dim")
     merge_manifest(
@@ -1812,10 +1951,13 @@ def test_stream_enrich_with_dim_through_epoch_pin(spark, tmp_path):
     (src / "f0.json").write_text(json.dumps({"fid": 1, "ckey": 10}))
     out, ckpt = str(tmp_path / "out"), str(tmp_path / "ckpt")
     stream = spark.readStream.schema("fid long, ckey int").json(str(src))
-    q = stream_enrich_with_dim(
-        stream, dim_root, out, ckpt, fk="ckey", dim_key="ckey",
-        dim_cols=["seg"], epoch=epoch,
-    )
+
+    def enrich(df, _):
+        # the dimension version the epoch pins, resolved at batch time
+        dim = epoch.read_table(spark, dim_root).select("ckey", "seg")
+        return df.join(F.broadcast(dim), "ckey", "left")
+
+    q = stream_batches(stream, ckpt, enrich, out)
     q.awaitTermination(120)
     assert {r["seg"] for r in spark.read.parquet(out).collect()} == {"A"}
 
@@ -1823,10 +1965,7 @@ def test_stream_enrich_with_dim_through_epoch_pin(spark, tmp_path):
     epoch.publish({dim_root: ManifestTable(dim_root).current_version()})
     (src / "f1.json").write_text(json.dumps({"fid": 2, "ckey": 10}))
     stream2 = spark.readStream.schema("fid long, ckey int").json(str(src))
-    q2 = stream_enrich_with_dim(
-        stream2, dim_root, out, ckpt, fk="ckey", dim_key="ckey",
-        dim_cols=["seg"], epoch=epoch,
-    )
+    q2 = stream_batches(stream2, ckpt, enrich, out)
     q2.awaitTermination(120)
     got = {r["fid"]: r["seg"] for r in spark.read.parquet(out).collect()}
     assert got == {1: "A", 2: "A2"}

@@ -322,8 +322,8 @@ def test_stream_txn_co_commit_exactly_once(spark, tmp_path):
     batch-derived txn ids skip them — the ledger never double-counts."""
     import json as _json
 
-    from door2door_etl_spark.io.txn import LakeEpoch, TxnOp
-    from door2door_etl_spark.streaming.pipeline import stream_txn_co_commit
+    from door2door_etl_spark.io.txn import LakeEpoch
+    from door2door_etl_spark.streaming import stream_batches
     from pyspark.sql import functions as F
 
     src_dir = tmp_path / "in"
@@ -346,10 +346,16 @@ def test_stream_txn_co_commit_exactly_once(spark, tmp_path):
         str(src_dir)
     )
 
+    txn = MultiTableTransaction(str(tmp_path / "journal"), epoch=epoch)
+
     def run(ckpt):
-        q = stream_txn_co_commit(
-            spark, stream, ops_builder, str(tmp_path / "journal"),
-            str(tmp_path / ckpt), epoch=epoch,
+        # the txn id derives from the batch id: a redelivery finds the
+        # completed journal entry and touches no table
+        q = stream_batches(
+            stream, str(tmp_path / ckpt),
+            lambda df, batch_id: txn.run(
+                spark, ops_builder(df), txn_id=f"batch{batch_id:08d}"
+            ),
         )
         q.awaitTermination(180)
 
