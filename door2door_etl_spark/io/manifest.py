@@ -80,6 +80,7 @@ and there is no view: no symlinks or hard links exist there.
 
 from __future__ import annotations
 
+import datetime
 import decimal
 import json
 import os
@@ -91,7 +92,7 @@ from dataclasses import dataclass, field
 from typing import Protocol, runtime_checkable
 
 from pyspark.sql import DataFrame, SparkSession
-from pyspark.sql.types import StructType
+from pyspark.sql.types import StructType, TimestampType
 
 from door2door_etl_spark.operators import local
 
@@ -173,11 +174,13 @@ def _write_masked_copy(src: str, dst: str, rows: set[int]) -> None:
     """Copy parquet file ``src`` to ``dst`` without the row positions in
     ``rows`` (a deletion vector applied physically, for the view).  The
     Spark schema metadata and the INT96 timestamp encoding are kept, so
-    the copy reads back with the same Spark types as its siblings."""
+    the copy reads back with the same Spark types as its siblings; INT96
+    is decoded at microseconds (the default nanoseconds wrap silently
+    outside 1677..2262)."""
     import pyarrow as pa
     import pyarrow.parquet as pq
 
-    pf = pq.ParquetFile(src)
+    pf = pq.ParquetFile(src, coerce_int96_timestamp_unit="us")
     int96 = any(
         pf.schema.column(i).physical_type == "INT96"
         for i in range(len(pf.schema))
@@ -316,41 +319,115 @@ def _bloom_maybe_contains(b: dict, value) -> bool:
 
 
 def _col_range(entry: dict, col: str, man_cols: list[str]):
-    """``(min, max)`` for ``col`` from one per-file stats entry, or None
-    when no safe bound exists.  Handles both entry formats: the current
-    ``{"rows", "cols": {col: {min, max}}}`` and the legacy single-column
-    ``{"rows", "min", "max"}`` (valid only for the manifest's legacy
-    stats column)."""
+    """``(min, max, kind)`` for ``col`` from one per-file stats entry, or
+    None when no safe bound exists.  ``kind`` is ``"timestamp"`` for a
+    timestamp range (bounds in epoch microseconds, UTC) and None for a
+    plain JSON scalar range.  Handles both entry formats: the current
+    ``{"rows", "cols": {col: {min, max[, type]}}}`` and the legacy
+    single-column ``{"rows", "min", "max"}`` (valid only for the
+    manifest's legacy stats column)."""
     cols = entry.get("cols")
     if cols is not None:
         r = cols.get(col)
         if r and r.get("min") is not None:
-            return r["min"], r["max"]
+            return r["min"], r["max"], r.get("type")
         return None
     if man_cols and col == man_cols[0] and entry.get("min") is not None:
-        return entry["min"], entry["max"]
+        return entry["min"], entry["max"], None
     return None
+
+
+def _disjoint(rng: tuple, lo, hi) -> bool:
+    """True when a file's recorded ``(min, max, kind)`` range provably
+    misses the predicate ``[lo, hi]``.  A timestamp range compares only
+    with ``datetime`` bounds, converted to epoch microseconds exactly as
+    Spark converts a ``datetime`` literal (so pruning agrees with the
+    residual filter in any process timezone).  Any other type mismatch
+    keeps the file: skipping is conservative, a wrong skip is not."""
+    rmin, rmax, kind = rng
+    if kind == "timestamp":
+        if not (isinstance(lo, datetime.datetime) and isinstance(hi, datetime.datetime)):
+            return False
+        lo, hi = TimestampType().toInternal(lo), TimestampType().toInternal(hi)
+    try:
+        return bool(rmax < lo or rmin > hi)
+    except TypeError:
+        return False
+
+
+#: Timestamps whose surrogate-key rendering has a four-digit year: the
+#: only range in which equal keys imply equal timestamps
+#: (:mod:`door2door_etl_spark.schemas.keys`), so the only range a
+#: range-scoped MERGE prunes in.  The key renders in the session time
+#: zone and these bounds are UTC, so each end keeps a day's margin.
+_KEYED_TS_US = tuple(
+    TimestampType().toInternal(datetime.datetime(*ymd, tzinfo=datetime.timezone.utc))
+    for ymd in ((1000, 1, 2), (9999, 12, 31))
+)
+#: Footer markers of a Spark write that rebased dates to the hybrid
+#: Julian calendar: its raw timestamp values are not Spark's values.
+_LEGACY_REBASE_KEYS = (b"org.apache.spark.legacyINT96", b"org.apache.spark.legacyDateTime")
+
+
+def _ts_range_us(column) -> tuple[int, int] | None:
+    """``(min, max)`` epoch microseconds of an Arrow timestamp column
+    (NULLs ignored; None when every value is NULL), widened outward when
+    the unit is finer than a microsecond."""
+    import pyarrow as pa
+    import pyarrow.compute as pc
+
+    mm = pc.min_max(column.cast(pa.int64()))
+    lo, hi = mm["min"].as_py(), mm["max"].as_py()
+    if lo is None:
+        return None
+    unit = column.type.unit
+    if unit == "ns":
+        return lo // 1000, -(-hi // 1000)
+    scale = {"s": 10**6, "ms": 10**3, "us": 1}[unit]
+    return lo * scale, hi * scale
 
 
 def _file_stats(path: str, stats_cols=None) -> dict:
     """Row count + per-column min/max for the declared stats columns from
     the parquet FOOTER (no data read): row-group statistics aggregated
-    across groups.  A column with non-JSON stat types (timestamps,
-    decimals, binary) or any opaque row group is omitted — pruning then
-    conservatively keeps the file for predicates on it.
+    across groups.  A column with non-JSON stat types (decimals, binary)
+    or any opaque row group is omitted — pruning then conservatively
+    keeps the file for predicates on it.
 
-    ``bloom:<name>`` declarations additionally store a per-file Bloom
-    bitmap of the column's distinct values (see the bloom block above) —
-    the one stats flavor that DOES read data (one column of the file
-    being committed, the standard price of skipping metadata beyond the
-    footer; the file is still local/staged at this point)."""
+    Two stats flavors DO read data (one column of the file being
+    committed, the standard price of skipping metadata beyond the footer;
+    the file is still local/staged at this point):
+
+    * a top-level timestamp column records ``{min, max, "type":
+      "timestamp"}`` in epoch microseconds — Spark writes timestamps as
+      INT96, whose footer carries no statistics.  A file written with
+      legacy calendar rebasing records no range.
+    * ``bloom:<name>`` declarations store a per-file Bloom bitmap of the
+      column's distinct values (see the bloom block above)."""
+    import pyarrow as pa
     import pyarrow.parquet as pq
 
-    pf = pq.ParquetFile(path)
+    # INT96 decoded at microseconds: the default nanoseconds overflow
+    # outside 1677..2262 and wrap silently.
+    pf = pq.ParquetFile(path, coerce_int96_timestamp_unit="us")
     meta = pf.metadata
     out: dict = {"rows": meta.num_rows, "cols": {}}
     by_path = {meta.schema.column(i).path: i for i in range(len(meta.schema))}
     range_cols, bloom_cols = _split_stats_decl(_norm_stats_cols(stats_cols))
+    arrow = pf.schema_arrow
+    ts_cols = [
+        c for c in range_cols
+        if arrow.get_field_index(c) >= 0
+        and pa.types.is_timestamp(arrow.field(c).type)
+    ]
+    range_cols = [c for c in range_cols if c not in ts_cols]
+    rebased = any(k in (meta.metadata or {}) for k in _LEGACY_REBASE_KEYS)
+    if ts_cols and not rebased:
+        tbl = pf.read(columns=ts_cols)
+        for c in ts_cols:
+            r = _ts_range_us(tbl.column(c))
+            if r is not None:
+                out["cols"][c] = {"min": r[0], "max": r[1], "type": "timestamp"}
     present_blooms = [c for c in bloom_cols if c in by_path]
     if present_blooms:
         import pyarrow.compute as pc
@@ -697,12 +774,27 @@ class ManifestTable:
             if version is None:
                 raise ValueError(f"{self.root} has no committed manifest")
         man = self.manifest(version)
-        if not man["files"]:
+        return self._scan(spark, man, man["files"])
+
+    def _raw_scan(self, spark: SparkSession, man: dict, rels: list[str]) -> DataFrame:
+        """Scan of the listed files ``rels`` (non-empty) with the schema
+        the manifest records — no schema-inference job.  Deletion vectors
+        are NOT applied."""
+        schema = StructType.fromJson(json.loads(man["schema"]))
+        return (
+            spark.read.schema(schema)
+            .option("basePath", self.files_dir)
+            .parquet(*[os.path.join(self.files_dir, rel) for rel in rels])
+        )
+
+    def _scan(self, spark: SparkSession, man: dict, rels: list[str]) -> DataFrame:
+        """The live rows of the listed files ``rels``: :meth:`_raw_scan`
+        with ``man``'s deletion vectors masked; no files reads as an empty
+        frame of the recorded schema."""
+        if not rels:
             schema = StructType.fromJson(json.loads(man["schema"]))
             return local.frame(spark, [], schema)
-        paths = [os.path.join(self.files_dir, rel) for rel in man["files"]]
-        df = spark.read.option("basePath", self.files_dir).parquet(*paths)
-        return self._apply_dvs(spark, df, man)
+        return self._apply_dvs(spark, self._raw_scan(spark, man, rels), man)
 
     def _apply_dvs(self, spark: SparkSession, df: DataFrame, man: dict) -> DataFrame:
         """Mask deletion-vector rows out of a scan of this manifest's
@@ -1112,7 +1204,7 @@ class ManifestTable:
                 if c is None:
                     continue
                 r = _col_range(s, c, man_cols)
-                if r is not None and (r[1] < lo or r[0] > hi):
+                if r is not None and _disjoint(r, lo, hi):
                     return False
                 if lo == hi and lo is not None:
                     b = (s.get("blooms") or {}).get(c)
@@ -1133,7 +1225,9 @@ class ManifestTable:
         conservatively and filter row-wise.  An equality predicate
         (``lo == hi``) on a ``bloom:<col>``-declared column also skips
         every file whose Bloom bitmap excludes the key — the point-lookup
-        pruning min/max can't do on high-cardinality unsorted keys."""
+        pruning min/max can't do on high-cardinality unsorted keys.  A
+        timestamp column's recorded range prunes ``datetime`` bounds; a
+        bound of another type keeps every file."""
         from pyspark.sql import functions as F
 
         if version is None:
@@ -1147,13 +1241,7 @@ class ManifestTable:
                 df = df.filter(F.col(c).between(lo, hi))
             return df
 
-        rels = self._prune(man, preds)
-        if not rels:
-            schema = StructType.fromJson(json.loads(man["schema"]))
-            return residual(local.frame(spark, [], schema))
-        paths = [os.path.join(self.files_dir, r) for r in rels]
-        pruned = spark.read.option("basePath", self.files_dir).parquet(*paths)
-        return residual(self._apply_dvs(spark, pruned, man))
+        return residual(self._scan(spark, man, self._prune(man, preds)))
 
     def read_keys(
         self, spark: SparkSession, col: str, values, version: int | None = None
@@ -1184,12 +1272,7 @@ class ManifestTable:
         for v in vals:
             keep.update(self._prune(man, {col: (v, v)}))
         rels = [r for r in man["files"] if r in keep]
-        if not vals or not rels:
-            schema = StructType.fromJson(json.loads(man["schema"]))
-            return residual(local.frame(spark, [], schema))
-        paths = [os.path.join(self.files_dir, r) for r in rels]
-        pruned = spark.read.option("basePath", self.files_dir).parquet(*paths)
-        return residual(self._apply_dvs(spark, pruned, man))
+        return residual(self._scan(spark, man, rels))
 
     def export_snapshot(
         self,
@@ -1488,6 +1571,7 @@ def merge_manifest(
     stats_col: str | list[str] | None = None,
     constraints: list[str] | None = None,
     op_tag: str | None = None,
+    range_col: str | None = None,
 ) -> int:
     """MERGE-style upsert — the one MERGE of the engine.  Semantics are
     the reference warehouse upsert's (src/helper/postgres.py:167-181):
@@ -1501,16 +1585,37 @@ def merge_manifest(
       raises before the claim, so nothing is committed.  NULL keys are
       rejected because the anti-join's equality never matches NULL: every
       replay would re-insert the row (the reference declares the key
-      PRIMARY KEY NOT NULL, migrations/init.sql:29-51).
+      PRIMARY KEY NOT NULL, migrations/init.sql:29-51).  The target's
+      schema comes from the manifest record, so no read of it infers one.
     * **Optimistic concurrency.** The merge is computed against manifest
-      ``base`` and claims exactly ``base + 1``; a loser recomputes against
-      the winner's snapshot, up to ``max_retries``, then raises
-      :class:`ConcurrentWriteError`.
+      ``base`` and claims exactly ``base + 1``; a loser drops every file
+      it staged and recomputes against the winner's snapshot, up to
+      ``max_retries``, then raises :class:`ConcurrentWriteError`.
     * **Partition scope.** With ``partition_col``, only the partitions the
       batch touches (plus any a moved key leaves behind) are rewritten;
       every other partition's files are RE-LISTED in the new manifest —
       metadata only, so an hourly batch into a 100 TB hour-partitioned
       table costs one partition, not the table.
+    * **Range scope.** ``range_col`` names a timestamp column that the key
+      determines: equal keys imply equal values of it (the surrogate key
+      of :mod:`door2door_etl_spark.schemas.keys` ends in its timestamp
+      part, which gives exactly that for years 1000-9999).  The batch is
+      written first, and the same ``Observation`` returns its min, max
+      and NULL count of ``range_col``.  Every listed file whose recorded
+      range overlaps the batch's, or that has no range, is then read
+      whole (deletion vectors applied), anti-joined against the batch
+      keys read back from the staged batch files, and written as a second
+      staged set; every other file is RE-LISTED untouched.  A file is
+      skipped only when the batch has no NULL in ``range_col``, both
+      ranges lie inside 1000-01-01 .. 9999-12-31, and the ranges are
+      disjoint: no key in it can equal a batch key, so skipping it is
+      exact.  A file is never split by range — the rows of an
+      overlapping file outside the batch's range are rewritten, not
+      dropped.  New files record their ``range_col`` range in the
+      per-file stats (``stats_cols`` is ``[key, range_col]``), so a table
+      committed without ranges is rewritten once by its first range-scoped
+      merge and pruned from then on.  An hourly batch into an
+      unpartitioned table thus costs its hour, not the table's history.
     * **Schema drift** (any change of the name → type mapping) is
       rejected unless ``evolve_schema`` (Delta's mergeSchema analog): a
       batch may then ADD columns (old rows read null) or OMIT target
@@ -1540,37 +1645,52 @@ def merge_manifest(
         F.count_if(src & F.expr(c).eqNullSafe(F.lit(False))).alias(f"check{i}")
         for i, c in enumerate(constraints)
     ]
+    scol = _norm_stats_cols(stats_col or key)  # data-skipping stats
+    if range_col is not None:
+        if not isinstance(source.schema[range_col].dataType, TimestampType):
+            raise ValueError(
+                f"merge into {root}: range_col {range_col!r} must be a "
+                f"timestamp column, not {source.schema[range_col].dataType.simpleString()}"
+            )
+        in_batch = F.when(src, F.unix_micros(F.col(range_col)))
+        checks += [
+            F.min(in_batch).alias("range_min"),
+            F.max(in_batch).alias("range_max"),
+            F.count_if(src & F.col(range_col).isNull()).alias("range_nulls"),
+        ]
+        scol = scol + [range_col] if range_col not in scol else scol
     tagged = source.withColumn("__merge_src", F.lit(True))
-    scol = stats_col or key  # data-skipping stats: per-file key min/max
     table._prepare(spark, scol)
 
     for _attempt in range(max_retries):
         base = table.current_version() or 0
-        staging = table._staging_path()
+        stagings = [table._staging_path()]
         new_rels: list[str] = []
         new_stats: dict = {}
         man: dict = {}
         reused: list[str] = []
+        range_scoped = False
         pcols = [partition_col] if partition_col else []
         try:
             if base == 0:
                 merged = tagged
             else:
                 man = table.manifest(base)
-                target = table.read(spark, base)
+                target_schema = StructType.fromJson(json.loads(man["schema"]))
                 drifted = {f.name: f.dataType for f in source.schema.fields} != {
-                    f.name: f.dataType for f in target.schema.fields
+                    f.name: f.dataType for f in target_schema.fields
                 }
                 if drifted and not evolve_schema:
                     raise ValueError(
                         f"merge into {root}: batch schema "
                         f"{sorted((f.name, f.dataType.simpleString()) for f in source.schema.fields)} "
                         f"!= table schema "
-                        f"{sorted((f.name, f.dataType.simpleString()) for f in target.schema.fields)}; "
+                        f"{sorted((f.name, f.dataType.simpleString()) for f in target_schema.fields)}; "
                         "pass evolve_schema=True to evolve the table"
                     )
                 union_kw = {"allowMissingColumns": True} if evolve_schema else {}
                 if partition_col and not drifted and man["partition_cols"] == pcols:
+                    target = table.read(spark, base)
                     touched_raw = [
                         r[0]
                         for r in source.select(partition_col).distinct().collect()
@@ -1623,11 +1743,7 @@ def merge_manifest(
                     # needs a RAW single-source scan (target may carry a
                     # DV anti-join).
                     abs_files = os.path.realpath(table.files_dir)
-                    raw_scan = spark.read.option(
-                        "basePath", table.files_dir
-                    ).parquet(
-                        *[os.path.join(table.files_dir, rel) for rel in man["files"]]
-                    )
+                    raw_scan = table._raw_scan(spark, man, man["files"])
                     touched_dirs = {
                         os.path.relpath(
                             os.path.realpath(unquote(urlparse(r[0]).path)),
@@ -1643,9 +1759,15 @@ def merge_manifest(
                         for rel in man["files"]
                         if rel.split(os.sep, 1)[0] not in touched_dirs
                     ]
+                elif range_col and not drifted and man["partition_cols"] == pcols:
+                    # The batch lands alone; the files its range overlaps
+                    # are rewritten once the write has observed that range.
+                    range_scoped = True
+                    merged = tagged
                 else:
                     merged = (
-                        target.join(source.select(key), on=key, how="left_anti")
+                        table.read(spark, base)
+                        .join(source.select(key), on=key, how="left_anti")
                         .withColumn("__merge_src", F.lit(False))
                         .unionByName(tagged, **union_kw)
                     )
@@ -1654,7 +1776,7 @@ def merge_manifest(
             writer = merged.write.mode("overwrite")
             if partition_col:
                 writer = writer.partitionBy(partition_col)
-            new_rels = table._stage_and_place(writer, staging, scol, new_stats)
+            new_rels = table._stage_and_place(writer, stagings[0], scol, new_stats)
             seen = obs.get
             if seen["null_keys"]:
                 raise ValueError(
@@ -1663,16 +1785,39 @@ def merge_manifest(
                     "duplicate on every replay"
                 )
             _raise_on_failed_constraints(source, constraints, seen, root)
+            if range_scoped:
+                overlap = _range_overlapping_files(man, range_col, seen)
+                rewritten = set(overlap)
+                reused = [rel for rel in man["files"] if rel not in rewritten]
+                if overlap:
+                    batch_keys = (
+                        spark.read.schema(StructType([merged.schema[key]]))
+                        .parquet(*[os.path.join(table.files_dir, r) for r in new_rels])
+                    )
+                    kept = table._scan(spark, man, overlap).join(
+                        batch_keys, on=key, how="left_anti"
+                    )
+                    stagings.append(table._staging_path())
+                    new_rels += table._stage_and_place(
+                        kept.write.mode("overwrite"), stagings[1], scol, new_stats
+                    )
+                # A rewrite that kept no row (a replayed hour) leaves
+                # empty files: list none of them.
+                empty = [r for r in new_rels if new_stats[r]["rows"] == 0]
+                table._drop_files(empty)
+                new_rels = [r for r in new_rels if new_stats[r]["rows"] > 0]
         except BaseException:
-            _discard_staging(table.fs, staging)
+            for staging in stagings:
+                _discard_staging(table.fs, staging)
             table._drop_files(new_rels)
             raise
 
         # Carry forward reused files' stats when the prior manifest's stats
-        # column matches; a prior different/absent stats column degrades
-        # those entries to rows-only (pruning keeps them conservatively).
+        # columns match; a prior different/absent stats declaration
+        # degrades those entries to rows-only (pruning keeps them
+        # conservatively, and a range-scoped merge rewrites them).
         prev_stats = man.get("stats", {})
-        same_scols = _man_stats_cols(man) == _norm_stats_cols(scol)
+        same_scols = _man_stats_cols(man) == scol
         carried = {
             r: prev_stats[r] if same_scols else {"rows": prev_stats[r]["rows"], "cols": {}}
             for r in reused
@@ -1680,7 +1825,7 @@ def merge_manifest(
         }
         if table._commit(
             base + 1, reused + new_rels, merged.schema, pcols,
-            stats={**carried, **new_stats}, stats_col=scol,
+            stats={**carried, **{r: new_stats[r] for r in new_rels}}, stats_col=scol,
             # Re-listed files keep their deletion vectors; DV rows aimed at
             # rewritten (no-longer-listed) files are inert — part names are
             # never reused, so they can't false-match.  A full rewrite
@@ -1691,12 +1836,39 @@ def merge_manifest(
             keep=vacuum_keep, min_age_hours=vacuum_min_age_hours,
         ):
             return int(seen["rows"])
-        # Lost the claim race: our files are referenced by nothing — drop
-        # them and recompute against the winner's snapshot.
+        # Lost the claim race: our files (both staged sets of a
+        # range-scoped merge) are referenced by nothing — drop them and
+        # recompute against the winner's snapshot.
         table._drop_files(new_rels)
     raise ConcurrentWriteError(
         f"merge into {root} lost the version-claim race {max_retries} times"
     )
+
+
+def _range_overlapping_files(man: dict, range_col: str, seen) -> list[str]:
+    """The files of ``man`` that may hold a key of a batch whose
+    ``range_col`` min, max and NULL count a merge observed (``seen``):
+    every file unless the batch has no NULL and its range lies inside
+    the keyed timestamp range, and then every file whose recorded range
+    is missing, leaves that range, or overlaps the batch's (see
+    :func:`merge_manifest`, range scope)."""
+    if not seen["rows"]:
+        return []
+    lo, hi = seen["range_min"], seen["range_max"]
+    if seen["range_nulls"] or not (_KEYED_TS_US[0] <= lo and hi <= _KEYED_TS_US[1]):
+        return list(man["files"])
+    stats = man.get("stats", {})
+    man_cols = _man_stats_cols(man)
+
+    def may_overlap(rel: str) -> bool:
+        r = _col_range(stats.get(rel) or {}, range_col, man_cols)
+        if r is None or r[2] != "timestamp":
+            return True
+        if r[0] < _KEYED_TS_US[0] or r[1] > _KEYED_TS_US[1]:
+            return True
+        return not (r[1] < lo or r[0] > hi)
+
+    return [rel for rel in man["files"] if may_overlap(rel)]
 
 
 def append_manifest(

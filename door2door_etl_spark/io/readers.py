@@ -99,6 +99,17 @@ def event_schema() -> T.StructType:
     )
 
 
+def bronze_schema() -> T.StructType:
+    """Schema of a staged bronze hour: the event fields a well-formed line
+    parses into, plus its ``original_s3_file_path`` provenance.  The
+    ingestor writes exactly these columns and the handler reads them back
+    with this schema, so neither side runs a schema-inference job."""
+    fields = [f for f in event_schema().fields if f.name != "_corrupt_record"]
+    return T.StructType(
+        fields + [T.StructField("original_s3_file_path", T.StringType())]
+    )
+
+
 def read_jsonl_events(
     spark: SparkSession,
     paths: str | list[str],

@@ -16,9 +16,9 @@ Covers SURVEY.md §2.2:
 Design note (scale): Delta Lake's MERGE would be the production answer
 (SURVEY.md §2.2 K1) but is not available in this container, so the upsert is
 implemented as the same logical plan MERGE lowers to — source-dedup, then
-target ⟕anti⟖ source ∪ source — partitioned by a user-supplied column so a
-100 TB table only rewrites the partitions the batch touches (partition-scoped
-read-merge-overwrite), not the whole table.
+target ⟕anti⟖ source ∪ source — scoped by a user-supplied partition column,
+or by a timestamp column the key determines, so a 100 TB table only rewrites
+the partitions or files the batch can touch, not the whole table.
 """
 
 from __future__ import annotations
@@ -89,19 +89,23 @@ class MergeSink(Protocol):
 class ParquetMergeSink:
     """Parquet-lake MergeSink: delegates to
     :func:`~door2door_etl_spark.io.manifest.merge_manifest` (anti-join ∪
-    union, partition-scoped rewrite with untouched partitions re-listed,
+    union; a partition-scoped rewrite with untouched partitions
+    re-listed, or with ``range_col`` — a timestamp column the key
+    determines — a rewrite of only the files the batch's range overlaps;
     manifest commit, optional CHECK constraints)."""
 
     spark: SparkSession
     target_path: str
     partition_col: str | None = None
     constraints: tuple[str, ...] = ()
+    range_col: str | None = None
 
     def merge(self, source: DataFrame, key: str) -> int:
         return merge_manifest(
             self.spark, self.target_path, source, key=key,
             partition_col=self.partition_col,
             constraints=list(self.constraints) or None,
+            range_col=self.range_col,
         )
 
 

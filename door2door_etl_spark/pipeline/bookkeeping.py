@@ -143,10 +143,12 @@ class Bookkeeping:
         self,
         workflow_id: str,
         file_fetch_path: str | None,
-        destination_table: str,
-        records_inserted: int,
-        traceback: str | None = None,
+        entries: list[tuple[str, int, str | None]],
     ) -> None:
+        """Append one handler execution's rows in one write: one
+        ``(destination_table, records_inserted, traceback)`` entry per
+        entity and per quarantine record."""
+        now = dt.datetime.utcnow()
         append_rows(
             self.spark,
             self._path("handler"),
@@ -154,12 +156,13 @@ class Bookkeeping:
                 {
                     "workflow_id": workflow_id,
                     "code_execution_id": str(uuid.uuid4()),
-                    "code_execution_date": dt.datetime.utcnow(),
+                    "code_execution_date": now,
                     "file_fetch_path": file_fetch_path,
-                    "destination_table": destination_table,
-                    "records_inserted": records_inserted,
+                    "destination_table": table,
+                    "records_inserted": records,
                     "traceback": traceback,
                 }
+                for table, records, traceback in entries
             ],
             HANDLER_SCHEMA,
         )

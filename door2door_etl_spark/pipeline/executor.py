@@ -57,7 +57,10 @@ def run_workflow(
             spark, wid, source_glob, f"{lake_root}/bronze", book, fetch_hour=fetch_hour
         )
     if step in ("all", "handler"):
+        # step="all" hands over the path its ingest just wrote; the
+        # handler alone looks it up by workflow id.
         summary["merged"] = run_handler(
-            spark, wid, schemas, f"{lake_root}/warehouse", book
+            spark, wid, schemas, f"{lake_root}/warehouse", book,
+            staged_path=summary.get("bronze_path"),
         )
     return summary

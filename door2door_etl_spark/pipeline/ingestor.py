@@ -8,7 +8,10 @@ Spark-first reimplementation of reference src/ingestor/ingestor.py:11-83
 3. UNION ALL of all files — implicit: one multi-path ``spark.read.json``
    replaces the reference's ``merge_jsons`` list concatenation (helper.py:11-27)
 4. bronze stage write (K3) — parquet instead of a merged JSON blob: columnar,
-   splittable, and the hour directory IS the staging identity
+   splittable, and the hour directory IS the staging identity.  The write
+   lands in a hidden sibling directory and is renamed into place only when
+   the hour has rows, so a failed or empty fetch never clobbers the hour a
+   previous workflow staged
 5. bookkeeping row with traceback-on-failure (K2); failed hours re-fetch
    because the watermark ignores rows with tracebacks
 """
@@ -17,11 +20,12 @@ from __future__ import annotations
 
 import datetime as dt
 import traceback as tb
-from pathlib import Path
+import uuid
 
-from pyspark.sql import SparkSession
+from pyspark.sql import Observation, SparkSession
+from pyspark.sql import functions as F
 
-from door2door_etl_spark.io.readers import read_jsonl_events
+from door2door_etl_spark.io.readers import bronze_schema, read_jsonl_events
 from door2door_etl_spark.pipeline.bookkeeping import Bookkeeping
 
 
@@ -42,14 +46,26 @@ def run_ingestor(
     """
     hour = fetch_hour or bookkeeping.next_fetch_hour()
     dest = f"{bronze_root}/dt={hour:%Y-%m-%d}/hr={hour:%H}"
+    staged = f"{bronze_root}/dt={hour:%Y-%m-%d}/.hr={hour:%H}.{uuid.uuid4().hex}"
+    fs = _HadoopFs(spark, dest)
     try:
-        events = read_jsonl_events(spark, source_glob, hour=hour)
+        events = read_jsonl_events(spark, source_glob, hour=hour).select(
+            *bronze_schema().fieldNames()
+        )
         # Spark's json reader already unioned every matching file (the
-        # reference's merge_jsons step); count distinct source files for the
-        # bookkeeping record.
-        n_files = events.select("original_s3_file_path").distinct().count()
+        # reference's merge_jsons step).  The number of distinct landing
+        # files that gave the hour a row rides the one write: a set, not a
+        # count, so a retried or speculative task cannot count a file twice.
+        obs = Observation()
+        events = events.observe(
+            obs, F.size(F.collect_set("original_s3_file_path")).alias("files")
+        )
+        events.write.parquet(staged)
+        n_files = int(obs.get["files"])
         if n_files > 0:
-            events.write.mode("overwrite").parquet(dest)
+            fs.replace(staged, dest)
+        else:
+            fs.delete(staged)
         bookkeeping.record_ingestor(
             workflow_id=workflow_id,
             fetched_hour=hour,
@@ -58,6 +74,7 @@ def run_ingestor(
         )
         return dest if n_files > 0 else None
     except Exception:
+        fs.delete(staged)
         bookkeeping.record_ingestor(
             workflow_id=workflow_id,
             fetched_hour=hour,
@@ -66,3 +83,36 @@ def run_ingestor(
             traceback=tb.format_exc(),
         )
         raise
+
+
+class _HadoopFs:
+    """Directory renames and deletes through the Hadoop FileSystem API, so
+    the bronze layout works on any Hadoop-FS URI (s3a:// in production)."""
+
+    def __init__(self, spark: SparkSession, path: str) -> None:
+        self._Path = spark._jvm.org.apache.hadoop.fs.Path  # noqa: SLF001
+        self.fs = self._Path(path).getFileSystem(
+            spark._jsc.hadoopConfiguration()  # noqa: SLF001
+        )
+
+    def delete(self, path: str) -> None:
+        self.fs.delete(self._Path(path), True)
+
+    def replace(self, src: str, dst: str) -> None:
+        """Rename directory ``src`` to ``dst``.  An existing ``dst`` is first
+        renamed aside (a rename onto an existing directory would nest
+        ``src`` inside it) and deleted only once ``src`` is in place; if
+        that second rename fails, the old directory is moved back.  On an
+        object store each rename is a copy and a delete, so a crash between
+        the two leaves the old hour under its aside name, not lost."""
+        target = self._Path(dst)
+        aside = self._Path(f"{src}.replaced")
+        had = self.fs.exists(target)
+        if had and not self.fs.rename(target, aside):
+            raise OSError(f"could not move {dst} aside")
+        if not self.fs.rename(self._Path(src), target):
+            if had:
+                self.fs.rename(aside, target)
+            raise OSError(f"could not rename {src} to {dst}")
+        if had:
+            self.fs.delete(aside, True)

@@ -16,6 +16,29 @@ reprs per SURVEY.md §7 risk register):
 - timestamps stringify as ``yyyy-MM-dd HH:mm:ss[.SSSSSS]`` with the
   fractional part only when non-zero (matches ``str(pd.Timestamp)``);
 - everything else uses Spark's cast-to-string.
+
+Equal keys imply equal trailing timestamps.  A range-scoped MERGE
+(:func:`~door2door_etl_spark.io.manifest.merge_manifest` ``range_col``)
+skips a table file only because of this argument:
+
+- the key is ``sha256(concat(parts…, render(ts)))`` with the timestamp the
+  LAST part, so equal keys mean equal concatenated strings (up to a
+  collision of the 128 digest bits the key keeps);
+- ``render(ts)`` is ``yyyy-MM-dd HH:mm:ss`` (19 characters) or
+  ``yyyy-MM-dd HH:mm:ss.SSSSSS`` (26): the 7th character from the end is a
+  digit in the first form and ``.`` in the second, and no rendering ends
+  in ``None`` (a NULL timestamp), so the last characters of the string
+  fix which form ends it — provided the year has exactly four digits;
+- so for years 1000-9999 two equal strings end in the same rendering, and
+  the timestamps are equal, whatever the widths of the earlier parts.
+
+Hence a file whose timestamp range is disjoint from a batch's holds no key
+of the batch, when the batch has no NULL timestamp and both ranges lie
+inside 1000-01-01 .. 9999-12-31 (checked in UTC with a day's margin at
+each end, since the rendering uses the session time zone).  In every
+other case the merge treats the
+file as overlapping.  The handler declares ``range_col`` only for an entity
+whose last key column is a timestamp.
 """
 
 from __future__ import annotations

@@ -1708,3 +1708,261 @@ def test_bloom_probe_literal_canonicalization(spark, tmp_path):
     assert _bloom_maybe_contains(canon_empty, True) is True
     # ...while a canonical kind on the empty bitmap is definitively absent
     assert _bloom_maybe_contains(canon_empty, 5) is False
+
+
+# -- range-scoped MERGE (range_col) -------------------------------------------
+
+def _hour_rows(spark, hour, ids, v="a", day=24):
+    """One batch of an hour: key = the surrogate key of (id, ts), so equal
+    keys imply equal ``ts`` (schemas/keys.py), as in the warehouse."""
+    import datetime as dt
+
+    rows = [
+        (i, dt.datetime(2022, 11, day, hour, m % 60, 0), f"{v}{i}")
+        for m, i in enumerate(ids)
+    ]
+    df = spark.createDataFrame(rows, "id string, ts timestamp, v string")
+    return _keyed(df)
+
+
+def _keyed(df):
+    from pyspark.sql import types as T
+
+    from door2door_etl_spark.schemas.keys import surrogate_uuid_expr
+
+    key = surrogate_uuid_expr(["id", "ts"], [T.StringType(), T.TimestampType()])
+    return df.select(key.alias("k"), "id", "ts", "v")
+
+
+def _ranged_merge(spark, root, batch, **kw):
+    return merge_manifest(spark, root, batch, key="k", range_col="ts",
+                          vacuum_keep=99, **kw)
+
+
+def _files_by_hour(table, version):
+    """``{hour: rels}`` of one manifest, from each file's recorded range."""
+    import datetime as dt
+
+    man = table.manifest(version)
+    out: dict = {}
+    for rel in man["files"]:
+        r = man["stats"][rel]["cols"]["ts"]
+        lo = dt.datetime(1970, 1, 1) + dt.timedelta(microseconds=r["min"])
+        hi = dt.datetime(1970, 1, 1) + dt.timedelta(microseconds=r["max"])
+        assert lo.hour == hi.hour, "one file per hour in these tests"
+        out.setdefault(lo.hour, set()).add(rel)
+    return out
+
+
+def _row_hash(spark, root):
+    t = ManifestTable(root).read(spark)
+    # decimal: an order-independent sum that cannot overflow under ANSI
+    h = F.xxhash64("k", "id", "ts", "v").cast("decimal(38,0)")
+    return t.agg(F.count("*"), F.sum(h)).first()
+
+
+def test_range_scoped_merge_rewrites_only_the_overlapping_hour(spark, tmp_path):
+    """An update to an old hour's key replaces the old row; every other
+    hour's files are re-listed under identical relative paths (and stats),
+    and the manifest records each new file's timestamp range."""
+    root = str(tmp_path / "tbl")
+    for h in (10, 11, 12):
+        _ranged_merge(spark, root, _hour_rows(spark, h, ["x", "y", "z"]))
+    table = ManifestTable(root)
+    man3 = table.manifest(3)
+    assert man3["stats_cols"] == ["k", "ts"]
+    before = _files_by_hour(table, 3)
+    assert sorted(before) == [10, 11, 12]
+
+    # Same (id, ts) as hour 10's "y" -> same key, new value.
+    assert _ranged_merge(spark, root, _hour_rows(spark, 10, ["x", "y"], v="new")) == 2
+    after = _files_by_hour(table, 4)
+    man4 = table.manifest(4)
+    for h in (11, 12):
+        assert after[h] == before[h]
+        for rel in before[h]:
+            assert man4["stats"][rel] == man3["stats"][rel]
+    assert not after[10] & before[10]  # hour 10 rewritten
+    got = {r["id"]: r["v"] for r in table.read(spark).filter("hour(ts) = 10").collect()}
+    assert got == {"x": "newx", "y": "newy", "z": "az"}
+    assert table.read(spark).count() == 9
+
+
+def test_range_scoped_merge_null_timestamp_skips_no_file(spark, tmp_path):
+    """A NULL in the batch's range column can match a NULL-range row of
+    any file (ranges ignore NULLs), so no file is skipped."""
+    root = str(tmp_path / "tbl")
+    for h in (10, 11):
+        _ranged_merge(spark, root, _hour_rows(spark, h, ["x"]))
+    table = ManifestTable(root)
+    old = set(table.manifest(2)["files"])
+    null_ts = _keyed(spark.createDataFrame([("n", None, "v")], "id string, ts timestamp, v string"))
+    _ranged_merge(spark, root, null_ts.unionByName(_hour_rows(spark, 12, ["x"])))
+    assert not set(table.manifest(3)["files"]) & old
+    # ...and replaying the NULL row keeps exactly one of it.
+    _ranged_merge(spark, root, null_ts)
+    assert table.read(spark).filter("ts IS NULL").count() == 1
+    assert table.read(spark).count() == 4
+
+
+def test_range_scoped_merge_year_outside_keyed_range_skips_no_file(spark, tmp_path):
+    """Outside years 1000-9999 the key no longer implies the timestamp:
+    a batch there skips no file, and a file with such a row is always
+    rewritten."""
+    root = str(tmp_path / "tbl")
+    _ranged_merge(spark, root, _hour_rows(spark, 10, ["x"]))
+    table = ManifestTable(root)
+    far = _keyed(spark.createDataFrame([("f", "v")], "id string, v string").withColumn(
+        "ts", F.expr("make_timestamp(10000, 1, 1, 0, 0, 0)")))
+    _ranged_merge(spark, root, far)
+    assert not set(table.manifest(2)["files"]) & set(table.manifest(1)["files"])
+    man2 = table.manifest(2)
+    far_files = {r for r in man2["files"]
+                 if man2["stats"][r]["cols"]["ts"]["min"] > 253402300799999999}
+    hour_files = set(man2["files"]) - far_files
+    assert far_files and hour_files
+    _ranged_merge(spark, root, _hour_rows(spark, 12, ["x"]))
+    man3 = table.manifest(3)
+    assert hour_files <= set(man3["files"])  # re-listed
+    assert not far_files & set(man3["files"])  # rewritten
+    assert table.read(spark).count() == 3
+
+
+def test_range_scoped_merge_replay_of_oldest_hour_is_a_no_op(spark, tmp_path):
+    root = str(tmp_path / "tbl")
+    batches = [_hour_rows(spark, h, ["x", "y"]) for h in (10, 11, 12)]
+    for b in batches:
+        _ranged_merge(spark, root, b)
+    want = _row_hash(spark, root)
+    table = ManifestTable(root)
+    newer = _files_by_hour(table, 3)
+    _ranged_merge(spark, root, batches[0])
+    assert _row_hash(spark, root) == want
+    after = _files_by_hour(table, 4)
+    assert after[11] == newer[11] and after[12] == newer[12]
+    # every listed file holds rows: the replay's empty rewrite is not listed
+    assert all(s["rows"] > 0 for s in table.manifest(4)["stats"].values())
+
+
+def test_range_scoped_merge_adopts_a_table_without_ranges_once(spark, tmp_path):
+    """A table committed with key-only stats has no ranges: its first
+    range-scoped merge rewrites it once, and later merges prune."""
+    root = str(tmp_path / "tbl")
+    for h in (10, 11):
+        merge_manifest(spark, root, _hour_rows(spark, h, ["x", "y"]), key="k",
+                       vacuum_keep=99)
+    table = ManifestTable(root)
+    assert table.manifest(2)["stats_cols"] == ["k"]
+    old = set(table.manifest(2)["files"])
+    _ranged_merge(spark, root, _hour_rows(spark, 12, ["x"]))
+    assert not set(table.manifest(3)["files"]) & old
+    assert table.manifest(3)["stats_cols"] == ["k", "ts"]
+    listed = set(table.manifest(3)["files"])
+    _ranged_merge(spark, root, _hour_rows(spark, 13, ["x"]))
+    assert listed <= set(table.manifest(4)["files"])
+    assert table.read(spark).count() == 6
+
+
+def test_range_scoped_merge_keeps_deletion_vector_rows_deleted(spark, tmp_path):
+    """Rows a deletion vector masks stay deleted: in an overlapping file
+    (read with the DV applied, then rewritten) and in a re-listed one (its
+    DV carried forward)."""
+    from door2door_etl_spark.io.manifest import delete_where_manifest
+
+    root = str(tmp_path / "tbl")
+    for h in (10, 11):
+        _ranged_merge(spark, root, _hour_rows(spark, h, ["x", "y", "z"]))
+    assert delete_where_manifest(spark, root, "id = 'z'", mode="dv",
+                                 vacuum_keep=99) == 2
+    table = ManifestTable(root)
+    assert table.manifest(3).get("dvs")
+    _ranged_merge(spark, root, _hour_rows(spark, 10, ["x"], v="new"))
+    rows = {(r["ts"].hour, r["id"]): r["v"] for r in table.read(spark).collect()}
+    assert rows == {(10, "x"): "newx", (10, "y"): "ay", (11, "x"): "ax", (11, "y"): "ay"}
+    # the plain view agrees
+    assert spark.read.parquet(root).count() == 4
+
+
+def test_range_scoped_merge_lost_claim_drops_both_staged_sets(spark, tmp_path, monkeypatch):
+    """A merge that loses the claim race drops the batch files AND the
+    rewritten files it staged: after the retry wins, every data file is
+    listed by some manifest."""
+    root = str(tmp_path / "tbl")
+    for h in (10, 11):
+        _ranged_merge(spark, root, _hour_rows(spark, h, ["x", "y"]))
+    original_claim = ManifestTable._claim
+    state = {"lost": 0}
+
+    def losing_once(self, version, rels, *a, **kw):
+        if not state["lost"]:
+            state["lost"] = len(rels)
+            base = self.manifest(version - 1)
+            assert original_claim(  # a competitor commits first
+                self, version, base["files"],
+                StructType.fromJson(json.loads(base["schema"])), [],
+                stats=base["stats"], stats_col=base["stats_cols"],
+            )
+            return False
+        return original_claim(self, version, rels, *a, **kw)
+
+    from pyspark.sql.types import StructType
+
+    monkeypatch.setattr(ManifestTable, "_claim", losing_once)
+    _ranged_merge(spark, root, _hour_rows(spark, 10, ["x"], v="new"))
+    table = ManifestTable(root)
+    assert state["lost"] and table.current_version() == 4
+    listed = set()
+    for v in table.versions():
+        listed |= set(table.manifest(v)["files"])
+    on_disk = {
+        os.path.relpath(os.path.join(d, f), table.files_dir)
+        for d, _, fs in os.walk(table.files_dir) for f in fs
+        if not f.startswith((".", "_"))
+    }
+    assert on_disk == listed
+    assert {r["id"]: r["v"] for r in table.read(spark).filter("hour(ts) = 10").collect()} \
+        == {"x": "newx", "y": "ay"}
+
+
+def test_timestamp_ranges_prune_readers(spark, tmp_path):
+    """prune_files / read_where with datetime bounds on a timestamp stats
+    column skip the files whose range misses; a bound of another type
+    keeps every file instead of raising."""
+    import datetime as dt
+
+    root = str(tmp_path / "tbl")
+    for h in (10, 11, 12):
+        _ranged_merge(spark, root, _hour_rows(spark, h, ["x", "y"]))
+    table = ManifestTable(root)
+    by_hour = _files_by_hour(table, 3)
+    lo, hi = dt.datetime(2022, 11, 24, 11, 0), dt.datetime(2022, 11, 24, 11, 59)
+    assert set(table.prune_files(lo, hi, col="ts")) == by_hour[11]
+    got = table.read_where(spark, {"ts": (lo, hi)}).collect()
+    assert sorted(r["id"] for r in got) == ["x", "y"]
+    n_files = len(table.manifest(3)["files"])
+    for bad in (("2022", "2023"), (1, 2), (None, None)):
+        assert len(table.prune_files(*bad, col="ts")) == n_files
+    # a datetime bound against non-timestamp stats keeps the file too
+    assert len(table.prune_files(lo, hi, col="k")) == n_files
+
+
+def test_dv_view_copy_keeps_timestamps_outside_nanosecond_range(spark, tmp_path):
+    """The view's masked copy of a DV'd file decodes INT96 timestamps at
+    microseconds: a year-1200 value read back through the plain view
+    equals the manifest read (nanoseconds wrapped it to 1784)."""
+    from door2door_etl_spark.io.manifest import delete_where_manifest
+
+    root = str(tmp_path / "tbl")
+    df = spark.sql(
+        "SELECT CAST(id AS INT) AS k, IF(id = 0, TIMESTAMP'1200-01-01 00:00:00', "
+        "TIMESTAMP'2022-01-01 00:00:00') AS ts FROM range(4)"
+    ).coalesce(1)
+    merge_manifest(spark, root, df, key="k")
+    delete_where_manifest(spark, root, "k = 3", mode="dv")
+
+    def rows(frame):
+        return sorted(tuple(r) for r in frame.selectExpr("k", "CAST(ts AS STRING)").collect())
+
+    want = [(0, "1200-01-01 00:00:00"), (1, "2022-01-01 00:00:00"), (2, "2022-01-01 00:00:00")]
+    assert rows(ManifestTable(root).read(spark)) == want
+    assert rows(spark.read.parquet(root)) == want

@@ -181,6 +181,116 @@ def test_failed_first_append_leaves_bookkeeping_readable(spark, tmp_path, monkey
     assert book.ingestor_output_path("w1") is None
 
 
+def test_handler_log_rows_for_landing_fixture(spark, tmp_path, landing):
+    """One handler execution appends its entity rows and its quarantine
+    row together, with the same content as one append per row gave."""
+    lake = str(tmp_path / "lake")
+    wid = str(uuid.uuid4())
+    summary = run_workflow(spark, landing, lake, workflow_id=wid, fetch_hour=HOUR)
+    rows = spark.read.parquet(f"{lake}/monitor/handler_executions").collect()
+    got = sorted(
+        (r["workflow_id"], r["file_fetch_path"], r["destination_table"],
+         r["records_inserted"], r["traceback"])
+        for r in rows
+    )
+    path = summary["bronze_path"]
+    assert got == [
+        (wid, path, "__quarantine__", 1,
+         "unknown entity discriminator values quarantined"),
+        (wid, path, "operating_periods", 1, None),
+        (wid, path, "vehicle_location", 2, None),
+    ]
+    assert len({r["code_execution_id"] for r in rows}) == 3
+
+
+def _bronze_rows(spark, path):
+    from door2door_etl_spark.io.readers import bronze_schema
+
+    return sorted(
+        tuple(r) for r in spark.read.schema(bronze_schema()).parquet(path)
+        .select("at", "on", "original_s3_file_path").collect()
+    )
+
+
+def test_ingest_counts_contributing_files(spark, tmp_path):
+    """number_of_files_fetched counts the distinct landing files that gave
+    the hour at least one row."""
+    from door2door_etl_spark.pipeline.ingestor import run_ingestor
+
+    src = tmp_path / "landing"
+    src.mkdir()
+    (src / "a.json").write_text(json.dumps(_vehicle(1, 4)) + "\n"
+                                + json.dumps(_vehicle(2, 5)))
+    (src / "b.json").write_text(json.dumps(_period("op_1")))
+    (src / "c.json").write_text(  # only rows outside the hour
+        json.dumps(_vehicle(3, 4) | {"at": "2022-11-24T12:00:00.000Z"}))
+    (src / "d.json").write_text("{not valid json\n")
+    book = Bookkeeping(spark, str(tmp_path / "monitor"))
+    path = run_ingestor(spark, "w1", str(src / "*.json"), str(tmp_path / "bronze"),
+                        book, fetch_hour=HOUR)
+    row = spark.read.parquet(str(tmp_path / "monitor" / "ingestor_executions")).first()
+    assert row["number_of_files_fetched"] == 2
+    assert row["file_destination_path"] == path
+    assert len(_bronze_rows(spark, path)) == 3
+
+
+def test_failed_bronze_write_leaves_previous_bronze_readable(spark, tmp_path, landing,
+                                                            monkeypatch):
+    """The bronze hour lands by rename: a write that dies leaves the hour a
+    previous workflow staged intact (and readable by its workflow id), and
+    leaves no staging directory behind."""
+    import os
+
+    from pyspark.sql import DataFrameWriter
+    from pyspark.sql import functions as F
+
+    from door2door_etl_spark.pipeline.ingestor import run_ingestor
+
+    book = Bookkeeping(spark, str(tmp_path / "monitor"))
+    bronze = str(tmp_path / "bronze")
+    path = run_ingestor(spark, "w1", landing, bronze, book, fetch_hour=HOUR)
+    want = _bronze_rows(spark, path)
+    write_parquet = DataFrameWriter.parquet
+
+    def failing_parquet(self, p, *args, **kwargs):
+        if "/bronze/" not in p:  # the bookkeeping appends still work
+            return write_parquet(self, p, *args, **kwargs)
+        df = self._df.withColumn("at", F.raise_error(F.lit("injected")).cast("string"))
+        return write_parquet(df.write, p, *args, **kwargs)
+
+    with monkeypatch.context() as m:
+        m.setattr(DataFrameWriter, "parquet", failing_parquet)
+        with pytest.raises(Exception, match="injected"):
+            run_ingestor(spark, "w2", landing, bronze, book, fetch_hour=HOUR)
+    assert _bronze_rows(spark, path) == want
+    assert book.ingestor_output_path("w1") == path
+    assert os.listdir(os.path.dirname(path)) == ["hr=10"]
+
+
+def test_empty_refetch_leaves_bronze_unchanged(spark, tmp_path, landing):
+    """A re-fetch of an hour that finds no rows records zero files and
+    leaves the staged bronze of that hour as it was."""
+    import os
+
+    from door2door_etl_spark.pipeline.ingestor import run_ingestor
+
+    book = Bookkeeping(spark, str(tmp_path / "monitor"))
+    bronze = str(tmp_path / "bronze")
+    path = run_ingestor(spark, "w1", landing, bronze, book, fetch_hour=HOUR)
+    want = _bronze_rows(spark, path)
+    src = tmp_path / "late"
+    src.mkdir()
+    (src / "x.json").write_text(json.dumps(_vehicle(7, 4) | {"at": "2022-11-24T13:00:00Z"}))
+    assert run_ingestor(spark, "w2", str(src / "*.json"), bronze, book,
+                        fetch_hour=HOUR) is None
+    assert _bronze_rows(spark, path) == want
+    assert os.listdir(os.path.dirname(path)) == ["hr=10"]
+    rows = {r["workflow_id"]: r for r in spark.read.parquet(
+        str(tmp_path / "monitor" / "ingestor_executions")).collect()}
+    assert rows["w2"]["number_of_files_fetched"] == 0
+    assert rows["w2"]["file_destination_path"] is None
+
+
 def test_upsert_updates_existing_keys(spark, tmp_path, landing):
     """Second batch with same key but new values -> UPDATE semantics (K1)."""
     lake = str(tmp_path / "lake")

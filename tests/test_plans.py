@@ -108,6 +108,86 @@ def test_hour_filter_prunes_partitions(spark, tmp_path):
     assert scan.count() == 333
 
 
+def _land_hour(landing: Path, k: int, n: int = 200) -> None:
+    """Hour ``k`` (from 2022-11-24 10:00) of small door2door landing JSONL:
+    ``n`` vehicle events over two files, a few operating periods, one
+    unknown entity."""
+    import datetime as dt
+    import json
+
+    start = dt.datetime(2022, 11, 24, 10) + dt.timedelta(hours=k)
+    lines = []
+    for i in range(n):
+        at = (start + dt.timedelta(seconds=i * 3600 // n)).isoformat() + "Z"
+        kind = "vehicle" if i % 10 else "operating_period"
+        data = ({"id": f"00000000-0000-0000-0000-{i % 50:012d}",
+                 "location": {"lat": 52.5, "lng": 13.4, "at": at}}
+                if kind == "vehicle" else
+                {"id": f"op_{i}", "start": at, "finish": at})
+        lines.append(json.dumps({"event": "update", "on": kind, "at": at,
+                                 "organization_id": "org", "data": data}))
+    lines.append(json.dumps({"event": "x", "on": "scooter",
+                             "at": start.isoformat() + "Z", "data": {"id": "s"}}))
+    landing.mkdir(parents=True, exist_ok=True)
+    for part in range(2):
+        (landing / f"events_{k:03d}_{part}.json").write_text(
+            "\n".join(lines[part::2]) + "\n")
+
+
+def _etl_hour(spark, landing: Path, lake: Path, k: int) -> int:
+    """Land and run hour ``k`` as the deployed CLI does; returns its jobs."""
+    import uuid
+
+    from door2door_etl_spark.pipeline.executor import run_workflow
+
+    _land_hour(landing, k)
+    sc = spark.sparkContext
+    group = f"etl-hour-{uuid.uuid4().hex}"
+    sc.setJobGroup(group, "one ETL hour")
+    try:
+        summary = run_workflow(spark, f"{landing}/*.json", str(lake))
+    finally:
+        sc.setJobGroup(None, None)
+    assert summary["merged"] == {"vehicle_location": 180, "operating_periods": 20}
+    return len(sc.statusTracker().getJobIdsForGroup(group))
+
+
+def test_etl_hour_job_budget(spark, tmp_path):
+    """One run_workflow(step="all") hour on a warm lake runs at most 12
+    Spark jobs: one JSON scan per ingest, no schema-inference job, a MERGE
+    that writes the batch and rewrites no file of an earlier hour, and one
+    bookkeeping append per step.  It ran 24 before."""
+    landing, lake = tmp_path / "landing", tmp_path / "lake"
+    _etl_hour(spark, landing, lake, 0)
+    jobs = _etl_hour(spark, landing, lake, 1)
+    assert jobs <= 12, jobs
+
+
+@pytest.mark.slow
+def test_etl_hour_merge_cost_stays_flat(spark, tmp_path):
+    """Twelve hours in, a MERGE still writes what its hour holds: the data
+    files and bytes each hour's manifest adds stay flat (hour 12 within
+    1.2x of hour 2), where a whole-table rewrite grows with the history."""
+    import os
+
+    from door2door_etl_spark.io.manifest import ManifestTable
+
+    landing, lake = tmp_path / "landing", tmp_path / "lake"
+    table = ManifestTable(str(lake / "warehouse" / "vehicle_location"))
+    written = []
+    for k in range(12):
+        _etl_hour(spark, landing, lake, k)
+        v = table.current_version()
+        new = set(table.manifest(v)["files"]) - (
+            set(table.manifest(v - 1)["files"]) if v > 1 else set())
+        written.append((len(new), sum(
+            os.path.getsize(os.path.join(table.files_dir, r)) for r in new)))
+    (files_2, bytes_2), (files_12, bytes_12) = written[1], written[11]
+    assert files_12 <= 1.2 * files_2, written
+    assert bytes_12 <= 1.2 * bytes_2, written
+    assert table.read(spark).count() == 12 * 180
+
+
 def test_asof_join_single_shuffle_no_join_operator(spark, sf001):
     """The as-of join's union+window plan must contain exactly ONE shuffle
     (hash partition on the key) and NO join operator at all — the property
